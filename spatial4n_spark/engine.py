@@ -163,8 +163,11 @@ class SpatialEngine:
         return radius_join(points, queries, **kw)
 
     def knn(self, points: DataFrame, queries, k: int, **kw) -> DataFrame:
-        """kNN join. A driver-side query list takes the fast list path;
-        a query DataFrame takes the density-adaptive distributed path."""
+        """Exact kNN join from a driver-side [(query_id, lon, lat)] list
+        or a query DataFrame. Whenever queries x points is at most
+        ``operators.knn._BRUTE_FORCE_PAIRS`` one ``mapInArrow`` top-k
+        pass answers; above it the density-adaptive ring plan runs.
+        Either way: (query_id, <id_col>, dist_km, rank), ties on id."""
         if isinstance(queries, DataFrame):
             from spatial4n_spark.operators.knn import knn_join_df
 

@@ -46,6 +46,7 @@ import math
 import os
 import time
 from dataclasses import dataclass
+from functools import reduce
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
@@ -2399,63 +2400,56 @@ def clustered_knn_df(
     target_cells_across: float = 8.0,
     broadcast_cells: int = 200_000,
     max_scan_ranges: int = 64,
-    debug: bool = False,
 ) -> DataFrame:
-    """Exact kNN over the clustered layout with the QUERY SET AS A
-    DATAFRAME — the manifest-pruned twin of ``knn_join_cover_df``
-    (operators/knn.py), density-adaptive against the clustered-data
-    trap (the same trap ``knn_join_df`` documents: one GLOBAL radius
-    serves neither hot-cluster queries — which re-pull a whole city per
-    query — nor ocean queries, which under a doubling global radius
-    eventually drag continent-sized candidate sets through the join).
+    """Exact kNN over a clustered table with the QUERY SET AS A
+    DATAFRAME. Returns (query_id, <id_col>, dist_km, rank), ties on
+    <id_col> — the contract and the final rank of operators.knn.
 
-    Per query, per round:
+    Under the comparison budget (queries x manifest rows <=
+    ``operators.knn._BRUTE_FORCE_PAIRS``) the exact kernel of
+    operators.knn runs over ``_read_files`` of every listed file — the
+    one read spec, so pending MOR deletes and the manifest schema apply.
+
+    Above it, the plan is density-adaptive, per query, per round:
 
     1. a counts PYRAMID (one cells-only aggregate over the manifest-
-       listed scan — the cell column is the table's sort key, so this is
-       a single pruned-column pass — rolled up coarse via the Hilbert
-       prefix property) gives each query the finest pyramid level whose
-       own cell already holds ~``thr_sel`` points; its first-round
-       radius targets ~``thr`` candidates AT ITS LOCAL DENSITY, so
-       dense-cluster queries search small circles and sparse queries
-       search big ones, both pulling O(thr) candidates;
-    2. circle covers are planned for the whole pending set in ONE
-       vectorized BFS per active cover level
-       (``plans.s2cover.s2_circle_covers_batch`` — bbox-superset of the
-       exact cover, so acceptance stays exact) inside ``mapInPandas`` —
-       nothing per-query on the driver;
-    3. per active cover level, the cover cells fold into coalesced
-       global id-range lists (bounded: <= ``max_scan_ranges`` per
-       level) that prune manifest files driver-side and push the
-       row-group BETWEEN disjunction — the Iceberg-style scan planning
-       this layout exists for — and candidates come from one
-       prefix-shifted equi-join per active level (broadcast under a
-       size bound, else shuffle-by-cell);
-    4. acceptance (n >= k and k-th distance <= that query's own radius
-       — sound because the cover is a superset of ball(r_q)) is
-       aggregate + anti-join; survivors double their radius.
+       listed scan, rolled up coarse via the Hilbert prefix property)
+       gives each query the finest pyramid level whose own cell already
+       holds ~``thr_sel`` points; its first-round radius targets ~``thr``
+       candidates AT ITS LOCAL DENSITY;
+    2. circle covers for the whole pending set come from one vectorized
+       BFS per active cover level
+       (``plans.s2cover.s2_circle_covers_batch`` — a superset of the
+       exact cover) inside ``mapInPandas``;
+    3. the cover cells fold into coalesced global id-range lists (<=
+       ``max_scan_ranges`` per level) that prune manifest files and push
+       the row-group BETWEEN disjunction; candidates come from one
+       prefix-shifted equi-join (broadcast under a size bound, else
+       shuffle-by-cell);
+    4. acceptance (n >= k and k-th distance <= that query's own radius)
+       is aggregate + anti-join; survivors double their radius.
 
-    Every round is a CONSTANT number of Spark jobs no matter how many
-    queries are pending.  Stragglers after ``max_rounds`` (or
-    n_total < k) fall back to exact brute force over the listed files.
-    Returns (query_id, <id_col>, dist_km, rank), ties on <id_col> —
-    the same contract as operators.knn.knn_join."""
-    import sys
-
-    from pyspark.sql import Window
-
+    Every round is a constant number of Spark jobs. Stragglers (after
+    the first round, once their comparisons fit the budget, or after
+    ``max_rounds``) go to the exact kernel over the listed files."""
     from spatial4n_spark.kernels.distance import deg_to_km
+    from spatial4n_spark.operators import knn as _knn
 
     man = load_manifest(path)
     level = int(man["level"])
     n_total = sum(e["rows"] for e in man["files"])
+    listed = _read_files(spark, path, man, [e["file"] for e in man["files"]])
+    q0 = _knn._query_frame(queries, query_id, qlon, qlat)
+    out = _knn._exact_knn(
+        listed, q0, k, lon, lat, id_col, _knn._query_budget(n_total, broadcast_cells)
+    )
+    if out is not None:
+        return out
     r_cap_km = float(deg_to_km(180.0))
     thr_sel = float(max(8, 2 * k))
     thr = float(max(32, 4 * k))
 
     qid_type = queries.schema[query_id].dataType.simpleString()
-    id_type = _read_listed(spark, path).schema[id_col].dataType.simpleString()
-    out_schema = f"query_id {qid_type}, {id_col} {id_type}, dist_km double, rank int"
     cover_schema = (
         f"_lv int, _pcell long, query_id {qid_type}, "
         "_qlon double, _qlat double, _r double"
@@ -2465,8 +2459,7 @@ def clustered_knn_df(
     max_p = min(level, 12)
     pyr = [lv for lv in range(max_p, 1, -2)][::-1][-5:]  # coarse -> fine, <= 5
     cnt = (
-        _read_listed(spark, path)
-        .select(F.shiftright(F.col(CELL_COL), 2 * (level - max_p)).alias("_c"))
+        listed.select(F.shiftright(F.col(CELL_COL), 2 * (level - max_p)).alias("_c"))
         .groupBy("_c")
         .agg(F.count(F.lit(1)).alias("_n"))
         .persist()
@@ -2486,11 +2479,6 @@ def clustered_knn_df(
             )
             yield pdf
 
-    q0 = queries.select(
-        F.col(query_id).alias("query_id"),
-        F.col(qlon).cast("double").alias("_qlon"),
-        F.col(qlat).cast("double").alias("_qlat"),
-    )
     q0 = q0.mapInPandas(
         _qcell_gen,
         f"query_id {qid_type}, _qlon double, _qlat double, _qc long",
@@ -2591,9 +2579,6 @@ def clustered_knn_df(
     n_pending = pending.count()
 
     accepted: list[DataFrame] = []
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("dist_km").asc(), F.col(id_col).asc()
-    )
 
     def cover_gen(it):
         import numpy as np
@@ -2662,10 +2647,9 @@ def clustered_knn_df(
     for rnd in range(rounds):
         if n_pending == 0:
             break
-        if rnd >= 1 and n_pending * n_total <= 50_000_000:
-            # a handful of stragglers after the cover round: one
-            # broadcast brute-force job beats a whole extra round of
-            # cover/prune/join stages (bounded: <= 5e7 comparisons)
+        if rnd >= 1 and n_pending * n_total <= _knn._BRUTE_FORCE_PAIRS:
+            # a handful of stragglers after the cover round: one exact
+            # kernel pass beats a whole extra round of cover/prune/join
             break
         covers = pending.mapInPandas(cover_gen, cover_schema).localCheckpoint(
             eager=False
@@ -2682,12 +2666,6 @@ def clustered_knn_df(
         by_lv = {
             u: _coalesce_ranges(rs, max_scan_ranges) for u, rs in partials.items()
         }
-        if debug:
-            print(
-                f"clustered_knn_df round {rnd}: pending={n_pending} "
-                f"levels={sorted(by_lv)}",
-                file=sys.stderr,
-            )
         # ONE pruned scan (union of every level's ranges) and ONE join:
         # each scan row explodes into its (level, prefix-cell) pair per
         # ACTIVE level — all codegen — so the round costs one table read
@@ -2721,14 +2699,8 @@ def clustered_knn_df(
             .drop("_p")
             .join(cov, ["_lv", "_pcell"])
         )
-        ranked = (
-            cand.withColumn(
-                "dist_km", haversine_km(F.col(lon), F.col(lat), "_qlon", "_qlat")
-            )
-            .withColumn("rank", F.row_number().over(w))
-            .where(F.col("rank") <= k)
-            .select("query_id", id_col, "dist_km", "rank", "_r")
-            .localCheckpoint(eager=False)
+        ranked = _knn._rank_top_k(cand, k, id_col, lon, lat, "_r").localCheckpoint(
+            eager=False
         )
         summ = ranked.groupBy("query_id").agg(
             F.count(F.lit(1)).alias("_n"),
@@ -2752,29 +2724,10 @@ def clustered_knn_df(
 
     cnt.unpersist()
     if n_pending:
-        # stragglers (sparse regions / n_total < k): exact brute force
-        # over the listed files, broadcasting the smaller side
-        p = _read_listed(spark, path).select(id_col, lon, lat)
-        if n_total <= n_pending:
-            fb_cand = pending.crossJoin(F.broadcast(p))
-        else:
-            fb_cand = p.crossJoin(F.broadcast(pending))
-        fb = (
-            fb_cand.withColumn(
-                "dist_km", haversine_km(F.col(lon), F.col(lat), "_qlon", "_qlat")
-            )
-            .withColumn("rank", F.row_number().over(w))
-            .where(F.col("rank") <= k)
-            .select("query_id", id_col, "dist_km", "rank")
-        )
-        accepted.append(fb.localCheckpoint(eager=True))
-
-    if not accepted:
-        return spark.createDataFrame([], out_schema)
-    out = accepted[0]
-    for df in accepted[1:]:
-        out = out.unionAll(df)
-    return out
+        # stragglers (sparse regions / n_total < k)
+        pending = pending.select("query_id", "_qlon", "_qlat")
+        accepted.append(_knn._exact_knn(listed, pending, k, lon, lat, id_col, None))
+    return reduce(DataFrame.unionAll, accepted)
 
 
 def clustered_knn(

@@ -31,6 +31,8 @@ def dist_haversine_rad(lat1, lon1, lat2, lon2):
     hsin_x = np.sin((lon1 - lon2) * 0.5)
     hsin_y = np.sin((lat1 - lat2) * 0.5)
     h = hsin_y * hsin_y + np.cos(lat1) * np.cos(lat2) * hsin_x * hsin_x
+    # rounding can push h a hair past 1 at the antipode: sqrt(1 - h) = NaN
+    h = np.minimum(h, 1.0)
     d = 2.0 * np.arctan2(np.sqrt(h), np.sqrt(1.0 - h))
     return np.where((lat1 == lat2) & (lon1 == lon2), 0.0, d)
 

@@ -1,42 +1,180 @@
-"""kNN: cell-ring candidate generation + exact-distance Window top-k.
+"""Exact kNN joins: one single-pass kernel under a comparison budget,
+density-adaptive cell plans above it.
 
-SURVEY.md §2.9: for each query point, candidates come from its geohash
-cell plus expanding neighbor rings; exact haversine ranks them with a
-row_number window partitioned by query. Ring expansion repeats (bounded
-rounds) for queries whose k-th neighbor distance exceeds the
-guaranteed-covered radius — the correctness condition for cell-pruned
-kNN. Reference analog: the GetSubGeohashes ring expansion
-(GeohashUtils.cs:219-228) run as a relational join.
+Every exact entry point returns (query_id, <id_col>, dist_km, rank),
+ranked by a ``row_number`` window over (dist_km, <id_col>) with
+``dist_km`` from the Catalyst ``functions.native.haversine_km`` — so
+all of them agree bit for bit, whichever plan ran.
 
-Two surfaces over one engine (``knn_join_df``):
-- ``knn_join_df(points, queries_df)`` — queries as a DataFrame. Ring
-  cells are enumerated by a vectorized Arrow stage (``mapInPandas``),
-  candidates come from an equi-join on the cell key (broadcast under a
-  size bound, shuffle-by-cell above it), and acceptance/retry is pure
-  DataFrame algebra (aggregate + anti-join) — nothing per-query ever
-  crosses the driver, so a 10^6-query batch holds flat driver memory.
-- ``knn_join(points, [(qid, lon, lat), ...])`` — the small-list
-  convenience wrapper; delegates to the DataFrame path.
+- **The exact kernel** (``_exact_knn``) runs whenever queries x points
+  is at most ``_BRUTE_FORCE_PAIRS``. The queries (at most
+  ``min(_BRUTE_FORCE_PAIRS // n_points, broadcast_cells)`` of them)
+  are collected and broadcast; ONE ``mapInArrow`` pass streams the
+  points in Arrow batches, computes numpy haversine against every
+  query and keeps, per query and partition, a running top-k
+  (``np.partition``) plus every point within a small slack of the k-th
+  distance. The candidates (at most partitions x queries x (k + ties)
+  rows) are re-ranked by the shared window. A few Spark jobs in all,
+  whatever k or the data density.
+- **Above the budget**, ``knn_join_df`` (geohash ring blocks at a
+  per-query level from a counts pyramid) and ``knn_join_cover_df``
+  (circle covers on any cell backend) expand candidate regions round
+  by round, accept a query once its k-th distance fits the covered
+  radius, and hand the bounded stragglers to the exact kernel. Nothing
+  per-query touches the driver. SURVEY.md §2.9; reference analog: the
+  GetSubGeohashes ring expansion (GeohashUtils.cs:219-228).
 
-The top-k window shuffle is keyed by query_id (bounded candidates x k
-rows), never by the points table.
+``knn_join`` and ``knn_join_cover`` take a driver-side query list and
+are thin wrappers over their ``_df`` twins; ``io.clustered`` runs the
+same kernel over a clustered table's manifest-listed files.
 """
 
 from __future__ import annotations
 
 import math
+from functools import reduce
 
 import numpy as np
 
 from pyspark.sql import DataFrame, Window, functions as F
+from pyspark.sql.types import IntegerType, StructField, StructType
 
 from spatial4n_spark.functions.native import haversine_km
 from spatial4n_spark.functions.udfs import geohash_udf
-from spatial4n_spark.kernels.distance import deg_to_km
+from spatial4n_spark.kernels.distance import (
+    EARTH_MEAN_RADIUS_KM,
+    deg_to_km,
+    dist_haversine_rad,
+)
 from spatial4n_spark.kernels.geohash import (
     geohash_cell_sizes,
     geohash_encode_str,
 )
+
+# queries x points at or below which every exact entry point runs the
+# single-pass kernel instead of its cell plan (io.clustered shares it)
+_BRUTE_FORCE_PAIRS = 50_000_000
+
+# candidate slack past the k-th numpy distance: the final rank
+# recomputes dist_km in the JVM, whose sin/cos/atan2 may differ from
+# numpy's by an ulp; near the antipode that moves a distance by up to
+# ~0.3 m, so 1 m plus a relative term keeps every possible top-k row
+_SLACK_REL = 1e-9
+_SLACK_KM = 1e-3
+
+# distance-matrix elements per numpy block (queries x batch rows)
+_BLOCK_ELEMS = 1 << 21
+
+
+def _rank_top_k(cand: DataFrame, k: int, id_col: str, lon: str, lat: str, *keep):
+    """The one final rank every plan shares: Catalyst haversine from
+    (lon, lat) to (_qlon, _qlat), ``row_number`` over (dist_km,
+    <id_col>) per query_id, rank <= k."""
+    w = Window.partitionBy("query_id").orderBy(
+        F.col("dist_km").asc(), F.col(id_col).asc()
+    )
+    return (
+        cand.withColumn("dist_km", haversine_km(F.col(lon), F.col(lat), "_qlon", "_qlat"))
+        .withColumn("rank", F.row_number().over(w))
+        .where(F.col("rank") <= k)
+        .select("query_id", id_col, "dist_km", "rank", *keep)
+    )
+
+
+def _query_budget(n_points: int, broadcast_cells: int) -> int:
+    """Most queries the exact kernel takes against ``n_points`` points."""
+    return min(_BRUTE_FORCE_PAIRS // max(n_points, 1), broadcast_cells)
+
+
+def _query_frame(queries: DataFrame, query_id: str, qlon: str, qlat: str) -> DataFrame:
+    """Queries in the (query_id, _qlon, _qlat) form every plan reads."""
+    return queries.select(
+        F.col(query_id).alias("query_id"),
+        F.col(qlon).cast("double").alias("_qlon"),
+        F.col(qlat).cast("double").alias("_qlat"),
+    )
+
+
+def _top_k_batches(qlon, qlat, k: int, id_col: str, lon: str, lat: str):
+    """``mapInArrow`` body of the exact kernel: stream point batches,
+    keep per query every point within the slack of the running k-th
+    distance, and emit the partition's survivors once, tagged ``_qi``
+    (the query's position in ``qlon``/``qlat``)."""
+    qx = np.radians(np.asarray(qlon, dtype=np.float64))[:, None]
+    qy = np.radians(np.asarray(qlat, dtype=np.float64))[:, None]
+    nq = len(qx)
+
+    def run(batches):
+        import pyarrow as pa
+
+        kth = np.full(nq, np.inf)
+        pool, pool_q, pool_d = None, np.empty(0, np.int32), np.empty(0)
+        for b in batches:
+            if b.num_rows == 0 or nq == 0:
+                continue
+            px = np.radians(b.column(lon).to_numpy(zero_copy_only=False))[None, :]
+            py = np.radians(b.column(lat).to_numpy(zero_copy_only=False))[None, :]
+            step = max(1, _BLOCK_ELEMS // b.num_rows)
+            qs, rs, ds = [pool_q], [], [pool_d]
+            for q0 in range(0, nq, step):
+                sl = slice(q0, q0 + step)
+                d = dist_haversine_rad(qy[sl], qx[sl], py, px) * EARTH_MEAN_RADIUS_KM
+                cap = kth[sl]
+                if b.num_rows >= k:
+                    # fmin: a NaN (null-coordinate) k-th leaves the cap alone
+                    cap = np.fmin(cap, np.partition(d, k - 1, axis=1)[:, k - 1])
+                qi, ri = np.nonzero(d <= cap[:, None] * (1 + _SLACK_REL) + _SLACK_KM)
+                qs.append((qi + q0).astype(np.int32))
+                rs.append(ri)
+                ds.append(d[qi, ri])
+            rows = pa.Table.from_batches([b.take(pa.array(np.concatenate(rs)))])
+            pool = rows if pool is None else pa.concat_tables([pool, rows])
+            pool_q, pool_d = np.concatenate(qs), np.concatenate(ds)
+            # exact k-th of the merged pool per query, then prune to it
+            order = np.lexsort((pool_d, pool_q))
+            sq = pool_q[order]
+            at_k = np.arange(len(sq)) - np.searchsorted(sq, sq) == k - 1
+            kth[sq[at_k]] = pool_d[order][at_k]
+            keep = np.flatnonzero(pool_d <= kth[pool_q] * (1 + _SLACK_REL) + _SLACK_KM)
+            pool, pool_q, pool_d = pool.take(pa.array(keep)), pool_q[keep], pool_d[keep]
+        if pool is not None and pool.num_rows:
+            out = pool.select([id_col, lon, lat]).append_column(
+                "_qi", pa.array(pool_q, pa.int32())
+            )
+            yield from out.to_batches()
+
+    return run
+
+
+def _exact_knn(
+    points: DataFrame,
+    queries: DataFrame,
+    k: int,
+    lon: str,
+    lat: str,
+    id_col: str,
+    q_max: int | None,
+) -> DataFrame | None:
+    """The exact kNN kernel over ``queries`` (query_id, _qlon, _qlat):
+    at most ``q_max + 1`` queries reach the driver, and a larger set
+    returns None (the caller runs its cell plan); ``q_max=None`` takes
+    every query (bounded straggler sets)."""
+    rows = (queries if q_max is None else queries.limit(q_max + 1)).collect()
+    if q_max is not None and len(rows) > q_max:
+        return None
+    spark = points.sparkSession
+    q_df = spark.createDataFrame(
+        [(i, *r) for i, r in enumerate(rows)],
+        StructType([StructField("_qi", IntegerType()), *queries.schema.fields]),
+    )
+    pts = points.select(
+        id_col, F.col(lon).cast("double").alias(lon), F.col(lat).cast("double").alias(lat)
+    )
+    cand = pts.mapInArrow(
+        _top_k_batches([r[1] for r in rows], [r[2] for r in rows], k, id_col, lon, lat),
+        StructType([*pts.schema.fields, StructField("_qi", IntegerType())]),
+    )
+    return _rank_top_k(cand.join(F.broadcast(q_df), "_qi"), k, id_col, lon, lat)
 
 
 def _rx_rings(qlat, level: int, rings: int):
@@ -96,13 +234,6 @@ def _ring_cells_frame(qid, qlon, qlat, level: int, rings: int):
     out["_qlon"] = qlon[rows]
     out["_qlat"] = qlat[rows]
     return out[["query_id", "_qlon", "_qlat", "_cell"]]
-
-
-def _ring_cells(qlon: float, qlat: float, level: int, rings: int) -> set[str]:
-    """All cells within ``rings`` of one query's cell (batch path, n=1)."""
-    return set(
-        _ring_cells_frame(np.array(["q"]), [qlon], [qlat], level, rings)["_cell"]
-    )
 
 
 def _covered_radius_km(qlat: float, level: int, rings: int) -> float:
@@ -208,7 +339,6 @@ def knn_join_df(
     broadcast_cells: int = 200_000,
     cell_cap: int | None = None,
     max_rings0: int = 16,
-    debug: bool = False,
 ) -> DataFrame:
     """Exact kNN join, queries as a DataFrame. Returns
     (query_id, <id_col>, dist_km, rank); ties break on <id_col>.
@@ -229,7 +359,7 @@ def knn_join_df(
       queries search tiny cells, sparse queries search big ones, and
       both start with candidates O(k);
     - ``level=<int>`` pins a single level for every query (the fixed
-      grid mode the list path uses).
+      grid ``knn_join`` passes through).
 
     Per round: a ``mapInPandas`` stage expands pending queries into ring
     cells; candidates come from one prefix-keyed equi-join per ACTIVE
@@ -238,12 +368,19 @@ def knn_join_df(
     query-partitioned window takes top-k; acceptance (k-th distance
     within the covered radius of the query's level+rings) is an
     aggregate + join; survivors double their rings. Nothing per-query
-    touches the driver.
+    touches the driver; stragglers after ``max_rounds`` go to the exact
+    kernel.
+
+    Under the comparison budget (module docstring) none of this runs:
+    the exact kernel answers in one pass. ``estimated_total`` (the
+    point count) saves the count job that sizes the budget.
     """
-    spark = points.sparkSession
+    q0 = _query_frame(queries, query_id, qlon, qlat)
+    n_total = estimated_total if estimated_total is not None else points.count()
+    out = _exact_knn(points, q0, k, lon, lat, id_col, _query_budget(n_total, broadcast_cells))
+    if out is not None:
+        return out
     qid_type = queries.schema[query_id].dataType.simpleString()
-    id_type = points.schema[id_col].dataType.simpleString()
-    out_schema = f"query_id {qid_type}, {id_col} {id_type}, dist_km double, rank int"
     cells_schema = (
         f"query_id {qid_type}, _qlon double, _qlat double, "
         "_level int, _rings int, _cell string"
@@ -259,31 +396,14 @@ def knn_join_df(
     thr_sel = max(4, 2 * k) if cell_cap is None else cell_cap
     thr = max(32, 4 * k) if cell_cap is None else cell_cap
 
-    import sys
-    import time as _time
-
-    def _dbg(msg: str, t0: float | None = None):
-        if debug:
-            dt = f" [{_time.time() - t0:.1f}s]" if t0 is not None else ""
-            print(f"knn_join_df: {msg}{dt}", file=sys.stderr)
-
-    _t = _time.time()
     ptsF = points.withColumn("_cellF", geohash_udf(enc_level)(F.col(lat), F.col(lon)))
     ptsF = ptsF.select(id_col, lon, lat, "_cellF").persist()
 
     # one count pass at the finest level; the pyramid levels aggregate
     # the (small) counts table, never the points
     cnt = ptsF.groupBy("_cellF").agg(F.count(F.lit(1)).alias("_n")).persist()
-    n_total = estimated_total if estimated_total is not None else int(
-        cnt.agg(F.sum("_n")).first()[0] or 0
-    )
 
     # queries encoded once at enc_level; per-level cells are prefixes
-    q0 = queries.select(
-        F.col(query_id).alias("query_id"),
-        F.col(qlon).cast("double").alias("_qlon"),
-        F.col(qlat).cast("double").alias("_qlat"),
-    )
     q0 = q0.withColumn("_qcellF", geohash_udf(enc_level)(F.col("_qlat"), F.col("_qlon")))
     if len(levels) == 1:
         lv = levels[0]
@@ -369,8 +489,6 @@ def knn_join_df(
     # lazy checkpoint: the _pending_stats collect right below materializes
     # it — an eager one would spend a whole extra Spark job on the same
     # plan (job count, not data volume, dominates small-batch latency)
-    _dbg("plans built", _t)
-    _t = _time.time()
     pending = (
         q0.withColumn(
             "_rings",
@@ -379,7 +497,6 @@ def knn_join_df(
         .select("query_id", "_qlon", "_qlat", "_level", "_rings")
         .localCheckpoint(eager=False)
     )
-    _dbg("pending checkpoint declared", _t)
 
     def _pending_stats(pdf: DataFrame):
         rows = pdf.groupBy("_level").agg(
@@ -391,14 +508,9 @@ def knn_join_df(
         act = sorted(int(r["_level"]) for r in rows)
         return n, cells, act
 
-    _t = _time.time()
     n_pending, est_cells, active_levels = _pending_stats(pending)
-    _dbg(f"setup done: pending={n_pending} est_cells={est_cells} levels={active_levels}", _t)
 
     accepted: list[DataFrame] = []
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("dist_km").asc(), F.col(id_col).asc()
-    )
 
     def cells_gen():
         def gen(it):
@@ -461,22 +573,13 @@ def knn_join_df(
                 rhs = F.broadcast(rhs)
             c = ptsF.withColumn("_cell", F.substring("_cellF", 1, lv)).join(rhs, "_cell")
             cand = c if cand is None else cand.unionAll(c)
-        ranked = (
-            cand.withColumn(
-                "dist_km", haversine_km(F.col(lon), F.col(lat), "_qlon", "_qlat")
-            )
-            .withColumn("rank", F.row_number().over(w))
-            .where(F.col("rank") <= k)
-            .select("query_id", id_col, "dist_km", "rank")
-        )
+        ranked = _rank_top_k(cand, k, id_col, lon, lat)
         # lazy checkpoint of the bounded top-k (<= |pending| * k rows):
         # the next-pending stats collect below materializes the whole
         # round — ranked, acceptance, anti-join — as ONE Spark job while
         # the ptsF/cnt caches are still alive; acceptance and the final
         # union then read the materialized checkpoint
-        _t = _time.time()
         ranked = ranked.localCheckpoint(eager=False)
-        _dbg(f"round ranked planned: pending={n_pending} est_cells={est_cells}", _t)
         summ = ranked.groupBy("query_id").agg(
             F.count(F.lit(1)).alias("_n"), F.max("dist_km").alias("_dmax")
         )
@@ -492,7 +595,6 @@ def knn_join_df(
                 "query_id", id_col, "dist_km", "rank"
             )
         )
-        _t = _time.time()
         pending = (
             pending.join(F.broadcast(accepted_ids), "query_id", "left_anti")
             .withColumn(
@@ -501,39 +603,16 @@ def knn_join_df(
             .localCheckpoint(eager=False)
         )
         n_pending, est_cells, active_levels = _pending_stats(pending)
-        _dbg(f"round job (ranked+accept+stats): next pending={n_pending}", _t)
 
     if n_pending:
-        # final fallback: exact brute force for the stragglers (pole/sparse
-        # regions). Broadcast whichever side is smaller: a sparse points
-        # table (the usual reason ring pruning failed) broadcasts against
-        # a large query set; a small straggler set broadcasts against a
-        # dense table — either way the shuffle is keyed by query_id only.
-        p = points.select(id_col, lon, lat)
-        if n_total <= n_pending:
-            fb_cand = pending.crossJoin(F.broadcast(p))
-        else:
-            fb_cand = p.crossJoin(F.broadcast(pending))
-        fb = (
-            fb_cand.withColumn(
-                "dist_km", haversine_km(F.col(lon), F.col(lat), "_qlon", "_qlat")
-            )
-            .withColumn("rank", F.row_number().over(w))
-            .where(F.col("rank") <= k)
-            .select("query_id", id_col, "dist_km", "rank")
+        # stragglers (pole/sparse regions, n_total < k): the exact kernel
+        accepted.append(
+            _exact_knn(points, pending.select("query_id", "_qlon", "_qlat"), k, lon, lat, id_col, None)
         )
-        _t = _time.time()
-        accepted.append(fb.localCheckpoint(eager=True))
-        _dbg(f"fallback brute force: stragglers={n_pending}", _t)
 
     ptsF.unpersist()
     cnt.unpersist()
-    if not accepted:
-        return spark.createDataFrame([], out_schema)
-    out = accepted[0]
-    for df in accepted[1:]:
-        out = out.unionAll(df)
-    return out
+    return reduce(DataFrame.unionAll, accepted)
 
 
 def _initial_cover_radius_km(n_total: int, k: int) -> tuple[float, float]:
@@ -586,28 +665,33 @@ def knn_join_cover_df(
     target_cells_across: float = 8.0,
     broadcast_cells: int = 200_000,
 ) -> DataFrame:
-    """Backend-portable exact kNN with the QUERY SET AS A DATAFRAME — the
-    at-scale twin of ``knn_join_cover`` (which composes covers driver-side
-    from a bounded list), completing the surface matrix: geohash and S2
-    both have a driver-list convenience path and a DataFrame-native path.
+    """Backend-portable exact kNN with the QUERY SET AS A DATAFRAME on
+    any cell backend (``index``: s2, geohash or h3). Returns (query_id,
+    <id_col>, dist_km, rank); ties break on <id_col>. Under the
+    comparison budget (module docstring) the exact kernel answers in one
+    pass and the backend is never consulted.
 
-    Because every pending query shares the same per-round radius (r0
+    Above it, every pending query shares the same per-round radius (r0
     doubling on survival — density skew is handled by the exact
-    acceptance check, not per-query radii), each round has ONE cover
-    level, so the plan is simple: a ``mapInPandas`` stage runs the exact
-    circle-cover planner per query (the same ``CellIndexBackend.cover``
-    the radius join uses, distributed — nothing per-query on the
-    driver), candidates come from one prefix-keyed equi-join against the
-    single fine point encode (broadcast under a size bound, else
-    shuffle-by-cell), and acceptance (n >= k and k-th distance <= R) is
-    aggregate + anti-join. Returns (query_id, <id_col>, dist_km, rank);
-    ties break on <id_col>. Results are index-invariant (pytest-equal to
-    ``knn_join_cover`` and ``knn_join``).
+    acceptance check, not per-query radii), so each round has ONE cover
+    level: a ``mapInPandas`` stage runs the circle-cover planner per
+    query (the ``CellIndexBackend.cover`` the radius join uses,
+    distributed — nothing per-query on the driver), candidates come
+    from one prefix-keyed equi-join against the single fine point encode
+    (broadcast under a size bound, else shuffle-by-cell), and acceptance
+    (n >= k and k-th distance <= R) is aggregate + anti-join. The cover
+    is a superset of every cell meeting the circle, so acceptance is
+    exact; the circle covers handle pole and dateline queries through
+    the planner's piece splitting. Stragglers go to the exact kernel.
     """
     from spatial4n_spark.cellindex import cell_backend
     from spatial4n_spark.kernels.distance import km_to_deg
 
-    spark = points.sparkSession
+    pending = _query_frame(queries, query_id, qlon, qlat)
+    n_total = estimated_total if estimated_total is not None else points.count()
+    out = _exact_knn(points, pending, k, lon, lat, id_col, _query_budget(n_total, broadcast_cells))
+    if out is not None:
+        return out
     be = cell_backend(index)
     if be.has_hierarchy:
         pts = points.withColumn("_cellF", be.udf(level)(F.col(lat), F.col(lon)))
@@ -616,27 +700,16 @@ def knn_join_cover_df(
         # h3: _coarse_cell re-encodes at each round's cover level, so a
         # fine encode would be computed and never read
         pts = points.select(id_col, lon, lat).persist()
-    n_total = estimated_total if estimated_total is not None else pts.count()
     r_km, r_cap_km = _initial_cover_radius_km(n_total, k)
 
     qid_type = queries.schema[query_id].dataType.simpleString()
-    id_type = points.schema[id_col].dataType.simpleString()
-    out_schema = f"query_id {qid_type}, {id_col} {id_type}, dist_km double, rank int"
     cover_schema = (
         f"_pcell {be.sql_type}, query_id {qid_type}, _qlon double, _qlat double"
     )
 
-    pending = queries.select(
-        F.col(query_id).alias("query_id"),
-        F.col(qlon).cast("double").alias("_qlon"),
-        F.col(qlat).cast("double").alias("_qlat"),
-    ).localCheckpoint(eager=False)
+    pending = pending.localCheckpoint(eager=False)
     n_pending = pending.count()
-
     accepted: list[DataFrame] = []
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("dist_km").asc(), F.col(id_col).asc()
-    )
 
     def cover_gen(lv: int, r_deg: float):
         def gen(it):
@@ -706,14 +779,7 @@ def knn_join_cover_df(
         cand = pts.withColumn("_pcell", _coarse_cell(be, level, lv, lat, lon)).join(
             covers, "_pcell"
         )
-        ranked = (
-            cand.withColumn(
-                "dist_km", haversine_km(F.col(lon), F.col(lat), "_qlon", "_qlat")
-            )
-            .withColumn("rank", F.row_number().over(w))
-            .where(F.col("rank") <= k)
-            .select("query_id", id_col, "dist_km", "rank")
-        )
+        ranked = _rank_top_k(cand, k, id_col, lon, lat)
         # lazy checkpoint: the pending count below materializes the whole
         # round (ranked, acceptance, anti-join) as one job
         ranked = ranked.localCheckpoint(eager=False)
@@ -735,31 +801,19 @@ def knn_join_cover_df(
         r_km = min(r_km * 2.0, r_cap_km)
 
     if n_pending:
-        # stragglers (n_total < k, or max_rounds exhausted): exact brute
-        # force, broadcasting whichever side is smaller (same rationale
-        # as knn_join_df's fallback)
-        p = points.select(id_col, lon, lat)
-        if n_total <= n_pending:
-            fb_cand = pending.crossJoin(F.broadcast(p))
-        else:
-            fb_cand = p.crossJoin(F.broadcast(pending))
-        fb = (
-            fb_cand.withColumn(
-                "dist_km", haversine_km(F.col(lon), F.col(lat), "_qlon", "_qlat")
-            )
-            .withColumn("rank", F.row_number().over(w))
-            .where(F.col("rank") <= k)
-            .select("query_id", id_col, "dist_km", "rank")
-        )
-        accepted.append(fb.localCheckpoint(eager=True))
+        # stragglers (n_total < k, or max_rounds exhausted)
+        accepted.append(_exact_knn(points, pending, k, lon, lat, id_col, None))
 
     pts.unpersist()
-    if not accepted:
-        return spark.createDataFrame([], out_schema)
-    out = accepted[0]
-    for df in accepted[1:]:
-        out = out.unionAll(df)
-    return out
+    return reduce(DataFrame.unionAll, accepted)
+
+
+def _list_queries(spark, queries) -> DataFrame:
+    """A driver-side [(query_id, qlon, qlat)] list as a query DataFrame."""
+    return spark.createDataFrame(
+        [(str(q), float(a), float(b)) for q, a, b in queries],
+        "query_id string, qlon double, qlat double",
+    )
 
 
 def knn_join_cover(
@@ -775,136 +829,14 @@ def knn_join_cover(
     estimated_total: int | None = None,
     target_cells_across: float = 8.0,
 ) -> DataFrame:
-    """Exact kNN on any cell-index backend via expanding CIRCLE COVERS.
-
-    The geohash path above enumerates rectangular ring blocks, which
-    leans on lat/lon-aligned cells; S2 cells are not lat/lon rectangles,
-    so the backend-portable form replaces the ring with an exact circle
-    cover (``cellindex.CellIndexBackend.cover`` — the same planner the
-    radius join uses). Per round each pending query covers a radius-R
-    circle at a per-query cover level chosen so the cover stays O(10^2)
-    cells; coarser cover cells join against the ONE fine point encode
-    through the prefix property (int shift for S2, string prefix for
-    geohash — ``parent_col``). The cover is a superset of every cell
-    intersecting the circle, so any point within R km of the query is a
-    candidate, which makes acceptance (n >= k and the k-th distance
-    <= R) exact; survivors double R. Reference analog: GetSubGeohashes
-    ring expansion (GeohashUtils.cs:219-228) — the ring becomes a circle
-    cover, the top-k stays a query-partitioned Window
-    (north_rule: "kNN queries run as cell-ring candidate generation
-    followed by exact-distance top-k via Window ranking").
-
-    ``queries``: [(query_id, qlon, qlat)]. Returns (query_id, <id_col>,
-    dist_km, rank); ties break on <id_col>. Results are index-invariant
-    (pytest-equal to ``knn_join``); the circle covers handle pole and
-    dateline queries through the planner's piece splitting.
-    """
-    from spatial4n_spark.cellindex import cell_backend
-    from spatial4n_spark.kernels.distance import km_to_deg
-    from spatial4n_spark.kernels.polygon import Circle
-
-    spark = points.sparkSession
-    be = cell_backend(index)
-    if be.has_hierarchy:
-        pts = points.withColumn("_cellF", be.udf(level)(F.col(lat), F.col(lon)))
-        pts = pts.select(id_col, lon, lat, "_cellF").persist()
-    else:
-        pts = points.select(id_col, lon, lat).persist()
-
-    n_total = estimated_total if estimated_total is not None else pts.count()
-    r0, r_cap_km = _initial_cover_radius_km(n_total, k)
-
-    def cover_level(r_km: float) -> int:
-        return _cover_level(be, r_km, level, target_cells_across)
-
-    pending = {qid: (float(a), float(b)) for qid, a, b in queries}
-    radius = {qid: r0 for qid in pending}
-    accepted: list[DataFrame] = []
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("dist_km").asc(), F.col(id_col).asc()
+    """``knn_join_cover_df`` for a driver-side [(query_id, qlon, qlat)]
+    list; ``index`` and ``level`` pass through. Returns (query_id,
+    <id_col>, dist_km, rank); ties break on <id_col>."""
+    return knn_join_cover_df(
+        points, _list_queries(points.sparkSession, queries), k, lon=lon, lat=lat,
+        id_col=id_col, index=index, level=level, max_rounds=max_rounds,
+        estimated_total=estimated_total, target_cells_across=target_cells_across,
     )
-    out_schema = (
-        f"query_id string, {id_col} {points.schema[id_col].dataType.simpleString()},"
-        " dist_km double, rank int"
-    )
-
-    for _ in range(max_rounds):
-        if not pending:
-            break
-        # cover every pending query's circle (driver-side: list path)
-        by_level: dict[int, list[tuple]] = {}
-        for qid, (qx, qy) in pending.items():
-            r_km = radius[qid]
-            lv = cover_level(r_km)
-            circle = Circle(qx, qy, float(km_to_deg(r_km)), geo=True)
-            fulls, bounds = be.cover(circle, lv)
-            by_level.setdefault(lv, []).extend(
-                (c, qid, qx, qy) for c in fulls + bounds
-            )
-        cand = None
-        for lv, rows in sorted(by_level.items()):
-            cov = spark.createDataFrame(
-                rows,
-                f"_pcell {be.sql_type}, query_id string, _qlon double, _qlat double",
-            )
-            c = pts.withColumn("_pcell", _coarse_cell(be, level, lv, lat, lon)).join(
-                F.broadcast(cov), "_pcell"
-            )
-            cand = c if cand is None else cand.unionAll(c)
-        ranked = (
-            cand.withColumn(
-                "dist_km", haversine_km(F.col(lon), F.col(lat), "_qlon", "_qlat")
-            )
-            .withColumn("rank", F.row_number().over(w))
-            .where(F.col("rank") <= k)
-            .select("query_id", id_col, "dist_km", "rank")
-        )
-        # ONE heavy job per round (same pattern as knn_join): the summary
-        # collect materializes the lazy checkpoint
-        ranked = ranked.localCheckpoint(eager=False)
-        summ = (
-            ranked.groupBy("query_id")
-            .agg(F.count(F.lit(1)).alias("n"), F.max("dist_km").alias("dmax"))
-            .collect()
-        )
-        info = {r["query_id"]: (r["n"], r["dmax"]) for r in summ}
-        ok = [
-            qid
-            for qid in pending
-            if info.get(qid, (0, None))[0] >= k and info[qid][1] <= radius[qid]
-        ]
-        if ok:
-            accepted.append(ranked.where(F.col("query_id").isin(ok)))
-        ok_set = set(ok)
-        pending = {q: v for q, v in pending.items() if q not in ok_set}
-        for qid in pending:
-            radius[qid] = min(radius[qid] * 2.0, r_cap_km)
-
-    if pending:
-        # stragglers (n_total < k, or max_rounds exhausted): exact brute
-        # force — broadcast the bounded query list, shuffle keyed by
-        # query_id only
-        rows = [(qid, a, b) for qid, (a, b) in pending.items()]
-        q_df = spark.createDataFrame(rows, "query_id string, _qlon double, _qlat double")
-        fb = (
-            points.select(id_col, lon, lat)
-            .crossJoin(F.broadcast(q_df))
-            .withColumn(
-                "dist_km", haversine_km(F.col(lon), F.col(lat), "_qlon", "_qlat")
-            )
-            .withColumn("rank", F.row_number().over(w))
-            .where(F.col("rank") <= k)
-            .select("query_id", id_col, "dist_km", "rank")
-        )
-        accepted.append(fb.localCheckpoint(eager=True))
-
-    pts.unpersist()
-    if not accepted:
-        return spark.createDataFrame([], out_schema)
-    out = accepted[0]
-    for df in accepted[1:]:
-        out = out.unionAll(df)
-    return out
 
 
 def knn_join(
@@ -917,133 +849,13 @@ def knn_join(
     level: int = 3,
     max_rounds: int = 4,
     estimated_total: int | None = None,
-    df_threshold: int = 64,
 ) -> DataFrame:
-    """``queries``: [(query_id, qlon, qlat)]. Returns (query_id, <id_col>,
-    dist_km, rank); ties break on <id_col> for determinism.
-
-    The driver-list fast path applies only to a BOUNDED query set
-    (dashboards, the gate's 4 centers): the ring cells compose
-    driver-side and the acceptance summary collects (<= |queries| rows),
-    so each round is ONE heavy Spark job — none of the bookkeeping joins
-    the DataFrame path needs.  Above ``df_threshold`` queries the
-    per-query driver state (the pending dict, the ``isin`` literal lists
-    in the plan) stops being bounded bookkeeping and starts scaling with
-    the workload, so the call routes to ``knn_join_df`` — the
-    density-adaptive plan that keeps every per-query structure
-    distributed (capacity-proven flat driver RSS at 10^5 queries,
-    bench_runs/knn_cap_clustered_r4.json).  Both paths are EXACT kNN
-    with the same deterministic tie-break, so the routed result is
-    bit-identical.
-    """
-    spark = points.sparkSession
-    if len(queries) > df_threshold:
-        q_df = spark.createDataFrame(
-            [(str(q), float(a), float(b)) for q, a, b in queries],
-            "query_id string, qlon double, qlat double",
-        )
-        return knn_join_df(
-            points, q_df, k, lon=lon, lat=lat, id_col=id_col,
-            max_rounds=max_rounds, estimated_total=estimated_total,
-        )
-    pts = points.withColumn("_cell", geohash_udf(level)(F.col(lat), F.col(lon)))
-    pts = pts.select(id_col, lon, lat, "_cell")
-    # the encoded points are re-scanned by every ring-expansion round (and
-    # by the brute-force fallback): cache them across rounds — the iterative
-    # reuse pattern, not a driver-side materialization
-    pts = pts.persist()
-
-    n_total = estimated_total if estimated_total is not None else pts.count()
-    n_cells_world = 32**level
-    density = max(n_total / n_cells_world, 1e-9)  # rows per cell (uniform est.)
-    # cells needed for ~4x k candidates; ring r covers (2r+1)^2 cells
-    cells_needed = 4.0 * k / density
-    rings0 = max(1, math.ceil((math.sqrt(cells_needed) - 1) / 2))
-
-    pending = {qid: (qlon_v, qlat_v) for qid, qlon_v, qlat_v in queries}
-    rings = rings0
-    accepted: list[DataFrame] = []
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("dist_km").asc(), F.col(id_col).asc()
+    """``knn_join_df`` for a driver-side [(query_id, qlon, qlat)] list;
+    ``level`` (the geohash ring level of the above-budget plan) passes
+    through. Returns (query_id, <id_col>, dist_km, rank); ties break on
+    <id_col>."""
+    return knn_join_df(
+        points, _list_queries(points.sparkSession, queries), k, lon=lon, lat=lat,
+        id_col=id_col, level=level, max_rounds=max_rounds,
+        estimated_total=estimated_total,
     )
-    out_schema = (
-        f"query_id string, {id_col} {points.schema[id_col].dataType.simpleString()},"
-        " dist_km double, rank int"
-    )
-
-    rounds = max_rounds if (2 * rings0 + 1) ** 2 < n_cells_world // 4 else 0
-
-    for _ in range(rounds):
-        if not pending:
-            break
-        if (2 * rings + 1) ** 2 >= n_cells_world // 4:
-            break  # doubled past the useful range: fall back
-        qids = list(pending)
-        cells_pd = _ring_cells_frame(
-            qids,
-            [pending[q][0] for q in qids],
-            [pending[q][1] for q in qids],
-            level,
-            rings,
-        )
-        cand_df = spark.createDataFrame(
-            cells_pd[["_cell", "query_id", "_qlon", "_qlat"]],
-            "_cell string, query_id string, _qlon double, _qlat double",
-        )
-        cand = pts.join(F.broadcast(cand_df), "_cell")
-        ranked = (
-            cand.withColumn(
-                "dist_km", haversine_km(F.col(lon), F.col(lat), "_qlon", "_qlat")
-            )
-            .withColumn("rank", F.row_number().over(w))
-            .where(F.col("rank") <= k)
-            .select("query_id", id_col, "dist_km", "rank")
-        )
-        # ONE Spark job per round: the summary collect right below
-        # materializes the lazily-checkpointed bounded top-k
-        # (<= |pending| * k rows) and truncates lineage; the acceptance
-        # summary and the accepted-rows filter read the materialized
-        # result, never re-running the join
-        ranked = ranked.localCheckpoint(eager=False)
-        summ = (
-            ranked.groupBy("query_id")
-            .agg(F.count(F.lit(1)).alias("n"), F.max("dist_km").alias("dmax"))
-            .collect()
-        )
-        info = {r["query_id"]: (r["n"], r["dmax"]) for r in summ}
-        ok = [
-            qid
-            for qid, (_, qlat_v) in pending.items()
-            if info.get(qid, (0, None))[0] >= k
-            and info[qid][1] <= _covered_radius_km(qlat_v, level, rings)
-        ]
-        if ok:
-            accepted.append(ranked.where(F.col("query_id").isin(ok)))
-        ok_set = set(ok)
-        pending = {qid: v for qid, v in pending.items() if qid not in ok_set}
-        rings *= 2
-
-    if pending:
-        # final fallback: exact brute force for the stragglers (pole/sparse
-        # regions) — still a broadcast join, no big-side shuffle
-        rows = [(qid, a, b) for qid, (a, b) in pending.items()]
-        q_df = spark.createDataFrame(rows, "query_id string, _qlon double, _qlat double")
-        fb = (
-            points.select(id_col, lon, lat)
-            .crossJoin(F.broadcast(q_df))
-            .withColumn(
-                "dist_km", haversine_km(F.col(lon), F.col(lat), "_qlon", "_qlat")
-            )
-            .withColumn("rank", F.row_number().over(w))
-            .where(F.col("rank") <= k)
-            .select("query_id", id_col, "dist_km", "rank")
-        )
-        accepted.append(fb.localCheckpoint(eager=True))
-
-    pts.unpersist()
-    if not accepted:
-        return spark.createDataFrame([], out_schema)
-    out = accepted[0]
-    for df in accepted[1:]:
-        out = out.unionAll(df)
-    return out

@@ -270,7 +270,7 @@ def dist_km_kernel_sql(lon1: str, lat1: str, lon2: str, lat2: str, calculator: s
     if calculator == "haversine":
         hx = f"sin(({lo1} - {lo2}) * 5e-1)"
         hy = f"sin(({la1} - {la2}) * 5e-1)"
-        h = f"({hy} * {hy} + cos({la1}) * cos({la2}) * {hx} * {hx})"
+        h = f"least({hy} * {hy} + cos({la1}) * cos({la2}) * {hx} * {hx}, 1e0)"
         d_rad = f"(2e0 * atan2(sqrt({h}), sqrt(1e0 - {h})))"
     elif calculator == "lawofcosines":
         a = f"({dlit(np.pi / 2.0)} - {la1})"

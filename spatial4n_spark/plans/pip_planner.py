@@ -133,6 +133,12 @@ def plan_pip_join(
 
     stats: dict = {}
     if isinstance(layer, DataFrame):
+        wkt_col = "wkt" if "wkt" in layer.columns else (layer.columns[1:2] or [None])[0]
+        if wkt_col is None or layer.schema[wkt_col].dataType.simpleString() != "string":
+            raise ValueError(
+                "a DataFrame polygon layer needs (poly_id, wkt): a 'wkt' string "
+                f"column, or WKT strings in the second column; got {layer.dtypes}"
+            )
         n = layer.limit(BROADCAST_FEATURES_MAX + 1).count()
         stats["n_features_probe"] = n
         if n > BROADCAST_FEATURES_MAX:
@@ -158,10 +164,12 @@ def plan_pip_join(
 
         rows = layer.collect()
         poly_id = layer.columns[0]
-        wkt_col = "wkt" if "wkt" in layer.columns else layer.columns[1]
         layer = [(r[poly_id], parse_wkt(r[wkt_col], geo)) for r in rows]
 
     stats["n_features"] = len(layer)
+    if not layer:
+        lvl = level if level is not None else 2
+        return PipPlan("cover", lvl, 1, "empty layer: no features to join", stats), layer
     spread = _bbox_spread(layer, geo)
     stats["bbox_spread_p90_over_med"] = round(spread, 2)
     if spread > MIXED_SIZE_SPREAD:

@@ -246,7 +246,7 @@ def _native_jpeg_candidates():
             ]
 
         yield "pil", _pil
-    except ImportError:
+    except Exception:  # a broken native install is unusable, not fatal
         pass
     try:  # OpenCV
         import cv2  # type: ignore[import-not-found]
@@ -255,11 +255,15 @@ def _native_jpeg_candidates():
             out = []
             for b in bufs:
                 bgr = cv2.imdecode(np.frombuffer(b, np.uint8), cv2.IMREAD_COLOR)
+                if bgr is None:
+                    raise ValueError(
+                        f"cv2 could not decode a {len(b)}-byte JPEG payload"
+                    )
                 out.append(cv2.cvtColor(bgr, cv2.COLOR_BGR2RGB))
             return out
 
         yield "cv2", _cv2
-    except ImportError:
+    except Exception:  # a broken native install is unusable, not fatal
         pass
     try:  # PyTurboJPEG
         from turbojpeg import TJPF_RGB, TurboJPEG  # type: ignore[import-not-found]

@@ -63,8 +63,8 @@ def _scan(spark: SparkSession, sf_dir: str, table: str) -> DataFrame:
 
     The sandbox parquet files are single-row-group (unsplittable), so a
     local run would otherwise execute the whole per-row pipeline on one
-    core. ``spark.spatial4n.scan.partitions`` (set by bench.py) stands in
-    for the natural multi-file/multi-row-group parallelism of a real
+    core. ``spark.spatial4n.scan.partitions`` (set by tools/check_oracle.py)
+    stands in for the natural multi-file/multi-row-group parallelism of a real
     10^12-row table; operators themselves never repartition the fact side.
     """
     df = spark.read.parquet(f"{sf_dir}/{table}.parquet")

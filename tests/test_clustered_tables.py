@@ -271,9 +271,20 @@ def test_stream_ingest_into_clustered_equals_batch(spark, sf_dir, tmp_path):
 
 
 def test_clustered_knn_equals_ring_knn(spark, clustered):
-    """clustered_knn (expanding cover-range probes over the layout) must
-    return exactly what the ring-expansion kNN returns — incl. the pole
-    and dateline queries, where the S2 cover pieces matter."""
+    _check_clustered_knn_equals_ring_knn(spark, clustered)
+
+
+def test_clustered_knn_equals_ring_knn_above_budget(spark, clustered, monkeypatch):
+    from spatial4n_spark.operators import knn
+
+    monkeypatch.setattr(knn, "_BRUTE_FORCE_PAIRS", 0)
+    _check_clustered_knn_equals_ring_knn(spark, clustered)
+
+
+def _check_clustered_knn_equals_ring_knn(spark, clustered):
+    """clustered_knn must return exactly what the ring-expansion kNN
+    returns — incl. the pole and dateline queries, where the S2 cover
+    pieces of the above-budget plan matter."""
     from spatial4n_spark.operators.knn import knn_join
 
     path, pts = clustered
@@ -295,6 +306,46 @@ def test_clustered_knn_equals_ring_knn(spark, clustered):
         )
     )
     assert got == want and len(got) == 4 * 5
+
+
+def test_clustered_knn_kernel_equals_plan_under_mor_and_evolution(
+    spark, sf_dir, tmp_path, monkeypatch
+):
+    """Differential on a table with pending position deletes, equality
+    deletes (MOR upsert) and an add-column append: the exact kernel and
+    the cover plan return identical (query_id, id, rank) and bit-equal
+    dist_km, and neither returns a deleted or superseded row."""
+    from spatial4n_spark.operators import knn
+
+    path = str(tmp_path / "mor_knn")
+    pts = pts_orders(spark, sf_dir)
+    C.write_clustered(pts, path, level=14, files=4)
+    C.delete_clustered(spark, path, F.col("o_orderkey") % 5 == 0, strategy="mor")
+    moved = pts.where(F.col("o_orderkey") % 5 == 1).withColumn("lon", F.col("lon") + 0.5)
+    C.upsert_clustered(spark, moved, path, key="o_orderkey", strategy="mor")
+    C.append_clustered(
+        pts.limit(40)
+        .withColumn("o_orderkey", F.col("o_orderkey") + F.lit(10**10).cast("long"))
+        .withColumn("tag", F.lit("new")),
+        path,
+        files=1,
+    )
+    man = C.load_manifest(path)
+    assert {d.get("kind", "pos") for d in man["deletes"]} == {"pos", "eq"}
+    queries = [(qid, qlon, qlat) for qid, qlon, qlat, _ in RADIUS_CENTERS]
+
+    def rows():
+        out = C.clustered_knn(spark, path, queries, k=5, id_col="o_orderkey")
+        return sorted(
+            (r["query_id"], r["o_orderkey"], r["rank"], r["dist_km"])
+            for r in out.collect()
+        )
+
+    kernel = rows()
+    monkeypatch.setattr(knn, "_BRUTE_FORCE_PAIRS", 0)
+    assert rows() == kernel and len(kernel) == 4 * 5
+    live = {r[0] for r in C._read_listed(spark, path).select("o_orderkey").collect()}
+    assert all(key in live and key % 5 != 0 for _, key, _, _ in kernel)
 
 
 def test_st_clustered_time_and_space_pruning(spark, sf_dir, tmp_path):

@@ -10,6 +10,9 @@ must be skipped in auto mode and refused when forced).
 
 from __future__ import annotations
 
+import sys
+import types
+
 import numpy as np
 import pytest
 
@@ -105,3 +108,38 @@ def test_broken_native_codec_fails_self_check(monkeypatch, capsys):
 
 def test_self_check_psnr_scores_pure_as_perfect():
     assert I._jpeg_self_check_psnr(jpeg_decode_batch) == float("inf")
+
+
+def _fake_cv2(decoded):
+    """A stand-in ``cv2`` module whose imdecode returns ``decoded``."""
+    cv2 = types.ModuleType("cv2")
+    cv2.IMREAD_COLOR, cv2.COLOR_BGR2RGB = 1, 4
+    cv2.imdecode = lambda buf, flag: decoded
+    cv2.cvtColor = lambda img, code: img[..., ::-1]
+    return cv2
+
+
+def test_cv2_undecodable_payload_raises_decode_error(monkeypatch):
+    # cv2.imdecode signals an undecodable buffer with None; the candidate
+    # must say so, not fail inside cvtColor
+    monkeypatch.setitem(sys.modules, "cv2", _fake_cv2(None))
+    decode = dict(I._native_jpeg_candidates())["cv2"]
+    with pytest.raises(ValueError, match="cv2 could not decode a 10-byte"):
+        decode([b"not a jpeg"])
+    monkeypatch.setitem(sys.modules, "cv2", _fake_cv2(np.zeros((2, 3, 3), np.uint8)))
+    decode = dict(I._native_jpeg_candidates())["cv2"]
+    assert decode([b"\xff\xd8"])[0].shape == (2, 3, 3)
+
+
+def test_broken_native_import_is_skipped(monkeypatch):
+    # a native install that fails at import with something other than
+    # ImportError (a missing shared library, say) is skipped, not fatal
+    def _broken(name):
+        raise OSError("libjpeg.so: cannot open shared object file")
+
+    pil = types.ModuleType("PIL")
+    pil.__getattr__ = _broken  # ``from PIL import Image`` raises OSError
+    monkeypatch.setitem(sys.modules, "PIL", pil)
+    monkeypatch.setitem(sys.modules, "cv2", None)  # not installed
+    assert dict(I._native_jpeg_candidates()) == {}
+    assert I.jpeg_codec()[0] == "pure"

@@ -144,3 +144,28 @@ def test_auto_join_matches_manual_paths(spark, points):
             )
         )
         assert got == want
+
+
+def test_empty_layer_plans_cover_and_joins_nothing(spark):
+    pts = spark.range(3).select(
+        F.col("id").cast("double").alias("lon"), F.lit(0.0).alias("lat")
+    )
+    d, lay = plan_pip_join(pts, [])
+    assert (d.plan, lay, d.stats["n_features"]) == ("cover", [], 0)
+    assert "empty" in d.reason
+    assert spatial_join_auto(pts, []).count() == 0
+    empty_df = spark.createDataFrame([], "poly_id string, wkt string")
+    d, lay = plan_pip_join(pts, empty_df)
+    assert (d.plan, lay) == ("cover", [])
+    out = spatial_join_auto(pts, empty_df)
+    assert out.count() == 0 and "poly_id" in out.columns
+
+
+def test_layer_without_wkt_column_raises_clear_error(spark):
+    pts = spark.range(1).select(F.lit(0.0).alias("lon"), F.lit(0.0).alias("lat"))
+    for layer in (
+        spark.createDataFrame([("a",)], "poly_id string"),
+        spark.createDataFrame([("a", 1.0)], "poly_id string, area double"),
+    ):
+        with pytest.raises(ValueError, match="needs \\(poly_id, wkt\\)"):
+            plan_pip_join(pts, layer)

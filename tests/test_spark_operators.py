@@ -147,7 +147,24 @@ def test_radius_join_df_equals_list_path(spark, points, index):
     assert got_shuffle == want
 
 
+@pytest.fixture
+def above_budget(monkeypatch):
+    """Sets the exact-kernel budget to 0, so every kNN entry point runs
+    its cell plan (stragglers still reach the kernel)."""
+    from spatial4n_spark.operators import knn
+
+    monkeypatch.setattr(knn, "_BRUTE_FORCE_PAIRS", 0)
+
+
 def test_knn_matches_bruteforce(spark, points, coords):
+    _check_knn_matches_bruteforce(points, coords)
+
+
+def test_knn_matches_bruteforce_above_budget(spark, points, coords, above_budget):
+    _check_knn_matches_bruteforce(points, coords)
+
+
+def _check_knn_matches_bruteforce(points, coords):
     ids, lon, lat = coords
     queries = [("q_paris", 2.35, 48.85), ("q_dl", 179.9, -5.0), ("q_sparse", -120.0, -55.0)]
     k = 7
@@ -290,10 +307,17 @@ def test_spatial_join_df_layer_10k_features(spark, points, coords):
 
 
 def test_knn_join_df_equals_list_path(spark, points):
-    """The DataFrame-native kNN (queries as a DataFrame, mapInPandas ring
-    cells, acceptance via joins) returns exactly the driver-list path's
-    rows — including a forced shuffle-join round (broadcast_cells=0) so
-    the at-scale plan is the one verified."""
+    _check_knn_join_df_equals_list_path(spark, points)
+
+
+def test_knn_join_df_equals_list_path_above_budget(spark, points, above_budget):
+    _check_knn_join_df_equals_list_path(spark, points)
+
+
+def _check_knn_join_df_equals_list_path(spark, points):
+    """The DataFrame kNN returns exactly the driver-list wrapper's rows
+    at a pinned level, with broadcast_cells=0 (above the budget: a
+    forced shuffle-join round) and with adaptive per-query levels."""
     from spatial4n_spark.operators import knn_join_df
 
     queries = [("q_paris", 2.35, 48.85), ("q_dl", 179.9, -5.0), ("q_sparse", -120.0, -55.0)]
@@ -320,9 +344,17 @@ def test_knn_join_df_equals_list_path(spark, points):
 
 
 def test_knn_join_cover_equals_ring_path(spark, points):
+    _check_knn_join_cover_equals_ring_path(points)
+
+
+def test_knn_join_cover_equals_ring_path_above_budget(spark, points, above_budget):
+    _check_knn_join_cover_equals_ring_path(points)
+
+
+def _check_knn_join_cover_equals_ring_path(points):
     """The backend-portable cover-based kNN (expanding circle covers per
     round, prefix-property coarse joins) returns exactly the ring path's
-    rows on BOTH cell backends — including pole and dateline queries,
+    rows on every cell backend — including pole and dateline queries,
     which exercise the cover planner's piece splitting."""
     from spatial4n_spark.operators.knn import knn_join_cover
 
@@ -350,10 +382,16 @@ def test_knn_join_cover_equals_ring_path(spark, points):
 
 
 def test_knn_join_cover_df_equals_list_path(spark, points):
-    """The DataFrame-native cover kNN (covers planned DISTRIBUTED in a
-    mapInPandas stage, acceptance as aggregate + anti-join) returns
-    exactly the driver-list cover path's rows on both backends,
-    including pole and dateline queries."""
+    _check_knn_join_cover_df_equals_list_path(spark, points)
+
+
+def test_knn_join_cover_df_equals_list_path_above_budget(spark, points, above_budget):
+    _check_knn_join_cover_df_equals_list_path(spark, points)
+
+
+def _check_knn_join_cover_df_equals_list_path(spark, points):
+    """The DataFrame cover kNN returns exactly the driver-list wrapper's
+    rows on every backend, including pole and dateline queries."""
     from spatial4n_spark.operators.knn import knn_join_cover, knn_join_cover_df
 
     queries = [
@@ -617,22 +655,77 @@ def test_tile_pyramid_count_only_and_h3_rejected(spark, points):
         tile_pyramid(points, level=5, index="h3")
 
 
-def test_knn_join_routes_large_batches_to_df_plan(spark, points):
-    """Above df_threshold the list entry point must delegate to the
-    DF-native plan (no O(#queries) driver dict / isin literals) and
-    return the identical exact result — the round-5 unification of the
-    legacy list path."""
-    queries = [("q_paris", 2.35, 48.85), ("q_dl", 179.9, -5.0),
-               ("q_sparse", -120.0, -55.0), ("q_lon", -0.1, 51.5)]
+def test_knn_join_routes_large_batches_to_df_plan(spark, points, monkeypatch):
+    """The list entry point is a wrapper over knn_join_df: a batch above
+    64 queries reaches the DataFrame plan with the caller's ``level``
+    (it used to be dropped there) and returns the exact answer."""
+    from spatial4n_spark.operators import knn
+
+    seen = []
+    real = knn.knn_join_df
+    monkeypatch.setattr(
+        knn, "knn_join_df", lambda *a, **kw: seen.append(kw["level"]) or real(*a, **kw)
+    )
+    rng = np.random.default_rng(5)
+    queries = [
+        (f"q{i:03d}", float(x), float(y))
+        for i, (x, y) in enumerate(zip(rng.uniform(-180, 180, 80), rng.uniform(-80, 80, 80)))
+    ]
     k = 5
-    want = sorted(
-        map(tuple, knn_join(points, queries, k=k, level=3).collect())
+    got = sorted(map(tuple, knn_join(points, queries, k=k, level=4).collect()))
+    assert seen == [4]
+    monkeypatch.setattr(knn, "_BRUTE_FORCE_PAIRS", 0)
+    plan = sorted(map(tuple, knn_join(points, queries, k=k, level=4).collect()))
+    assert seen == [4, 4]
+    assert got == plan and len(got) == 80 * k
+
+
+def _knn_rows(df, id_col="image_id"):
+    return sorted(
+        (r["query_id"], r[id_col], r["rank"], r["dist_km"])
+        for r in df.select("query_id", id_col, "rank", "dist_km").collect()
     )
-    # df_threshold=1 forces every call through knn_join_df
-    got = sorted(
-        map(
-            tuple,
-            knn_join(points, queries, k=k, df_threshold=1).collect(),
-        )
-    )
-    assert got == want
+
+
+def test_knn_kernel_equals_plans(spark, coords, monkeypatch):
+    """Differential: the exact kernel and every above-budget plan return
+    identical (query_id, id, rank) and bit-equal dist_km on dateline and
+    polar queries, the Paris hot cluster, exact duplicate points tied at
+    the k-th distance, fewer points than k, and an empty points table."""
+    from spatial4n_spark.operators import knn
+
+    ids, lon, lat = coords
+    rows = [(f"img{int(i):09d}", float(x), float(y)) for i, x, y in zip(ids, lon, lat)]
+    # 12 copies of one point: the query beside them ties at the k-th
+    # distance and the id order decides which 7 of 12 are returned
+    rows += [(f"dup{j:02d}", 40.01, 10.0) for j in range(12)]
+    schema = "image_id string, lon double, lat double"
+    tables = {
+        "full": spark.createDataFrame(rows, schema),
+        "fewer_than_k": spark.createDataFrame(rows[:3], schema),
+        "empty": spark.createDataFrame([], schema),
+    }
+    queries = [
+        ("q_paris", 2.35, 48.85), ("q_dl", 179.9, -5.0), ("q_dl2", -179.95, 0.5),
+        ("q_pole", 10.0, 89.5), ("q_spole", -60.0, -89.9), ("q_tie", 40.0, 10.0),
+    ]
+    qdf = spark.createDataFrame(queries, "query_id string, qlon double, qlat double")
+    k = 7
+    runs = {
+        "df": lambda p: knn.knn_join_df(p, qdf, k),
+        "df_level3": lambda p: knn.knn_join_df(p, qdf, k, level=3),
+        "cover_s2": lambda p: knn.knn_join_cover_df(p, qdf, k, index="s2", level=12),
+        "cover_geohash": lambda p: knn.knn_join_cover_df(p, qdf, k, index="geohash", level=5),
+        "cover_h3": lambda p: knn.knn_join_cover_df(p, qdf, k, index="h3", level=7),
+    }
+    for name, pts in tables.items():
+        kernel = _knn_rows(runs["df"](pts))
+        want = {"full": len(queries) * k, "fewer_than_k": len(queries) * 3, "empty": 0}
+        assert len(kernel) == want[name], name
+        if name == "full":
+            tie = [r[1] for r in kernel if r[0] == "q_tie"]
+            assert tie == [f"dup{j:02d}" for j in range(k)]
+        with monkeypatch.context() as m:
+            m.setattr(knn, "_BRUTE_FORCE_PAIRS", 0)
+            for plan, run in runs.items():
+                assert _knn_rows(run(pts)) == kernel, (name, plan)

@@ -10,6 +10,7 @@ Usage: python tools/check_oracle.py [sf_dir] [query ...]
 
 from __future__ import annotations
 
+import contextlib
 import os
 import sys
 import time
@@ -19,6 +20,10 @@ import numpy as np
 import pandas as pd
 
 sys.path.insert(0, ".")
+
+# the DuckDB image oracles mirror the pure JPEG decoder bit for bit; set
+# before any Spark session starts so local-mode workers inherit it
+os.environ.setdefault("SPATIAL4N_JPEG_CODEC", "pure")
 
 TABLES = [
     "region", "nation", "customer", "supplier", "part",
@@ -32,21 +37,25 @@ def duck_con(sf_dir: str) -> duckdb.DuckDBPyConnection:
     # sf1) spill tens of GB — keep the spill off the repo directory and
     # give the in-memory phase room (less spill to begin with).
     # Overridable: ORACLE_DUCK_MEM / ORACLE_DUCK_TMP.
-    with __import__("contextlib").suppress(duckdb.Error, OSError):
-        tmp = os.environ.get("ORACLE_DUCK_TMP", "/tmp/duckdb_oracle_tmp")
+    tmp = os.environ.get("ORACLE_DUCK_TMP", "/tmp/duckdb_oracle_tmp")
+    with contextlib.suppress(OSError):
         os.makedirs(tmp, exist_ok=True)
-        con.execute(f"SET temp_directory='{tmp}'")
-        con.execute(
-            f"SET memory_limit='{os.environ.get('ORACLE_DUCK_MEM', '24GB')}'"
-        )
+    settings = {
+        "temp_directory": f"'{tmp}'",
+        "memory_limit": f"'{os.environ.get('ORACLE_DUCK_MEM', '24GB')}'",
         # our compares are order-insensitive (canon() sorts), so DuckDB
         # need not buffer pipelines to preserve row order — a large
         # memory/spill reduction on the wide-intermediate oracles
-        con.execute("SET preserve_insertion_order=false")
-        if os.environ.get("ORACLE_DUCK_THREADS"):
-            con.execute(
-                f"SET threads={int(os.environ['ORACLE_DUCK_THREADS'])}"
-            )
+        "preserve_insertion_order": "false",
+    }
+    if os.environ.get("ORACLE_DUCK_THREADS"):
+        settings["threads"] = str(int(os.environ["ORACLE_DUCK_THREADS"]))
+    # one statement per setting: a failed SET must not skip the others
+    for name, value in settings.items():
+        try:
+            con.execute(f"SET {name}={value}")
+        except duckdb.Error as ex:
+            print(f"WARNING: DuckDB setting {name} not applied: {ex}", file=sys.stderr)
     for t in TABLES:
         try:
             con.execute(

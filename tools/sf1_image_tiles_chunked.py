@@ -31,6 +31,10 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+# the DuckDB image oracles mirror the pure JPEG decoder bit for bit; set
+# before any Spark session starts so local-mode workers inherit it
+os.environ.setdefault("SPATIAL4N_JPEG_CODEC", "pure")
+
 _RATIO = re.compile(
     r"CAST\(sum\(px_dec\) AS BIGINT\) / \(CAST\(sum\(CAST\(w AS BIGINT\) \* w\) AS BIGINT\) \* 3\)\s*\n\s*AS avg_brightness"
 )
