@@ -2740,16 +2740,13 @@ def clustered_knn(
     lat: str = "lat",
     max_rounds: int = 10,
 ):
-    """Driver-list convenience surface over ``clustered_knn_df`` — the
-    old per-query collect loop is gone; a list of (query_id, lon, lat)
-    tuples becomes a query DataFrame and runs through the same
-    constant-jobs-per-round plan a 10^5-query batch would use."""
-    qdf = spark.createDataFrame(
-        [(str(q), float(x), float(y)) for q, x, y in queries],
-        "query_id string, qlon double, qlat double",
-    )
+    """``clustered_knn_df`` for a driver-side [(query_id, lon, lat)]
+    list."""
+    from spatial4n_spark.operators.knn import _list_queries
+
     return clustered_knn_df(
-        spark, path, qdf, k, id_col=id_col, lon=lon, lat=lat, max_rounds=max_rounds
+        spark, path, _list_queries(spark, queries), k, id_col=id_col, lon=lon, lat=lat,
+        max_rounds=max_rounds,
     )
 
 

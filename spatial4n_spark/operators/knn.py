@@ -37,7 +37,7 @@ from functools import reduce
 import numpy as np
 
 from pyspark.sql import DataFrame, Window, functions as F
-from pyspark.sql.types import IntegerType, StructField, StructType
+from pyspark.sql.types import DoubleType, IntegerType, StringType, StructField, StructType
 
 from spatial4n_spark.functions.native import haversine_km
 from spatial4n_spark.functions.udfs import geohash_udf
@@ -79,6 +79,15 @@ def _rank_top_k(cand: DataFrame, k: int, id_col: str, lon: str, lat: str, *keep)
         .where(F.col("rank") <= k)
         .select("query_id", id_col, "dist_km", "rank", *keep)
     )
+
+
+def _local_frame(spark, rows: list, schema: StructType) -> DataFrame:
+    """Driver rows as a DataFrame. Built from pandas (Arrow), it is a
+    LocalRelation: collecting or broadcasting it runs no Spark job, where
+    a DataFrame made from a Python list is an RDD costing a job each."""
+    import pandas as pd
+
+    return spark.createDataFrame(pd.DataFrame(rows, columns=schema.names), schema)
 
 
 def _query_budget(n_points: int, broadcast_cells: int) -> int:
@@ -162,8 +171,8 @@ def _exact_knn(
     rows = (queries if q_max is None else queries.limit(q_max + 1)).collect()
     if q_max is not None and len(rows) > q_max:
         return None
-    spark = points.sparkSession
-    q_df = spark.createDataFrame(
+    q_df = _local_frame(
+        points.sparkSession,
         [(i, *r) for i, r in enumerate(rows)],
         StructType([StructField("_qi", IntegerType()), *queries.schema.fields]),
     )
@@ -810,9 +819,13 @@ def knn_join_cover_df(
 
 def _list_queries(spark, queries) -> DataFrame:
     """A driver-side [(query_id, qlon, qlat)] list as a query DataFrame."""
-    return spark.createDataFrame(
+    return _local_frame(
+        spark,
         [(str(q), float(a), float(b)) for q, a, b in queries],
-        "query_id string, qlon double, qlat double",
+        StructType(
+            [StructField("query_id", StringType()), StructField("qlon", DoubleType()),
+             StructField("qlat", DoubleType())]
+        ),
     )
 
 
