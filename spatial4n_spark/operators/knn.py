@@ -377,8 +377,8 @@ def knn_join_df(
     query-partitioned window takes top-k; acceptance (k-th distance
     within the covered radius of the query's level+rings) is an
     aggregate + join; survivors double their rings. Nothing per-query
-    touches the driver; stragglers after ``max_rounds`` go to the exact
-    kernel.
+    touches the driver until the stragglers left after ``max_rounds``,
+    which are collected for the exact kernel.
 
     Under the comparison budget (module docstring) none of this runs:
     the exact kernel answers in one pass. ``estimated_total`` (the

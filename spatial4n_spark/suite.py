@@ -739,10 +739,10 @@ def q_radius_join_df(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_knn_clustered(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact kNN probing the clustered layout: each round's query circle
-    becomes cover id ranges (manifest file pruning + pushed row groups),
-    accepted when the k-th distance fits the covered radius — the third
-    query family on the storage artifact (PIP, radius, kNN). Oracle =
+    """Exact kNN over the clustered layout — the third query family on
+    the storage artifact (PIP, radius, kNN). At gate sizes the exact
+    kernel reads the manifest-listed files through the one read spec;
+    above its budget, query circles become cover id ranges. Oracle =
     the brute-force kNN SQL; results are layout-invariant."""
     from spatial4n_spark.io.clustered import clustered_knn
 
@@ -785,7 +785,9 @@ def _parquet_num_rows(path: str) -> int | None:
 
 
 def q_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact kNN via cell-ring candidates + window top-k."""
+    """Exact kNN from a driver-side query list (``knn_join``): the
+    single-pass kernel at gate sizes, cell-ring rounds above its budget;
+    window top-k either way."""
     queries = [(qid, qlon, qlat) for qid, qlon, qlat, _ in RADIUS_CENTERS]
     out = knn_join(
         pts_orders(spark, sf_dir),
@@ -799,12 +801,10 @@ def q_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_knn_df(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Same exact kNN through the DataFrame-native, density-adaptive path
-    (`knn_join_df`): per-query grid levels from a counts pyramid,
-    anisotropic ring blocks expanded in mapInPandas, acceptance via
-    aggregate + anti-join — nothing per-query on the driver. Gate-verifying
-    this path means the plan a 10^6-query batch would use is the audited
-    one; the `knn` row covers the driver-list convenience surface."""
+    """Same exact kNN with the queries as a DataFrame (`knn_join_df`):
+    the single-pass kernel at gate sizes; above its budget, per-query
+    grid levels from a counts pyramid and ring blocks expanded in
+    mapInPandas. The `knn` row covers the driver-list surface."""
     qdf = spark.createDataFrame(
         [(qid, qlon, qlat) for qid, qlon, qlat, _ in RADIUS_CENTERS],
         "query_id string, qlon double, qlat double",
