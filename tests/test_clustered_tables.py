@@ -314,7 +314,9 @@ def test_clustered_knn_kernel_equals_plan_under_mor_and_evolution(
     """Differential on a table with pending position deletes, equality
     deletes (MOR upsert) and an add-column append: the exact kernel and
     the cover plan return identical (query_id, id, rank) and bit-equal
-    dist_km, and neither returns a deleted or superseded row."""
+    dist_km, equal to kNN over a pandas model of the live rows."""
+    import pandas as pd
+
     from spatial4n_spark.operators import knn
 
     path = str(tmp_path / "mor_knn")
@@ -334,18 +336,24 @@ def test_clustered_knn_kernel_equals_plan_under_mor_and_evolution(
     assert {d.get("kind", "pos") for d in man["deletes"]} == {"pos", "eq"}
     queries = [(qid, qlon, qlat) for qid, qlon, qlat, _ in RADIUS_CENTERS]
 
-    def rows():
-        out = C.clustered_knn(spark, path, queries, k=5, id_col="o_orderkey")
+    def rows(out):
         return sorted(
             (r["query_id"], r["o_orderkey"], r["rank"], r["dist_km"])
             for r in out.collect()
         )
 
-    kernel = rows()
+    kernel = rows(C.clustered_knn(spark, path, queries, k=5, id_col="o_orderkey"))
+    # the model: deleted keys gone, upserted keys at their new position,
+    # the appended rows as read back
+    model = pts.toPandas()
+    model = model[model.o_orderkey % 5 != 0]
+    model.loc[model.o_orderkey % 5 == 1, "lon"] += 0.5
+    added = C._read_listed(spark, path).where(F.col("o_orderkey") >= 10**10)
+    model = pd.concat([model, added.select(*model.columns).toPandas()])
+    want = knn.knn_join(spark.createDataFrame(model), queries, k=5, id_col="o_orderkey")
+    assert kernel == rows(want) and len(kernel) == 4 * 5
     monkeypatch.setattr(knn, "_BRUTE_FORCE_PAIRS", 0)
-    assert rows() == kernel and len(kernel) == 4 * 5
-    live = {r[0] for r in C._read_listed(spark, path).select("o_orderkey").collect()}
-    assert all(key in live and key % 5 != 0 for _, key, _, _ in kernel)
+    assert rows(C.clustered_knn(spark, path, queries, k=5, id_col="o_orderkey")) == kernel
 
 
 def test_st_clustered_time_and_space_pruning(spark, sf_dir, tmp_path):
