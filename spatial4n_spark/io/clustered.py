@@ -65,6 +65,10 @@ DELETE_DIR = "_deletes"
 # join — the threshold only picks the physical strategy)
 BROADCAST_DELETE_ROWS = 2_000_000
 _DFILE, _DPOS = "__s4n_file", "__s4n_pos"
+# on-disk bytes (data files plus their applicable delete files) at or
+# under which clustered_radius_query and clustered_knn_df read on the
+# driver (``_read_files_local``) instead of running Spark scan jobs
+_LOCAL_READ_BYTES = 64 << 20
 
 
 def lock_path(path: str, lockfile: str = LOCKFILE) -> str:
@@ -218,10 +222,12 @@ def _file_stats(path: str, names: list[str]) -> list[dict]:
 
 
 def _col_range_keep(e: dict, col: str, lo, hi) -> bool:
-    """May this manifest entry hold rows with ``col`` in [lo, hi]?
-    Sound by construction: entries without stats for the column (legacy
-    manifests, unsupported types) are always kept."""
-    rng = e.get("cols", {}).get(col)
+    """May this manifest entry hold rows with ``col`` in [lo, hi]? The
+    one file-overlap test of every manifest pruner (the cell column's
+    bounds are the entry's ``min``/``max``). Sound by construction:
+    entries without stats for the column (legacy manifests, unsupported
+    types) are always kept."""
+    rng = [e["min"], e["max"]] if col == CELL_COL else e.get("cols", {}).get(col)
     if rng is None:
         return True
     return not (hi < rng[0] or lo > rng[1])
@@ -1602,11 +1608,7 @@ def _delete_scope(man: dict, predicate, shape):
     if shape is not None:
         level = int(man["level"])
         ranges = cover_ranges(shape, level)
-        cand = [
-            e
-            for e in entries
-            if any(not (hi < e["min"] or lo > e["max"]) for lo, hi in ranges)
-        ]
+        cand, _ = _prune(man, ranges)
         rcond = None
         for lo, hi in ranges:
             c = F.col(CELL_COL).between(F.lit(lo), F.lit(hi))
@@ -2116,6 +2118,22 @@ class PruneStats:
     n_ranges: int
 
 
+def _prune(man: dict, ranges) -> tuple[list[dict], PruneStats]:
+    """The manifest entries whose cell [min,max] meets a query range,
+    and the pruning figures — the file planning of every range read."""
+    files = man["files"]
+    keep = [
+        e for e in files if any(_col_range_keep(e, CELL_COL, lo, hi) for lo, hi in ranges)
+    ]
+    return keep, PruneStats(
+        files_total=len(files),
+        files_kept=len(keep),
+        rows_total=sum(e["rows"] for e in files),
+        rows_kept_files=sum(e["rows"] for e in keep),
+        n_ranges=len(ranges),
+    )
+
+
 def read_pruned(
     spark: SparkSession,
     path: str,
@@ -2128,28 +2146,20 @@ def read_pruned(
     ``snapshot_id`` plans against that snapshot's manifest instead of
     the current one (time travel)."""
     man = load_manifest(path, snapshot_id)
-    files = man["files"]
-    keep = [
-        e
-        for e in files
-        if any(not (hi < e["min"] or lo > e["max"]) for lo, hi in ranges)
-    ]
-    stats = PruneStats(
-        files_total=len(files),
-        files_kept=len(keep),
-        rows_total=sum(e["rows"] for e in files),
-        rows_kept_files=sum(e["rows"] for e in keep),
-        n_ranges=len(ranges),
-    )
+    keep, stats = _prune(man, ranges)
+    return _scan_kept(spark, path, man, keep, ranges), stats
+
+
+def _scan_kept(spark: SparkSession, path: str, man: dict, keep, ranges) -> DataFrame:
+    """Spark scan of the kept entries restricted to the cell ranges."""
     if not keep or not ranges:
-        empty = spark.createDataFrame([], _table_schema(spark, path, man))
-        return empty, stats
+        return spark.createDataFrame([], _table_schema(spark, path, man))
     df = _read_files(spark, path, man, [e["file"] for e in keep])
     cond = None
     for lo, hi in ranges:
         c = F.col(CELL_COL).between(F.lit(lo), F.lit(hi))
         cond = c if cond is None else (cond | c)
-    return df.where(cond), stats
+    return df.where(cond)
 
 
 def clustered_scan(
@@ -2171,19 +2181,11 @@ def clustered_scan(
     man = load_manifest(path, snapshot_id)
     col_ranges = dict(col_ranges or {})
     entries = man["files"]
-    keep = []
-    for e in entries:
-        ok = True
-        for col, (lo, hi) in col_ranges.items():
-            if col == CELL_COL:
-                if hi < e["min"] or lo > e["max"]:
-                    ok = False
-                    break
-            elif not _col_range_keep(e, col, lo, hi):
-                ok = False
-                break
-        if ok:
-            keep.append(e)
+    keep = [
+        e
+        for e in entries
+        if all(_col_range_keep(e, col, lo, hi) for col, (lo, hi) in col_ranges.items())
+    ]
     stats = PruneStats(
         files_total=len(entries),
         files_kept=len(keep),
@@ -2211,15 +2213,34 @@ def clustered_radius_query(
     with_stats: bool = False,
     snapshot_id: int | None = None,
 ):
-    """Radius query over a clustered table: manifest file pruning +
-    pushed row-group ranges, then the SAME exact haversine predicate as
-    the unclustered radius join — the layout changes what is read,
-    never what is returned.  ``snapshot_id`` runs the query as of that
-    snapshot (time travel)."""
+    """Radius query over a clustered table: manifest file pruning (the
+    ``read_pruned`` planning), then the SAME exact Catalyst haversine
+    predicate as the unclustered radius join — the layout changes what
+    is read, never what is returned.  ``snapshot_id`` runs the query as
+    of that snapshot, tag or branch (time travel).
+
+    When the kept files and their pending delete files fit
+    ``_LOCAL_READ_BYTES`` on disk, the driver reads them
+    (``_read_files_local``: the same read spec), keeps the rows in the
+    cover's cell ranges within a slack of the radius (numpy haversine)
+    and hands them to Spark as a local relation; the Catalyst predicate
+    then runs on the driver, with no job, so rows and schema equal the
+    Spark scan's. Above the budget the kept files are one Spark scan
+    with the range disjunction pushed to the row groups."""
+    from spatial4n_spark.operators.knn import _SLACK_KM, _SLACK_REL
+
     man = load_manifest(path, snapshot_id)
     circle = Circle(float(qlon), float(qlat), float(km_to_deg(radius_km)), geo=True)
     ranges = cover_ranges(circle, man["level"])
-    df, stats = read_pruned(spark, path, ranges, snapshot_id=snapshot_id)
+    keep, stats = _prune(man, ranges)
+    names = [e["file"] for e in keep]
+    if names and _reads_locally(path, man, names):
+        tbl = _read_files_local(path, man, names, ranges)
+        d = _haversine_km_np(tbl, lon, lat, qlon, qlat)
+        tbl = tbl.filter(d <= float(radius_km) * (1 + _SLACK_REL) + _SLACK_KM)
+        df = spark.createDataFrame(tbl, _read_schema(man))
+    else:
+        df = _scan_kept(spark, path, man, keep, ranges)
     out = df.where(
         haversine_km(F.col(lon), F.col(lat), F.lit(float(qlon)), F.lit(float(qlat)))
         <= F.lit(float(radius_km))
@@ -2257,6 +2278,22 @@ def _schema_reader(spark: SparkSession, man: dict):
     return spark.read.schema(schema) if schema is not None else spark.read
 
 
+def _read_schema(man: dict):
+    """The manifest schema as the parquet reader returns it: every
+    field nullable (Spark relaxes a file source's schema on read)."""
+    from pyspark.sql.types import StructType
+
+    def relax(j):
+        if isinstance(j, dict):
+            return {
+                k: True if k in ("nullable", "containsNull", "valueContainsNull") else relax(v)
+                for k, v in j.items()
+            }
+        return [relax(v) for v in j] if isinstance(j, list) else j
+
+    return StructType.fromJson(relax(json.loads(man["schema"])))
+
+
 def _applicable_deletes(man: dict, names) -> list[dict]:
     """The snapshot's pending MOR delete files whose target set
     intersects the files being read — a scan that prunes to untouched
@@ -2285,7 +2322,13 @@ def _read_files(
     ``keep_src``/``keep_pos`` retain the source file name / in-file row
     position as named output columns — the inputs a MOR delete writer
     or a per-file hit counter needs (``input_file_name()`` is unreliable
-    above a join, so callers take the columns from here instead)."""
+    above a join, so callers take the columns from here instead).
+
+    ``_read_files_local`` is the driver-side executor of the same read
+    spec: ``clustered_radius_query`` and ``clustered_knn_df`` use it
+    whenever the files to read fit the one byte budget
+    ``_LOCAL_READ_BYTES``, with identical results, and this Spark read
+    above it (the only path for a table larger than the driver)."""
     if not names:
         df = spark.createDataFrame([], _table_schema(spark, path, man))
         if keep_src is not None:
@@ -2338,6 +2381,107 @@ def _read_files(
             out_cols.append(keep_pos)
         df = df.select(*out_cols)
     return df
+
+
+def _disk_bytes(p: str) -> int:
+    """Bytes on disk of a file, or of every file under a directory."""
+    if not os.path.isdir(p):
+        return os.stat(p).st_size
+    return sum(os.stat(os.path.join(d, f)).st_size for d, _, fs in os.walk(p) for f in fs)
+
+
+def _reads_locally(path: str, man: dict, names: list[str]) -> bool:
+    """May the driver read these files itself? Yes when the manifest
+    pins a schema and the data files plus their applicable delete files
+    take at most ``_LOCAL_READ_BYTES`` on disk (``os.stat``; no footer
+    is read)."""
+    if not man.get("schema"):
+        return False
+    files = names + [d["file"] for d in _applicable_deletes(man, names)]
+    return sum(_disk_bytes(os.path.join(path, f)) for f in files) <= _LOCAL_READ_BYTES
+
+
+def _read_files_local(path: str, man: dict, names: list[str], ranges=None):
+    """The driver-local twin of ``_read_files``: the same read spec as
+    one Arrow table, with no Spark job. The listed files are read under
+    the manifest's pinned schema (columns a file lacks read as null);
+    pending position deletes drop (file, row position) pairs — the
+    position counts across row groups, as ``_metadata.row_index`` does;
+    equality deletes drop rows by key only in their target files, and a
+    null key never matches. ``ranges`` keeps only the rows whose cell id
+    lies in one of them (``read_pruned``'s range disjunction)."""
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    schema = to_arrow_schema(_read_schema(man))
+    nm = set(names)
+    pos: dict[str, list] = {}
+    eqs = []
+    for d in _applicable_deletes(man, names):
+        if d.get("kind", "pos") == "pos":
+            t = pq.read_table(os.path.join(path, d["file"]), columns=["_file", "_pos"])
+            files = t["_file"].to_numpy(zero_copy_only=False)
+            p = t["_pos"].to_numpy()
+            for lab in np.unique(files):
+                pos.setdefault(lab, []).append(p[files == lab])
+        else:
+            t = pq.read_table(os.path.join(path, d["file"]), columns=["_key"])
+            eqs.append((d["key"], t["_key"].combine_chunks(), set(d["targets"]) & nm))
+    if ranges:
+        bounds = np.array(_merge_ranges(ranges), dtype=np.int64)
+    parts = []
+    for name in names:
+        t = pq.read_table(os.path.join(path, name))
+        label = os.path.basename(name)  # what _metadata.file_name reports
+        live = np.ones(t.num_rows, dtype=bool)
+        if label in pos:
+            p = np.concatenate(pos[label])
+            live[p[p < t.num_rows]] = False
+        for key, keys, targets in eqs:
+            if label in targets and key in t.column_names:
+                col = t[key]
+                hit = pc.is_in(col, value_set=keys.cast(col.type), skip_nulls=True)
+                live &= ~hit.to_numpy(zero_copy_only=False)
+        if ranges:
+            cell = t[CELL_COL]
+            c = pc.fill_null(cell, 0).to_numpy()
+            i = np.searchsorted(bounds[:, 0], c, side="right") - 1
+            live &= (
+                (i >= 0)
+                & (c <= bounds[np.maximum(i, 0), 1])
+                & cell.is_valid().to_numpy(zero_copy_only=False)
+            )
+        t = t.filter(live)
+        parts.append(
+            pa.Table.from_arrays(
+                [
+                    t[f.name].cast(f.type) if f.name in t.column_names
+                    else pa.nulls(t.num_rows, f.type)
+                    for f in schema
+                ],
+                schema=schema,
+            )
+        )
+    return pa.concat_tables(parts) if parts else schema.empty_table()
+
+
+def _haversine_km_np(tbl, lon: str, lat: str, qlon: float, qlat: float):
+    """numpy haversine (km) from every row of an Arrow table to one
+    point; NaN where a coordinate is null."""
+    import numpy as np
+    import pyarrow as pa
+
+    from spatial4n_spark.kernels.distance import EARTH_MEAN_RADIUS_KM, dist_haversine_rad
+
+    def rad(col):
+        return np.radians(tbl[col].cast(pa.float64()).to_numpy(zero_copy_only=False))
+
+    return dist_haversine_rad(
+        rad(lat), rad(lon), math.radians(float(qlat)), math.radians(float(qlon))
+    ) * EARTH_MEAN_RADIUS_KM
 
 
 def _merge_schemas(old, new):
@@ -2407,8 +2551,12 @@ def clustered_knn_df(
 
     Under the comparison budget (queries x manifest rows <=
     ``operators.knn._BRUTE_FORCE_PAIRS``) the exact kernel of
-    operators.knn runs over ``_read_files`` of every listed file — the
-    one read spec, so pending MOR deletes and the manifest schema apply.
+    operators.knn runs over every listed file under the one read spec,
+    so pending MOR deletes and the manifest schema apply. When those
+    files and their delete files fit ``_LOCAL_READ_BYTES`` on disk the
+    kernel runs on the driver over ``_read_files_local`` (``_local_knn``:
+    same candidates, same Catalyst distance, same rank, no Spark job);
+    otherwise it streams ``_read_files`` through ``mapInArrow``.
 
     Above it, the plan is density-adaptive, per query, per round:
 
@@ -2438,13 +2586,19 @@ def clustered_knn_df(
     man = load_manifest(path)
     level = int(man["level"])
     n_total = sum(e["rows"] for e in man["files"])
-    listed = _read_files(spark, path, man, [e["file"] for e in man["files"]])
+    names = [e["file"] for e in man["files"]]
     q0 = _knn._query_frame(queries, query_id, qlon, qlat)
-    out = _knn._exact_knn(
-        listed, q0, k, lon, lat, id_col, _knn._query_budget(n_total, broadcast_cells)
-    )
-    if out is not None:
-        return out
+    q_max = _knn._query_budget(n_total, broadcast_cells)
+    local = _reads_locally(path, man, names)
+    if local:
+        rows = _knn._collect_queries(q0, q_max)
+        if rows is not None:
+            return _local_knn(spark, path, man, names, rows, q0.schema, k, id_col, lon, lat)
+    listed = _read_files(spark, path, man, names)
+    if not local:
+        out = _knn._exact_knn(listed, q0, k, lon, lat, id_col, q_max)
+        if out is not None:
+            return out
     r_cap_km = float(deg_to_km(180.0))
     thr_sel = float(max(8, 2 * k))
     thr = float(max(32, 4 * k))
@@ -2728,6 +2882,73 @@ def clustered_knn_df(
         pending = pending.select("query_id", "_qlon", "_qlat")
         accepted.append(_knn._exact_knn(listed, pending, k, lon, lat, id_col, None))
     return reduce(DataFrame.unionAll, accepted)
+
+
+def _local_knn(
+    spark: SparkSession, path: str, man: dict, names: list[str], rows: list,
+    qschema, k: int, id_col: str, lon: str, lat: str,
+) -> DataFrame:
+    """The exact kNN kernel on the driver: ``operators.knn._top_k_batches``
+    over the record batches of ``_read_files_local``; the candidates'
+    ``dist_km`` comes from the Catalyst ``haversine_km`` over a local
+    relation (folded on the driver, no job) and the rank by (dist_km,
+    <id_col>) per query_id is taken here in Spark's ascending order
+    (nulls first, NaN last). Ids, ranks and ``dist_km`` therefore equal
+    ``_rank_top_k``'s. Returns a local relation."""
+    import numpy as np
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import DoubleType, IntegerType, StructField, StructType
+
+    from spatial4n_spark.operators.knn import _top_k_batches
+
+    tbl = _read_files_local(path, man, names)
+    pts = pa.table(
+        {id_col: tbl[id_col], lon: tbl[lon].cast(pa.float64()), lat: tbl[lat].cast(pa.float64())}
+    )
+    qlon = np.array([r[1] for r in rows], dtype=np.float64)
+    qlat = np.array([r[2] for r in rows], dtype=np.float64)
+    run = _top_k_batches(qlon, qlat, k, id_col, lon, lat)
+    cand = pa.Table.from_batches(
+        list(run(pts.to_batches())), pts.schema.append(pa.field("_qi", pa.int32()))
+    )
+    qi = cand["_qi"].to_numpy()
+    dbl = DoubleType()
+    schema = StructType([
+        qschema["query_id"], _read_schema(man)[id_col], StructField(lon, dbl),
+        StructField(lat, dbl), StructField("_qlon", dbl), StructField("_qlat", dbl),
+    ])
+    arrow = pa.Table.from_arrays(
+        [
+            pa.array([rows[i][0] for i in qi], to_arrow_schema(schema).field(0).type),
+            cand[id_col], cand[lon], cand[lat], pa.array(qlon[qi]), pa.array(qlat[qi]),
+        ],
+        schema=to_arrow_schema(schema),
+    )
+    scored = spark.createDataFrame(arrow, schema).select(
+        "query_id", id_col,
+        haversine_km(F.col(lon), F.col(lat), "_qlon", "_qlat").alias("dist_km"),
+    )
+
+    def asc(v):  # Spark's ascending order: null first, NaN after every number
+        return (v is not None, v != v, v if v == v else 0.0)
+
+    by_query: dict = {}
+    for r in scored.collect():
+        by_query.setdefault(r[0], []).append(r)
+    ranked = []
+    for group in by_query.values():
+        group.sort(key=lambda r: (*asc(r[2]), *asc(r[1])))
+        ranked.extend((*r, i + 1) for i, r in enumerate(group[:k]))
+    out_schema = StructType([*scored.schema.fields, StructField("rank", IntegerType(), False)])
+    out_arrow = to_arrow_schema(out_schema)
+    return spark.createDataFrame(
+        pa.Table.from_arrays(
+            [pa.array([r[j] for r in ranked], f.type) for j, f in enumerate(out_arrow)],
+            schema=out_arrow,
+        ),
+        out_schema,
+    )
 
 
 def clustered_knn(

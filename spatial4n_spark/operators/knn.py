@@ -155,6 +155,14 @@ def _top_k_batches(qlon, qlat, k: int, id_col: str, lon: str, lat: str):
     return run
 
 
+def _collect_queries(queries: DataFrame, q_max: int | None) -> list | None:
+    """The kernel's query rows on the driver: at most ``q_max + 1`` are
+    collected, and None says there are more than ``q_max``;
+    ``q_max=None`` takes every query."""
+    rows = (queries if q_max is None else queries.limit(q_max + 1)).collect()
+    return None if q_max is not None and len(rows) > q_max else rows
+
+
 def _exact_knn(
     points: DataFrame,
     queries: DataFrame,
@@ -168,8 +176,8 @@ def _exact_knn(
     at most ``q_max + 1`` queries reach the driver, and a larger set
     returns None (the caller runs its cell plan); ``q_max=None`` takes
     every query (bounded straggler sets)."""
-    rows = (queries if q_max is None else queries.limit(q_max + 1)).collect()
-    if q_max is not None and len(rows) > q_max:
+    rows = _collect_queries(queries, q_max)
+    if rows is None:
         return None
     q_df = _local_frame(
         points.sparkSession,

@@ -11,7 +11,7 @@ from pyspark.sql import functions as F
 from spatial4n_spark.functions.native import haversine_km
 from spatial4n_spark.io import clustered as C
 from spatial4n_spark.kernels.polygon import Circle, Rect
-from spatial4n_spark.kernels.s2cell import s2_encode, s2_parent
+from spatial4n_spark.kernels.s2cell import s2_decode_center, s2_encode, s2_parent
 from spatial4n_spark.operators.spatial_join import spatial_join_points_polygons
 from spatial4n_spark.suite import RADIUS_CENTERS, layer, pts_orders
 
@@ -130,13 +130,34 @@ def test_cover_ranges_coalescing_only_widens():
         assert any(clo <= lo and hi <= chi for clo, chi in capped)
 
 
-def test_range_filter_pushed_to_parquet(spark, clustered):
+def test_range_filter_pushed_to_parquet(spark, clustered, monkeypatch):
+    # the Spark scan path (the table fits the driver-local budget, so
+    # the budget is pinned to 0 to plan the scan)
+    monkeypatch.setattr(C, "_LOCAL_READ_BYTES", 0)
     path, _ = clustered
     out = C.clustered_radius_query(spark, path, 2.3125, 48.875, 150.0)
     plan = out._jdf.queryExecution().executedPlan().toString()
     assert "PushedFilters" in plan
     # the range disjunction on the cluster column reaches the scan
     assert C.CELL_COL in plan.split("PushedFilters")[1][:2000]
+
+
+def test_local_radius_plan_is_local_table_scan(spark, clustered):
+    """Under the byte budget the radius probe reads on the driver: its
+    plan is one LocalTableScan (the Catalyst predicate folded into it),
+    and the probe with the caller's toPandas runs at most one job."""
+    path, _ = clustered
+    sc = spark.sparkContext
+    sc.setJobGroup("local-radius-probe", "local radius probe")
+    try:
+        out = C.clustered_radius_query(spark, path, 2.3125, 48.875, 150.0)
+        assert len(out.toPandas()) > 0
+        jobs = sc.statusTracker().getJobIdsForGroup("local-radius-probe")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    assert plan.startswith("LocalTableScan") and "FileScan" not in plan
+    assert len(jobs) <= 1
 
 
 def test_append_keeps_exactness_compaction_restores_locality(
@@ -354,6 +375,112 @@ def test_clustered_knn_kernel_equals_plan_under_mor_and_evolution(
     assert kernel == rows(want) and len(kernel) == 4 * 5
     monkeypatch.setattr(knn, "_BRUTE_FORCE_PAIRS", 0)
     assert rows(C.clustered_knn(spark, path, queries, k=5, id_col="o_orderkey")) == kernel
+
+
+def test_local_reads_equal_spark_reads(spark, sf_dir, tmp_path, monkeypatch):
+    """The driver-local read (``_read_files_local`` behind
+    ``clustered_radius_query`` and ``clustered_knn``) against the Spark
+    path it shortcuts (budget 0), on a table with pending position
+    deletes, equality deletes whose keys were re-inserted into a
+    non-target file, an add-column append, null coordinates and exact
+    duplicate points; radius reads also by snapshot id, tag and branch.
+    Radius: equal rows, schema and PruneStats. kNN: equal (query_id,
+    id, rank) and bit-equal dist_km."""
+    path = str(tmp_path / "local_vs_spark")
+    pts = pts_orders(spark, sf_dir)
+    extra = spark.range(15).select(
+        (F.col("id") + 9 * 10**9).alias("o_orderkey"),
+        F.when(F.col("id") < 12, F.lit(2.0)).alias("lon"),  # 12 duplicates
+        F.when(F.col("id") < 12, F.lit(48.5)).alias("lat"),  # 3 null points
+    )
+    C.write_clustered(pts.unionByName(extra), path, level=14, files=4)
+    C.delete_clustered(spark, path, F.col("o_orderkey") % 5 == 0, strategy="mor")
+    C.create_tag(path, "pre-upsert", 2)
+    moved = pts.where(F.col("o_orderkey") % 5 == 1).withColumn("lon", F.col("lon") + 0.5)
+    C.upsert_clustered(spark, moved, path, key="o_orderkey", strategy="mor")
+    C.create_branch(path, "side", 3)
+    C.delete_clustered(
+        spark, path, F.col("o_orderkey") % 5 == 2, strategy="mor", branch="side"
+    )
+    C.append_clustered(
+        pts.limit(40)
+        .withColumn("o_orderkey", F.col("o_orderkey") + F.lit(10**10).cast("long"))
+        .withColumn("tag", F.lit("new")),
+        path,
+        files=1,
+    )
+    man = C.load_manifest(path)
+    assert {d.get("kind", "pos") for d in man["deletes"]} == {"pos", "eq"}
+    # the upserted keys live in files their equality delete does not target
+    eq = next(d for d in man["deletes"] if d.get("kind") == "eq")
+    assert {e["file"] for e in man["files"]} - set(eq["targets"])
+
+    def both(read):
+        local = read()
+        with monkeypatch.context() as m:
+            m.setattr(C, "_LOCAL_READ_BYTES", 0)
+            return local, read()
+
+    def is_local(df):
+        return df._jdf.queryExecution().executedPlan().toString().startswith(
+            "LocalTableScan"
+        )
+
+    def rows(df):
+        return sorted(map(tuple, df.collect()), key=repr)
+
+    # a 1 km circle at the middle of the widest id gap between files:
+    # its cover meets no file
+    level = int(man["level"])
+    spans = sorted((e["min"], e["max"]) for e in man["files"])
+    gap = max(zip(spans, spans[1:]), key=lambda p: p[1][0] - p[0][1])
+    mid_lat, mid_lon = s2_decode_center((gap[0][1] + gap[1][0]) // 2, level)
+    prune_all = (float(mid_lon), float(mid_lat), 1.0)
+    cases = [
+        (2.0, 48.5, 2.0),  # hot: the duplicate point
+        (2.3125, 48.875, 150.0),  # Paris
+        (139.8125, 35.6875, 100.0),  # cold
+        (179.9375, -16.5, 400.0),  # dateline
+        (10.0, 88.0, 600.0),  # polar
+        prune_all,
+    ]
+    seen = 0
+    for snap in (None, 1, "pre-upsert", "side"):
+        for qlon, qlat, r in cases:
+            (a, sa), (b, sb) = both(
+                lambda: C.clustered_radius_query(
+                    spark, path, qlon, qlat, r, with_stats=True, snapshot_id=snap
+                )
+            )
+            assert rows(a) == rows(b), (snap, qlon, qlat)
+            assert a.schema == b.schema and sa == sb, (snap, qlon, qlat)
+            assert is_local(a) == (sa.files_kept > 0) and not is_local(b)
+            assert sa.files_kept > 0 or (qlon, qlat, r) == prune_all
+            seen += len(rows(a))
+    assert seen > 100
+
+    def knn_rows(df):
+        return sorted(
+            (r["query_id"], r["o_orderkey"], r["rank"], r["dist_km"].hex())
+            for r in df.collect()
+        )
+
+    queries = [(qid, qlon, qlat) for qid, qlon, qlat, _ in RADIUS_CENTERS]
+    queries.append(("tie", 2.0, 48.5))  # 9 live duplicates tie at k = 5
+    a, b = both(lambda: C.clustered_knn(spark, path, queries, k=5, id_col="o_orderkey"))
+    assert is_local(a) and knn_rows(a) == knn_rows(b) and len(knn_rows(a)) == 5 * 5
+
+    # k above the live rows, then an empty table (every row deleted)
+    small = str(tmp_path / "local_vs_spark_small")
+    C.write_clustered(pts.limit(30).unionByName(extra), small, level=14, files=2)
+    C.delete_clustered(spark, small, F.col("o_orderkey") % 3 == 0, strategy="mor")
+    for expect_rows in (True, False):
+        a, b = both(
+            lambda: C.clustered_knn(spark, small, queries, k=50, id_col="o_orderkey")
+        )
+        assert knn_rows(a) == knn_rows(b) and bool(knn_rows(a)) == expect_rows
+        if expect_rows:
+            C.delete_clustered(spark, small, F.lit(True), strategy="mor")
 
 
 def test_st_clustered_time_and_space_pruning(spark, sf_dir, tmp_path):

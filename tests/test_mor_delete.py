@@ -76,6 +76,16 @@ def test_mor_delete_rewrites_nothing(spark, table):
 
 
 def test_every_reader_applies_pending_deletes(spark, table):
+    _check_every_reader_applies_pending_deletes(spark, table)
+
+
+def test_every_reader_applies_pending_deletes_spark_path(spark, table, monkeypatch):
+    # the radius read through the Spark scan instead of the driver
+    monkeypatch.setattr(C, "_LOCAL_READ_BYTES", 0)
+    _check_every_reader_applies_pending_deletes(spark, table)
+
+
+def _check_every_reader_applies_pending_deletes(spark, table):
     path, pts, _ = table
     want = _ids(
         pts.where(
@@ -94,6 +104,15 @@ def test_every_reader_applies_pending_deletes(spark, table):
 
 
 def test_snapshot_isolation_and_travel(spark, table):
+    _check_snapshot_isolation_and_travel(spark, table)
+
+
+def test_snapshot_isolation_and_travel_spark_path(spark, table, monkeypatch):
+    monkeypatch.setattr(C, "_LOCAL_READ_BYTES", 0)
+    _check_snapshot_isolation_and_travel(spark, table)
+
+
+def _check_snapshot_isolation_and_travel(spark, table):
     path, pts, _ = table
     # time travel to the pre-delete snapshot sees the decoys
     pre = C._read_listed(spark, path, snapshot_id=1)

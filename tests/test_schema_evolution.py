@@ -31,6 +31,16 @@ def evolved(spark, sf_dir, tmp_path):
 
 
 def test_added_column_reads_null_for_old_rows(spark, evolved):
+    _check_added_column_reads_null_for_old_rows(spark, evolved)
+
+
+def test_added_column_reads_null_for_old_rows_spark_path(spark, evolved, monkeypatch):
+    # the radius read through the Spark scan instead of the driver
+    monkeypatch.setattr(C, "_LOCAL_READ_BYTES", 0)
+    _check_added_column_reads_null_for_old_rows(spark, evolved)
+
+
+def _check_added_column_reads_null_for_old_rows(spark, evolved):
     path, pts = evolved
     cur = C._read_listed(spark, path)
     assert cur.columns[-2:] == [C.CELL_COL, "tag"]  # appended at the end
@@ -41,6 +51,8 @@ def test_added_column_reads_null_for_old_rows(spark, evolved):
     # the pruned read surface agrees (radius query plans over read_pruned)
     got = C.clustered_radius_query(spark, path, 2.3125, 48.875, 150.0)
     assert "tag" in got.columns
+    rows = got.collect()
+    assert rows and all((r["tag"] == "new") == (r["o_orderkey"] >= 10**10) for r in rows)
 
 
 def test_history_keeps_its_original_shape(spark, evolved):
