@@ -65,10 +65,16 @@ DELETE_DIR = "_deletes"
 # join — the threshold only picks the physical strategy)
 BROADCAST_DELETE_ROWS = 2_000_000
 _DFILE, _DPOS = "__s4n_file", "__s4n_pos"
-# on-disk bytes (data files plus their applicable delete files) at or
+# manifest rows (data files plus their applicable delete files) at or
 # under which clustered_radius_query and clustered_knn_df read on the
-# driver (``_read_files_local``) instead of running Spark scan jobs
-_LOCAL_READ_BYTES = 64 << 20
+# driver (``_read_files_local``) instead of running Spark scan jobs.
+# Rows, not bytes: driver memory and the local relation's cost follow
+# rows, while bytes on disk per row vary several-fold with how well the
+# columns compress. Measured on 4 cores: probes win at every size up to
+# 2.4M rows, but a radius returning every kept row costs about as much
+# CPU as the Spark scan at 250k rows and twice as much at 600k (see
+# ROADMAP direction 4)
+_LOCAL_READ_ROWS = 250_000
 
 
 def lock_path(path: str, lockfile: str = LOCKFILE) -> str:
@@ -2219,24 +2225,27 @@ def clustered_radius_query(
     is read, never what is returned.  ``snapshot_id`` runs the query as
     of that snapshot, tag or branch (time travel).
 
-    When the kept files and their pending delete files fit
-    ``_LOCAL_READ_BYTES`` on disk, the driver reads them
+    When the kept files and their pending delete files hold at most
+    ``_LOCAL_READ_ROWS`` rows, the driver reads them
     (``_read_files_local``: the same read spec), keeps the rows in the
     cover's cell ranges within a slack of the radius (numpy haversine)
     and hands them to Spark as a local relation; the Catalyst predicate
     then runs on the driver, with no job, so rows and schema equal the
     Spark scan's. Above the budget the kept files are one Spark scan
     with the range disjunction pushed to the row groups."""
+    from spatial4n_spark.kernels.distance import deg_to_km, distance_deg
     from spatial4n_spark.operators.knn import _SLACK_KM, _SLACK_REL
 
     man = load_manifest(path, snapshot_id)
     circle = Circle(float(qlon), float(qlat), float(km_to_deg(radius_km)), geo=True)
     ranges = cover_ranges(circle, man["level"])
     keep, stats = _prune(man, ranges)
-    names = [e["file"] for e in keep]
-    if names and _reads_locally(path, man, names):
-        tbl = _read_files_local(path, man, names, ranges)
-        d = _haversine_km_np(tbl, lon, lat, qlon, qlat)
+    if keep and _reads_locally(man, keep):
+        tbl = _read_files_local(path, man, [e["file"] for e in keep], ranges)
+        d = deg_to_km(distance_deg(
+            tbl[lon].to_numpy(zero_copy_only=False), tbl[lat].to_numpy(zero_copy_only=False),
+            qlon, qlat,
+        ))
         tbl = tbl.filter(d <= float(radius_km) * (1 + _SLACK_REL) + _SLACK_KM)
         df = spark.createDataFrame(tbl, _read_schema(man))
     else:
@@ -2326,8 +2335,8 @@ def _read_files(
 
     ``_read_files_local`` is the driver-side executor of the same read
     spec: ``clustered_radius_query`` and ``clustered_knn_df`` use it
-    whenever the files to read fit the one byte budget
-    ``_LOCAL_READ_BYTES``, with identical results, and this Spark read
+    whenever the files to read fit the one row budget
+    ``_LOCAL_READ_ROWS``, with identical results, and this Spark read
     above it (the only path for a table larger than the driver)."""
     if not names:
         df = spark.createDataFrame([], _table_schema(spark, path, man))
@@ -2383,25 +2392,21 @@ def _read_files(
     return df
 
 
-def _disk_bytes(p: str) -> int:
-    """Bytes on disk of a file, or of every file under a directory."""
-    if not os.path.isdir(p):
-        return os.stat(p).st_size
-    return sum(os.stat(os.path.join(d, f)).st_size for d, _, fs in os.walk(p) for f in fs)
-
-
-def _reads_locally(path: str, man: dict, names: list[str]) -> bool:
-    """May the driver read these files itself? Yes when the manifest
-    pins a schema and the data files plus their applicable delete files
-    take at most ``_LOCAL_READ_BYTES`` on disk (``os.stat``; no footer
-    is read)."""
+def _reads_locally(man: dict, entries: list[dict]) -> bool:
+    """May the driver read these manifest entries itself? Yes when the
+    manifest pins a schema and the data files plus their applicable
+    delete files hold at most ``_LOCAL_READ_ROWS`` rows (the manifest's
+    counts; no file is opened)."""
     if not man.get("schema"):
         return False
-    files = names + [d["file"] for d in _applicable_deletes(man, names)]
-    return sum(_disk_bytes(os.path.join(path, f)) for f in files) <= _LOCAL_READ_BYTES
+    dels = _applicable_deletes(man, [e["file"] for e in entries])
+    rows = sum(e["rows"] for e in entries) + sum(int(d["rows"]) for d in dels)
+    return rows <= _LOCAL_READ_ROWS
 
 
-def _read_files_local(path: str, man: dict, names: list[str], ranges=None):
+def _read_files_local(
+    path: str, man: dict, names: list[str], ranges=None, columns=None
+):
     """The driver-local twin of ``_read_files``: the same read spec as
     one Arrow table, with no Spark job. The listed files are read under
     the manifest's pinned schema (columns a file lacks read as null);
@@ -2409,7 +2414,9 @@ def _read_files_local(path: str, man: dict, names: list[str], ranges=None):
     position counts across row groups, as ``_metadata.row_index`` does;
     equality deletes drop rows by key only in their target files, and a
     null key never matches. ``ranges`` keeps only the rows whose cell id
-    lies in one of them (``read_pruned``'s range disjunction)."""
+    lies in one of them (``read_pruned``'s range disjunction);
+    ``columns`` returns only those schema columns (the files are read
+    for them plus the delete keys and cell id the filters need)."""
     import numpy as np
     import pyarrow as pa
     import pyarrow.compute as pc
@@ -2417,6 +2424,8 @@ def _read_files_local(path: str, man: dict, names: list[str], ranges=None):
     from pyspark.sql.pandas.types import to_arrow_schema
 
     schema = to_arrow_schema(_read_schema(man))
+    if columns is not None:
+        schema = pa.schema([schema.field(c) for c in columns])
     nm = set(names)
     pos: dict[str, list] = {}
     eqs = []
@@ -2432,9 +2441,13 @@ def _read_files_local(path: str, man: dict, names: list[str], ranges=None):
             eqs.append((d["key"], t["_key"].combine_chunks(), set(d["targets"]) & nm))
     if ranges:
         bounds = np.array(_merge_ranges(ranges), dtype=np.int64)
+    need = None
+    if columns is not None:
+        need = {*columns, *(key for key, _, _ in eqs), *([CELL_COL] if ranges else [])}
     parts = []
     for name in names:
-        t = pq.read_table(os.path.join(path, name))
+        with pq.ParquetFile(os.path.join(path, name)) as f:
+            t = f.read(None if need is None else [c for c in f.schema_arrow.names if c in need])
         label = os.path.basename(name)  # what _metadata.file_name reports
         live = np.ones(t.num_rows, dtype=bool)
         if label in pos:
@@ -2466,22 +2479,6 @@ def _read_files_local(path: str, man: dict, names: list[str], ranges=None):
             )
         )
     return pa.concat_tables(parts) if parts else schema.empty_table()
-
-
-def _haversine_km_np(tbl, lon: str, lat: str, qlon: float, qlat: float):
-    """numpy haversine (km) from every row of an Arrow table to one
-    point; NaN where a coordinate is null."""
-    import numpy as np
-    import pyarrow as pa
-
-    from spatial4n_spark.kernels.distance import EARTH_MEAN_RADIUS_KM, dist_haversine_rad
-
-    def rad(col):
-        return np.radians(tbl[col].cast(pa.float64()).to_numpy(zero_copy_only=False))
-
-    return dist_haversine_rad(
-        rad(lat), rad(lon), math.radians(float(qlat)), math.radians(float(qlon))
-    ) * EARTH_MEAN_RADIUS_KM
 
 
 def _merge_schemas(old, new):
@@ -2553,7 +2550,7 @@ def clustered_knn_df(
     ``operators.knn._BRUTE_FORCE_PAIRS``) the exact kernel of
     operators.knn runs over every listed file under the one read spec,
     so pending MOR deletes and the manifest schema apply. When those
-    files and their delete files fit ``_LOCAL_READ_BYTES`` on disk the
+    files and their delete files hold at most ``_LOCAL_READ_ROWS`` rows the
     kernel runs on the driver over ``_read_files_local`` (``_local_knn``:
     same candidates, same Catalyst distance, same rank, no Spark job);
     otherwise it streams ``_read_files`` through ``mapInArrow``.
@@ -2589,7 +2586,7 @@ def clustered_knn_df(
     names = [e["file"] for e in man["files"]]
     q0 = _knn._query_frame(queries, query_id, qlon, qlat)
     q_max = _knn._query_budget(n_total, broadcast_cells)
-    local = _reads_locally(path, man, names)
+    local = _reads_locally(man, man["files"])
     if local:
         rows = _knn._collect_queries(q0, q_max)
         if rows is not None:
@@ -2902,7 +2899,7 @@ def _local_knn(
 
     from spatial4n_spark.operators.knn import _top_k_batches
 
-    tbl = _read_files_local(path, man, names)
+    tbl = _read_files_local(path, man, names, columns=[id_col, lon, lat])
     pts = pa.table(
         {id_col: tbl[id_col], lon: tbl[lon].cast(pa.float64()), lat: tbl[lat].cast(pa.float64())}
     )

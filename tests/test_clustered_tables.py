@@ -133,7 +133,7 @@ def test_cover_ranges_coalescing_only_widens():
 def test_range_filter_pushed_to_parquet(spark, clustered, monkeypatch):
     # the Spark scan path (the table fits the driver-local budget, so
     # the budget is pinned to 0 to plan the scan)
-    monkeypatch.setattr(C, "_LOCAL_READ_BYTES", 0)
+    monkeypatch.setattr(C, "_LOCAL_READ_ROWS", 0)
     path, _ = clustered
     out = C.clustered_radius_query(spark, path, 2.3125, 48.875, 150.0)
     plan = out._jdf.queryExecution().executedPlan().toString()
@@ -143,7 +143,7 @@ def test_range_filter_pushed_to_parquet(spark, clustered, monkeypatch):
 
 
 def test_local_radius_plan_is_local_table_scan(spark, clustered):
-    """Under the byte budget the radius probe reads on the driver: its
+    """Under the row budget the radius probe reads on the driver: its
     plan is one LocalTableScan (the Catalyst predicate folded into it),
     and the probe with the caller's toPandas runs at most one job."""
     path, _ = clustered
@@ -418,7 +418,7 @@ def test_local_reads_equal_spark_reads(spark, sf_dir, tmp_path, monkeypatch):
     def both(read):
         local = read()
         with monkeypatch.context() as m:
-            m.setattr(C, "_LOCAL_READ_BYTES", 0)
+            m.setattr(C, "_LOCAL_READ_ROWS", 0)
             return local, read()
 
     def is_local(df):

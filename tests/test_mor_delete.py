@@ -81,7 +81,7 @@ def test_every_reader_applies_pending_deletes(spark, table):
 
 def test_every_reader_applies_pending_deletes_spark_path(spark, table, monkeypatch):
     # the radius read through the Spark scan instead of the driver
-    monkeypatch.setattr(C, "_LOCAL_READ_BYTES", 0)
+    monkeypatch.setattr(C, "_LOCAL_READ_ROWS", 0)
     _check_every_reader_applies_pending_deletes(spark, table)
 
 
@@ -108,7 +108,7 @@ def test_snapshot_isolation_and_travel(spark, table):
 
 
 def test_snapshot_isolation_and_travel_spark_path(spark, table, monkeypatch):
-    monkeypatch.setattr(C, "_LOCAL_READ_BYTES", 0)
+    monkeypatch.setattr(C, "_LOCAL_READ_ROWS", 0)
     _check_snapshot_isolation_and_travel(spark, table)
 
 

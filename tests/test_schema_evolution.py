@@ -36,7 +36,7 @@ def test_added_column_reads_null_for_old_rows(spark, evolved):
 
 def test_added_column_reads_null_for_old_rows_spark_path(spark, evolved, monkeypatch):
     # the radius read through the Spark scan instead of the driver
-    monkeypatch.setattr(C, "_LOCAL_READ_BYTES", 0)
+    monkeypatch.setattr(C, "_LOCAL_READ_ROWS", 0)
     _check_added_column_reads_null_for_old_rows(spark, evolved)
 
 

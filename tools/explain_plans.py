@@ -158,7 +158,7 @@ def _q_mor_scan(spark, sf_dir):
     C.delete_clustered(
         spark, path, F.col("o_orderkey") % 10 == 0, strategy="mor"
     )
-    with mock.patch.object(C, "_LOCAL_READ_BYTES", 0):
+    with mock.patch.object(C, "_LOCAL_READ_ROWS", 0):
         return C.clustered_radius_query(spark, path, 2.3125, 48.875, 300.0)
 
 
