@@ -73,7 +73,11 @@ _DFILE, _DPOS = "__s4n_file", "__s4n_pos"
 # columns compress. Measured on 4 cores: probes win at every size up to
 # 2.4M rows, but a radius returning every kept row costs about as much
 # CPU as the Spark scan at 250k rows and twice as much at 600k (see
-# ROADMAP direction 4)
+# ROADMAP direction 4). Also the most rows of a local-relation batch
+# the driver writes itself (``_write_batch``): at 250k rows the driver
+# writer took about two thirds of the Spark writer's CPU, at 1M about
+# the same CPU and 1.7x its wall time, holding the batch as Python
+# objects
 _LOCAL_READ_ROWS = 250_000
 
 
@@ -181,6 +185,187 @@ def write_clustered(
 
 def _data_files(path: str) -> list[str]:
     return sorted(n for n in os.listdir(path) if n.endswith(".parquet"))
+
+
+def _write_batch(
+    df: DataFrame,
+    path: str,
+    man: dict,
+    level: int,
+    lon: str,
+    lat: str,
+    files: int,
+):
+    """THE batch-write step of ``append_clustered`` and both
+    ``upsert_clustered`` strategies (holds the caller's lock): encode
+    the level-``level`` cell column, merge the batch schema into the
+    manifest's (a type change raises before any file is written), write
+    the batch as at most ``files`` new data files, each a disjoint
+    range of cell ids sorted within, and read the new files' footer
+    stats. Nothing is committed. Returns ``(entries, schema_json,
+    tbl)``: the new manifest entries, the merged schema JSON (None on a
+    legacy manifest) and, when the driver wrote the batch, the batch as
+    Arrow (else None).
+
+    The driver writes the batch (``_local_batch``, ``_write_local``)
+    when its optimized plan is a ``LocalRelation`` of at most
+    ``_LOCAL_READ_ROWS`` rows, e.g. a frame built from pandas: its rows
+    already live on the driver, so collecting them runs no Spark job.
+    Any other batch runs the Spark path:
+    ``repartitionByRange`` + ``sortWithinPartitions`` + a parquet
+    append job, with the new files found by diffing the listing."""
+    be = cell_backend("s2")
+    out = df.withColumn(CELL_COL, be.udf(level)(F.col(lat), F.col(lon)))
+    old_schema = _manifest_schema(man)
+    schema_json = None
+    if old_schema is not None:
+        merged, _ = _merge_schemas(old_schema, out.schema)
+        schema_json = merged.json()
+    tbl = _local_batch(df, out.schema, level, lon, lat)
+    if tbl is None:
+        pre = set(_data_files(path))
+        (
+            out.repartitionByRange(files, F.col(CELL_COL))
+            .sortWithinPartitions(CELL_COL)
+            .write.mode("append")
+            .parquet(path)
+        )
+        names = [n for n in _data_files(path) if n not in pre]
+    else:
+        names = _write_local(tbl, path, files)
+    return _file_stats(path, names), schema_json, tbl
+
+
+def _local_batch(df: DataFrame, out_schema, level: int, lon: str, lat: str):
+    """The batch as one Arrow table under ``out_schema`` (the batch's
+    columns plus the cell column, every field nullable), with the cell
+    ids encoded on the driver by the same ``s2_encode`` call the cell
+    UDF makes, NaN standing for a null coordinate as it does in the
+    UDF's pandas input. None, for the Spark path, unless the batch's
+    optimized plan is a ``LocalRelation`` (``Dataset.isLocal`` is false
+    for a projection of one, though collecting it runs no job either)
+    of at most ``_LOCAL_READ_ROWS`` rows whose columns are all flat
+    types Arrow holds exactly: numbers, strings, binary, booleans,
+    dates and timestamps. Timestamps are collected as epoch
+    microseconds (a collected ``Row`` holds them as naive local
+    times)."""
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.compute as pc
+    from pyspark.sql import types as T
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    from spatial4n_spark.kernels.s2cell import s2_encode
+
+    plan = df._jdf.queryExecution().optimizedPlan()
+    if (
+        plan.getClass().getSimpleName() != "LocalRelation"
+        or plan.data().size() > _LOCAL_READ_ROWS
+    ):
+        return None
+    flat = (
+        T.NumericType, T.StringType, T.BinaryType, T.BooleanType,
+        T.DateType, T.TimestampType, T.TimestampNTZType,
+    )
+    fields = [f for f in out_schema.fields if f.name != CELL_COL]
+    names = [f.name for f in fields]
+    if (
+        lon not in names
+        or lat not in names
+        or not all(
+            isinstance(f.dataType, flat) and not isinstance(f.dataType, T.DecimalType)
+            for f in fields
+        )
+    ):
+        return None
+    schema = to_arrow_schema(
+        T.StructType([T.StructField(f.name, f.dataType, True) for f in out_schema])
+    )
+
+    def col(f):
+        c = F.col("`" + f.name.replace("`", "``") + "`")
+        return F.unix_micros(c) if isinstance(f.dataType, T.TimestampType) else c
+
+    rows = df.select(*[col(f) for f in fields]).collect()
+    values = list(zip(*rows)) if rows else [()] * len(fields)
+    arrays = {}
+    for f, vals in zip(fields, values):
+        t = schema.field(f.name).type
+        if isinstance(f.dataType, T.TimestampType):
+            arrays[f.name] = pa.array(vals, pa.int64()).cast(t)
+        else:
+            arrays[f.name] = pa.array(vals, t)
+
+    def degrees(name):
+        return pc.fill_null(arrays[name].cast(pa.float64()), np.nan).to_numpy()
+
+    with np.errstate(invalid="ignore"):
+        cell = s2_encode(degrees(lat), degrees(lon), level)
+    arrays[CELL_COL] = pa.array(cell, pa.int64())
+    return pa.Table.from_arrays([arrays[f.name] for f in schema], schema=schema)
+
+
+def _range_bounds(cells, files: int) -> list[int]:
+    """Upper bounds splitting sorted ``cells`` into at most ``files``
+    contiguous runs of about equal rows, no cell id split across two
+    runs: run ``j`` holds the ids in ``(bounds[j-1], bounds[j]]``.
+    This is Spark's ``RangePartitioner.determineBounds`` over every row
+    at weight 1 (what ``repartitionByRange`` computes when its sample
+    holds the whole batch): walk the cumulative row count, cut at each
+    multiple of rows/parts, and skip a cut whose id equals the last."""
+    import numpy as np
+
+    n = len(cells)
+    parts = min(files, n)
+    step = target = n / max(parts, 1)
+    bounds: list[int] = []
+    i = 0
+    while i < n and len(bounds) < parts - 1:
+        i = max(i, math.ceil(target) - 1)
+        if bounds:
+            i = max(i, int(np.searchsorted(cells, bounds[-1], side="right")))
+        if i >= n:
+            break
+        bounds.append(int(cells[i]))
+        target += step
+        i += 1
+    return bounds
+
+
+def _write_parquet(tbl, full: str) -> None:
+    """Write ``tbl`` as one parquet file and fsync it, so the file is
+    durable before the manifest commit that makes it visible."""
+    import pyarrow.parquet as pq
+
+    pq.write_table(tbl, full, compression="snappy")
+    fd = os.open(full, os.O_RDONLY)
+    try:
+        os.fsync(fd)
+    finally:
+        os.close(fd)
+
+
+def _write_local(tbl, path: str, files: int) -> list[str]:
+    """The driver's write of a ``_local_batch`` table: stable-sort the
+    rows by cell id, cut them into at most ``files`` runs at
+    ``_range_bounds`` and write each run as a new data file named as
+    Spark names its part files. Returns the new file names."""
+    import uuid
+
+    import numpy as np
+
+    cells = tbl[CELL_COL].to_numpy()
+    order = np.argsort(cells, kind="stable")
+    tbl, cells = tbl.take(order), cells[order]
+    cuts = np.searchsorted(cells, _range_bounds(cells, files), side="right")
+    edges = [0, *cuts.tolist(), len(cells)]
+    tag = uuid.uuid4()
+    names = []
+    for part, (a, b) in enumerate(zip(edges, edges[1:])):
+        if b > a:
+            names.append(f"part-{part:05d}-{tag}-c000.snappy.parquet")
+            _write_parquet(tbl.slice(a, b - a), os.path.join(path, names[-1]))
+    return names
 
 
 def _file_stats(path: str, names: list[str]) -> list[dict]:
@@ -1363,6 +1548,12 @@ def append_clustered(
     split — cheap true-stats appends, a periodic rewrite for locality —
     is exactly how log-structured table formats behave at design scale.
 
+    A batch whose optimized plan is a ``LocalRelation`` of at most
+    ``_LOCAL_READ_ROWS`` rows (a frame built from pandas, or a
+    projection or filter of one) is written by the driver with pyarrow
+    and runs no Spark job; any other batch is written by a Spark job.
+    Both give the same files, ranges and stats (``_write_batch``).
+
     Crash ordering: data files land first, the manifest commit is the
     LAST step — a crash in between leaves unreferenced orphan files
     (swept by the next compaction), never a wrong manifest. The whole
@@ -1382,25 +1573,11 @@ def append_clustered(
     with table_lock(path):
         man = load_manifest(path, snapshot_id=branch)
         level = int(man["level"])
-        pre = set(_data_files(path))
-        be = cell_backend("s2")
-        out = df.withColumn(CELL_COL, be.udf(level)(F.col(lat), F.col(lon)))
-        old_schema = _manifest_schema(man)
-        schema_json = None
-        if old_schema is not None:
-            merged, _ = _merge_schemas(old_schema, out.schema)
-            schema_json = merged.json()
-        (
-            out.repartitionByRange(files, F.col(CELL_COL))
-            .sortWithinPartitions(CELL_COL)
-            .write.mode("append")
-            .parquet(path)
-        )
-        new = [n for n in _data_files(path) if n not in pre]
+        new, schema_json, _ = _write_batch(df, path, man, level, lon, lat, files)
         _write_manifest(
             path,
             level,
-            man["files"] + _file_stats(path, new),
+            man["files"] + new,
             operation="append",
             schema_json=schema_json,
             branch=branch,
@@ -1802,6 +1979,15 @@ def upsert_clustered(
       files so the batch's own re-inserted rows survive) and retired by
       compaction.
 
+    The batch's rows are written as ``append_clustered`` writes them
+    (``_write_batch``): by the driver with pyarrow when the batch's
+    optimized plan is a ``LocalRelation`` of at most
+    ``_LOCAL_READ_ROWS`` rows (e.g. built from pandas),
+    which also takes the key range and, for ``'mor'``, writes the
+    equality-delete file from the same rows, so a MOR upsert of such a
+    batch runs no Spark job; by Spark jobs otherwise. A COW upsert
+    still scans and rewrites the touched files with Spark.
+
     NULL keys never match (SQL join equality) and are inserted as new
     rows. Atomicity: data/delete files first, one manifest commit last;
     a crash mid-way leaves orphans, and a reader at any point sees
@@ -1814,14 +2000,16 @@ def upsert_clustered(
         man = load_manifest(path, snapshot_id=branch)
         level = int(man["level"])
         entries = man["files"]
+        # the insert half first: a type change raises before any file
+        # lands, and the rewrite below reads only listed files
+        inserted, schema_json, tbl = _write_batch(df, path, man, level, lon, lat, files)
         keys = F.broadcast(df.select(key).distinct())
         # key-range file pruning (the manifest's per-column stats): only
         # files whose [min,max] of the KEY column intersects the batch's
         # key range can hold a match — on tables whose keys correlate
         # with layout (ingest order, region) the hit scan skips most
         # files; entries without key stats are always scanned (sound).
-        row = df.agg(F.min(key).alias("lo"), F.max(key).alias("hi")).collect()[0]
-        klo, khi = row["lo"], row["hi"]
+        klo, khi = _key_bounds(df, tbl, key)
         cand = (
             []  # an all-NULL key batch matches nothing (SQL equality)
             if klo is None
@@ -1842,8 +2030,9 @@ def upsert_clustered(
                 .collect()
             )
             touched = {r["_src"]: int(r["count"]) for r in rows}
-        pre = set(_data_files(path))
+        rewritten = []
         if touched:
+            pre = set(_data_files(path))
             kdf = _read_files(spark, path, man, sorted(touched)).join(
                 keys, on=key, how="left_anti"
             )
@@ -1853,23 +2042,7 @@ def upsert_clustered(
                 .write.mode("append")
                 .parquet(path)
             )
-        mid = set(_data_files(path))
-        be = cell_backend("s2")
-        out = df.withColumn(CELL_COL, be.udf(level)(F.col(lat), F.col(lon)))
-        old_schema = _manifest_schema(man)
-        schema_json = None
-        if old_schema is not None:  # same add-column evolution as append
-            merged, _ = _merge_schemas(old_schema, out.schema)
-            schema_json = merged.json()
-        (
-            out.repartitionByRange(files, F.col(CELL_COL))
-            .sortWithinPartitions(CELL_COL)
-            .write.mode("append")
-            .parquet(path)
-        )
-        post = _data_files(path)
-        rewritten = _file_stats(path, [n for n in mid - pre])
-        inserted = _file_stats(path, [n for n in post if n not in mid])
+            rewritten = _file_stats(path, [n for n in _data_files(path) if n not in pre])
         untouched = [e for e in entries if e["file"] not in touched]
         return _write_manifest(
             path,
@@ -1888,6 +2061,54 @@ def upsert_clustered(
         )
 
 
+def _key_bounds(df: DataFrame, tbl, key: str):
+    """The batch's (min, max) of ``key`` over its non-null keys, (None,
+    None) when every key is null: from the Arrow batch when the driver
+    wrote it (``_write_batch``), else one aggregate job."""
+    if tbl is not None:
+        import pyarrow.compute as pc
+
+        mm = pc.min_max(tbl[key])
+        return mm["min"].as_py(), mm["max"].as_py()
+    row = df.agg(F.min(key).alias("lo"), F.max(key).alias("hi")).collect()[0]
+    return row["lo"], row["hi"]
+
+
+def _write_eq_delete(df: DataFrame, tbl, path: str, key: str) -> tuple[str, int]:
+    """Write the batch's distinct non-null keys as an equality-delete
+    file (one column ``_key`` of the key's type) under a fresh
+    ``_deletes/eq-<hex>/`` directory. Returns (the directory relative
+    to the table, the key count). From the Arrow batch when the driver
+    wrote it (``_write_batch``), else one Spark job."""
+    import uuid
+
+    import pyarrow.parquet as pq
+
+    rel = os.path.join(DELETE_DIR, f"eq-{uuid.uuid4().hex[:16]}")
+    full = os.path.join(path, rel)
+    if tbl is not None:
+        import pyarrow as pa
+        import pyarrow.compute as pc
+
+        keys = pc.unique(tbl[key].drop_null())
+        os.makedirs(full)
+        name = f"part-00000-{uuid.uuid4()}-c000.snappy.parquet"
+        _write_parquet(pa.table({"_key": keys}), os.path.join(full, name))
+        return rel, len(keys)
+    (
+        df.select(F.col(key).alias("_key"))
+        .where(F.col("_key").isNotNull())
+        .distinct()
+        .write.mode("error")
+        .parquet(full)
+    )
+    return rel, sum(  # row count from the written footers — no job
+        pq.ParquetFile(os.path.join(full, f)).metadata.num_rows
+        for f in os.listdir(full)
+        if f.endswith(".parquet")
+    )
+
+
 def _upsert_mor(
     spark: SparkSession,
     df: DataFrame,
@@ -1898,47 +2119,29 @@ def _upsert_mor(
     files: int,
     branch: str | None = None,
 ) -> dict:
-    """The merge-on-read arm of ``upsert_clustered``: equality-delete
-    file (batch keys, distinct, NULLs dropped) + ordinary data append,
+    """The merge-on-read arm of ``upsert_clustered``: ordinary data
+    append + equality-delete file (batch keys, distinct, NULLs dropped),
     one commit, zero reads of the table's data files."""
-    import uuid
-
-    import pyarrow.parquet as pq
-
     with table_lock(path):
         man = load_manifest(path, snapshot_id=branch)
         level = int(man["level"])
         entries = man["files"]
+        inserted, schema_json, tbl = _write_batch(df, path, man, level, lon, lat, files)
         # targets: every current file whose key-range stats could hold a
         # batch key (files without stats are targeted — sound); an
         # all-NULL key batch replaces nothing
-        row = df.agg(F.min(key).alias("lo"), F.max(key).alias("hi")).collect()[0]
+        klo, khi = _key_bounds(df, tbl, key)
         targets = (
             []
-            if row["lo"] is None
+            if klo is None
             else sorted(
-                e["file"]
-                for e in entries
-                if _col_range_keep(e, key, row["lo"], row["hi"])
+                e["file"] for e in entries if _col_range_keep(e, key, klo, khi)
             )
         )
         deletes = man.get("deletes") or []
         n_keys = 0
         if targets:
-            rel = os.path.join(DELETE_DIR, f"eq-{uuid.uuid4().hex[:16]}")
-            full = os.path.join(path, rel)
-            (
-                df.select(F.col(key).alias("_key"))
-                .where(F.col("_key").isNotNull())
-                .distinct()
-                .write.mode("error")
-                .parquet(full)
-            )
-            n_keys = sum(  # row count from the written footers — no job
-                pq.ParquetFile(os.path.join(full, f)).metadata.num_rows
-                for f in os.listdir(full)
-                if f.endswith(".parquet")
-            )
+            rel, n_keys = _write_eq_delete(df, tbl, path, key)
             deletes = deletes + [
                 {
                     "file": rel,
@@ -1948,21 +2151,6 @@ def _upsert_mor(
                     "key": key,
                 }
             ]
-        be = cell_backend("s2")
-        out = df.withColumn(CELL_COL, be.udf(level)(F.col(lat), F.col(lon)))
-        old_schema = _manifest_schema(man)
-        schema_json = None
-        if old_schema is not None:  # same add-column evolution as append
-            merged, _ = _merge_schemas(old_schema, out.schema)
-            schema_json = merged.json()
-        pre = set(_data_files(path))
-        (
-            out.repartitionByRange(files, F.col(CELL_COL))
-            .sortWithinPartitions(CELL_COL)
-            .write.mode("append")
-            .parquet(path)
-        )
-        inserted = _file_stats(path, [n for n in _data_files(path) if n not in pre])
         return _write_manifest(
             path,
             level,

@@ -9,6 +9,11 @@ model's, and at the end EVERY recorded snapshot must time-travel to its
 frozen state.  This is the cross-product coverage the per-feature tests
 can't enumerate: e.g. a MOR delete staged on a branch, published, then
 rolled past and read back via time travel.
+
+Each write draws which writer takes its batch: a Python-list frame is
+written by Spark jobs, a pandas-built frame (a local relation) by the
+driver (``io.clustered._write_batch``), so the sequences cover both and
+their mixes.
 """
 
 from __future__ import annotations
@@ -22,14 +27,21 @@ from spatial4n_spark.io import clustered as C
 KEYS = 24  # base key universe (kept tiny: every op is a Spark job)
 
 
-def _mkdf(spark, keys):
+def _mkdf(spark, keys, local=False):
     """Deterministic (pid, lon, lat) rows for a key set — coords are a
-    pure function of the key, so row equality is key equality."""
+    pure function of the key, so row equality is key equality. Built
+    from a list (the Spark writer) or, with ``local``, from pandas (a
+    local relation: the driver writer)."""
     rows = [
         (int(k), float((k * 37) % 360 - 180) / 2.0, float((k * 53) % 170 - 85) / 2.0)
         for k in sorted(keys)
     ]
-    return spark.createDataFrame(rows, "pid long, lon double, lat double")
+    schema = "pid long, lon double, lat double"
+    if local:
+        import pandas as pd
+
+        return spark.createDataFrame(pd.DataFrame(rows, columns=["pid", "lon", "lat"]), schema)
+    return spark.createDataFrame(rows, schema)
 
 
 def _table_keys(spark, path, snapshot_id=None):
@@ -43,12 +55,12 @@ def _table_keys(spark, path, snapshot_id=None):
 
 OPS = st.lists(
     st.one_of(
-        st.tuples(st.just("append"), st.integers(0, 5)),
+        st.tuples(st.just("append"), st.integers(0, 5), st.booleans()),
         st.tuples(st.just("delete"), st.integers(0, 3), st.booleans()),
-        st.tuples(st.just("upsert"), st.integers(0, 3), st.booleans()),
+        st.tuples(st.just("upsert"), st.integers(0, 3), st.booleans(), st.booleans()),
         st.tuples(st.just("compact"), st.just(0)),
         st.tuples(st.just("branch"), st.just(0)),
-        st.tuples(st.just("stage"), st.integers(0, 5)),
+        st.tuples(st.just("stage"), st.integers(0, 5), st.booleans()),
         st.tuples(st.just("publish"), st.just(0)),
         st.tuples(st.just("dropbranch"), st.just(0)),
         st.tuples(st.just("rollback"), st.integers(0, 7)),
@@ -84,12 +96,12 @@ def test_lifecycle_matches_model(spark, tmp_path_factory, ops):
             batch = set(range(next_key, next_key + 4))
             next_key += 4
             if branch_live:
-                C.append_clustered(_mkdf(spark, batch), path, files=1,
+                C.append_clustered(_mkdf(spark, batch, op[2]), path, files=1,
                                    branch="b")
                 staged |= batch
                 snaps[C.table_refs(path)["b"]] = frozenset(staged)
             else:
-                C.append_clustered(_mkdf(spark, batch), path, files=1)
+                C.append_clustered(_mkdf(spark, batch, op[2]), path, files=1)
                 cur |= batch
                 snaps[sid()] = frozenset(cur)
         elif kind == "delete":
@@ -117,7 +129,7 @@ def test_lifecycle_matches_model(spark, tmp_path_factory, ops):
             batch = set(some) | {next_key}
             next_key += 1
             C.upsert_clustered(
-                spark, _mkdf(spark, batch), path, key="pid",
+                spark, _mkdf(spark, batch, op[3]), path, key="pid",
                 strategy="mor" if op[2] else "cow",
                 branch="b" if branch_live else None,
             )
@@ -140,7 +152,7 @@ def test_lifecycle_matches_model(spark, tmp_path_factory, ops):
             if branch_live:
                 batch = set(range(next_key, next_key + 3))
                 next_key += 3
-                C.append_clustered(_mkdf(spark, batch), path, files=1,
+                C.append_clustered(_mkdf(spark, batch, op[2]), path, files=1,
                                    branch="b")
                 staged |= batch
                 snaps[C.table_refs(path)["b"]] = frozenset(staged)
