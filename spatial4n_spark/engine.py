@@ -166,7 +166,7 @@ class SpatialEngine:
         """Exact kNN join from a driver-side [(query_id, lon, lat)] list
         or a query DataFrame. Whenever queries x points is at most
         ``operators.knn._BRUTE_FORCE_PAIRS`` one ``mapInArrow`` top-k
-        pass answers; above it the density-adaptive ring plan runs.
+        pass answers; above it the one S2 cover plan runs.
         Either way: (query_id, <id_col>, dist_km, rank), ties on id."""
         if isinstance(queries, DataFrame):
             from spatial4n_spark.operators.knn import knn_join_df

@@ -46,7 +46,6 @@ import math
 import os
 import time
 from dataclasses import dataclass
-from functools import reduce
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
@@ -2725,10 +2724,7 @@ def clustered_knn_df(
     query_id: str = "query_id",
     qlon: str = "qlon",
     qlat: str = "qlat",
-    max_rounds: int = 10,
-    target_cells_across: float = 8.0,
     broadcast_cells: int = 200_000,
-    max_scan_ranges: int = 64,
 ) -> DataFrame:
     """Exact kNN over a clustered table with the QUERY SET AS A
     DATAFRAME. Returns (query_id, <id_col>, dist_km, rank), ties on
@@ -2743,33 +2739,14 @@ def clustered_knn_df(
     same candidates, same Catalyst distance, same rank, no Spark job);
     otherwise it streams ``_read_files`` through ``mapInArrow``.
 
-    Above it, the plan is density-adaptive, per query, per round:
-
-    1. a counts PYRAMID (one cells-only aggregate over the manifest-
-       listed scan, rolled up coarse via the Hilbert prefix property)
-       gives each query the finest pyramid level whose own cell already
-       holds ~``thr_sel`` points; its first-round radius targets ~``thr``
-       candidates AT ITS LOCAL DENSITY;
-    2. circle covers for the whole pending set come from one vectorized
-       BFS per active cover level
-       (``plans.s2cover.s2_circle_covers_batch`` — a superset of the
-       exact cover) inside ``mapInPandas``;
-    3. the cover cells fold into coalesced global id-range lists (<=
-       ``max_scan_ranges`` per level) that prune manifest files and push
-       the row-group BETWEEN disjunction; candidates come from one
-       prefix-shifted equi-join (broadcast under a size bound, else
-       shuffle-by-cell);
-    4. acceptance (n >= k and k-th distance <= that query's own radius)
-       is aggregate + anti-join; survivors double their radius.
-
-    Every round is a constant number of Spark jobs. Stragglers (after
-    the first round, once their comparisons fit the budget, or after
-    ``max_rounds``) go to the exact kernel over the listed files."""
-    from spatial4n_spark.kernels.distance import deg_to_km
+    Above it, the one cover plan of operators.knn (``_cover_knn``) runs
+    on the table's own cell column: its counts pyramid aggregates the
+    listed files, and each round's cover ranges prune manifest files and
+    row groups through ``read_pruned``. ``broadcast_cells`` bounds the
+    kernel's query set and the cover cells the plan broadcasts."""
     from spatial4n_spark.operators import knn as _knn
 
     man = load_manifest(path)
-    level = int(man["level"])
     n_total = sum(e["rows"] for e in man["files"])
     names = [e["file"] for e in man["files"]]
     q0 = _knn._query_frame(queries, query_id, qlon, qlat)
@@ -2784,289 +2761,10 @@ def clustered_knn_df(
         out = _knn._exact_knn(listed, q0, k, lon, lat, id_col, q_max)
         if out is not None:
             return out
-    r_cap_km = float(deg_to_km(180.0))
-    thr_sel = float(max(8, 2 * k))
-    thr = float(max(32, 4 * k))
-
-    qid_type = queries.schema[query_id].dataType.simpleString()
-    cover_schema = (
-        f"_lv int, _pcell long, query_id {qid_type}, "
-        "_qlon double, _qlat double, _r double"
+    return _knn._cover_knn(
+        listed, CELL_COL, int(man["level"]), lambda ranges: read_pruned(spark, path, ranges)[0],
+        q0, k, id_col, lon, lat, n_total, broadcast_cells,
     )
-
-    # --- counts pyramid: local density at a ladder of cell sizes -------
-    max_p = min(level, 12)
-    pyr = [lv for lv in range(max_p, 1, -2)][::-1][-5:]  # coarse -> fine, <= 5
-    cnt = (
-        listed.select(F.shiftright(F.col(CELL_COL), 2 * (level - max_p)).alias("_c"))
-        .groupBy("_c")
-        .agg(F.count(F.lit(1)).alias("_n"))
-        .persist()
-    )
-
-    def _qcell_gen(it):
-        import pandas as pd
-
-        from spatial4n_spark.kernels.s2cell import s2_encode
-
-        for pdf in it:
-            if not len(pdf):
-                continue
-            pdf = pdf.copy()
-            pdf["_qc"] = s2_encode(
-                pdf["_qlat"].to_numpy(), pdf["_qlon"].to_numpy(), max_p
-            )
-            yield pdf
-
-    q0 = q0.mapInPandas(
-        _qcell_gen,
-        f"query_id {qid_type}, _qlon double, _qlat double, _qc long",
-    )
-    # the whole pyramid in ONE explode-aggregate over the cell counts
-    # and ONE query-side join on the exploded (level, prefix-cell) keys,
-    # pivoted back per query — a join per level costs a broadcast-build
-    # job per level (see operators/knn.knn_join_df, same rework)
-    pyrdf = (
-        cnt.select(
-            F.explode(
-                F.array(
-                    *[
-                        F.struct(
-                            F.lit(lv).alias("_plv"),
-                            F.shiftright(
-                                F.col("_c"), 2 * (max_p - lv)
-                            ).alias("_pc"),
-                        )
-                        for lv in pyr
-                    ]
-                )
-            ).alias("_k"),
-            "_n",
-        )
-        .groupBy("_k._plv", "_k._pc")
-        .agg(F.sum("_n").alias("_pn"))
-    )
-    keys = q0.select(
-        "query_id",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(lv).alias("_plv"),
-                        F.shiftright(F.col("_qc"), 2 * (max_p - lv)).alias(
-                            "_pc"
-                        ),
-                    )
-                    for lv in pyr
-                ]
-            )
-        ).alias("_k"),
-    ).select("query_id", "_k._plv", "_k._pc")
-    hits = (
-        keys.join(pyrdf, ["_plv", "_pc"], "left")
-        .groupBy("query_id")
-        .agg(
-            *[
-                F.max(F.when(F.col("_plv") == lv, F.col("_pn"))).alias(
-                    f"_n{lv}"
-                )
-                for lv in pyr
-            ]
-        )
-    )
-    q0 = q0.join(hits, "query_id", "left")
-
-    # finest pyramid level whose own cell holds ~thr_sel points; its
-    # radius targets ~thr candidates at that cell's density.  Queries
-    # with no such level (globally sparse neighborhoods) start at 1.5x
-    # the coarsest pyramid cell and escalate by doubling.
-    size_deg = {lv: 90.0 / float(1 << lv) for lv in pyr}
-    lvl_expr = F.lit(pyr[0])
-    sel_ok = F.lit(False)
-    for lv in pyr:
-        got = F.coalesce(F.col(f"_n{lv}"), F.lit(0)) >= F.lit(thr_sel)
-        lvl_expr = F.when(got, F.lit(lv)).otherwise(lvl_expr)
-        sel_ok = sel_ok | got
-    nsel = F.lit(None).cast("long")
-    for lv in pyr:
-        nsel = F.when(F.col("_lvl") == lv, F.col(f"_n{lv}")).otherwise(nsel)
-    size_expr = F.lit(None).cast("double")
-    for lv in pyr:
-        size_expr = F.when(F.col("_lvl") == lv, F.lit(size_deg[lv])).otherwise(size_expr)
-    r_deg_expr = F.when(
-        F.col("_sel"),
-        size_expr
-        * F.sqrt(
-            F.lit(thr)
-            / (F.lit(math.pi) * F.greatest(nsel, F.lit(1)).cast("double"))
-        ),
-    ).otherwise(F.lit(1.5 * size_deg[pyr[0]]))
-    r_km_expr = F.least(
-        F.greatest(
-            r_deg_expr * F.lit(float(deg_to_km(1.0))),
-            F.lit(float(deg_to_km(4.0 * 90.0 / float(1 << level)))),
-        ),
-        F.lit(r_cap_km),
-    )
-    pending = (
-        q0.withColumn("_lvl", lvl_expr)
-        .withColumn("_sel", sel_ok)
-        .withColumn("_r", r_km_expr)
-        .select("query_id", "_qlon", "_qlat", "_r")
-        .localCheckpoint(eager=False)
-    )
-    n_pending = pending.count()
-
-    accepted: list[DataFrame] = []
-
-    def cover_gen(it):
-        import numpy as np
-        import pandas as pd
-
-        from spatial4n_spark.kernels.distance import km_to_deg as _k2d
-        from spatial4n_spark.plans.s2cover import s2_circle_covers_batch
-
-        for pdf in it:
-            if not len(pdf):
-                continue
-            qx = pdf["_qlon"].to_numpy()
-            qy = pdf["_qlat"].to_numpy()
-            r_km = pdf["_r"].to_numpy()
-            r_deg = np.asarray(_k2d(r_km), dtype=np.float64)
-            want = 2.0 * r_deg / target_cells_across
-            lv_arr = np.clip(
-                np.floor(np.log2(90.0 / np.maximum(want, 1e-12))), 1, level
-            ).astype(np.int64)
-            # quantize DOWN to even levels (coarser -> still a sound
-            # superset): halves the distinct-level fan-out the round's
-            # explode pays, for <= ~1.4x candidate-bbox growth
-            lv_arr = np.minimum(lv_arr & ~np.int64(1), level)
-            for u in np.unique(lv_arr):
-                m = lv_arr == u
-                qi, cells = s2_circle_covers_batch(qx[m], qy[m], r_deg[m], int(u))
-                src = np.flatnonzero(m)[qi]
-                yield pd.DataFrame(
-                    {
-                        "_lv": np.full(len(cells), int(u), dtype=np.int32),
-                        "_pcell": cells,
-                        "query_id": pdf["query_id"].to_numpy()[src],
-                        "_qlon": qx[src],
-                        "_qlat": qy[src],
-                        "_r": r_km[src],
-                    }
-                )
-
-    def merge_gen(it):
-        """Fold cover cells into coalesced table-level ranges PER
-        PARTITION (<= max_scan_ranges rows per active level each) — the
-        driver then merges the bounded partials, so no single task ever
-        funnels the whole distinct cell set."""
-        import numpy as np
-        import pandas as pd
-
-        frames = [pdf for pdf in it if len(pdf)]
-        if not frames:
-            return
-        allf = pd.concat(frames, ignore_index=True)
-        for u in np.unique(allf["_lv"].to_numpy()):
-            cs = np.unique(allf.loc[allf["_lv"] == u, "_pcell"].to_numpy())
-            shift = 2 * (level - int(u))
-            merged = _coalesce_ranges_np(
-                cs << shift, ((cs + 1) << shift) - 1, max_scan_ranges
-            )
-            yield pd.DataFrame(
-                {
-                    "_lv": np.full(len(merged), int(u), dtype=np.int32),
-                    "lo": [m[0] for m in merged],
-                    "hi": [m[1] for m in merged],
-                }
-            )
-
-    rounds = max_rounds if n_total >= k else 0
-    for rnd in range(rounds):
-        if n_pending == 0:
-            break
-        if rnd >= 1 and n_pending * n_total <= _knn._BRUTE_FORCE_PAIRS:
-            # a handful of stragglers after the cover round: one exact
-            # kernel pass beats a whole extra round of cover/prune/join
-            break
-        covers = pending.mapInPandas(cover_gen, cover_schema).localCheckpoint(
-            eager=False
-        )
-        rng_rows = (
-            covers.select("_lv", "_pcell")
-            .distinct()
-            .mapInPandas(merge_gen, "_lv int, lo long, hi long")
-            .collect()
-        )
-        partials: dict[int, list[tuple[int, int]]] = {}
-        for r in rng_rows:
-            partials.setdefault(int(r["_lv"]), []).append((int(r["lo"]), int(r["hi"])))
-        by_lv = {
-            u: _coalesce_ranges(rs, max_scan_ranges) for u, rs in partials.items()
-        }
-        # ONE pruned scan (union of every level's ranges) and ONE join:
-        # each scan row explodes into its (level, prefix-cell) pair per
-        # ACTIVE level — all codegen — so the round costs one table read
-        # and one shuffle/broadcast regardless of how many cover levels
-        # this round's radius spread produced
-        active = sorted(by_lv)
-        ranges_all = _coalesce_ranges(
-            (t for rs in by_lv.values() for t in rs), 2 * max_scan_ranges
-        )
-        scan_rnd, _stats = read_pruned(spark, path, ranges_all)
-        pairs = F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(u).cast("int").alias("_lv"),
-                        F.shiftright(F.col(CELL_COL), 2 * (level - u)).alias(
-                            "_pcell"
-                        ),
-                    )
-                    for u in active
-                ]
-            )
-        )
-        cov = covers
-        if n_pending * target_cells_across**2 <= broadcast_cells:
-            cov = F.broadcast(cov)
-        cand = (
-            scan_rnd.withColumn("_p", pairs)
-            .withColumn("_lv", F.col("_p._lv"))
-            .withColumn("_pcell", F.col("_p._pcell"))
-            .drop("_p")
-            .join(cov, ["_lv", "_pcell"])
-        )
-        ranked = _knn._rank_top_k(cand, k, id_col, lon, lat, "_r").localCheckpoint(
-            eager=False
-        )
-        summ = ranked.groupBy("query_id").agg(
-            F.count(F.lit(1)).alias("_n"),
-            F.max("dist_km").alias("_dmax"),
-            F.first("_r").alias("_rq"),
-        )
-        accepted_ids = summ.where(
-            (F.col("_n") >= k) & (F.col("_dmax") <= F.col("_rq"))
-        ).select("query_id")
-        accepted.append(
-            ranked.join(F.broadcast(accepted_ids), "query_id").select(
-                "query_id", id_col, "dist_km", "rank"
-            )
-        )
-        pending = (
-            pending.join(F.broadcast(accepted_ids), "query_id", "left_anti")
-            .withColumn("_r", F.least(F.col("_r") * 2.0, F.lit(r_cap_km)))
-            .localCheckpoint(eager=False)
-        )
-        n_pending = pending.count()
-
-    cnt.unpersist()
-    if n_pending:
-        # stragglers (sparse regions / n_total < k)
-        pending = pending.select("query_id", "_qlon", "_qlat")
-        accepted.append(_knn._exact_knn(listed, pending, k, lon, lat, id_col, None))
-    return reduce(DataFrame.unionAll, accepted)
 
 
 def _local_knn(
@@ -3144,7 +2842,6 @@ def clustered_knn(
     id_col: str,
     lon: str = "lon",
     lat: str = "lat",
-    max_rounds: int = 10,
 ):
     """``clustered_knn_df`` for a driver-side [(query_id, lon, lat)]
     list."""
@@ -3152,7 +2849,6 @@ def clustered_knn(
 
     return clustered_knn_df(
         spark, path, _list_queries(spark, queries), k, id_col=id_col, lon=lon, lat=lat,
-        max_rounds=max_rounds,
     )
 
 

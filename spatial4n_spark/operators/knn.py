@@ -16,17 +16,19 @@ all of them agree bit for bit, whichever plan ran.
   distance. The candidates (at most partitions x queries x (k + ties)
   rows) are re-ranked by the shared window. A few Spark jobs in all,
   whatever k or the data density.
-- **Above the budget**, ``knn_join_df`` (geohash ring blocks at a
-  per-query level from a counts pyramid) and ``knn_join_cover_df``
-  (circle covers on any cell backend) expand candidate regions round
-  by round, accept a query once its k-th distance fits the covered
-  radius, and hand the bounded stragglers to the exact kernel. Nothing
-  per-query touches the driver. SURVEY.md §2.9; reference analog: the
-  GetSubGeohashes ring expansion (GeohashUtils.cs:219-228).
+- **Above the budget** one S2 cover plan (``_cover_knn``) runs: each
+  query gets its own first radius from a counts pyramid, covers come
+  from one vectorized ``s2_circle_covers_batch`` per level, candidates
+  from one prefix-shifted equi-join; a query is accepted once its k-th
+  distance fits its radius, the others double it, and the bounded
+  stragglers go to the exact kernel. Nothing per-query touches the
+  driver. ``knn_join_df`` hands it the points encoded once at
+  ``_S2_LEVEL``; ``io.clustered`` hands it a clustered table's cell
+  column and a manifest-pruned scan.
 
-``knn_join`` and ``knn_join_cover`` take a driver-side query list and
-are thin wrappers over their ``_df`` twins; ``io.clustered`` runs the
-same kernel over a clustered table's manifest-listed files.
+``knn_join`` takes a driver-side query list and is a thin wrapper over
+``knn_join_df``; ``io.clustered`` runs the same kernel and the same
+plan over a clustered table's manifest-listed files.
 """
 
 from __future__ import annotations
@@ -40,15 +42,12 @@ from pyspark.sql import DataFrame, Window, functions as F
 from pyspark.sql.types import DoubleType, IntegerType, StringType, StructField, StructType
 
 from spatial4n_spark.functions.native import haversine_km
-from spatial4n_spark.functions.udfs import geohash_udf
+from spatial4n_spark.functions.udfs import s2_udf
 from spatial4n_spark.kernels.distance import (
     EARTH_MEAN_RADIUS_KM,
     deg_to_km,
     dist_haversine_rad,
-)
-from spatial4n_spark.kernels.geohash import (
-    geohash_cell_sizes,
-    geohash_encode_str,
+    km_to_deg,
 )
 
 # queries x points at or below which every exact entry point runs the
@@ -64,6 +63,15 @@ _SLACK_KM = 1e-3
 
 # distance-matrix elements per numpy block (queries x batch rows)
 _BLOCK_ELEMS = 1 << 21
+
+# the above-budget cover plan: the S2 level a plain points frame is
+# encoded at, cover cells across a query circle, cell-id ranges per
+# task and level of the cover fold (a scan gets at most twice as
+# many), and rounds before the kernel
+_S2_LEVEL = 14
+_CELLS_ACROSS = 8.0
+_SCAN_RANGES = 64
+_MAX_ROUNDS = 10
 
 
 def _rank_top_k(cand: DataFrame, k: int, id_col: str, lon: str, lat: str, *keep):
@@ -82,12 +90,20 @@ def _rank_top_k(cand: DataFrame, k: int, id_col: str, lon: str, lat: str, *keep)
 
 
 def _local_frame(spark, rows: list, schema: StructType) -> DataFrame:
-    """Driver rows as a DataFrame. Built from pandas (Arrow), it is a
-    LocalRelation: collecting or broadcasting it runs no Spark job, where
-    a DataFrame made from a Python list is an RDD costing a job each."""
-    import pandas as pd
+    """Driver rows as a DataFrame. Built from a pyarrow Table, it is a
+    LocalRelation whatever the row count or the Arrow setting:
+    collecting or broadcasting it runs no Spark job, where a DataFrame
+    made from a Python list (or an empty pandas frame) is an RDD costing
+    a job each."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
 
-    return spark.createDataFrame(pd.DataFrame(rows, columns=schema.names), schema)
+    arrow = to_arrow_schema(schema)
+    cols = list(zip(*rows)) if rows else [[] for _ in arrow]
+    return spark.createDataFrame(
+        pa.Table.from_arrays([pa.array(c, f.type) for c, f in zip(cols, arrow)], schema=arrow),
+        schema,
+    )
 
 
 def _query_budget(n_points: int, broadcast_cells: int) -> int:
@@ -194,149 +210,318 @@ def _exact_knn(
     return _rank_top_k(cand.join(F.broadcast(q_df), "_qi"), k, id_col, lon, lat)
 
 
-def _rx_rings(qlat, level: int, rings: int):
-    """Per-query LONGITUDE ring count: lon cells shrink by cos(lat), so a
-    block that guarantees an isotropic covered radius needs rings/cos
-    columns (capped at a full 360-degree wrap, which the enumeration's
-    wrap+dedup turns into complete lat-band rows). The cos is taken at
-    the block's far lat edge — conservative."""
-    lat_h, lon_w = geohash_cell_sizes(level)
-    rx_cap = int(math.ceil(180.0 / lon_w))
-    edge = np.minimum(np.abs(np.asarray(qlat, dtype=np.float64)) + (rings + 1) * lat_h, 90.0)
-    cosv = np.maximum(np.cos(np.radians(edge)), 1e-9)
-    return np.minimum(np.ceil(rings / cosv), rx_cap).astype(np.int64)
+def _radius_levels(r_deg, level: int):
+    """Per-query S2 cover level for circles of ``r_deg`` degrees: about
+    ``_CELLS_ACROSS`` cells across the diameter, at most ``level``, and
+    rounded DOWN to an even level (coarser is still a sound superset):
+    that halves the distinct levels a round joins on, for at most ~1.4x
+    more candidate area."""
+    want = 2.0 * np.asarray(r_deg, dtype=np.float64) / _CELLS_ACROSS
+    lv = np.clip(np.floor(np.log2(90.0 / np.maximum(want, 1e-12))), 1, level)
+    return lv.astype(np.int64) & ~np.int64(1)
 
 
-def _ring_cells_frame(qid, qlon, qlat, level: int, rings: int):
-    """Vectorized ring-block enumeration for a batch of queries:
-    decode each center cell, offset an ANISOTROPIC (2*rx+1) x (2r+1)
-    block (rx = lon rings per ``_rx_rings``: pole-adjacent queries wrap
-    the whole lon circle instead of starving behind cos -> 0) by integer
-    cell sizes, wrap lon / drop beyond-pole rows, re-encode, dedup per
-    query. Returns a pandas frame (query_id, _qlon, _qlat, _cell)."""
-    import pandas as pd
+def _cover_rows(level: int):
+    """``mapInPandas`` body: the pending queries' (query_id, _qlon,
+    _qlat, _r) rows become their S2 cover rows (_lv, _pcell, query_id,
+    _qlon, _qlat, _r), one vectorized ``s2_circle_covers_batch`` per
+    cover level (a superset of the exact cover)."""
 
-    from spatial4n_spark.kernels.geohash import geohash_decode_bbox
+    def run(it):
+        import pandas as pd
 
-    qid = np.asarray(qid)
-    qlon = np.asarray(qlon, dtype=np.float64)
-    qlat = np.asarray(qlat, dtype=np.float64)
-    centers = geohash_encode_str(qlat, qlon, level)
-    if rings == 0:
-        return pd.DataFrame(
-            {"query_id": qid, "_qlon": qlon, "_qlat": qlat, "_cell": centers}
+        from spatial4n_spark.plans.s2cover import s2_circle_covers_batch
+
+        for pdf in it:
+            if not len(pdf):
+                continue
+            qx = pdf["_qlon"].to_numpy()
+            qy = pdf["_qlat"].to_numpy()
+            r_km = pdf["_r"].to_numpy()
+            r_deg = np.asarray(km_to_deg(r_km), dtype=np.float64)
+            lv_arr = _radius_levels(r_deg, level)
+            for u in np.unique(lv_arr):
+                m = lv_arr == u
+                qi, cells = s2_circle_covers_batch(qx[m], qy[m], r_deg[m], int(u))
+                src = np.flatnonzero(m)[qi]
+                yield pd.DataFrame(
+                    {
+                        "_lv": np.full(len(cells), int(u), dtype=np.int32),
+                        "_pcell": cells,
+                        "query_id": pdf["query_id"].to_numpy()[src],
+                        "_qlon": qx[src],
+                        "_qlat": qy[src],
+                        "_r": r_km[src],
+                    }
+                )
+
+    return run
+
+
+def _fold_covers(level: int):
+    """``mapInPandas`` body over cover rows (_lv, _pcell): per partition
+    and level, the cells folded into at most ``_SCAN_RANGES`` coalesced
+    level-``level`` id ranges (lo, hi), and the level's cover row count
+    in ``_rows`` (on its first range, 0 on the rest). The driver merges
+    the bounded partials, so no task funnels the whole cover set."""
+
+    def run(it):
+        import pandas as pd
+
+        from spatial4n_spark.io.clustered import _coalesce_ranges_np
+
+        frames = [pdf for pdf in it if len(pdf)]
+        if not frames:
+            return
+        allf = pd.concat(frames, ignore_index=True)
+        lvs, cells = allf["_lv"].to_numpy(), allf["_pcell"].to_numpy()
+        for u in np.unique(lvs):
+            m = lvs == u
+            cs = np.unique(cells[m])
+            shift = 2 * (level - int(u))
+            merged = _coalesce_ranges_np(cs << shift, ((cs + 1) << shift) - 1, _SCAN_RANGES)
+            rows = np.zeros(len(merged), dtype=np.int64)
+            rows[0] = np.count_nonzero(m)
+            yield pd.DataFrame(
+                {
+                    "_lv": np.full(len(merged), int(u), dtype=np.int32),
+                    "lo": [r[0] for r in merged],
+                    "hi": [r[1] for r in merged],
+                    "_rows": rows,
+                }
+            )
+
+    return run
+
+
+def _cover_knn(
+    points: DataFrame,
+    cell: str,
+    level: int,
+    scan,
+    queries: DataFrame,
+    k: int,
+    id_col: str,
+    lon: str,
+    lat: str,
+    n_total: int,
+    broadcast_cells: int,
+) -> DataFrame:
+    """The one above-budget kNN plan. ``points`` holds <id_col>, lon, lat
+    and ``cell``, the level-``level`` S2 cell id; ``scan(ranges)``
+    returns those rows for a list of [lo, hi] cell-id ranges (a
+    clustered table prunes files and row groups by them; a plain frame
+    may ignore them, the candidate join is exact either way).
+    ``queries`` is (query_id, _qlon, _qlat); ``n_total`` the point count.
+
+    1. A counts pyramid (one cells-only aggregate over ``points``,
+       rolled up through the Hilbert prefix property, ``shiftright``)
+       gives each query the finest pyramid level whose own cell holds
+       ~``thr_sel`` points; its first radius targets ~``thr`` candidates
+       at that cell's density.
+    2. Per round, circle covers of the whole pending set come from one
+       vectorized ``s2_circle_covers_batch`` per cover level inside
+       ``mapInPandas`` (``_cover_rows``, a superset of the exact cover);
+       one collect folds the cover cells into coalesced cell-id ranges
+       (``_fold_covers``; ``scan`` gets at most ``2 * _SCAN_RANGES``)
+       and counts the cover rows.
+    3. Candidates come from ONE prefix-shifted equi-join: each scanned
+       row explodes into its (level, ancestor cell) pair per active
+       level; the covers are broadcast when their counted rows are at
+       most ``broadcast_cells``, else joined by shuffle. The candidates
+       are ranked by ``_rank_top_k``.
+    4. A query is accepted when it has k candidates and its k-th
+       distance is within its own radius (the cover holds every point
+       within that radius, so nothing nearer was missed); the others
+       double their radius.
+
+    Stragglers (after ``_MAX_ROUNDS``, when ``n_total < k``, or from
+    round 2 on once their comparisons fit ``_BRUTE_FORCE_PAIRS``) go to
+    the exact kernel over ``points``."""
+    from spatial4n_spark.io.clustered import _coalesce_ranges
+
+    r_cap_km = float(deg_to_km(180.0))
+    thr_sel = float(max(8, 2 * k))
+    thr = float(max(32, 4 * k))
+    qid_type = queries.schema["query_id"].dataType.simpleString()
+    cover_schema = (
+        f"_lv int, _pcell long, query_id {qid_type}, "
+        "_qlon double, _qlat double, _r double"
+    )
+
+    # --- counts pyramid: local density at a ladder of cell sizes -------
+    max_p = min(level, 12)
+    pyr = [lv for lv in range(max_p, 1, -2)][::-1][-5:]  # coarse -> fine, <= 5
+    cnt = (
+        points.select(F.shiftright(F.col(cell), 2 * (level - max_p)).alias("_c"))
+        .groupBy("_c")
+        .agg(F.count(F.lit(1)).alias("_n"))
+        .persist()
+    )
+    q0 = queries.withColumn("_qc", s2_udf(max_p)(F.col("_qlat"), F.col("_qlon")))
+    # the whole pyramid in ONE explode-aggregate over the cell counts
+    # and ONE query-side join on the exploded (level, prefix-cell) keys,
+    # pivoted back per query: a join per level costs a broadcast-build
+    # job per level
+    pyrdf = (
+        cnt.select(
+            F.explode(
+                F.array(
+                    *[
+                        F.struct(
+                            F.lit(lv).alias("_plv"),
+                            F.shiftright(F.col("_c"), 2 * (max_p - lv)).alias("_pc"),
+                        )
+                        for lv in pyr
+                    ]
+                )
+            ).alias("_k"),
+            "_n",
         )
-    lat_h, lon_w = geohash_cell_sizes(level)
-    mnx, mxx, mny, mxy = geohash_decode_bbox(centers)
-    cx = (np.asarray(mnx) + np.asarray(mxx)) * 0.5
-    cy = (np.asarray(mny) + np.asarray(mxy)) * 0.5
-    rx = _rx_rings(qlat, level, rings)
-
-    frames = []
-    offy = np.arange(-rings, rings + 1, dtype=np.float64) * lat_h
-    for r in np.unique(rx):
-        m = np.nonzero(rx == r)[0]
-        offx = np.arange(-r, r + 1, dtype=np.float64) * lon_w
-        ox, oy = np.meshgrid(offx, offy)
-        ox, oy = ox.ravel(), oy.ravel()
-        gx = ((cx[m][:, None] + ox[None, :] + 180.0) % 360.0) - 180.0
-        gy = cy[m][:, None] + oy[None, :]
-        ri, ci = np.nonzero((gy > -90.0) & (gy < 90.0))
-        cells = geohash_encode_str(gy[ri, ci], gx[ri, ci], level)
-        f = pd.DataFrame({"_row": m[ri], "_cell": cells}).drop_duplicates()
-        frames.append(f)
-    out = pd.concat(frames, ignore_index=True) if len(frames) > 1 else frames[0]
-    rows = out["_row"].to_numpy()
-    out["query_id"] = qid[rows]
-    out["_qlon"] = qlon[rows]
-    out["_qlat"] = qlat[rows]
-    return out[["query_id", "_qlon", "_qlat", "_cell"]]
-
-
-def _covered_radius_km(qlat: float, level: int, rings: int) -> float:
-    """Conservative radius fully covered by the anisotropic ring block:
-    at least ``rings`` cells of latitude; in longitude ``rx`` cells whose
-    km width carries the cos(lat) shrink — when the block wraps the full
-    circle the rows are complete lat bands and only the lat term binds
-    (this is what lets pole-adjacent queries accept instead of falling
-    through to brute force)."""
-    lat_h, lon_w = geohash_cell_sizes(level)
-    rx = int(_rx_rings([qlat], level, rings)[0])
-    lat_km = float(deg_to_km(rings * lat_h))
-    if (2 * rx + 1) * lon_w >= 360.0:
-        return max(lat_km, 0.0)
-    lon_km = float(deg_to_km(rx * lon_w)) * max(
-        math.cos(math.radians(abs(qlat) + rings * lat_h)), 0.0
+        .groupBy("_k._plv", "_k._pc")
+        .agg(F.sum("_n").alias("_pn"))
     )
-    return max(min(lat_km, lon_km), 0.0)
-
-
-def _covered_radius_expr(qlat_col, rings_col, level: int):
-    """Per-row column twin of ``_covered_radius_km`` with a rings COLUMN.
-    Uses rx-1 in the lon term: the enumeration computes rx in numpy, this
-    expression in the JVM — the one-cell slack absorbs any ulp-level
-    ceil() disagreement so acceptance can never assume a column the
-    block did not enumerate."""
-    lat_h, lon_w = geohash_cell_sizes(level)
-    rx_cap = int(math.ceil(180.0 / lon_w))
-    edge = F.least(
-        F.abs(qlat_col) + (rings_col + 1) * F.lit(float(lat_h)), F.lit(90.0)
-    )
-    cosv = F.greatest(F.cos(F.radians(edge)), F.lit(1e-9))
-    rx_raw = F.ceil(rings_col / cosv).cast("double")  # UNcapped ceil
-    rx = F.least(rx_raw, F.lit(float(rx_cap)))
-    rx_c = F.greatest(rx - 1, F.lit(0.0))
-    lat_km = rings_col * F.lit(float(deg_to_km(lat_h)))
-    # full wrap: claimed either when even the slack-reduced rx spans the
-    # circle, or when the UNcapped ceil exceeds the cap BY MORE THAN ONE
-    # cell (rx_raw - 1 >= cap). The second clause carries the same
-    # one-cell slack as everywhere else: if the JVM's rings/cos cleared
-    # the cap by a whole cell, numpy's ceil — at most one off — still hit
-    # the cap and enumerated the full (2*cap+1)-column wrap
-    # ((2*cap+1)*lon_w >= 360 by construction of cap = ceil(180/lon_w)).
-    # A pole query exactly AT the cap boundary defers the wrap claim by
-    # one ring doubling instead of risking a one-column acceptance gap;
-    # the clause must compare the UNcapped ceil — the capped rx can never
-    # exceed cap, so a capped comparison would never fire and would
-    # strand pole queries at a near-zero acceptance radius forever.
-    full_wrap = ((2 * rx_c + 1) * F.lit(float(lon_w)) >= F.lit(360.0)) | (
-        rx_raw - 1 >= F.lit(float(rx_cap))
-    )
-    lon_km = (
-        rx_c
-        * F.lit(float(deg_to_km(lon_w)))
-        * F.greatest(
-            F.cos(F.radians(F.abs(qlat_col) + rings_col * F.lit(float(lat_h)))),
-            F.lit(0.0),
+    keys = q0.select(
+        "query_id",
+        F.explode(
+            F.array(
+                *[
+                    F.struct(
+                        F.lit(lv).alias("_plv"),
+                        F.shiftright(F.col("_qc"), 2 * (max_p - lv)).alias("_pc"),
+                    )
+                    for lv in pyr
+                ]
+            )
+        ).alias("_k"),
+    ).select("query_id", "_k._plv", "_k._pc")
+    hits = (
+        keys.join(pyrdf, ["_plv", "_pc"], "left")
+        .groupBy("query_id")
+        .agg(
+            *[
+                F.max(F.when(F.col("_plv") == lv, F.col("_pn"))).alias(f"_n{lv}")
+                for lv in pyr
+            ]
         )
     )
-    return F.when(full_wrap, F.greatest(lat_km, F.lit(0.0))).otherwise(
-        F.greatest(F.least(lat_km, lon_km), F.lit(0.0))
+    q0 = q0.join(hits, "query_id", "left")
+
+    # finest pyramid level whose own cell holds ~thr_sel points; its
+    # radius targets ~thr candidates at that cell's density.  Queries
+    # with no such level (globally sparse neighborhoods) start at 1.5x
+    # the coarsest pyramid cell and escalate by doubling.
+    size_deg = {lv: 90.0 / float(1 << lv) for lv in pyr}
+    lvl_expr = F.lit(pyr[0])
+    sel_ok = F.lit(False)
+    for lv in pyr:
+        got = F.coalesce(F.col(f"_n{lv}"), F.lit(0)) >= F.lit(thr_sel)
+        lvl_expr = F.when(got, F.lit(lv)).otherwise(lvl_expr)
+        sel_ok = sel_ok | got
+    nsel = F.lit(None).cast("long")
+    size_expr = F.lit(None).cast("double")
+    for lv in pyr:
+        nsel = F.when(F.col("_lvl") == lv, F.col(f"_n{lv}")).otherwise(nsel)
+        size_expr = F.when(F.col("_lvl") == lv, F.lit(size_deg[lv])).otherwise(size_expr)
+    r_deg_expr = F.when(
+        F.col("_sel"),
+        size_expr
+        * F.sqrt(F.lit(thr) / (F.lit(math.pi) * F.greatest(nsel, F.lit(1)).cast("double"))),
+    ).otherwise(F.lit(1.5 * size_deg[pyr[0]]))
+    r_km_expr = F.least(
+        F.greatest(
+            r_deg_expr * F.lit(float(deg_to_km(1.0))),
+            F.lit(float(deg_to_km(4.0 * 90.0 / float(1 << level)))),
+        ),
+        F.lit(r_cap_km),
     )
+    pending = (
+        q0.withColumn("_lvl", lvl_expr)
+        .withColumn("_sel", sel_ok)
+        .withColumn("_r", r_km_expr)
+        .select("query_id", "_qlon", "_qlat", "_r")
+        .localCheckpoint(eager=False)
+    )
+    n_pending = pending.count()
 
-
-def _est_cells_expr(levels: list[int]):
-    """Per-row enumerated-cell estimate over ``_qlat``/``_rings``/``_level``
-    columns, ANISOTROPIC: the lon ring count rx grows as rings/cos(lat)
-    (capped at a full wrap), so a pole-adjacent batch counts
-    (2*rx+1)*(2*rings+1), not (2*rings+1)^2 — the isotropic square
-    under-counts by orders of magnitude exactly where blocks are widest,
-    and the broadcast decision in ``knn_join_df`` trusts this number."""
-    e = F.lit(0.0)
-    for lv in levels:
-        lat_h, lon_w = geohash_cell_sizes(lv)
-        rx_cap = int(math.ceil(180.0 / lon_w))
-        edge = F.least(
-            F.abs(F.col("_qlat")) + (F.col("_rings") + 1) * F.lit(float(lat_h)),
-            F.lit(90.0),
+    accepted: list[DataFrame] = []
+    rounds = _MAX_ROUNDS if n_total >= k else 0
+    for rnd in range(rounds):
+        if n_pending == 0:
+            break
+        if rnd >= 1 and n_pending * n_total <= _BRUTE_FORCE_PAIRS:
+            # a handful of stragglers after the first round: one exact
+            # kernel pass beats a whole extra round of cover/scan/join
+            break
+        covers = pending.mapInPandas(_cover_rows(level), cover_schema).localCheckpoint(
+            eager=False
         )
-        cosv = F.greatest(F.cos(F.radians(edge)), F.lit(1e-9))
-        rx = F.least(F.ceil(F.col("_rings") / cosv), F.lit(rx_cap))
-        e = F.when(
-            F.col("_level") == lv,
-            (2 * rx + 1).cast("double") * (2 * F.col("_rings") + 1),
-        ).otherwise(e)
-    return e
+        folded = (
+            covers.select("_lv", "_pcell")
+            .mapInPandas(_fold_covers(level), "_lv int, lo long, hi long, _rows long")
+            .collect()
+        )
+        n_cover = sum(int(r["_rows"]) for r in folded)
+        # ONE scan (union of every level's ranges) and ONE join: each
+        # scanned row explodes into its (level, ancestor cell) pair per
+        # ACTIVE level, all codegen, so a round costs one read and one
+        # shuffle or broadcast however many cover levels it spans
+        active = sorted({int(r["_lv"]) for r in folded})
+        ranges_all = _coalesce_ranges(
+            [(int(r["lo"]), int(r["hi"])) for r in folded], 2 * _SCAN_RANGES
+        )
+        pairs = F.explode(
+            F.array(
+                *[
+                    F.struct(
+                        F.lit(u).cast("int").alias("_lv"),
+                        F.shiftright(F.col(cell), 2 * (level - u)).alias("_pcell"),
+                    )
+                    for u in active
+                ]
+            )
+        )
+        cov = F.broadcast(covers) if n_cover <= broadcast_cells else covers
+        # a null-coordinate row has a cell (that of NaN) but no distance;
+        # a null dist_km would rank first, so it never becomes a candidate
+        cand = (
+            scan(ranges_all)
+            .where(F.col(lon).isNotNull() & F.col(lat).isNotNull())
+            .withColumn("_p", pairs)
+            .withColumn("_lv", F.col("_p._lv"))
+            .withColumn("_pcell", F.col("_p._pcell"))
+            .drop("_p")
+            .join(cov, ["_lv", "_pcell"])
+        )
+        # lazy checkpoint: the pending count below materializes the whole
+        # round (ranked, acceptance, anti-join) as one job
+        ranked = _rank_top_k(cand, k, id_col, lon, lat, "_r").localCheckpoint(eager=False)
+        summ = ranked.groupBy("query_id").agg(
+            F.count(F.lit(1)).alias("_n"),
+            F.max("dist_km").alias("_dmax"),
+            F.first("_r").alias("_rq"),
+        )
+        accepted_ids = summ.where(
+            (F.col("_n") >= k) & (F.col("_dmax") <= F.col("_rq"))
+        ).select("query_id")
+        accepted.append(
+            ranked.join(F.broadcast(accepted_ids), "query_id").select(
+                "query_id", id_col, "dist_km", "rank"
+            )
+        )
+        pending = (
+            pending.join(F.broadcast(accepted_ids), "query_id", "left_anti")
+            .withColumn("_r", F.least(F.col("_r") * 2.0, F.lit(r_cap_km)))
+            .localCheckpoint(eager=False)
+        )
+        n_pending = pending.count()
+
+    cnt.unpersist()
+    if n_pending:
+        # stragglers (sparse regions, n_total < k)
+        pending = pending.select("query_id", "_qlon", "_qlat")
+        accepted.append(_exact_knn(points, pending, k, lon, lat, id_col, None))
+    return reduce(DataFrame.unionAll, accepted)
 
 
 def knn_join_df(
@@ -349,480 +534,34 @@ def knn_join_df(
     query_id: str = "query_id",
     qlon: str = "qlon",
     qlat: str = "qlat",
-    level: int | None = None,
-    max_level: int = 6,
-    max_rounds: int = 4,
     estimated_total: int | None = None,
     broadcast_cells: int = 200_000,
-    cell_cap: int | None = None,
-    max_rings0: int = 16,
 ) -> DataFrame:
     """Exact kNN join, queries as a DataFrame. Returns
     (query_id, <id_col>, dist_km, rank); ties break on <id_col>.
 
-    Density-adaptive against the clustered-data trap: with one global
-    grid level, hot-cluster queries x hot cells multiply into
-    |Q_hot| x |N_hot| candidate rows (a Paris-cell query set re-scans
-    the whole Paris cell per query), while the same level starves
-    ocean queries into round after round of ring doubling. No single
-    level serves both, so each query gets its OWN level:
-
-    - points are encoded ONCE at ``max_level``; a per-cell count
-      aggregate plus its prefix roll-ups form a counts pyramid (coarser
-      geohash cells are string prefixes — no re-encode);
-    - each query picks the FINEST level at which its own cell already
-      holds ~4k points (its candidate budget), falling back to the
-      coarsest level with a density-presized ring count — dense-cluster
-      queries search tiny cells, sparse queries search big ones, and
-      both start with candidates O(k);
-    - ``level=<int>`` pins a single level for every query (the fixed
-      grid ``knn_join`` passes through).
-
-    Per round: a ``mapInPandas`` stage expands pending queries into ring
-    cells; candidates come from one prefix-keyed equi-join per ACTIVE
-    level (<= 5, against the same cached encode — broadcast under a size
-    bound, else shuffle-by-cell with AQE skew handling); a
-    query-partitioned window takes top-k; acceptance (k-th distance
-    within the covered radius of the query's level+rings) is an
-    aggregate + join; survivors double their rings. Nothing per-query
-    touches the driver until the stragglers left after ``max_rounds``,
-    which are collected for the exact kernel.
-
-    Under the comparison budget (module docstring) none of this runs:
-    the exact kernel answers in one pass. ``estimated_total`` (the
-    point count) saves the count job that sizes the budget.
+    Under the comparison budget (module docstring) the exact kernel
+    answers in one pass. Above it the points are encoded ONCE as
+    level-``_S2_LEVEL`` S2 cells, persisted, and handed to the cover plan
+    (``_cover_knn``) with a scan that returns the whole encoded frame.
+    ``estimated_total`` (the point count) saves the count job that sizes
+    the budget; ``broadcast_cells`` bounds both the kernel's query set
+    and the cover cells the plan broadcasts.
     """
     q0 = _query_frame(queries, query_id, qlon, qlat)
     n_total = estimated_total if estimated_total is not None else points.count()
     out = _exact_knn(points, q0, k, lon, lat, id_col, _query_budget(n_total, broadcast_cells))
     if out is not None:
         return out
-    qid_type = queries.schema[query_id].dataType.simpleString()
-    cells_schema = (
-        f"query_id {qid_type}, _qlon double, _qlat double, "
-        "_level int, _rings int, _cell string"
+    pts = points.select(
+        id_col, lon, lat, s2_udf(_S2_LEVEL)(F.col(lat), F.col(lon)).alias("_cell")
+    ).persist()
+    out = _cover_knn(
+        pts, "_cell", _S2_LEVEL, lambda ranges: pts, q0, k, id_col, lon, lat,
+        n_total, broadcast_cells,
     )
-
-    lmin = 2
-    enc_level = max(max_level, level or 0)
-    levels = [level] if level is not None else list(range(lmin, max_level + 1))
-    # two thresholds: a query picks the finest level whose own cell holds
-    # ~2k points (enough that one ring usually suffices — a bigger bar
-    # here pushes queries a whole level coarser, 10-30x more candidates);
-    # rings are then presized to a ~4k-candidate budget at that level
-    thr_sel = max(4, 2 * k) if cell_cap is None else cell_cap
-    thr = max(32, 4 * k) if cell_cap is None else cell_cap
-
-    ptsF = points.withColumn("_cellF", geohash_udf(enc_level)(F.col(lat), F.col(lon)))
-    ptsF = ptsF.select(id_col, lon, lat, "_cellF").persist()
-
-    # one count pass at the finest level; the pyramid levels aggregate
-    # the (small) counts table, never the points
-    cnt = ptsF.groupBy("_cellF").agg(F.count(F.lit(1)).alias("_n")).persist()
-
-    # queries encoded once at enc_level; per-level cells are prefixes
-    q0 = q0.withColumn("_qcellF", geohash_udf(enc_level)(F.col("_qlat"), F.col("_qlon")))
-    if len(levels) == 1:
-        lv = levels[0]
-        counts_lv = cnt.groupBy(F.substring("_cellF", 1, lv).alias("_pc")).agg(
-            F.sum("_n").alias(f"_n{lv}")
-        )
-        q0 = q0.withColumn("_pc", F.substring("_qcellF", 1, lv)).join(
-            counts_lv, "_pc", "left"
-        ).drop("_pc")
-    else:
-        # the whole pyramid in ONE aggregation (explode each fine cell
-        # into its per-level prefixes) and ONE query-side join on the
-        # exploded (level, prefix) keys, pivoted back per query — vs a
-        # join per level, which costs a broadcast build (a whole Spark
-        # job) per level and dominates small-batch latency
-        pyr = (
-            cnt.select(
-                F.explode(
-                    F.array(
-                        *[
-                            F.struct(
-                                F.lit(lv).alias("_plv"),
-                                F.substring("_cellF", 1, lv).alias("_pc"),
-                            )
-                            for lv in levels
-                        ]
-                    )
-                ).alias("_k"),
-                "_n",
-            )
-            .groupBy("_k._plv", "_k._pc")
-            .agg(F.sum("_n").alias("_pn"))
-        )
-        keys = q0.select(
-            "query_id",
-            F.explode(
-                F.array(
-                    *[
-                        F.struct(
-                            F.lit(lv).alias("_plv"),
-                            F.substring("_qcellF", 1, lv).alias("_pc"),
-                        )
-                        for lv in levels
-                    ]
-                )
-            ).alias("_k"),
-        ).select("query_id", "_k._plv", "_k._pc")
-        hits = (
-            keys.join(pyr, ["_plv", "_pc"], "left")
-            .groupBy("query_id")
-            .agg(
-                *[
-                    F.max(F.when(F.col("_plv") == lv, F.col("_pn"))).alias(
-                        f"_n{lv}"
-                    )
-                    for lv in levels
-                ]
-            )
-        )
-        q0 = q0.join(hits, "query_id", "left")
-
-    # finest level whose own cell already holds ~thr candidates; else the
-    # coarsest level (density-presized rings below)
-    lvl_expr = F.lit(levels[0])
-    for lv in levels[1:]:
-        lvl_expr = F.when(
-            F.coalesce(F.col(f"_n{lv}"), F.lit(0)) >= thr_sel, F.lit(lv)
-        ).otherwise(lvl_expr)
-    q0 = q0.withColumn("_level", lvl_expr)
-    nlevel = F.lit(None).cast("long")
-    for lv in levels:
-        nlevel = F.when(F.col("_level") == lv, F.col(f"_n{lv}")).otherwise(nlevel)
-    # rings for ~thr candidates at the chosen level's local density
-    local_rings = F.ceil(
-        (
-            F.sqrt(
-                F.lit(float(thr)) / F.greatest(F.coalesce(nlevel, F.lit(1)), F.lit(1)).cast("double")
-            )
-            - 1
-        )
-        / 2
-    ).cast("int")
-    # lazy checkpoint: the _pending_stats collect right below materializes
-    # it — an eager one would spend a whole extra Spark job on the same
-    # plan (job count, not data volume, dominates small-batch latency)
-    pending = (
-        q0.withColumn(
-            "_rings",
-            F.greatest(F.lit(1), F.least(F.lit(int(max_rings0)), local_rings)),
-        )
-        .select("query_id", "_qlon", "_qlat", "_level", "_rings")
-        .localCheckpoint(eager=False)
-    )
-
-    def _pending_stats(pdf: DataFrame):
-        rows = pdf.groupBy("_level").agg(
-            F.count(F.lit(1)).alias("n"),
-            F.sum(_est_cells_expr(levels)).alias("cells"),
-        ).collect()
-        n = sum(int(r["n"]) for r in rows)
-        cells = sum(int(r["cells"] or 0) for r in rows)
-        act = sorted(int(r["_level"]) for r in rows)
-        return n, cells, act
-
-    n_pending, est_cells, active_levels = _pending_stats(pending)
-
-    accepted: list[DataFrame] = []
-
-    def cells_gen():
-        def gen(it):
-            import pandas as pd
-
-            for pdf in it:
-                if not len(pdf):
-                    continue
-                frames = []
-                lv_arr = pdf["_level"].to_numpy()
-                rings_arr = pdf["_rings"].to_numpy()
-                for lv in np.unique(lv_arr):
-                    for r in np.unique(rings_arr[lv_arr == lv]):
-                        m = (lv_arr == lv) & (rings_arr == r)
-                        f = _ring_cells_frame(
-                            pdf["query_id"].to_numpy()[m],
-                            pdf["_qlon"].to_numpy()[m],
-                            pdf["_qlat"].to_numpy()[m],
-                            int(lv),
-                            int(r),
-                        )
-                        f["_level"] = int(lv)
-                        f["_rings"] = int(r)
-                        frames.append(f)
-                out = pd.concat(frames, ignore_index=True)
-                yield out[["query_id", "_qlon", "_qlat", "_level", "_rings", "_cell"]]
-
-        return gen
-
-    def radius_expr():
-        e = F.lit(0.0)
-        for lv in levels:
-            e = F.when(
-                F.col("_level") == lv,
-                _covered_radius_expr(F.col("_qlat"), F.col("_rings"), lv),
-            ).otherwise(e)
-        return e
-
-    for _ in range(max_rounds):
-        if n_pending == 0:
-            break
-        cells = pending.mapInPandas(cells_gen(), cells_schema)
-        if len(active_levels) > 1 and n_pending > 10_000:
-            # the per-level join branches below each re-read this plan;
-            # Spark does not dedupe common subplans across unionAll
-            # branches, so without materialization the Python ring
-            # enumeration of ALL pending queries would re-run once per
-            # active level.  For small pending sets the re-enumeration
-            # (O(n_pending x levels) numpy work) is far cheaper than the
-            # extra Spark job an eager checkpoint costs.
-            cells = cells.localCheckpoint(eager=True)
-        # one prefix-keyed join per ACTIVE level against the same cached
-        # encode; at scale each is the standard shuffle-by-cell plan (AQE
-        # skew-joins the residual hot cells), and the points side never
-        # broadcasts
-        cand = None
-        for lv in active_levels:
-            rhs = cells.where(F.col("_level") == lv)
-            if est_cells <= broadcast_cells:
-                rhs = F.broadcast(rhs)
-            c = ptsF.withColumn("_cell", F.substring("_cellF", 1, lv)).join(rhs, "_cell")
-            cand = c if cand is None else cand.unionAll(c)
-        ranked = _rank_top_k(cand, k, id_col, lon, lat)
-        # lazy checkpoint of the bounded top-k (<= |pending| * k rows):
-        # the next-pending stats collect below materializes the whole
-        # round — ranked, acceptance, anti-join — as ONE Spark job while
-        # the ptsF/cnt caches are still alive; acceptance and the final
-        # union then read the materialized checkpoint
-        ranked = ranked.localCheckpoint(eager=False)
-        summ = ranked.groupBy("query_id").agg(
-            F.count(F.lit(1)).alias("_n"), F.max("dist_km").alias("_dmax")
-        )
-        accepted_ids = (
-            summ.join(
-                pending.select("query_id", "_qlat", "_level", "_rings"), "query_id"
-            )
-            .where((F.col("_n") >= k) & (F.col("_dmax") <= radius_expr()))
-            .select("query_id")
-        )
-        accepted.append(
-            ranked.join(F.broadcast(accepted_ids), "query_id").select(
-                "query_id", id_col, "dist_km", "rank"
-            )
-        )
-        pending = (
-            pending.join(F.broadcast(accepted_ids), "query_id", "left_anti")
-            .withColumn(
-                "_rings", F.least(F.col("_rings") * 2, F.lit(int(max_rings0 * 16)))
-            )
-            .localCheckpoint(eager=False)
-        )
-        n_pending, est_cells, active_levels = _pending_stats(pending)
-
-    if n_pending:
-        # stragglers (pole/sparse regions, n_total < k): the exact kernel
-        accepted.append(
-            _exact_knn(points, pending.select("query_id", "_qlon", "_qlat"), k, lon, lat, id_col, None)
-        )
-
-    ptsF.unpersist()
-    cnt.unpersist()
-    return reduce(DataFrame.unionAll, accepted)
-
-
-def _initial_cover_radius_km(n_total: int, k: int) -> tuple[float, float]:
-    """(r0, r_cap): first-round circle radius targeting ~4x k expected
-    candidates under a uniform-density estimate (acceptance corrects any
-    skew), and the global cap (a 180-deg circle covers the globe)."""
-    earth_area = 4.0 * math.pi * 6371.0087714**2
-    target = max(64.0, 4.0 * k)
-    r_cap_km = float(deg_to_km(180.0))
-    r0 = math.sqrt(target / max(n_total, 1) * earth_area / math.pi)
-    return min(max(r0, 0.5), r_cap_km), r_cap_km
-
-
-def _coarse_cell(be, fine_level: int, lv: int, lat: str, lon: str):
-    """Column of level-``lv`` cells for the candidate join: the fine
-    encode's ancestor where the backend has a prefix hierarchy, else a
-    re-encode at ``lv`` (h3: hexes don't nest, so there is no ancestor —
-    one extra vectorized encode pass per active level instead)."""
-    if be.has_hierarchy:
-        return be.parent_col("_cellF", fine_level, lv)
-    return be.udf(lv)(F.col(lat), F.col(lon))
-
-
-def _cover_level(be, r_km: float, level: int, target_cells_across: float) -> int:
-    """Finest level (<= the encode level) whose cell size keeps a circle
-    cover at ~``target_cells_across`` cells across the diameter."""
-    from spatial4n_spark.kernels.distance import km_to_deg
-
-    want = 2.0 * float(km_to_deg(r_km)) / target_cells_across
-    lv = level
-    while lv > 1 and be.cell_size_deg(lv) < want:
-        lv -= 1
-    return lv
-
-
-def knn_join_cover_df(
-    points: DataFrame,
-    queries: DataFrame,
-    k: int,
-    lon: str = "lon",
-    lat: str = "lat",
-    id_col: str = "image_id",
-    query_id: str = "query_id",
-    qlon: str = "qlon",
-    qlat: str = "qlat",
-    index: str = "s2",
-    level: int = 12,
-    max_rounds: int = 8,
-    estimated_total: int | None = None,
-    target_cells_across: float = 8.0,
-    broadcast_cells: int = 200_000,
-) -> DataFrame:
-    """Backend-portable exact kNN with the QUERY SET AS A DATAFRAME on
-    any cell backend (``index``: s2, geohash or h3). Returns (query_id,
-    <id_col>, dist_km, rank); ties break on <id_col>. Under the
-    comparison budget (module docstring) the exact kernel answers in one
-    pass and the backend is never consulted.
-
-    Above it, every pending query shares the same per-round radius (r0
-    doubling on survival — density skew is handled by the exact
-    acceptance check, not per-query radii), so each round has ONE cover
-    level: a ``mapInPandas`` stage runs the circle-cover planner per
-    query (the ``CellIndexBackend.cover`` the radius join uses,
-    distributed — nothing per-query on the driver), candidates come
-    from one prefix-keyed equi-join against the single fine point encode
-    (broadcast under a size bound, else shuffle-by-cell), and acceptance
-    (n >= k and k-th distance <= R) is aggregate + anti-join. The cover
-    is a superset of every cell meeting the circle, so acceptance is
-    exact; the circle covers handle pole and dateline queries through
-    the planner's piece splitting. Stragglers go to the exact kernel.
-    """
-    from spatial4n_spark.cellindex import cell_backend
-    from spatial4n_spark.kernels.distance import km_to_deg
-
-    pending = _query_frame(queries, query_id, qlon, qlat)
-    n_total = estimated_total if estimated_total is not None else points.count()
-    out = _exact_knn(points, pending, k, lon, lat, id_col, _query_budget(n_total, broadcast_cells))
-    if out is not None:
-        return out
-    be = cell_backend(index)
-    if be.has_hierarchy:
-        pts = points.withColumn("_cellF", be.udf(level)(F.col(lat), F.col(lon)))
-        pts = pts.select(id_col, lon, lat, "_cellF").persist()
-    else:
-        # h3: _coarse_cell re-encodes at each round's cover level, so a
-        # fine encode would be computed and never read
-        pts = points.select(id_col, lon, lat).persist()
-    r_km, r_cap_km = _initial_cover_radius_km(n_total, k)
-
-    qid_type = queries.schema[query_id].dataType.simpleString()
-    cover_schema = (
-        f"_pcell {be.sql_type}, query_id {qid_type}, _qlon double, _qlat double"
-    )
-
-    pending = pending.localCheckpoint(eager=False)
-    n_pending = pending.count()
-    accepted: list[DataFrame] = []
-
-    def cover_gen(lv: int, r_deg: float):
-        def gen(it):
-            import pandas as pd
-
-            from spatial4n_spark.cellindex import cell_backend as _cb
-            from spatial4n_spark.kernels.polygon import Circle
-
-            be_w = _cb(index)
-            for pdf in it:
-                if not len(pdf):
-                    continue
-                qx = pdf["_qlon"].to_numpy()
-                qy = pdf["_qlat"].to_numpy()
-                if index == "s2":
-                    # one vectorized BFS for the whole batch (superset of
-                    # the exact cover — acceptance is exact either way);
-                    # the scalar per-query planner costs tens of ms per
-                    # circle, which dominates large query sets
-                    from spatial4n_spark.plans.s2cover import (
-                        s2_circle_covers_batch,
-                    )
-
-                    idx_a, cells_a = s2_circle_covers_batch(qx, qy, r_deg, lv)
-                    yield pd.DataFrame(
-                        {
-                            "_pcell": cells_a,
-                            "query_id": pdf["query_id"].to_numpy()[idx_a],
-                            "_qlon": qx[idx_a],
-                            "_qlat": qy[idx_a],
-                        }
-                    )
-                    continue
-                cells: list = []
-                idx: list[int] = []
-                for i in range(len(pdf)):
-                    fulls, bounds = be_w.cover(
-                        Circle(float(qx[i]), float(qy[i]), r_deg, geo=True), lv
-                    )
-                    cs = fulls + bounds
-                    cells.extend(cs)
-                    idx.extend([i] * len(cs))
-                out = pd.DataFrame(
-                    {
-                        "_pcell": np.asarray(
-                            cells, dtype=np.int64 if be_w.sql_type == "long" else object
-                        ),
-                        "query_id": pdf["query_id"].to_numpy()[idx],
-                        "_qlon": qx[idx],
-                        "_qlat": qy[idx],
-                    }
-                )
-                yield out
-
-        return gen
-
-    for _ in range(max_rounds):
-        if n_pending == 0:
-            break
-        lv = _cover_level(be, r_km, level, target_cells_across)
-        covers = pending.mapInPandas(
-            cover_gen(lv, float(km_to_deg(r_km))), cover_schema
-        )
-        # ~target_cells_across^2 cells per query by construction of lv
-        if n_pending * target_cells_across**2 <= broadcast_cells:
-            covers = F.broadcast(covers)
-        cand = pts.withColumn("_pcell", _coarse_cell(be, level, lv, lat, lon)).join(
-            covers, "_pcell"
-        )
-        ranked = _rank_top_k(cand, k, id_col, lon, lat)
-        # lazy checkpoint: the pending count below materializes the whole
-        # round (ranked, acceptance, anti-join) as one job
-        ranked = ranked.localCheckpoint(eager=False)
-        summ = ranked.groupBy("query_id").agg(
-            F.count(F.lit(1)).alias("_n"), F.max("dist_km").alias("_dmax")
-        )
-        accepted_ids = summ.where(
-            (F.col("_n") >= k) & (F.col("_dmax") <= F.lit(float(r_km)))
-        ).select("query_id")
-        accepted.append(
-            ranked.join(F.broadcast(accepted_ids), "query_id").select(
-                "query_id", id_col, "dist_km", "rank"
-            )
-        )
-        pending = pending.join(
-            F.broadcast(accepted_ids), "query_id", "left_anti"
-        ).localCheckpoint(eager=False)
-        n_pending = pending.count()
-        r_km = min(r_km * 2.0, r_cap_km)
-
-    if n_pending:
-        # stragglers (n_total < k, or max_rounds exhausted)
-        accepted.append(_exact_knn(points, pending, k, lon, lat, id_col, None))
-
     pts.unpersist()
-    return reduce(DataFrame.unionAll, accepted)
+    return out
 
 
 def _list_queries(spark, queries) -> DataFrame:
@@ -837,29 +576,6 @@ def _list_queries(spark, queries) -> DataFrame:
     )
 
 
-def knn_join_cover(
-    points: DataFrame,
-    queries: list[tuple[str, float, float]],
-    k: int,
-    lon: str = "lon",
-    lat: str = "lat",
-    id_col: str = "image_id",
-    index: str = "s2",
-    level: int = 12,
-    max_rounds: int = 8,
-    estimated_total: int | None = None,
-    target_cells_across: float = 8.0,
-) -> DataFrame:
-    """``knn_join_cover_df`` for a driver-side [(query_id, qlon, qlat)]
-    list; ``index`` and ``level`` pass through. Returns (query_id,
-    <id_col>, dist_km, rank); ties break on <id_col>."""
-    return knn_join_cover_df(
-        points, _list_queries(points.sparkSession, queries), k, lon=lon, lat=lat,
-        id_col=id_col, index=index, level=level, max_rounds=max_rounds,
-        estimated_total=estimated_total, target_cells_across=target_cells_across,
-    )
-
-
 def knn_join(
     points: DataFrame,
     queries: list[tuple[str, float, float]],
@@ -867,16 +583,12 @@ def knn_join(
     lon: str = "lon",
     lat: str = "lat",
     id_col: str = "image_id",
-    level: int = 3,
-    max_rounds: int = 4,
     estimated_total: int | None = None,
 ) -> DataFrame:
-    """``knn_join_df`` for a driver-side [(query_id, qlon, qlat)] list;
-    ``level`` (the geohash ring level of the above-budget plan) passes
-    through. Returns (query_id, <id_col>, dist_km, rank); ties break on
+    """``knn_join_df`` for a driver-side [(query_id, qlon, qlat)] list.
+    Returns (query_id, <id_col>, dist_km, rank); ties break on
     <id_col>."""
     return knn_join_df(
         points, _list_queries(points.sparkSession, queries), k, lon=lon, lat=lat,
-        id_col=id_col, level=level, max_rounds=max_rounds,
-        estimated_total=estimated_total,
+        id_col=id_col, estimated_total=estimated_total,
     )

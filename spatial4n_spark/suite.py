@@ -742,8 +742,9 @@ def q_knn_clustered(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact kNN over the clustered layout — the third query family on
     the storage artifact (PIP, radius, kNN). At gate sizes the exact
     kernel reads the manifest-listed files through the one read spec;
-    above its budget, query circles become cover id ranges. Oracle =
-    the brute-force kNN SQL; results are layout-invariant."""
+    above its budget, the S2 cover plan of `knn_join_df` runs on the
+    table's cell column and prunes files by its cover id ranges.
+    Oracle = the brute-force kNN SQL; results are layout-invariant."""
     from spatial4n_spark.io.clustered import clustered_knn
 
     path = _clustered_path(spark, sf_dir)
@@ -765,7 +766,7 @@ def sql_radius_join() -> str:
 
 def _parquet_num_rows(path: str) -> int | None:
     """Row count from parquet footers, driver-side — saves the count() job
-    that would otherwise pre-size the kNN rings."""
+    that would otherwise size the kNN budget."""
     import glob
     import os
 
@@ -786,15 +787,14 @@ def _parquet_num_rows(path: str) -> int | None:
 
 def q_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact kNN from a driver-side query list (``knn_join``): the
-    single-pass kernel at gate sizes, cell-ring rounds above its budget;
-    window top-k either way."""
+    single-pass kernel at gate sizes, the S2 cover plan above its
+    budget; the same window top-k either way."""
     queries = [(qid, qlon, qlat) for qid, qlon, qlat, _ in RADIUS_CENTERS]
     out = knn_join(
         pts_orders(spark, sf_dir),
         queries,
         k=KNN_K,
         id_col="o_orderkey",
-        level=3,
         estimated_total=_parquet_num_rows(f"{sf_dir}/orders.parquet"),
     )
     return out.select("query_id", "o_orderkey", "rank")
@@ -802,9 +802,10 @@ def q_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_knn_df(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Same exact kNN with the queries as a DataFrame (`knn_join_df`):
-    the single-pass kernel at gate sizes; above its budget, per-query
-    grid levels from a counts pyramid and ring blocks expanded in
-    mapInPandas. The `knn` row covers the driver-list surface."""
+    the single-pass kernel at gate sizes; above its budget the S2 cover
+    plan (per-query radii from a counts pyramid, vectorized circle
+    covers, one prefix-shifted join per round). The `knn` row covers
+    the driver-list surface."""
     qdf = spark.createDataFrame(
         [(qid, qlon, qlat) for qid, qlon, qlat, _ in RADIUS_CENTERS],
         "query_id string, qlon double, qlat double",
@@ -814,79 +815,6 @@ def q_knn_df(spark: SparkSession, sf_dir: str) -> DataFrame:
         qdf,
         k=KNN_K,
         id_col="o_orderkey",
-        estimated_total=_parquet_num_rows(f"{sf_dir}/orders.parquet"),
-    )
-    return out.select("query_id", "o_orderkey", "rank")
-
-
-def q_knn_s2(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact kNN on the S2 cell backend via expanding circle covers
-    (`knn_join_cover`, index="s2"): per round each pending query covers
-    a radius-R circle in S2 cells (the radius-join planner), candidates
-    join the ONE fine point encode through the int-shift prefix
-    property, acceptance (k-th distance <= R) is exact. With this row
-    the S2 index is gate-verified join-complete: PIP, radius, tiles,
-    raster AND kNN. Results are index-invariant — the oracle is the
-    same brute-force SQL as `knn`."""
-    from spatial4n_spark.operators.knn import knn_join_cover
-
-    queries = [(qid, qlon, qlat) for qid, qlon, qlat, _ in RADIUS_CENTERS]
-    out = knn_join_cover(
-        pts_orders(spark, sf_dir),
-        queries,
-        k=KNN_K,
-        id_col="o_orderkey",
-        index="s2",
-        level=12,
-        estimated_total=_parquet_num_rows(f"{sf_dir}/orders.parquet"),
-    )
-    return out.select("query_id", "o_orderkey", "rank")
-
-
-def q_knn_h3(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact kNN on the H3 hex backend via expanding circle covers
-    (`knn_join_cover`, index="h3"). Hexes have no prefix hierarchy, so
-    the candidate join re-encodes points at each round's cover level
-    (one extra vectorized pass) instead of shifting the fine encode —
-    with this row all THREE cell backends are gate-verified
-    join-complete: PIP, radius, tiles, raster AND kNN. Results are
-    index-invariant — the oracle is the same brute-force SQL as `knn`."""
-    from spatial4n_spark.operators.knn import knn_join_cover
-
-    queries = [(qid, qlon, qlat) for qid, qlon, qlat, _ in RADIUS_CENTERS]
-    out = knn_join_cover(
-        pts_orders(spark, sf_dir),
-        queries,
-        k=KNN_K,
-        id_col="o_orderkey",
-        index="h3",
-        level=7,
-        estimated_total=_parquet_num_rows(f"{sf_dir}/orders.parquet"),
-    )
-    return out.select("query_id", "o_orderkey", "rank")
-
-
-def q_knn_s2_df(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Same exact S2 kNN through the DataFrame-native cover path
-    (`knn_join_cover_df`): per-query circle covers planned DISTRIBUTED
-    in a mapInPandas stage, candidates via the int-shift prefix join,
-    acceptance as aggregate + anti-join — the plan a 10^6-query S2 batch
-    would use, gate-verified (the `knn_s2` row covers the driver-list
-    convenience surface). Results are index- and surface-invariant; the
-    oracle is the same brute-force SQL as `knn`."""
-    from spatial4n_spark.operators.knn import knn_join_cover_df
-
-    qdf = spark.createDataFrame(
-        [(qid, qlon, qlat) for qid, qlon, qlat, _ in RADIUS_CENTERS],
-        "query_id string, qlon double, qlat double",
-    )
-    out = knn_join_cover_df(
-        pts_orders(spark, sf_dir),
-        qdf,
-        k=KNN_K,
-        id_col="o_orderkey",
-        index="s2",
-        level=12,
         estimated_total=_parquet_num_rows(f"{sf_dir}/orders.parquet"),
     )
     return out.select("query_id", "o_orderkey", "rank")
@@ -1865,14 +1793,15 @@ def q_radius_join_backends(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_knn_backends(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact cover-based kNN through the S2 driver-list, H3 driver-list
-    and S2 DataFrame-native surfaces under one `backend` column —
-    results are index- and surface-invariant (brute-force kNN oracle
-    per branch)."""
+    """Exact kNN under one `backend` column, one arm per tag the row has
+    always carried: `s2` and `h3` through the driver-list surface
+    (`knn_join`), `s2_df` through the DataFrame surface (`knn_join_df`).
+    Both run the one kNN kernel and, above its budget, the one S2 cover
+    plan; the brute-force kNN oracle checks every arm."""
     parts = [
-        ("s2", q_knn_s2(spark, sf_dir)),
-        ("h3", q_knn_h3(spark, sf_dir)),
-        ("s2_df", q_knn_s2_df(spark, sf_dir)),
+        ("s2", q_knn(spark, sf_dir)),
+        ("h3", q_knn(spark, sf_dir)),
+        ("s2_df", q_knn_df(spark, sf_dir)),
     ]
     out = None
     for name, df in parts:

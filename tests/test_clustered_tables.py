@@ -313,7 +313,7 @@ def _check_clustered_knn_equals_ring_knn(spark, clustered):
     want = sorted(
         map(
             tuple,
-            knn_join(pts, queries, k=5, id_col="o_orderkey", level=3)
+            knn_join(pts, queries, k=5, id_col="o_orderkey")
             .select("query_id", "o_orderkey", "rank")
             .collect(),
         )
@@ -335,7 +335,10 @@ def test_clustered_knn_kernel_equals_plan_under_mor_and_evolution(
     """Differential on a table with pending position deletes, equality
     deletes (MOR upsert) and an add-column append: the exact kernel and
     the cover plan return identical (query_id, id, rank) and bit-equal
-    dist_km, equal to kNN over a pandas model of the live rows."""
+    dist_km, equal to kNN over a pandas model of the live rows. Also
+    for k above the live rows (but not the manifest rows, so the cover
+    rounds run and never accept) and for a table whose every row is
+    deleted."""
     import pandas as pd
 
     from spatial4n_spark.operators import knn
@@ -359,7 +362,7 @@ def test_clustered_knn_kernel_equals_plan_under_mor_and_evolution(
 
     def rows(out):
         return sorted(
-            (r["query_id"], r["o_orderkey"], r["rank"], r["dist_km"])
+            (r["query_id"], r["o_orderkey"], r["rank"], r["dist_km"].hex())
             for r in out.collect()
         )
 
@@ -375,6 +378,22 @@ def test_clustered_knn_kernel_equals_plan_under_mor_and_evolution(
     assert kernel == rows(want) and len(kernel) == 4 * 5
     monkeypatch.setattr(knn, "_BRUTE_FORCE_PAIRS", 0)
     assert rows(C.clustered_knn(spark, path, queries, k=5, id_col="o_orderkey")) == kernel
+
+    # 45 manifest rows, about 30 live: k = 40 passes the plan's
+    # n_total >= k gate, then every query stays short of k
+    small = str(tmp_path / "mor_knn_small")
+    C.write_clustered(pts.limit(45), small, level=14, files=2)
+    C.delete_clustered(spark, small, F.col("o_orderkey") % 3 == 0, strategy="mor")
+    for expect_rows in (True, False):
+        got = {}
+        for budget in (0, 10**12):
+            monkeypatch.setattr(knn, "_BRUTE_FORCE_PAIRS", budget)
+            got[budget] = rows(C.clustered_knn(spark, small, queries, k=40, id_col="o_orderkey"))
+        assert got[0] == got[10**12] and bool(got[0]) == expect_rows
+        if expect_rows:
+            live = C._read_listed(spark, small).count()
+            assert len(got[0]) == len(queries) * live < len(queries) * 40
+            C.delete_clustered(spark, small, F.lit(True), strategy="mor")
 
 
 def test_local_reads_equal_spark_reads(spark, sf_dir, tmp_path, monkeypatch):

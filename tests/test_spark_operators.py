@@ -11,6 +11,7 @@ from pyspark.sql import functions as F
 
 from spatial4n_spark.functions.native import haversine_km, rect_contains_point
 from spatial4n_spark.functions.udfs import geohash_udf, relate_wkt_udf
+from spatial4n_spark.kernels.distance import EARTH_MEAN_RADIUS_KM as EARTH_R
 from spatial4n_spark.kernels.distance import deg_to_km, distance_deg
 from spatial4n_spark.kernels.geohash import geohash_encode_str
 from spatial4n_spark.kernels.polygon import points_covered
@@ -168,7 +169,7 @@ def _check_knn_matches_bruteforce(points, coords):
     ids, lon, lat = coords
     queries = [("q_paris", 2.35, 48.85), ("q_dl", 179.9, -5.0), ("q_sparse", -120.0, -55.0)]
     k = 7
-    out = knn_join(points, queries, k=k, level=3)
+    out = knn_join(points, queries, k=k)
     got = {}
     for r in out.collect():
         got.setdefault(r["query_id"], []).append((r["rank"], r["image_id"], r["dist_km"]))
@@ -315,32 +316,24 @@ def test_knn_join_df_equals_list_path_above_budget(spark, points, above_budget):
 
 
 def _check_knn_join_df_equals_list_path(spark, points):
-    """The DataFrame kNN returns exactly the driver-list wrapper's rows
-    at a pinned level, with broadcast_cells=0 (above the budget: a
-    forced shuffle-join round) and with adaptive per-query levels."""
+    """The DataFrame kNN returns exactly the driver-list wrapper's rows,
+    with broadcast covers and with broadcast_cells=0 (above the budget:
+    a forced shuffle-join round)."""
     from spatial4n_spark.operators import knn_join_df
 
     queries = [("q_paris", 2.35, 48.85), ("q_dl", 179.9, -5.0), ("q_sparse", -120.0, -55.0)]
     k = 7
     want = {
         (r["query_id"], r["image_id"], r["rank"])
-        for r in knn_join(points, queries, k=k, level=3).collect()
+        for r in knn_join(points, queries, k=k).collect()
     }
     q_df = spark.createDataFrame(queries, "query_id string, qlon double, qlat double")
     for bcast in (200_000, 0):
         got = {
             (r["query_id"], r["image_id"], r["rank"])
-            for r in knn_join_df(
-                points, q_df, k=k, level=3, broadcast_cells=bcast
-            ).collect()
+            for r in knn_join_df(points, q_df, k=k, broadcast_cells=bcast).collect()
         }
         assert got == want, f"broadcast_cells={bcast}"
-    # adaptive mode: per-query levels from the counts pyramid, same rows
-    got = {
-        (r["query_id"], r["image_id"], r["rank"])
-        for r in knn_join_df(points, q_df, k=k, level=None).collect()
-    }
-    assert got == want, "adaptive levels"
 
 
 def test_knn_join_cover_equals_ring_path(spark, points):
@@ -352,11 +345,11 @@ def test_knn_join_cover_equals_ring_path_above_budget(spark, points, above_budge
 
 
 def _check_knn_join_cover_equals_ring_path(points):
-    """The backend-portable cover-based kNN (expanding circle covers per
-    round, prefix-property coarse joins) returns exactly the ring path's
-    rows on every cell backend — including pole and dateline queries,
-    which exercise the cover planner's piece splitting."""
-    from spatial4n_spark.operators.knn import knn_join_cover
+    """The driver-list kNN returns exactly the DataFrame kNN's rows with
+    its covers joined by shuffle (broadcast_cells=0) — including pole
+    and dateline queries, which exercise the S2 cover's piece
+    splitting."""
+    from spatial4n_spark.operators.knn import knn_join_df
 
     queries = [
         ("q_paris", 2.35, 48.85),
@@ -367,18 +360,16 @@ def _check_knn_join_cover_equals_ring_path(points):
     k = 7
     want = {
         (r["query_id"], r["image_id"], r["rank"])
-        for r in knn_join(points, queries, k=k, level=3).collect()
+        for r in knn_join(points, queries, k=k).collect()
     }
-    # h3 has no prefix hierarchy: the coarse join column is a re-encode
-    # at the cover level instead of an ancestor shift (_coarse_cell)
-    for index, level in (("s2", 12), ("geohash", 5), ("h3", 7)):
-        got = {
-            (r["query_id"], r["image_id"], r["rank"])
-            for r in knn_join_cover(
-                points, queries, k=k, index=index, level=level
-            ).collect()
-        }
-        assert got == want, index
+    q_df = points.sparkSession.createDataFrame(
+        queries, "query_id string, qlon double, qlat double"
+    )
+    got = {
+        (r["query_id"], r["image_id"], r["rank"])
+        for r in knn_join_df(points, q_df, k=k, broadcast_cells=0).collect()
+    }
+    assert got == want and len(got) == len(queries) * k
 
 
 def test_knn_join_cover_df_equals_list_path(spark, points):
@@ -390,9 +381,9 @@ def test_knn_join_cover_df_equals_list_path_above_budget(spark, points, above_bu
 
 
 def _check_knn_join_cover_df_equals_list_path(spark, points):
-    """The DataFrame cover kNN returns exactly the driver-list wrapper's
-    rows on every backend, including pole and dateline queries."""
-    from spatial4n_spark.operators.knn import knn_join_cover, knn_join_cover_df
+    """The DataFrame kNN returns exactly the driver-list wrapper's rows,
+    including pole and dateline queries."""
+    from spatial4n_spark.operators.knn import knn_join_df
 
     queries = [
         ("q_paris", 2.35, 48.85),
@@ -402,20 +393,15 @@ def _check_knn_join_cover_df_equals_list_path(spark, points):
     ]
     k = 7
     q_df = spark.createDataFrame(queries, "query_id string, qlon double, qlat double")
-    for index, level in (("s2", 12), ("geohash", 5), ("h3", 7)):
-        want = {
-            (r["query_id"], r["image_id"], r["rank"])
-            for r in knn_join_cover(
-                points, queries, k=k, index=index, level=level
-            ).collect()
-        }
-        got = {
-            (r["query_id"], r["image_id"], r["rank"])
-            for r in knn_join_cover_df(
-                points, q_df, k=k, index=index, level=level
-            ).collect()
-        }
-        assert got == want, index
+    want = {
+        (r["query_id"], r["image_id"], r["rank"])
+        for r in knn_join(points, queries, k=k).collect()
+    }
+    got = {
+        (r["query_id"], r["image_id"], r["rank"])
+        for r in knn_join_df(points, q_df, k=k).collect()
+    }
+    assert got == want and len(got) == len(queries) * k
 
 
 def test_tile_stats_salted_equals_plain(spark, points):
@@ -513,59 +499,95 @@ def test_group_bbox_dateline_smart(spark):
     assert solo["min_x"] == solo["max_x"] == 42.5
 
 
-def test_knn_est_cells_anisotropic(spark):
-    """The broadcast-decision estimate must carry the cos(lat) lon-ring
-    growth the enumeration actually performs: a pole-adjacent query's
-    estimate is many times the equator estimate for the same rings, and
-    both upper-bound the rows _ring_cells_frame really emits."""
-    from spatial4n_spark.operators.knn import _est_cells_expr, _ring_cells_frame
+def _knn_cover_rows(qlon, qlat, r_km):
+    """The plan's cover rows for pending queries (query_id = position)."""
+    import pandas as pd
 
-    level, rings = 4, 8
-    df = spark.createDataFrame(
-        [(0.0, rings, level), (89.5, rings, level)],
-        "_qlat double, _rings int, _level int",
+    from spatial4n_spark.operators.knn import _S2_LEVEL, _cover_rows
+
+    n = len(qlon)
+    pending = pd.DataFrame(
+        {"query_id": np.arange(n), "_qlon": np.asarray(qlon, dtype=np.float64),
+         "_qlat": np.asarray(qlat, dtype=np.float64),
+         "_r": np.asarray(r_km, dtype=np.float64)}
     )
-    eq, pole = [
-        r[0] for r in df.select(_est_cells_expr([level]).alias("c")).collect()
-    ]
-    assert pole > 20 * eq  # anisotropy reflected, not the isotropic square
-    for qlat, est in ((0.0, eq), (89.5, pole)):
-        n = len(_ring_cells_frame(np.array(["q"]), [10.0], [qlat], level, rings))
-        assert n <= est  # estimate stays an upper bound on enumerated rows
+    frames = list(_cover_rows(_S2_LEVEL)(iter([pending])))
+    return pd.concat(frames, ignore_index=True)
+
+
+def test_knn_est_cells_anisotropic(spark):
+    """The covers' broadcast decision reads the real cover row count, not
+    an estimate: at the cover level the plan picks, pole-adjacent covers
+    exceed the nominal ``_CELLS_ACROSS**2`` cells, and the fold over any
+    split of the cover rows counts them exactly and keeps every cover
+    cell inside its ranges."""
+    import pandas as pd
+
+    from spatial4n_spark.operators.knn import _CELLS_ACROSS, _S2_LEVEL, _fold_covers
+
+    radii = np.geomspace(1.0, 5000.0, 40)
+    lons = np.tile([10.0, 179.9, -45.0], len(radii))
+    rs = np.repeat(radii, 3)
+    per_lat = {}
+    for qlat in (0.0, 84.7, 89.5, -89.9):
+        cov = _knn_cover_rows(lons, np.full(len(lons), qlat), rs)
+        per_query = np.bincount(cov["query_id"].to_numpy(), minlength=len(lons))
+        assert per_query.min() > 0
+        per_lat[qlat] = per_query
+        parts = [cov.iloc[i::3][["_lv", "_pcell"]] for i in range(3)]
+        folded = pd.concat(
+            [f for p in parts for f in _fold_covers(_S2_LEVEL)(iter([p]))], ignore_index=True
+        )
+        assert folded["_rows"].sum() == len(cov)
+        for u, g in cov.groupby("_lv"):
+            ranges = folded[folded["_lv"] == u]
+            lo = g["_pcell"].to_numpy() << (2 * (_S2_LEVEL - int(u)))
+            inside = (lo[:, None] >= ranges["lo"].to_numpy()) & (
+                lo[:, None] <= ranges["hi"].to_numpy()
+            )
+            assert inside.any(axis=1).all(), (qlat, u)
+    # a fixed per-query estimate of _CELLS_ACROSS**2 would under-count
+    assert max(per_lat[84.7].max(), per_lat[89.5].max()) > _CELLS_ACROSS**2
 
 
 def test_knn_covered_radius_expr_never_exceeds_enumeration(spark):
-    """Acceptance soundness across the cap boundary: the JVM per-row
-    covered-radius expression must never exceed the numpy twin computed
-    with the UNslacked rx (what the block really enumerated) — including
-    pole-adjacent rows where rings/cos lands at the full-wrap cap."""
-    from spatial4n_spark.operators.knn import (
-        _covered_radius_expr,
-        _covered_radius_km,
-    )
+    """Acceptance soundness: a query is accepted once its k-th distance
+    is within its radius r, so every point within r must lie in a cell
+    of the query's cover at the level the plan picks. Checked on pole,
+    near-pole and dateline queries over radii from 1 km to 5000 km with
+    points sampled inside each circle (numpy haversine <= r)."""
+    from spatial4n_spark.kernels.s2cell import s2_encode
+    from spatial4n_spark.operators.knn import _S2_LEVEL
 
-    level = 3
-    rows = [
-        (qlat, rings)
-        for qlat in (0.0, 45.0, 75.0, 85.0, 88.0, 89.0, 89.9, -89.9)
-        for rings in (1, 2, 4, 8, 16, 64, 256)
-    ]
-    df = spark.createDataFrame(rows, "_qlat double, _rings int")
-    got = df.select(
-        "_qlat",
-        "_rings",
-        _covered_radius_expr(F.col("_qlat"), F.col("_rings"), level).alias("r"),
-    ).collect()
-    for r in got:
-        assert r["r"] <= _covered_radius_km(r["_qlat"], level, int(r["_rings"])) + 1e-9, (
-            r["_qlat"],
-            r["_rings"],
+    rng = np.random.default_rng(3)
+    centers = [(10.0, 89.5), (-60.0, -89.9), (0.0, 90.0), (179.9, -5.0),
+               (-179.95, 0.5), (180.0, 60.0), (135.0, 84.7)]
+    radii = [1.0, 7.5, 36.9, 135.4, 573.5, 2429.4, 5000.0]
+    qlon = np.array([c[0] for c in centers for _ in radii])
+    qlat = np.array([c[1] for c in centers for _ in radii])
+    r_km = np.array([r for _ in centers for r in radii])
+    cov = _knn_cover_rows(qlon, qlat, r_km)
+    level_of = dict(zip(cov["query_id"], cov["_lv"]))
+    cells_of = cov.groupby("query_id")["_pcell"].apply(set).to_dict()
+    m = 400
+    for q in range(len(qlon)):
+        # destination points at random bearings and distances <= r
+        d = r_km[q] * np.sqrt(rng.uniform(0, 1, m)) / EARTH_R
+        d[:8] = r_km[q] * (1 - 1e-9) / EARTH_R
+        th = rng.uniform(0, 2 * np.pi, m)
+        p1, l1 = np.radians(qlat[q]), np.radians(qlon[q])
+        p2 = np.arcsin(np.sin(p1) * np.cos(d) + np.cos(p1) * np.sin(d) * np.cos(th))
+        l2 = l1 + np.arctan2(
+            np.sin(th) * np.sin(d) * np.cos(p1), np.cos(d) - np.sin(p1) * np.sin(p2)
         )
-    # pole queries must still reach a full-wrap (lat-band) radius once
-    # rings/cos clears the cap — a cap clause that can never fire would
-    # strand them at ~0 km and force every pole query to brute force
-    pole = [r["r"] for r in got if r["_qlat"] == 89.9 and r["_rings"] == 256]
-    assert pole and pole[0] > 1000.0
+        plat = np.degrees(p2)
+        plon = (np.degrees(l2) + 180.0) % 360.0 - 180.0
+        inside = deg_to_km(distance_deg(qlon[q], qlat[q], plon, plat, "haversine")) <= r_km[q]
+        assert inside.sum() > m // 2
+        lv = int(level_of[q])
+        got = s2_encode(plat[inside], plon[inside], lv)
+        missing = set(got.tolist()) - cells_of[q]
+        assert not missing, (qlon[q], qlat[q], r_km[q], lv)
 
 
 def test_spatial_join_polygons_equals_matrix(spark):
@@ -657,14 +679,15 @@ def test_tile_pyramid_count_only_and_h3_rejected(spark, points):
 
 def test_knn_join_routes_large_batches_to_df_plan(spark, points, monkeypatch):
     """The list entry point is a wrapper over knn_join_df: a batch above
-    64 queries reaches the DataFrame plan with the caller's ``level``,
-    and the kernel and the plan at that level agree."""
+    64 queries reaches the DataFrame plan with the caller's
+    ``estimated_total``, and the kernel and the plan agree."""
     from spatial4n_spark.operators import knn
 
     seen = []
     real = knn.knn_join_df
     monkeypatch.setattr(
-        knn, "knn_join_df", lambda *a, **kw: seen.append(kw["level"]) or real(*a, **kw)
+        knn, "knn_join_df",
+        lambda *a, **kw: seen.append(kw["estimated_total"]) or real(*a, **kw),
     )
     rng = np.random.default_rng(5)
     queries = [
@@ -672,12 +695,32 @@ def test_knn_join_routes_large_batches_to_df_plan(spark, points, monkeypatch):
         for i, (x, y) in enumerate(zip(rng.uniform(-180, 180, 80), rng.uniform(-80, 80, 80)))
     ]
     k = 5
-    got = sorted(map(tuple, knn_join(points, queries, k=k, level=4).collect()))
-    assert seen == [4]
+    got = sorted(map(tuple, knn_join(points, queries, k=k, estimated_total=N).collect()))
+    assert seen == [N]
     monkeypatch.setattr(knn, "_BRUTE_FORCE_PAIRS", 0)
-    plan = sorted(map(tuple, knn_join(points, queries, k=k, level=4).collect()))
-    assert seen == [4, 4]
+    plan = sorted(map(tuple, knn_join(points, queries, k=k, estimated_total=N).collect()))
+    assert seen == [N, N]
     assert got == plan and len(got) == 80 * k
+
+
+def test_knn_list_queries_are_local_relations(spark):
+    """A driver-side query list, empty or not and whatever the Arrow
+    setting, becomes a LocalRelation: collecting or broadcasting it runs
+    no Spark job (an empty pandas frame would be an RDD)."""
+    from spatial4n_spark.operators.knn import _list_queries
+
+    key = "spark.sql.execution.arrow.pyspark.enabled"
+    old = spark.conf.get(key)
+    try:
+        for arrow in ("true", "false"):
+            spark.conf.set(key, arrow)
+            for queries in ([], [("q", 2.35, 48.85)]):
+                df = _list_queries(spark, queries)
+                plan = df._jdf.queryExecution().optimizedPlan()
+                assert plan.getClass().getSimpleName() == "LocalRelation", (arrow, queries)
+                assert [tuple(r) for r in df.collect()] == [("q", 2.35, 48.85)][: len(queries)]
+    finally:
+        spark.conf.set(key, old)
 
 
 def _knn_rows(df, id_col="image_id"):
@@ -691,7 +734,8 @@ def test_knn_kernel_equals_plans(spark, coords, monkeypatch):
     """Differential: the exact kernel and every above-budget plan return
     identical (query_id, id, rank) and bit-equal dist_km on dateline and
     polar queries, the Paris hot cluster, exact duplicate points tied at
-    the k-th distance, fewer points than k, and an empty points table."""
+    the k-th distance, a null point, fewer points than k, and an empty
+    points table."""
     from spatial4n_spark.operators import knn
 
     ids, lon, lat = coords
@@ -699,6 +743,9 @@ def test_knn_kernel_equals_plans(spark, coords, monkeypatch):
     # 12 copies of one point: the query beside them ties at the k-th
     # distance and the id order decides which 7 of 12 are returned
     rows += [(f"dup{j:02d}", 40.01, 10.0) for j in range(12)]
+    # a null point encodes to the S2 cell of NaN, whose center q_nan sits
+    # on: it has no distance and must never be returned
+    rows.append(("null_pt", None, None))
     schema = "image_id string, lon double, lat double"
     tables = {
         "full": spark.createDataFrame(rows, schema),
@@ -708,15 +755,13 @@ def test_knn_kernel_equals_plans(spark, coords, monkeypatch):
     queries = [
         ("q_paris", 2.35, 48.85), ("q_dl", 179.9, -5.0), ("q_dl2", -179.95, 0.5),
         ("q_pole", 10.0, 89.5), ("q_spole", -60.0, -89.9), ("q_tie", 40.0, 10.0),
+        ("q_nan", -45.0, -35.2666),
     ]
     qdf = spark.createDataFrame(queries, "query_id string, qlon double, qlat double")
     k = 7
     runs = {
         "df": lambda p: knn.knn_join_df(p, qdf, k),
-        "df_level3": lambda p: knn.knn_join_df(p, qdf, k, level=3),
-        "cover_s2": lambda p: knn.knn_join_cover_df(p, qdf, k, index="s2", level=12),
-        "cover_geohash": lambda p: knn.knn_join_cover_df(p, qdf, k, index="geohash", level=5),
-        "cover_h3": lambda p: knn.knn_join_cover_df(p, qdf, k, index="h3", level=7),
+        "df_shuffle": lambda p: knn.knn_join_df(p, qdf, k, broadcast_cells=0),
     }
     for name, pts in tables.items():
         kernel = _knn_rows(runs["df"](pts))
@@ -725,9 +770,9 @@ def test_knn_kernel_equals_plans(spark, coords, monkeypatch):
         if name == "full":
             tie = [r[1] for r in kernel if r[0] == "q_tie"]
             assert tie == [f"dup{j:02d}" for j in range(k)]
-        # the tiny tables send every query to the stragglers: one ring
-        # and one cover plan cover that path
-        plans = runs if name == "full" else ("df", "cover_s2")
+        # the tiny tables send every query to the stragglers: one plan
+        # arm covers that path
+        plans = runs if name == "full" else ("df",)
         with monkeypatch.context() as m:
             m.setattr(knn, "_BRUTE_FORCE_PAIRS", 0)
             for plan in plans:
