@@ -78,6 +78,8 @@ _DFILE, _DPOS = "__s4n_file", "__s4n_pos"
 # the same CPU and 1.7x its wall time, holding the batch as Python
 # objects
 _LOCAL_READ_ROWS = 250_000
+# the default ``broadcast_cells`` of the clustered kNN surfaces
+_BROADCAST_CELLS = 200_000
 
 
 def lock_path(path: str, lockfile: str = LOCKFILE) -> str:
@@ -209,45 +211,58 @@ def _write_batch(
     The driver writes the batch (``_local_batch``, ``_write_local``)
     when its optimized plan is a ``LocalRelation`` of at most
     ``_LOCAL_READ_ROWS`` rows, e.g. a frame built from pandas: its rows
-    already live on the driver, so collecting them runs no Spark job.
-    Any other batch runs the Spark path:
+    already live on the driver, so collecting them runs no Spark job,
+    and its schema is derived (``_cell_schema``) without building the
+    cell UDF column. Any other batch runs the Spark path:
     ``repartitionByRange`` + ``sortWithinPartitions`` + a parquet
     append job, with the new files found by diffing the listing."""
-    be = cell_backend("s2")
-    out = df.withColumn(CELL_COL, be.udf(level)(F.col(lat), F.col(lon)))
+    tbl = _local_batch(df, level, lon, lat)
+    out = None
+    if tbl is None:
+        out = df.withColumn(CELL_COL, cell_backend("s2").udf(level)(F.col(lat), F.col(lon)))
     old_schema = _manifest_schema(man)
     schema_json = None
     if old_schema is not None:
-        merged, _ = _merge_schemas(old_schema, out.schema)
+        out_schema = _cell_schema(df.schema) if out is None else out.schema
+        merged, _ = _merge_schemas(old_schema, out_schema)
         schema_json = merged.json()
-    tbl = _local_batch(df, out.schema, level, lon, lat)
-    if tbl is None:
-        pre = set(_data_files(path))
-        (
-            out.repartitionByRange(files, F.col(CELL_COL))
-            .sortWithinPartitions(CELL_COL)
-            .write.mode("append")
-            .parquet(path)
-        )
-        names = [n for n in _data_files(path) if n not in pre]
-    else:
-        names = _write_local(tbl, path, files)
-    return _file_stats(path, names), schema_json, tbl
+    if out is None:
+        return _file_stats(path, _write_local(tbl, path, files)), schema_json, tbl
+    pre = set(_data_files(path))
+    (
+        out.repartitionByRange(files, F.col(CELL_COL))
+        .sortWithinPartitions(CELL_COL)
+        .write.mode("append")
+        .parquet(path)
+    )
+    return _file_stats(path, [n for n in _data_files(path) if n not in pre]), schema_json, None
 
 
-def _local_batch(df: DataFrame, out_schema, level: int, lon: str, lat: str):
-    """The batch as one Arrow table under ``out_schema`` (the batch's
-    columns plus the cell column, every field nullable), with the cell
-    ids encoded on the driver by the same ``s2_encode`` call the cell
-    UDF makes, NaN standing for a null coordinate as it does in the
-    UDF's pandas input. None, for the Spark path, unless the batch's
-    optimized plan is a ``LocalRelation`` (``Dataset.isLocal`` is false
-    for a projection of one, though collecting it runs no job either)
-    of at most ``_LOCAL_READ_ROWS`` rows whose columns are all flat
-    types Arrow holds exactly: numbers, strings, binary, booleans,
-    dates and timestamps. Timestamps are collected as epoch
-    microseconds (a collected ``Row`` holds them as naive local
-    times)."""
+def _cell_schema(schema):
+    """``schema`` as ``withColumn(CELL_COL, <cell UDF>)`` leaves it: the
+    nullable long cell column replaces a column of that name (matched
+    as Spark's default resolver matches, ignoring case) or comes
+    last. Deriving it here spares the driver writer the UDF column."""
+    from pyspark.sql.types import LongType, StructField, StructType
+
+    cell = StructField(CELL_COL, LongType(), True)
+    fields = [cell if f.name.lower() == CELL_COL else f for f in schema.fields]
+    return StructType(fields if cell in fields else [*fields, cell])
+
+
+def _local_batch(df: DataFrame, level: int, lon: str, lat: str):
+    """The batch as one Arrow table under its ``_cell_schema`` (every
+    field nullable), with the cell ids encoded on the driver by the
+    same ``s2_encode`` call the cell UDF makes, NaN standing for a null
+    coordinate as it does in the UDF's pandas input. None, for the
+    Spark path, unless the batch's optimized plan is a
+    ``LocalRelation`` (``Dataset.isLocal`` is false for a projection of
+    one, though collecting it runs no job either) of at most
+    ``_LOCAL_READ_ROWS`` rows whose columns are all flat types Arrow
+    holds exactly: numbers, strings, binary, booleans, dates and
+    timestamps. The rows are collected as they are, except that
+    timestamps are collected as epoch microseconds (a collected
+    ``Row`` holds them as naive local times)."""
     import numpy as np
     import pyarrow as pa
     import pyarrow.compute as pc
@@ -266,6 +281,7 @@ def _local_batch(df: DataFrame, out_schema, level: int, lon: str, lat: str):
         T.NumericType, T.StringType, T.BinaryType, T.BooleanType,
         T.DateType, T.TimestampType, T.TimestampNTZType,
     )
+    out_schema = _cell_schema(df.schema)
     fields = [f for f in out_schema.fields if f.name != CELL_COL]
     names = [f.name for f in fields]
     if (
@@ -280,12 +296,18 @@ def _local_batch(df: DataFrame, out_schema, level: int, lon: str, lat: str):
     schema = to_arrow_schema(
         T.StructType([T.StructField(f.name, f.dataType, True) for f in out_schema])
     )
+    # select only to drop a cell column the batch carries (re-encoded
+    # here) or to convert timestamps
+    if len(fields) < len(df.columns) or any(
+        isinstance(f.dataType, T.TimestampType) for f in fields
+    ):
 
-    def col(f):
-        c = F.col("`" + f.name.replace("`", "``") + "`")
-        return F.unix_micros(c) if isinstance(f.dataType, T.TimestampType) else c
+        def col(f):
+            c = F.col("`" + f.name.replace("`", "``") + "`")
+            return F.unix_micros(c) if isinstance(f.dataType, T.TimestampType) else c
 
-    rows = df.select(*[col(f) for f in fields]).collect()
+        df = df.select(*[col(f) for f in fields])
+    rows = df.collect()
     values = list(zip(*rows)) if rows else [()] * len(fields)
     arrays = {}
     for f, vals in zip(fields, values):
@@ -2416,10 +2438,19 @@ def clustered_radius_query(
     ``_LOCAL_READ_ROWS`` rows, the driver reads them
     (``_read_files_local``: the same read spec), keeps the rows in the
     cover's cell ranges within a slack of the radius (numpy haversine)
-    and hands them to Spark as a local relation; the Catalyst predicate
-    then runs on the driver, with no job, so rows and schema equal the
-    Spark scan's. Above the budget the kept files are one Spark scan
-    with the range disjunction pushed to the row groups."""
+    and hands them to Spark as a local relation with the centre and
+    radius appended as columns. The Catalyst predicate, one Column
+    reading those columns (``_probe_col``), then runs on the driver
+    with no job, and the schema's columns are kept without the cell
+    and parameter columns, so rows and schema equal the Spark scan's.
+    Every local probe sends the same plan: its generated predicate is
+    compiled once, not once per centre. Above the budget the kept
+    files are one Spark scan with the range disjunction pushed to the
+    row groups and the centre as literals."""
+    import numpy as np
+    import pyarrow as pa
+    from pyspark.sql.types import DoubleType, StructField, StructType
+
     from spatial4n_spark.kernels.distance import deg_to_km, distance_deg
     from spatial4n_spark.operators.knn import _SLACK_KM, _SLACK_REL
 
@@ -2434,14 +2465,45 @@ def clustered_radius_query(
             qlon, qlat,
         ))
         tbl = tbl.filter(d <= float(radius_km) * (1 + _SLACK_REL) + _SLACK_KM)
-        df = spark.createDataFrame(tbl, _read_schema(man))
-    else:
-        df = _scan_kept(spark, path, man, keep, ranges)
-    out = df.where(
+        schema = _read_schema(man)
+        params = ((_QLON, qlon), (_QLAT, qlat), (_QR, radius_km))
+        for name, v in params:
+            tbl = tbl.append_column(name, pa.array(np.full(tbl.num_rows, float(v))))
+        out = spark.createDataFrame(
+            tbl, StructType([*schema, *(StructField(n, DoubleType()) for n, _ in params)])
+        ).where(_probe_col(spark, lon, lat, _QLON, _QLAT, _QR))
+        out = out.drop(CELL_COL, *(n for n, _ in params))
+        return (out, stats) if with_stats else out
+    out = _scan_kept(spark, path, man, keep, ranges).where(
         haversine_km(F.col(lon), F.col(lat), F.lit(float(qlon)), F.lit(float(qlat)))
         <= F.lit(float(radius_km))
     ).drop(CELL_COL)
     return (out, stats) if with_stats else out
+
+
+# the driver-local probes' query columns: the radius probe appends the
+# centre and radius to its rows, the kNN kernel its candidates' centres
+_QLON, _QLAT, _QR = "__s4n_qlon", "__s4n_qlat", "__s4n_r"
+_PROBE_COLS: dict = {}
+
+
+def _probe_col(spark: SparkSession, lon: str, lat: str, qlon: str, qlat: str, r=None):
+    """The probes' Catalyst distance ``haversine_km(lon, lat, qlon,
+    qlat)`` as ``dist_km``, or with ``r`` the predicate ``dist_km <=
+    r``, every argument a column name. Built once per live
+    SparkContext and arguments: the centre travels as data, so every
+    probe sends the JVM one plan shape, whose generated predicate is
+    compiled once and then found in Spark's code cache (a literal
+    centre is inlined into the generated source, a new class per
+    centre), and no probe rebuilds the expression over py4j (about 250
+    gateway calls). A stopped and restarted session gets new Columns."""
+    key = (lon, lat, qlon, qlat, r)
+    jsc = spark.sparkContext._jsc
+    hit = _PROBE_COLS.get(key)
+    if hit is None or hit[0] is not jsc:
+        d = haversine_km(F.col(lon), F.col(lat), F.col(qlon), F.col(qlat))
+        hit = _PROBE_COLS[key] = (jsc, d.alias("dist_km") if r is None else d <= F.col(r))
+    return hit[1]
 
 
 def _manifest_schema(man: dict):
@@ -2724,7 +2786,7 @@ def clustered_knn_df(
     query_id: str = "query_id",
     qlon: str = "qlon",
     qlat: str = "qlat",
-    broadcast_cells: int = 200_000,
+    broadcast_cells: int = _BROADCAST_CELLS,
 ) -> DataFrame:
     """Exact kNN over a clustered table with the QUERY SET AS A
     DATAFRAME. Returns (query_id, <id_col>, dist_km, rank), ties on
@@ -2755,7 +2817,9 @@ def clustered_knn_df(
     if local:
         rows = _knn._collect_queries(q0, q_max)
         if rows is not None:
-            return _local_knn(spark, path, man, names, rows, q0.schema, k, id_col, lon, lat)
+            return _local_knn(
+                spark, path, man, names, rows, q0.schema["query_id"], k, id_col, lon, lat
+            )
     listed = _read_files(spark, path, man, names)
     if not local:
         out = _knn._exact_knn(listed, q0, k, lon, lat, id_col, q_max)
@@ -2769,15 +2833,18 @@ def clustered_knn_df(
 
 def _local_knn(
     spark: SparkSession, path: str, man: dict, names: list[str], rows: list,
-    qschema, k: int, id_col: str, lon: str, lat: str,
+    qid_field, k: int, id_col: str, lon: str, lat: str,
 ) -> DataFrame:
     """The exact kNN kernel on the driver: ``operators.knn._top_k_batches``
-    over the record batches of ``_read_files_local``; the candidates'
-    ``dist_km`` comes from the Catalyst ``haversine_km`` over a local
-    relation (folded on the driver, no job) and the rank by (dist_km,
-    <id_col>) per query_id is taken here in Spark's ascending order
-    (nulls first, NaN last). Ids, ranks and ``dist_km`` therefore equal
-    ``_rank_top_k``'s. Returns a local relation."""
+    over the record batches of ``_read_files_local`` for ``rows``, the
+    (query_id, qlon, qlat) tuples of the queries, whose query_id field
+    is ``qid_field``. The candidates' ``dist_km`` comes from the
+    Catalyst ``haversine_km`` over a local relation (folded on the
+    driver, no job), one Column built once (``_probe_col``) that reads
+    each candidate's centre from its ``_qlon``/``_qlat`` columns; the
+    rank by (dist_km, <id_col>) per query_id is taken here in Spark's
+    ascending order (nulls first, NaN last). Ids, ranks and ``dist_km``
+    therefore equal ``_rank_top_k``'s. Returns a local relation."""
     import numpy as np
     import pyarrow as pa
     from pyspark.sql.pandas.types import to_arrow_schema
@@ -2798,7 +2865,7 @@ def _local_knn(
     qi = cand["_qi"].to_numpy()
     dbl = DoubleType()
     schema = StructType([
-        qschema["query_id"], _read_schema(man)[id_col], StructField(lon, dbl),
+        qid_field, _read_schema(man)[id_col], StructField(lon, dbl),
         StructField(lat, dbl), StructField("_qlon", dbl), StructField("_qlat", dbl),
     ])
     arrow = pa.Table.from_arrays(
@@ -2809,8 +2876,7 @@ def _local_knn(
         schema=to_arrow_schema(schema),
     )
     scored = spark.createDataFrame(arrow, schema).select(
-        "query_id", id_col,
-        haversine_km(F.col(lon), F.col(lat), "_qlon", "_qlat").alias("dist_km"),
+        "query_id", id_col, _probe_col(spark, lon, lat, "_qlon", "_qlat")
     )
 
     def asc(v):  # Spark's ascending order: null first, NaN after every number
@@ -2844,11 +2910,24 @@ def clustered_knn(
     lat: str = "lat",
 ):
     """``clustered_knn_df`` for a driver-side [(query_id, lon, lat)]
-    list."""
-    from spatial4n_spark.operators.knn import _list_queries
+    list. Where ``clustered_knn_df`` would run the driver kernel (the
+    same ``_reads_locally`` and query-budget tests), the list goes to
+    ``_local_knn`` as it is, with no query frame built and collected
+    again; the answer, schema included, equals ``clustered_knn_df``'s."""
+    from spatial4n_spark.operators import knn as _knn
 
+    man = load_manifest(path)
+    rows = _knn._list_rows(queries)
+    n_total = sum(e["rows"] for e in man["files"])
+    if _reads_locally(man, man["files"]) and len(rows) <= _knn._query_budget(
+        n_total, _BROADCAST_CELLS
+    ):
+        return _local_knn(
+            spark, path, man, [e["file"] for e in man["files"]], rows,
+            _knn._LIST_SCHEMA["query_id"], k, id_col, lon, lat,
+        )
     return clustered_knn_df(
-        spark, path, _list_queries(spark, queries), k, id_col=id_col, lon=lon, lat=lat,
+        spark, path, _knn._list_queries(spark, queries), k, id_col=id_col, lon=lon, lat=lat,
     )
 
 

@@ -564,16 +564,21 @@ def knn_join_df(
     return out
 
 
+# a driver-side query list as rows: (str query_id, float qlon, float qlat)
+_LIST_SCHEMA = StructType(
+    [StructField("query_id", StringType()), StructField("qlon", DoubleType()),
+     StructField("qlat", DoubleType())]
+)
+
+
+def _list_rows(queries) -> list[tuple]:
+    """A driver-side [(query_id, qlon, qlat)] list as ``_LIST_SCHEMA`` rows."""
+    return [(str(q), float(a), float(b)) for q, a, b in queries]
+
+
 def _list_queries(spark, queries) -> DataFrame:
     """A driver-side [(query_id, qlon, qlat)] list as a query DataFrame."""
-    return _local_frame(
-        spark,
-        [(str(q), float(a), float(b)) for q, a, b in queries],
-        StructType(
-            [StructField("query_id", StringType()), StructField("qlon", DoubleType()),
-             StructField("qlat", DoubleType())]
-        ),
-    )
+    return _local_frame(spark, _list_rows(queries), _LIST_SCHEMA)
 
 
 def knn_join(

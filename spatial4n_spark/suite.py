@@ -800,12 +800,13 @@ def q_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out.select("query_id", "o_orderkey", "rank")
 
 
-def q_knn_df(spark: SparkSession, sf_dir: str) -> DataFrame:
+def q_knn_df(spark: SparkSession, sf_dir: str, broadcast_cells: int = 200_000) -> DataFrame:
     """Same exact kNN with the queries as a DataFrame (`knn_join_df`):
     the single-pass kernel at gate sizes; above its budget the S2 cover
     plan (per-query radii from a counts pyramid, vectorized circle
     covers, one prefix-shifted join per round). The `knn` row covers
-    the driver-list surface."""
+    the driver-list surface; `broadcast_cells` below the query count
+    forces the cover plan at any size."""
     qdf = spark.createDataFrame(
         [(qid, qlon, qlat) for qid, qlon, qlat, _ in RADIUS_CENTERS],
         "query_id string, qlon double, qlat double",
@@ -816,6 +817,7 @@ def q_knn_df(spark: SparkSession, sf_dir: str) -> DataFrame:
         k=KNN_K,
         id_col="o_orderkey",
         estimated_total=_parquet_num_rows(f"{sf_dir}/orders.parquet"),
+        broadcast_cells=broadcast_cells,
     )
     return out.select("query_id", "o_orderkey", "rank")
 
@@ -1794,13 +1796,15 @@ def q_radius_join_backends(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_knn_backends(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact kNN under one `backend` column, one arm per tag the row has
-    always carried: `s2` and `h3` through the driver-list surface
-    (`knn_join`), `s2_df` through the DataFrame surface (`knn_join_df`).
-    Both run the one kNN kernel and, above its budget, the one S2 cover
-    plan; the brute-force kNN oracle checks every arm."""
+    always carried: `s2` through the driver-list surface (`knn_join`),
+    `s2_df` through the DataFrame surface (`knn_join_df`), both the
+    one kNN kernel at gate sizes, and `h3` through the one above-budget
+    S2 cover plan, forced by a `broadcast_cells` below the query count,
+    so the gate checks the plan at every size; the brute-force kNN
+    oracle checks every arm."""
     parts = [
         ("s2", q_knn(spark, sf_dir)),
-        ("h3", q_knn(spark, sf_dir)),
+        ("h3", q_knn_df(spark, sf_dir, broadcast_cells=len(RADIUS_CENTERS) - 1)),
         ("s2_df", q_knn_df(spark, sf_dir)),
     ]
     out = None

@@ -160,6 +160,97 @@ def test_local_radius_plan_is_local_table_scan(spark, clustered):
     assert len(jobs) <= 1
 
 
+def test_local_probes_send_one_plan_shape(spark, clustered):
+    """The driver-local probes send the JVM one plan shape whatever the
+    centre: after one warm radius probe, radius probes at four centres
+    not seen before compile no new generated code, and a kNN request
+    from a driver list starts no Spark job before the caller collects."""
+    path, _ = clustered
+    sc = spark.sparkContext
+    compiled = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME()
+
+    def radius(qlon, qlat, r):
+        out = C.clustered_radius_query(spark, path, qlon, qlat, r)
+        assert out._jdf.queryExecution().executedPlan().toString().startswith(
+            "LocalTableScan"
+        )
+        return out.collect()
+
+    radius(2.3125, 48.875, 150.0)
+    n0 = compiled.getCount()
+    got = [
+        radius(*c)
+        for c in [(2.4375, 48.75, 120.0), (139.75, 35.625, 250.0),
+                  (179.875, -16.4375, 400.0), (10.5, 87.5, 600.0)]
+    ]
+    assert compiled.getCount() == n0 and sum(map(len, got)) > 0
+
+    sc.setJobGroup("local-knn-probe", "local knn probe")
+    try:
+        out = C.clustered_knn(spark, path, [("a", 2.0, 48.5), ("b", -73.0, 40.5)], 5,
+                              id_col="o_orderkey")
+        jobs = sc.statusTracker().getJobIdsForGroup("local-knn-probe")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert jobs == [] and out.count() == 10
+
+
+_RESTART = """
+import sys
+
+import numpy as np
+import pandas as pd
+from pyspark.sql import SparkSession
+
+from spatial4n_spark.io import clustered as C
+
+
+def session():
+    return (SparkSession.builder.master("local[1]")
+            .config("spark.sql.shuffle.partitions", "1")
+            .config("spark.ui.enabled", "false").getOrCreate())
+
+
+def probes(spark):
+    radius = C.clustered_radius_query(spark, path, 2.0, 48.0, 300.0)
+    knn = C.clustered_knn(spark, path, [("a", 2.0, 48.0)], 5, id_col="id")
+    return sorted(r.id for r in radius.collect()), sorted(map(tuple, knn.collect()))
+
+
+path = sys.argv[1]
+spark = session()
+rng = np.random.default_rng(3)
+pdf = pd.DataFrame({"id": np.arange(3000), "lon": rng.uniform(-10.0, 10.0, 3000),
+                    "lat": rng.uniform(40.0, 55.0, 3000)})
+C.write_clustered(spark.createDataFrame(pdf), path, level=14, files=2)
+before = probes(spark)
+spark.stop()
+spark = session()
+assert probes(spark) == before and before[0] and len(before[1]) == 5
+assert len(C._PROBE_COLS) == 2
+assert all(jsc is spark.sparkContext._jsc for jsc, _ in C._PROBE_COLS.values())
+spark.stop()
+print("restart ok")
+"""
+
+
+def test_probe_columns_rebuilt_after_session_restart(tmp_path):
+    """The probes' cached Columns belong to one SparkContext: after a
+    stop and a new session (in a child process, so the suite's session
+    lives on) the probes rebuild them and answer as before."""
+    import subprocess
+    import sys
+
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    env = {**os.environ, "PYTHONPATH": os.pathsep.join(
+        p for p in (root, os.environ.get("PYTHONPATH")) if p)}
+    res = subprocess.run(
+        [sys.executable, "-c", _RESTART, str(tmp_path / "t")],
+        capture_output=True, text=True, env=env, timeout=600,
+    )
+    assert res.returncode == 0 and "restart ok" in res.stdout, res.stderr[-3000:]
+
+
 def test_append_keeps_exactness_compaction_restores_locality(
     spark, sf_dir, tmp_path
 ):
@@ -455,8 +546,17 @@ def test_local_reads_equal_spark_reads(spark, sf_dir, tmp_path, monkeypatch):
     gap = max(zip(spans, spans[1:]), key=lambda p: p[1][0] - p[0][1])
     mid_lat, mid_lon = s2_decode_center((gap[0][1] + gap[1][0]) // 2, level)
     prune_all = (float(mid_lon), float(mid_lat), 1.0)
+    # a radius equal to the duplicate point's Catalyst distance: the
+    # boundary row is returned by both paths, one ulp less by neither
+    edge = float(
+        spark.range(1)
+        .select(haversine_km(F.lit(2.0), F.lit(48.5), F.lit(2.3125), F.lit(48.875)))
+        .first()[0]
+    )
     cases = [
         (2.0, 48.5, 2.0),  # hot: the duplicate point
+        (2.3125, 48.875, edge),
+        (2.3125, 48.875, float(np.nextafter(edge, 0.0))),
         (2.3125, 48.875, 150.0),  # Paris
         (139.8125, 35.6875, 100.0),  # cold
         (179.9375, -16.5, 400.0),  # dateline
@@ -475,6 +575,9 @@ def test_local_reads_equal_spark_reads(spark, sf_dir, tmp_path, monkeypatch):
             assert a.schema == b.schema and sa == sb, (snap, qlon, qlat)
             assert is_local(a) == (sa.files_kept > 0) and not is_local(b)
             assert sa.files_kept > 0 or (qlon, qlat, r) == prune_all
+            dup = a.where(F.col("o_orderkey").between(9 * 10**9, 9 * 10**9 + 11))
+            if (qlon, qlat) == (2.3125, 48.875) and r <= edge:
+                assert dup.count() > 0 if r == edge else dup.count() == 0, (snap, r)
             seen += len(rows(a))
     assert seen > 100
 
@@ -488,6 +591,15 @@ def test_local_reads_equal_spark_reads(spark, sf_dir, tmp_path, monkeypatch):
     queries.append(("tie", 2.0, 48.5))  # 9 live duplicates tie at k = 5
     a, b = both(lambda: C.clustered_knn(spark, path, queries, k=5, id_col="o_orderkey"))
     assert is_local(a) and knn_rows(a) == knn_rows(b) and len(knn_rows(a)) == 5 * 5
+    # the list shortcut (no query frame, no clustered_knn_df) against the
+    # DataFrame surface: the same schema, query_id type and nullability
+    # included, and bit-equal rows
+    qdf = spark.createDataFrame(queries, "query_id string, qlon double, qlat double")
+    df_out = C.clustered_knn_df(spark, path, qdf, k=5, id_col="o_orderkey")
+    with monkeypatch.context() as m:
+        m.setattr(C, "clustered_knn_df", None)
+        a = C.clustered_knn(spark, path, queries, k=5, id_col="o_orderkey")
+    assert a.schema == df_out.schema == b.schema and knn_rows(a) == knn_rows(df_out)
 
     # k above the live rows, then an empty table (every row deleted)
     small = str(tmp_path / "local_vs_spark_small")

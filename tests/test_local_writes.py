@@ -296,6 +296,25 @@ def test_local_writes_run_no_spark_job(spark, tmp_path, monkeypatch):
     assert C.load_manifest(path)["summary"]["n_rows"] == 3700
 
 
+def test_derived_cell_schema_equals_udf_schema(spark):
+    """The driver writer derives the written schema (``_cell_schema``)
+    instead of building the cell UDF column: for a pandas-built and a
+    list-built frame, with and without a column of the cell column's
+    name, it equals the schema ``withColumn`` gives."""
+    from spatial4n_spark.cellindex import cell_backend
+
+    udf = cell_backend("s2").udf(14)(F.col("lat"), F.col("lon"))
+    pdf = _pdf([1, None], [2.0, np.nan], [48.5, 3.0], name=["a", None], ts=_ts([0, 5]))
+    frames = [
+        spark.createDataFrame(pdf, SCHEMA),
+        spark.createDataFrame([(1, 2.0, 48.5, "a", None)], SCHEMA),
+        spark.createDataFrame([(1, 2.0, 48.5, 7)], "id long, lon double, lat double, cell_r int"),
+        spark.createDataFrame(pd.DataFrame({"CELL_R": ["x"], "lon": [1.0], "lat": [2.0]})),
+    ]
+    for df in frames:
+        assert C._cell_schema(df.schema) == df.withColumn(C.CELL_COL, udf).schema
+
+
 def test_local_write_crash_before_commit(spark, tmp_path, monkeypatch):
     """A driver-written MOR upsert that dies after its data and
     equality-delete files land, before the manifest commit: every
