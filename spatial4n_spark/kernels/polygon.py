@@ -235,12 +235,6 @@ def _lon_width(min_x, max_x):
     return w + 360.0 if w < 0 else w
 
 
-def _lon_center(min_x, max_x):
-    from spatial4n_spark.kernels.norm import norm_lon_deg
-
-    return float(norm_lon_deg(min_x + _lon_width(min_x, max_x) / 2.0))
-
-
 def _lon_contains(min_x, max_x, v):
     if min_x <= max_x:
         return min_x <= v <= max_x

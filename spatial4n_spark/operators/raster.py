@@ -2,10 +2,18 @@
 cell-aligned chipping, per-cell mosaic aggregation (SURVEY.md §2.9).
 
 Everything runs through ``mapInArrow`` — whole Arrow batches in, numpy
-per-image kernels inside, Arrow batches out; no per-row Python UDF calls
-(BASELINE.json input_hint). Per-batch memory is bounded by chunking
-(SURVEY.md §4.2 spill-aware requirement): decode never materializes more
-than ``chunk_rows`` images at once.
+kernels over same-size image stacks inside, Arrow batches out; no
+per-row Python UDF calls (BASELINE.json input_hint). Per-batch memory is
+bounded by chunking (SURVEY.md §4.2 spill-aware requirement): decode
+never materializes more than ``CHUNK_ROWS`` images at once.
+
+One chunk kernel serves every surface. ``_chip_chunk`` decodes a chunk
+once, runs the gate once, and chips every size group the same way
+(zero-pad to a multiple of ``chip_px``, reshape, int64 sums); it returns
+each chip's source row, so ``tile_images``, ``tile_images_multi`` and
+the streaming twin (streaming.image_stream) read the image id, cells and
+timestamps with one Arrow ``take``. ``decode_check`` runs the same
+decode and gate without chipping.
 
 Correctness gates (input_hint):
 - decoded-pixel invariant: PSNR vs the reference pixels >= 40 dB for the
@@ -22,13 +30,14 @@ from typing import Iterator
 
 import numpy as np
 import pyarrow as pa
+import pyarrow.compute as pc
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, functions as F
 
-from spatial4n_spark.kernels.geohash import geohash_encode_str
 from spatial4n_spark.sources.images import decode_image_batch
 
 PSNR_CAP_DB = 999.0  # reported PSNR for exact (mse=0) reconstructions
+CHUNK_ROWS = 4096  # images decoded at once per Arrow batch slice
 
 
 def _psnr_db(a: np.ndarray, b: np.ndarray) -> float:
@@ -48,15 +57,15 @@ def _reference_pixels(image_id: str, w: int, h: int) -> np.ndarray:
     return (pix & np.uint64(0xFF)).astype(np.uint8).reshape(h, w, 3)
 
 
-def _reference_pixels_batch(ids: list[str], w: int, h: int) -> np.ndarray:
-    """Vectorized reference pixels for k same-size images -> (k, h, w, 3)."""
+def _reference_pixels_batch(nums: np.ndarray, w: int, h: int) -> np.ndarray:
+    """Vectorized reference pixels for k same-size images (uint64 image
+    numbers) -> (k, h, w, 3)."""
     from spatial4n_spark.sources.images import _mix64
 
-    nums = np.array([int(s[3:]) for s in ids], dtype=np.uint64)
     npix = w * h * 3
     idx = nums[:, None] * np.uint64(0x1F123) + np.arange(npix, dtype=np.uint64)[None, :]
     pix = _mix64(idx)
-    return (pix & np.uint64(0xFF)).astype(np.uint8).reshape(len(ids), h, w, 3)
+    return (pix & np.uint64(0xFF)).astype(np.uint8).reshape(len(nums), h, w, 3)
 
 
 def _psnr_batch(imgs: np.ndarray, refs: np.ndarray) -> np.ndarray:
@@ -70,6 +79,61 @@ def _psnr_batch(imgs: np.ndarray, refs: np.ndarray) -> np.ndarray:
     return out
 
 
+def _chunks(it: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+    for batch in it:
+        for s in range(0, batch.num_rows, CHUNK_ROWS):
+            yield batch.slice(s, CHUNK_ROWS)
+
+
+def _cells(chunk: pa.RecordBatch, index: str, level: int) -> pa.Array:
+    """One cell per row of ``chunk`` (string geohash, int64 s2/h3)."""
+    from spatial4n_spark.cellindex import cell_backend
+
+    backend = cell_backend(index)
+    lat, lon = chunk.column("lat").to_numpy(), chunk.column("lon").to_numpy()
+    return pa.array(backend.kernel(lat, lon, level), backend.arrow_type())
+
+
+def _size_groups(chunk: pa.RecordBatch) -> list[tuple[np.ndarray, np.ndarray]]:
+    """Decode one chunk -> [(rows, (k, h, w, 3) uint8 stack)], one entry
+    per distinct image size, rows ascending within each group."""
+    w = chunk.column("w").to_numpy()
+    h = chunk.column("h").to_numpy()
+    decoded = decode_image_batch(
+        chunk.column("bytes").to_pylist(), w, h, chunk.column("fmt").to_pylist()
+    )
+    groups = []
+    for gw, gh in np.unique(np.stack([w, h], axis=1), axis=0):
+        sel = np.flatnonzero((w == gw) & (h == gh))
+        groups.append((sel, np.stack([decoded[k] for k in sel])))
+    return groups
+
+
+def _gate(
+    chunk: pa.RecordBatch, groups: list[tuple[np.ndarray, np.ndarray]]
+) -> tuple[np.ndarray, np.ndarray]:
+    """Per-row PSNR against the reference pixels and byte-exact caption
+    equality for one decoded chunk."""
+    nums = pc.cast(pc.utf8_slice_codeunits(chunk.column("image_id"), 3), pa.uint64())
+    nums_np = nums.to_numpy()
+    psnr = np.empty(chunk.num_rows, dtype=np.float64)
+    for sel, imgs in groups:
+        _, gh, gw, _ = imgs.shape
+        psnr[sel] = _psnr_batch(imgs, _reference_pixels_batch(nums_np[sel], gw, gh))
+    # "%.4f" is float.__format__(".4f"), the generator's f-string format
+    expect = pc.binary_join_element_wise(
+        "caption for img",
+        pc.cast(nums, pa.string()),
+        " at ",
+        pa.array(np.char.mod("%.4f", chunk.column("lat").to_numpy())),
+        ",",
+        pa.array(np.char.mod("%.4f", chunk.column("lon").to_numpy())),
+        "",
+    )
+    cap_ok = pc.equal(chunk.column("caption"), expect).fill_null(False)
+    return psnr, cap_ok.to_numpy(zero_copy_only=False)
+
+
 DECODE_CHECK_SCHEMA = (
     "image_id string, fmt string, cell string, psnr_db double, "
     "caption_ok boolean, mean_px double"
@@ -78,43 +142,17 @@ DECODE_CHECK_SCHEMA = (
 
 def _check_chunk(chunk: pa.RecordBatch, level: int) -> pa.RecordBatch:
     """Decode + PSNR/caption gate of one Arrow chunk -> result batch."""
-    ids = chunk.column("image_id").to_pylist()
-    bufs = chunk.column("bytes").to_pylist()
-    w = chunk.column("w").to_numpy()
-    h = chunk.column("h").to_numpy()
-    fmts = chunk.column("fmt").to_pylist()
-    caps = chunk.column("caption").to_pylist()
-    lon = chunk.column("lon").to_numpy()
-    lat = chunk.column("lat").to_numpy()
-
-    decoded = decode_image_batch(bufs, w, h, fmts)
-    cells = geohash_encode_str(lat, lon, level)
-    psnr = np.empty(len(ids), dtype=np.float64)
-    mean_px = np.empty(len(ids), dtype=np.float64)
-    # vectorize per size group: stacked (k,h,w,3) reference
-    # regen + PSNR — integer sums keep it bit-equal to the
-    # per-image path while amortizing per-image Python cost
-    sizes = np.stack([w, h], axis=1)
-    for wh in np.unique(sizes, axis=0):
-        sel = np.where((w == wh[0]) & (h == wh[1]))[0]
-        imgs = np.stack([decoded[k] for k in sel])
-        refs = _reference_pixels_batch(
-            [ids[k] for k in sel], int(wh[0]), int(wh[1])
-        )
-        psnr[sel] = _psnr_batch(imgs, refs)
-        mean_px[sel] = imgs.astype(np.float64).mean(axis=(1, 2, 3))
-    cap_ok = np.array(
-        [
-            caps[k] == f"caption for img{int(ids[k][3:])} at {lat[k]:.4f},{lon[k]:.4f}"
-            for k in range(len(ids))
-        ],
-        dtype=bool,
-    )
+    groups = _size_groups(chunk)
+    psnr, cap_ok = _gate(chunk, groups)
+    # exact integer sum / pixel count: bit-equal to a float64 mean
+    mean_px = np.empty(chunk.num_rows, dtype=np.float64)
+    for sel, imgs in groups:
+        mean_px[sel] = imgs.sum(axis=(1, 2, 3), dtype=np.int64) / imgs[0].size
     return pa.RecordBatch.from_arrays(
         [
-            pa.array(ids, pa.string()),
-            pa.array(fmts, pa.string()),
-            pa.array(cells, pa.string()),
+            chunk.column("image_id"),
+            chunk.column("fmt"),
+            _cells(chunk, "geohash", level),
             pa.array(psnr, pa.float64()),
             pa.array(cap_ok, pa.bool_()),
             pa.array(mean_px, pa.float64()),
@@ -123,7 +161,7 @@ def _check_chunk(chunk: pa.RecordBatch, level: int) -> pa.RecordBatch:
     )
 
 
-def decode_check(images: DataFrame, level: int = 4, chunk_rows: int = 4096) -> DataFrame:
+def decode_check(images: DataFrame, level: int = 4) -> DataFrame:
     """Decode every image, verify PSNR + caption invariants, assign a cell.
 
     Returns one row per image with the gate results — the validation stage
@@ -131,43 +169,71 @@ def decode_check(images: DataFrame, level: int = 4, chunk_rows: int = 4096) -> D
     """
 
     def run(it: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        for batch in it:
-            for s in range(0, batch.num_rows, chunk_rows):
-                yield _check_chunk(batch.slice(s, chunk_rows), level)
+        for chunk in _chunks(it):
+            yield _check_chunk(chunk, level)
 
     return images.mapInArrow(run, DECODE_CHECK_SCHEMA)
 
 
-def generate_decode_check(
-    spark,
-    n_rows: int,
-    level: int = 4,
-    partitions: int | None = None,
-    chunk_rows: int = 2048,
-) -> DataFrame:
-    """Fused source -> decode -> gate: ONE Python stage over spark.range.
+_CHIP_NAMES = ["chip_row", "chip_col", "chip_w", "chip_h", "chip_sum", "chip_mean"]
 
-    The separate-source form (images_df |> decode_check) ships every image
-    payload Python -> JVM -> Python; a production scan -> decode pipeline
-    crosses the Arrow boundary once, and this fused stand-in matches it —
-    bytes are generated, decoded, and gated inside the same worker, and
-    only the per-image summary leaves the stage."""
-    from spatial4n_spark.sources.images import _gen_batch
 
-    rng = spark.range(0, n_rows, 1, partitions) if partitions else spark.range(n_rows)
+def _chip_chunk(
+    chunk: pa.RecordBatch, chip_px: int, min_psnr_db: float | None
+) -> tuple[pa.Array, list[pa.Array]]:
+    """Decode + optional gate + chip of one Arrow chunk.
 
-    def run(it: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        for batch in it:
-            ids = batch.column(0).to_numpy()
-            for s in range(0, len(ids), chunk_rows):
-                yield _check_chunk(_gen_batch(ids[s : s + chunk_rows], True), level)
-
-    return rng.mapInArrow(run, DECODE_CHECK_SCHEMA)
+    Returns each chip's source row in ``chunk`` and the chip columns
+    (``_CHIP_NAMES`` order). Chips are row-major per image; edge chips
+    of sizes ``chip_px`` does not divide are smaller, and the zero
+    padding that makes the reshape possible adds nothing to their sums.
+    ``chip_mean`` is the exact integer sum over the chip's pixel count,
+    bit-equal to a float64 mean of its pixels.
+    """
+    groups = _size_groups(chunk)
+    if min_psnr_db is not None:
+        psnr, cap_ok = _gate(chunk, groups)
+        keep = (psnr >= min_psnr_db) & cap_ok
+        groups = [(sel[keep[sel]], imgs[keep[sel]]) for sel, imgs in groups]
+    # per size group: (src, row, col, w, h, sum), one entry per chip
+    pieces = [(np.empty(0, np.int64),) * 6]
+    for sel, imgs in groups:
+        k, gh, gw, _ = imgs.shape
+        if k == 0:
+            continue
+        nr, nc = -(-gh // chip_px), -(-gw // chip_px)
+        if (nr * chip_px, nc * chip_px) != (gh, gw):
+            imgs = np.pad(
+                imgs, ((0, 0), (0, nr * chip_px - gh), (0, nc * chip_px - gw), (0, 0))
+            )
+        # exact integer pixel sums: the mosaic aggregate downstream is
+        # order-independent, so results are bit-stable under any shuffle
+        sums = imgs.reshape(k, nr, chip_px, nc, chip_px, 3).sum(
+            axis=(2, 4, 5), dtype=np.int64
+        )
+        rows, cols = np.arange(nr), np.arange(nc)
+        pieces.append((
+            np.repeat(sel, nr * nc),
+            np.tile(np.repeat(rows, nc), k),
+            np.tile(cols, nr * k),
+            np.tile(np.minimum(chip_px, gw - cols * chip_px), nr * k),
+            np.tile(np.repeat(np.minimum(chip_px, gh - rows * chip_px), nc), k),
+            sums.reshape(-1),
+        ))
+    src, row, col, cw, ch, csum = (np.concatenate(p) for p in zip(*pieces))
+    return pa.array(src), [
+        pa.array(row, pa.int32()),
+        pa.array(col, pa.int32()),
+        pa.array(cw, pa.int32()),
+        pa.array(ch, pa.int32()),
+        pa.array(csum, pa.int64()),
+        pa.array(csum / (cw * ch * 3), pa.float64()),
+    ]
 
 
 CHIPS_SCHEMA = (
     "image_id string, cell string, chip_row int, chip_col int, "
-    "chip_w int, chip_h int, chip_sum long, chip_mean double, chip binary"
+    "chip_w int, chip_h int, chip_sum long, chip_mean double"
 )
 # s2/h3 backends: int64 cells instead of geohash strings
 CHIPS_SCHEMA_S2 = CHIPS_SCHEMA.replace("cell string", "cell long")
@@ -177,21 +243,31 @@ def _chips_schema(index: str) -> str:
     return CHIPS_SCHEMA if index == "geohash" else CHIPS_SCHEMA_S2
 
 
+def _tile_chunk(
+    chunk: pa.RecordBatch,
+    level: int,
+    chip_px: int,
+    min_psnr_db: float | None,
+    index: str = "geohash",
+) -> tuple[pa.RecordBatch, pa.Array]:
+    """One chunk -> (chips batch in ``CHIPS_SCHEMA`` layout, source rows)."""
+    src, chips = _chip_chunk(chunk, chip_px, min_psnr_db)
+    head = [chunk.column("image_id").take(src), _cells(chunk, index, level).take(src)]
+    return pa.RecordBatch.from_arrays(head + chips, ["image_id", "cell"] + _CHIP_NAMES), src
+
+
 def tile_images(
     images: DataFrame,
     level: int = 4,
     chip_px: int = 8,
-    with_chip_bytes: bool = False,
-    chunk_rows: int = 4096,
     min_psnr_db: float | None = None,
     index: str = "geohash",
 ) -> DataFrame:
     """Chip each decoded image into ``chip_px`` x ``chip_px`` raster chips,
     each tagged with the image's cell — the raster->vector tiling stage.
 
-    Chip payload bytes are optional (with_chip_bytes): the aggregate-only
-    path never moves pixel data through the shuffle, which is the plan you
-    want at 10^12 images (chips are written columnar per cell instead).
+    Only per-chip aggregates leave the stage: pixel data never moves
+    through the shuffle, which is the plan you want at 10^12 images.
 
     ``min_psnr_db`` fuses the decode gate (PSNR + caption) into this same
     pass: each image is decoded once and gated before chipping — no
@@ -200,168 +276,10 @@ def tile_images(
     """
 
     def run(it: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        for batch in it:
-            for s in range(0, batch.num_rows, chunk_rows):
-                yield _tile_chunk(
-                    batch.slice(s, chunk_rows), level, chip_px, with_chip_bytes,
-                    min_psnr_db, index,
-                )
+        for chunk in _chunks(it):
+            yield _tile_chunk(chunk, level, chip_px, min_psnr_db, index)[0]
 
     return images.mapInArrow(run, _chips_schema(index))
-
-
-def _tile_chunk(
-    chunk: pa.RecordBatch,
-    level: int,
-    chip_px: int,
-    with_chip_bytes: bool,
-    min_psnr_db: float | None,
-    index: str = "geohash",
-) -> pa.RecordBatch:
-    """Decode + optional gate + chip of one Arrow chunk -> chips batch.
-
-    Column construction never boxes per-chip Python objects: repeated
-    string columns (image_id, geohash cell) come from Arrow ``take`` on
-    the per-IMAGE array, numeric columns are numpy arrays handed to
-    Arrow zero-copy — at 16 chips/image the chip batch is 16x the image
-    batch, so list-of-PyObject assembly here was the stage's hidden
-    serial cost (measured ~5x on the construction step)."""
-    ids_arr = chunk.column("image_id")
-    # the per-image python str list is only read by the PSNR/caption gate
-    # and the odd-size fallback — the benchmarked fast path never pays it
-    _ids_list: list | None = None
-
-    def ids():
-        nonlocal _ids_list
-        if _ids_list is None:
-            _ids_list = ids_arr.to_pylist()
-        return _ids_list
-
-    bufs = chunk.column("bytes").to_pylist()
-    w = chunk.column("w").to_numpy()
-    h = chunk.column("h").to_numpy()
-    fmts = chunk.column("fmt").to_pylist()
-    lon = chunk.column("lon").to_numpy()
-    lat = chunk.column("lat").to_numpy()
-
-    from spatial4n_spark.cellindex import cell_backend
-
-    decoded = decode_image_batch(bufs, w, h, fmts)
-    backend = cell_backend(index)
-    cells = backend.kernel(lat, lon, level)
-    cell_type = backend.arrow_type()
-    cells_arr = pa.array(cells, cell_type)
-
-    # fast-path per-group Arrow columns (concatenated once at the end)
-    fast_cols: dict[str, list] = {k: [] for k in (
-        "image_id", "cell", "chip_row", "chip_col",
-        "chip_w", "chip_h", "chip_sum", "chip_mean", "chip",
-    )}
-
-    # slow-path collectors (odd sizes / chip-bytes materialization)
-    out_id, out_cell, out_r, out_c = [], [], [], []
-    out_w, out_h, out_sum, out_mean, out_bytes = [], [], [], [], []
-
-    def emit_loop(k: int):
-        """Per-image fallback (sizes not divisible by chip_px,
-        or chip-bytes materialization)."""
-        iid, cell, img = ids()[k], cells[k], decoded[k]
-        hh, ww = img.shape[0], img.shape[1]
-        for r0 in range(0, hh, chip_px):
-            for c0 in range(0, ww, chip_px):
-                chip = img[r0 : r0 + chip_px, c0 : c0 + chip_px]
-                out_id.append(iid)
-                out_cell.append(cell)
-                out_r.append(r0 // chip_px)
-                out_c.append(c0 // chip_px)
-                out_w.append(chip.shape[1])
-                out_h.append(chip.shape[0])
-                out_sum.append(int(chip.astype(np.int64).sum()))
-                out_mean.append(float(chip.mean()))
-                out_bytes.append(chip.tobytes() if with_chip_bytes else b"")
-
-    keep = np.ones(len(ids_arr), dtype=bool)
-    sizes = np.stack([w, h], axis=1)
-    groups = {}
-    for wh in np.unique(sizes, axis=0):
-        groups[tuple(wh)] = np.where((w == wh[0]) & (h == wh[1]))[0]
-
-    if min_psnr_db is not None:
-        caps = chunk.column("caption").to_pylist()
-        for (gw, gh), sel in groups.items():
-            imgs = np.stack([decoded[k] for k in sel])
-            refs = _reference_pixels_batch([ids()[k] for k in sel], int(gw), int(gh))
-            keep[sel] = _psnr_batch(imgs, refs) >= min_psnr_db
-        for k in range(len(ids())):
-            if keep[k]:
-                expect = (
-                    f"caption for img{int(ids()[k][3:])} at {lat[k]:.4f},{lon[k]:.4f}"
-                )
-                keep[k] = caps[k] == expect
-
-    for (gw, gh), sel in groups.items():
-        sel = sel[keep[sel]]
-        if len(sel) == 0:
-            continue
-        if gw % chip_px or gh % chip_px or with_chip_bytes:
-            for k in sel:
-                emit_loop(int(k))
-            continue
-        # fully-divisible fast path: (k,h,w,3) -> chip grid means
-        nr, nc = int(gh) // chip_px, int(gw) // chip_px
-        imgs = np.stack([decoded[k] for k in sel])
-        grid = imgs.reshape(len(sel), nr, chip_px, nc, chip_px, 3)
-        # exact integer pixel sums: the mosaic aggregate downstream
-        # is order-independent (integer partial sums), so results
-        # are bit-stable under any shuffle/partitioning
-        sums = grid.astype(np.int64).sum(axis=(2, 4, 5))  # (k, nr, nc)
-        means = grid.astype(np.float64).mean(axis=(2, 4, 5))  # (k, nr, nc)
-        n_chips = nr * nc
-        total = n_chips * len(sel)
-        rep_idx = pa.array(np.repeat(sel.astype(np.int64), n_chips))
-        fast_cols["image_id"].append(ids_arr.take(rep_idx))
-        fast_cols["cell"].append(cells_arr.take(rep_idx))
-        fast_cols["chip_row"].append(
-            pa.array(np.tile(np.repeat(np.arange(nr, dtype=np.int32), nc), len(sel)))
-        )
-        fast_cols["chip_col"].append(
-            pa.array(np.tile(np.tile(np.arange(nc, dtype=np.int32), nr), len(sel)))
-        )
-        fast_cols["chip_w"].append(pa.array(np.full(total, chip_px, dtype=np.int32)))
-        fast_cols["chip_h"].append(pa.array(np.full(total, chip_px, dtype=np.int32)))
-        fast_cols["chip_sum"].append(pa.array(sums.reshape(-1)))
-        fast_cols["chip_mean"].append(pa.array(means.reshape(-1)))
-        fast_cols["chip"].append(pa.array(np.zeros(total, dtype="S1"), pa.binary()))
-
-    if out_id:  # fold the slow-path rows in as one more Arrow chunk
-        fast_cols["image_id"].append(pa.array(out_id, pa.string()))
-        fast_cols["cell"].append(pa.array(out_cell, cell_type))
-        fast_cols["chip_row"].append(pa.array(out_r, pa.int32()))
-        fast_cols["chip_col"].append(pa.array(out_c, pa.int32()))
-        fast_cols["chip_w"].append(pa.array(out_w, pa.int32()))
-        fast_cols["chip_h"].append(pa.array(out_h, pa.int32()))
-        fast_cols["chip_sum"].append(pa.array(out_sum, pa.int64()))
-        fast_cols["chip_mean"].append(pa.array(out_mean, pa.float64()))
-        fast_cols["chip"].append(pa.array(out_bytes, pa.binary()))
-
-    names = [
-        "image_id", "cell", "chip_row", "chip_col",
-        "chip_w", "chip_h", "chip_sum", "chip_mean", "chip",
-    ]
-    empty_types = {
-        "image_id": pa.string(), "cell": cell_type,
-        "chip_row": pa.int32(), "chip_col": pa.int32(),
-        "chip_w": pa.int32(), "chip_h": pa.int32(),
-        "chip_sum": pa.int64(), "chip_mean": pa.float64(), "chip": pa.binary(),
-    }
-    return pa.RecordBatch.from_arrays(
-        [
-            pa.concat_arrays(fast_cols[n]) if fast_cols[n]
-            else pa.array([], empty_types[n])
-            for n in names
-        ],
-        names=names,
-    )
 
 
 CHIPS_SCHEMA_MULTI = (
@@ -375,7 +293,6 @@ def tile_images_multi(
     backends: list[tuple[str, int]],
     chip_px: int = 8,
     min_psnr_db: float | None = None,
-    chunk_rows: int = 4096,
 ) -> DataFrame:
     """Chip each decoded image ONCE and tag every chip with EVERY cell
     backend's id (cast to string) under a ``backend`` column — the
@@ -385,140 +302,54 @@ def tile_images_multi(
     cell-encode over per-IMAGE coordinates plus a duplicated aggregate
     row. Running the three backends through tile_images separately costs
     three full decode passes of the same 10^12-image table; this costs
-    one.
+    one. int64 cells become decimal strings — identical to SQL
+    CAST(cell AS VARCHAR), so the per-backend oracles keep matching.
     """
+    names = [b for b, _ in backends]
 
     def run(it: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        for batch in it:
-            for s in range(0, batch.num_rows, chunk_rows):
-                yield _tile_chunk_multi(
-                    batch.slice(s, chunk_rows), backends, chip_px, min_psnr_db
-                )
+        for chunk in _chunks(it):
+            src, chips = _chip_chunk(chunk, chip_px, min_psnr_db)
+            rows = src.to_numpy()
+            # backend b's cells sit at offset b * num_rows of the concat
+            cells = pa.concat_arrays(
+                [_cells(chunk, b, lvl).cast(pa.string()) for b, lvl in backends]
+            )
+            at = np.arange(len(names))[:, None] * chunk.num_rows + rows
+            head = [
+                chunk.column("image_id").take(pa.array(np.tile(rows, len(names)))),
+                pa.array(np.repeat(names, len(rows)), pa.string()),
+                cells.take(pa.array(at.ravel())),
+            ]
+            yield pa.RecordBatch.from_arrays(
+                head + [pa.concat_arrays([c] * len(names)) for c in chips],
+                ["image_id", "backend", "cell"] + _CHIP_NAMES,
+            )
 
     return images.mapInArrow(run, CHIPS_SCHEMA_MULTI)
 
 
-def _tile_chunk_multi(
-    chunk: pa.RecordBatch,
-    backends: list[tuple[str, int]],
-    chip_px: int,
-    min_psnr_db: float | None,
-) -> pa.RecordBatch:
-    """Decode + optional gate + chip of one Arrow chunk, emitting one
-    chips row-group per backend (same Arrow-take construction as
-    _tile_chunk; int64 cells become decimal strings — identical to SQL
-    CAST(cell AS VARCHAR), so the per-backend oracles keep matching)."""
-    from spatial4n_spark.cellindex import cell_backend
+def _mosaic_aggs() -> list:
+    """Per-group mosaic aggregates over chip rows: n_chips, n_images,
+    sum_px, avg_brightness.
 
-    ids_arr = chunk.column("image_id")
-    bufs = chunk.column("bytes").to_pylist()
-    w = chunk.column("w").to_numpy()
-    h = chunk.column("h").to_numpy()
-    fmts = chunk.column("fmt").to_pylist()
-    lon = chunk.column("lon").to_numpy()
-    lat = chunk.column("lat").to_numpy()
-    decoded = decode_image_batch(bufs, w, h, fmts)
-
-    cell_strs: list[tuple[str, pa.Array]] = []
-    for bname, blevel in backends:
-        cl = np.asarray(cell_backend(bname).kernel(lat, lon, blevel))
-        if cl.dtype.kind in ("i", "u"):
-            cl = cl.astype("U")
-        cell_strs.append((bname, pa.array(cl, pa.string())))
-
-    keep = np.ones(len(bufs), dtype=bool)
-    sizes = np.stack([w, h], axis=1)
-    groups = {}
-    for wh in np.unique(sizes, axis=0):
-        groups[tuple(wh)] = np.where((w == wh[0]) & (h == wh[1]))[0]
-
-    ids_list: list | None = None
-    if min_psnr_db is not None:
-        ids_list = ids_arr.to_pylist()
-        caps = chunk.column("caption").to_pylist()
-        for (gw, gh), sel in groups.items():
-            imgs = np.stack([decoded[k] for k in sel])
-            refs = _reference_pixels_batch(
-                [ids_list[k] for k in sel], int(gw), int(gh)
-            )
-            keep[sel] = _psnr_batch(imgs, refs) >= min_psnr_db
-        for k in range(len(ids_list)):
-            if keep[k]:
-                expect = (
-                    f"caption for img{int(ids_list[k][3:])} at {lat[k]:.4f},{lon[k]:.4f}"
-                )
-                keep[k] = caps[k] == expect
-
-    names = [
-        "image_id", "backend", "cell", "chip_row", "chip_col",
-        "chip_w", "chip_h", "chip_sum", "chip_mean",
+    n_images avoids countDistinct (which would expand the shuffle to one
+    row per (cell, image) — the scaling bottleneck at 10^12 images): an
+    image's chips all carry its single cell, so distinct images per cell
+    == chips at grid position (0, 0). avg_brightness comes from exact
+    integer partial sums and one final double division: order-independent,
+    so bit-stable under any shuffle order — a float avg() over chip means
+    would depend on reduction order.
+    """
+    px = F.sum(F.col("chip_w") * F.col("chip_h"))
+    return [
+        F.count(F.lit(1)).alias("n_chips"),
+        F.sum(
+            ((F.col("chip_row") == 0) & (F.col("chip_col") == 0)).cast("long")
+        ).alias("n_images"),
+        px.alias("sum_px"),
+        (F.sum("chip_sum") / (px * F.lit(3))).alias("avg_brightness"),
     ]
-    cols: dict[str, list] = {k: [] for k in names}
-
-    for (gw, gh), sel in groups.items():
-        sel = sel[keep[sel]]
-        if len(sel) == 0:
-            continue
-        if gw % chip_px or gh % chip_px:
-            # odd-size fallback: per-image loop (never hit by the
-            # generated corpus — sizes are multiples of chip_px)
-            if ids_list is None:
-                ids_list = ids_arr.to_pylist()
-            for k in sel:
-                img = decoded[k]
-                hh, ww = img.shape[0], img.shape[1]
-                for r0 in range(0, hh, chip_px):
-                    for c0 in range(0, ww, chip_px):
-                        chip = img[r0: r0 + chip_px, c0: c0 + chip_px]
-                        for bi, (bname, carr) in enumerate(cell_strs):
-                            cols["image_id"].append(pa.array([ids_list[k]]))
-                            cols["backend"].append(pa.array([bname]))
-                            cols["cell"].append(carr.take(pa.array([int(k)])))
-                            cols["chip_row"].append(pa.array([r0 // chip_px], pa.int32()))
-                            cols["chip_col"].append(pa.array([c0 // chip_px], pa.int32()))
-                            cols["chip_w"].append(pa.array([chip.shape[1]], pa.int32()))
-                            cols["chip_h"].append(pa.array([chip.shape[0]], pa.int32()))
-                            cols["chip_sum"].append(pa.array([int(chip.astype(np.int64).sum())], pa.int64()))
-                            cols["chip_mean"].append(pa.array([float(chip.mean())], pa.float64()))
-            continue
-        nr, nc = int(gh) // chip_px, int(gw) // chip_px
-        imgs = np.stack([decoded[k] for k in sel])
-        grid = imgs.reshape(len(sel), nr, chip_px, nc, chip_px, 3)
-        sums = pa.array(grid.astype(np.int64).sum(axis=(2, 4, 5)).reshape(-1))
-        means = pa.array(grid.astype(np.float64).mean(axis=(2, 4, 5)).reshape(-1))
-        n_chips = nr * nc
-        total = n_chips * len(sel)
-        rep_idx = pa.array(np.repeat(sel.astype(np.int64), n_chips))
-        id_take = ids_arr.take(rep_idx)
-        rows_c = pa.array(np.tile(np.repeat(np.arange(nr, dtype=np.int32), nc), len(sel)))
-        cols_c = pa.array(np.tile(np.tile(np.arange(nc, dtype=np.int32), nr), len(sel)))
-        w_c = pa.array(np.full(total, chip_px, dtype=np.int32))
-        h_c = w_c
-        for bname, carr in cell_strs:
-            cols["image_id"].append(id_take)
-            cols["backend"].append(pa.array(np.full(total, bname), pa.string()))
-            cols["cell"].append(carr.take(rep_idx))
-            cols["chip_row"].append(rows_c)
-            cols["chip_col"].append(cols_c)
-            cols["chip_w"].append(w_c)
-            cols["chip_h"].append(h_c)
-            cols["chip_sum"].append(sums)
-            cols["chip_mean"].append(means)
-
-    empty_types = {
-        "image_id": pa.string(), "backend": pa.string(), "cell": pa.string(),
-        "chip_row": pa.int32(), "chip_col": pa.int32(),
-        "chip_w": pa.int32(), "chip_h": pa.int32(),
-        "chip_sum": pa.int64(), "chip_mean": pa.float64(),
-    }
-    return pa.RecordBatch.from_arrays(
-        [
-            pa.concat_arrays([c.combine_chunks() if isinstance(c, pa.ChunkedArray) else c for c in cols[n]])
-            if cols[n] else pa.array([], empty_types[n])
-            for n in names
-        ],
-        names=names,
-    )
 
 
 def cell_mosaic_stats(chips: DataFrame) -> DataFrame:
@@ -527,27 +358,8 @@ def cell_mosaic_stats(chips: DataFrame) -> DataFrame:
     Map-side partial aggregation handles the hot-cell skew here (counts
     and sums are decomposable); at extreme skew use tiles.tile_stats-style
     explicit salting upstream.
-
-    n_images avoids countDistinct (which would expand the shuffle to one
-    row per (cell, image) — the scaling bottleneck at 10^12 images): an
-    image's chips all carry its single cell, so distinct images per cell
-    == chips at grid position (0, 0).
     """
-    from pyspark.sql import functions as F
-
-    # avg_brightness from exact integer partial sums (one final double
-    # division): order-independent, so bit-stable under any shuffle order —
-    # a float avg() over chip means would depend on reduction order
-    return chips.groupBy("cell").agg(
-        F.count(F.lit(1)).alias("n_chips"),
-        F.sum(
-            ((F.col("chip_row") == 0) & (F.col("chip_col") == 0)).cast("long")
-        ).alias("n_images"),
-        F.sum(F.col("chip_w") * F.col("chip_h")).alias("sum_px"),
-        (
-            F.sum("chip_sum") / (F.sum(F.col("chip_w") * F.col("chip_h")) * F.lit(3))
-        ).alias("avg_brightness"),
-    )
+    return chips.groupBy("cell").agg(*_mosaic_aggs())
 
 
 def raster_pipeline(
@@ -568,40 +380,6 @@ def raster_pipeline(
         images, level, chip_px, min_psnr_db=min_psnr_db, index=index
     )
     return cell_mosaic_stats(chips)
-
-
-def generate_raster_pipeline(
-    spark,
-    n_rows: int,
-    level: int = 4,
-    chip_px: int = 8,
-    min_psnr_db: float = 40.0,
-    partitions: int | None = None,
-    chunk_rows: int = 1024,
-    index: str = "geohash",
-) -> DataFrame:
-    """Fused source -> decode -> gate -> chip -> mosaic: the image payload
-    never crosses the Arrow boundary (see generate_decode_check); only
-    per-chip aggregates leave the Python stage, and the one shuffle
-    carries per-cell partial sums."""
-    from spatial4n_spark.sources.images import _gen_batch
-
-    rng = spark.range(0, n_rows, 1, partitions) if partitions else spark.range(n_rows)
-
-    def run(it: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        for batch in it:
-            ids = batch.column(0).to_numpy()
-            for s in range(0, len(ids), chunk_rows):
-                yield _tile_chunk(
-                    _gen_batch(ids[s : s + chunk_rows], True),
-                    level,
-                    chip_px,
-                    False,
-                    min_psnr_db,
-                    index,
-                )
-
-    return cell_mosaic_stats(rng.mapInArrow(run, _chips_schema(index)))
 
 
 def raster_pipeline_pyramid(
@@ -629,8 +407,6 @@ def raster_pipeline_pyramid(
 
     Returns (lvl, cell, n_chips, n_images, sum_px, avg_brightness).
     """
-    from pyspark.sql import functions as F
-
     if index not in ("geohash", "s2"):
         raise ValueError(
             f"raster pyramid needs exactly-nesting cells (geohash or "
@@ -650,13 +426,4 @@ def raster_pipeline_pyramid(
     exploded = chips.select(F.explode(lvls).alias("lvl"), "*").withColumn(
         "cell", parent
     )
-    return exploded.groupBy("lvl", "cell").agg(
-        F.count(F.lit(1)).alias("n_chips"),
-        F.sum(
-            ((F.col("chip_row") == 0) & (F.col("chip_col") == 0)).cast("long")
-        ).alias("n_images"),
-        F.sum(F.col("chip_w") * F.col("chip_h")).alias("sum_px"),
-        (
-            F.sum("chip_sum") / (F.sum(F.col("chip_w") * F.col("chip_h")) * F.lit(3))
-        ).alias("avg_brightness"),
-    )
+    return exploded.groupBy("lvl", "cell").agg(*_mosaic_aggs())

@@ -363,10 +363,10 @@ def _geohash_bisect_sql(src_sql: str, keep: list[str], lon: str, lat: str, preci
 
 
 def sql_image_tiles() -> str:
-    """Oracle for q_image_tiles: geohash-4 cell mosaics. Every generated
-    image passes the PSNR>=40 gate (real JPEG at quality 98: worst-case
-    noise-image PSNR ~42.4 dB, extreme-value tail over 700k 8x8 samples
-    ~41.9 dB), so the gate drops no rows. Chip counts/sums per image
+    """Oracle for image_tiles' geohash arm: geohash-4 cell mosaics. Every
+    generated image passes the PSNR>=40 gate (real JPEG at quality 98:
+    worst-case noise-image PSNR ~42.4 dB, extreme-value tail over 700k
+    8x8 samples ~41.9 dB), so the gate drops no rows. Chip counts/sums per image
     collapse to closed forms: n_chips = (w/8)^2, sum_px = w^2,
     sum(chip_sum) = decoded pixel sum (jpg via the jdec quant chain)."""
     bisect = _geohash_bisect_sql(
@@ -388,7 +388,7 @@ FROM cells GROUP BY cell"""
 
 
 def sql_image_s2_tiles() -> str:
-    """Oracle for q_image_s2_tiles: the same closed-form per-image chip
+    """Oracle for image_tiles' s2 arm: the same closed-form per-image chip
     aggregates as sql_image_tiles, keyed by S2 level-8 cells.  Unlike
     geohash (whose ceil twin needed the true bisection mirror on these
     arbitrary-double coordinates), the S2 encode chain (oracles_s2) is
@@ -409,7 +409,7 @@ FROM s2f GROUP BY cell"""
 
 
 def sql_image_h3_tiles() -> str:
-    """Oracle for q_image_h3_tiles: the same closed-form per-image chip
+    """Oracle for image_tiles' h3 arm: the same closed-form per-image chip
     aggregates as sql_image_tiles, keyed by H3 level-7 hex cells.  The
     hex encode chain (oracles_h3) is trig-free and op-for-op
     IEEE-mirrored, so it is bit-exact on ANY input — no lattice

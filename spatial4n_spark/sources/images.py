@@ -143,8 +143,18 @@ def png_decode(buf: bytes) -> np.ndarray:
     pos, w = 8, None
     idat = b""
     while pos < len(buf):
+        if pos + 8 > len(buf):
+            raise ValueError(
+                f"png truncated: chunk header at byte {pos} needs 8 bytes, "
+                f"payload has {len(buf) - pos}"
+            )
         (ln,) = struct.unpack(">I", buf[pos : pos + 4])
         tag = buf[pos + 4 : pos + 8]
+        if pos + 12 + ln > len(buf):
+            raise ValueError(
+                f"png truncated: {tag!r} chunk at byte {pos} needs "
+                f"{12 + ln} bytes, payload has {len(buf) - pos}"
+            )
         data = buf[pos + 8 : pos + 8 + ln]
         (crc,) = struct.unpack(">I", buf[pos + 8 + ln : pos + 12 + ln])
         if zlib.crc32(tag + data) & 0xFFFFFFFF != crc:
@@ -160,9 +170,17 @@ def png_decode(buf: bytes) -> np.ndarray:
         pos += 12 + ln
     if w is None:
         raise ValueError("png missing IHDR")
-    raw = np.frombuffer(zlib.decompress(idat), dtype=np.uint8)
+    try:
+        inflated = zlib.decompress(idat)
+    except zlib.error as e:
+        raise ValueError(f"png IDAT does not inflate: {e}") from None
     stride = w * 3
-    raw = raw.reshape(h, stride + 1)
+    if len(inflated) != h * (stride + 1):
+        raise ValueError(
+            f"png IDAT inflates to {len(inflated)} bytes, expected "
+            f"{h * (stride + 1)} for {w}x{h} RGB scanlines"
+        )
+    raw = np.frombuffer(inflated, dtype=np.uint8).reshape(h, stride + 1)
     ftypes, rows = raw[:, 0], raw[:, 1:]
     out = np.zeros((h, stride), dtype=np.uint8)
     prev = np.zeros(stride, dtype=np.uint8)
@@ -358,19 +376,29 @@ def decode_image_batch(buf_list, w: np.ndarray, h: np.ndarray, fmt_list) -> list
         if fmt == "png":
             arr = png_decode(b)
             if arr.shape != (int(hi), int(wi), 3):
-                raise ValueError("png dims disagree with metadata")
+                raise ValueError(
+                    f"png decodes to {arr.shape[1]}x{arr.shape[0]}, metadata "
+                    f"says {int(wi)}x{int(hi)}"
+                )
             out[i] = arr
         elif fmt == "jpg":
             jpg_idx.append(i)
             jpg_bufs.append(b)
         else:
-            arr = np.frombuffer(b, dtype=np.uint8)
-            out[i] = arr.reshape(int(hi), int(wi), 3)
+            if len(b) != int(wi) * int(hi) * 3:
+                raise ValueError(
+                    f"raw payload has {len(b)} bytes, expected "
+                    f"{int(wi) * int(hi) * 3} for {int(wi)}x{int(hi)} RGB"
+                )
+            out[i] = np.frombuffer(b, dtype=np.uint8).reshape(int(hi), int(wi), 3)
     if jpg_idx:
         _, decode_batch = jpeg_codec()
         for i, arr in zip(jpg_idx, decode_batch(jpg_bufs)):
             if arr.shape != (int(h[i]), int(w[i]), 3):
-                raise ValueError("jpg dims disagree with metadata")
+                raise ValueError(
+                    f"jpg decodes to {arr.shape[1]}x{arr.shape[0]}, metadata "
+                    f"says {int(w[i])}x{int(h[i])}"
+                )
             out[i] = arr
     return out  # type: ignore[return-value]
 

@@ -6,7 +6,9 @@ BASELINE.json input_hint schema plus an event timestamp).
 Design mirrors the batch operators exactly:
 - the decode/gate/chip stage is the SAME Arrow chunk kernel
   (operators.raster._tile_chunk) run through ``mapInArrow`` — stateless,
-  so Structured Streaming applies it per micro-batch with no state;
+  so Structured Streaming applies it per micro-batch with no state; the
+  kernel returns each chip's source row, and the chip takes that row's
+  event timestamp;
 - the only stateful operator is the watermarked windowed groupBy on
   (window, cell) — bounded-cardinality keys, exact integer partial sums
   (order-independent, so stream results are bit-equal to batch);
@@ -50,53 +52,24 @@ def streaming_image_chips(
     level: int = 4,
     chip_px: int = 8,
     min_psnr_db: float | None = 40.0,
-    chunk_rows: int = 1024,
 ) -> DataFrame:
     """Stateless decode -> gate -> chip of an image stream.
 
-    Emits one row per chip with the image's event timestamp attached
+    Emits one row per chip with its image's event timestamp attached
     (chips inherit their image's ts for downstream windowing). Runs the
     batch Arrow kernel unchanged per micro-batch.
     """
-    from spatial4n_spark.operators.raster import _tile_chunk
-
-    from collections import Counter, defaultdict, deque
+    from spatial4n_spark.operators.raster import _chunks, _tile_chunk
 
     def run(it: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        for batch in it:
-            for s in range(0, batch.num_rows, chunk_rows):
-                chunk = batch.slice(s, chunk_rows)
-                chips = _tile_chunk(chunk, level, chip_px, False, min_psnr_db)
-                # re-attach ts positionally: a replayed/duplicate stream
-                # record shares its image_id, so a dict lookup would give
-                # every copy the LAST row's ts (round-3 ADVICE fix).
-                # Chips come out contiguous per input occurrence (size
-                # groups preserve ascending input order within a group),
-                # and duplicates of one id emit identical chip counts, so
-                # each maximal run of an id covers run_len / chips-per-
-                # occurrence occurrences, consumed from a per-id FIFO of
-                # input-order timestamps.
-                ids = chunk.column("image_id").to_pylist()
-                out_ids = chips.column("image_id").to_pylist()
-                queues = defaultdict(deque)
-                for i, t in zip(ids, chunk.column("ts").to_pylist()):
-                    queues[i].append(t)
-                n_in, n_out = Counter(ids), Counter(out_ids)
-                out_ts_vals = []
-                j, n = 0, len(out_ids)
-                while j < n:
-                    iid = out_ids[j]
-                    k = j
-                    while k < n and out_ids[k] == iid:
-                        k += 1
-                    cpo = n_out[iid] // n_in[iid]  # chips per occurrence
-                    for _ in range((k - j) // cpo):
-                        out_ts_vals.extend([queues[iid].popleft()] * cpo)
-                    j = k
-                out_ts = pa.array(out_ts_vals, pa.timestamp("us"))
-                cols = [chips.column(n) for n in chips.schema.names if n != "chip"]
-                names = [n for n in chips.schema.names if n != "chip"]
-                yield pa.RecordBatch.from_arrays(cols + [out_ts], names=names + ["ts"])
+        for chunk in _chunks(it):
+            chips, src = _tile_chunk(chunk, level, chip_px, min_psnr_db)
+            # by source row, not by image_id: a replayed stream record
+            # shares its id but keeps its own event time
+            yield pa.RecordBatch.from_arrays(
+                chips.columns + [chunk.column("ts").take(src)],
+                chips.schema.names + ["ts"],
+            )
 
     return stream.mapInArrow(run, CHIPS_TS_SCHEMA)
 

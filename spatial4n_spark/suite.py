@@ -1507,8 +1507,7 @@ def images_table(spark: SparkSession, sf_dir: str, rows_per_sf: int = 2_000_000)
 def q_image_decode_check(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Decode gate summary by format: PSNR floor + caption equality,
     over the materialized images table — parquet scan -> ONE fused
-    decode+gate Arrow stage -> aggregate (the fused generate variant
-    remains the streaming-ingest surface)."""
+    decode+gate Arrow stage -> aggregate."""
     from spatial4n_spark.operators.raster import decode_check
 
     out = decode_check(images_table(spark, sf_dir), level=4)
@@ -1516,59 +1515,6 @@ def q_image_decode_check(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count(F.lit(1)).alias("n"),
         F.round(F.min("psnr_db"), 3).alias("min_psnr_db"),
         F.min(F.col("caption_ok").cast("int")).alias("all_captions_ok"),
-    )
-
-
-def q_image_tiles(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Full raster pipeline: decode -> gate -> chip -> per-cell mosaic
-    (one fused Python stage over the materialized table scan; only chip
-    aggregates leave it)."""
-    from spatial4n_spark.operators.raster import raster_pipeline
-
-    out = raster_pipeline(images_table(spark, sf_dir), level=4, chip_px=8)
-    return out.select(
-        "cell",
-        "n_chips",
-        "n_images",
-        "sum_px",
-        # no rounding: the value is exact_int / exact_int (one IEEE divide,
-        # bit-identical in both engines); round(x, 3) is NOT — engines
-        # disagree on inputs within 1 ulp of a .0005 boundary (Spark
-        # BigDecimal HALF_UP vs DuckDB scaled rounding), which flipped 7
-        # of 117709 cells at sf0.1
-        F.col("avg_brightness"),
-    )
-
-
-def q_image_s2_tiles(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The raster pipeline with images assigned to S2 cells (level 8 int64
-    cube-face Hilbert ids) instead of geohash strings — the north star's
-    "image rows assigned to H3/S2 cells via batched cell-encode UDFs",
-    through the same fused decode -> gate -> chip -> mosaic stage."""
-    from spatial4n_spark.operators.raster import raster_pipeline
-
-    out = raster_pipeline(
-        images_table(spark, sf_dir), level=8, chip_px=8, index="s2"
-    )
-    return out.select(
-        "cell", "n_chips", "n_images", "sum_px", F.col("avg_brightness")
-    )
-
-
-def q_image_h3_tiles(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The raster pipeline with images assigned to H3 hex cells (level 7
-    int64 axial ids) — the north star's "image rows assigned to H3/S2
-    cells via batched cell-encode UDFs" with the H3 half, through the
-    same fused decode -> gate -> chip -> mosaic stage. Like S2 (and
-    unlike geohash), the hex encode chain is IEEE-mirrored op-for-op, so
-    the oracle needs no lattice assumption."""
-    from spatial4n_spark.operators.raster import raster_pipeline
-
-    out = raster_pipeline(
-        images_table(spark, sf_dir), level=7, chip_px=8, index="h3"
-    )
-    return out.select(
-        "cell", "n_chips", "n_images", "sum_px", F.col("avg_brightness")
     )
 
 
@@ -1831,7 +1777,7 @@ def q_image_tiles_all(spark: SparkSession, sf_dir: str) -> DataFrame:
     under one `backend` column — ONE decode pass over the materialized
     table emits every backend's chip tags (tile_images_multi), instead
     of one full decode of the 10^12-image table per backend."""
-    from spatial4n_spark.operators.raster import tile_images_multi
+    from spatial4n_spark.operators.raster import _mosaic_aggs, tile_images_multi
 
     chips = tile_images_multi(
         images_table(spark, sf_dir),
@@ -1839,16 +1785,12 @@ def q_image_tiles_all(spark: SparkSession, sf_dir: str) -> DataFrame:
         chip_px=8,
         min_psnr_db=40.0,
     )
-    return chips.groupBy("backend", "cell").agg(
-        F.count(F.lit(1)).alias("n_chips"),
-        F.sum(
-            ((F.col("chip_row") == 0) & (F.col("chip_col") == 0)).cast("long")
-        ).alias("n_images"),
-        F.sum(F.col("chip_w") * F.col("chip_h")).alias("sum_px"),
-        (
-            F.sum("chip_sum") / (F.sum(F.col("chip_w") * F.col("chip_h")) * F.lit(3))
-        ).alias("avg_brightness"),
-    )
+    # avg_brightness is not rounded: it is exact_int / exact_int (one IEEE
+    # divide, bit-identical in both engines); round(x, 3) is NOT — engines
+    # disagree on inputs within 1 ulp of a .0005 boundary (Spark
+    # BigDecimal HALF_UP vs DuckDB scaled rounding), which flipped 7 of
+    # 117709 cells at sf0.1
+    return chips.groupBy("backend", "cell").agg(*_mosaic_aggs())
 
 
 def sql_image_tiles_all() -> str:

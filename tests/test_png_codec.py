@@ -109,3 +109,39 @@ def test_multi_idat_and_unknown_ancillary_chunks():
     )
     np.testing.assert_array_equal(png_decode(buf), rgb)
     np.testing.assert_array_equal(png_decode(full), rgb)
+
+
+@pytest.mark.parametrize(
+    "fmt,payload,match",
+    [
+        # last 20 bytes cut: IEND and the tail of IDAT are gone
+        ("png", lambda rgb: png_encode(rgb)[:-20], r"png truncated: b'IDAT' chunk .* needs"),
+        (
+            "png",
+            lambda rgb: _PNG_SIG
+            + _png_chunk(b"IHDR", struct.pack(">IIBBBBB", 8, 8, 8, 2, 0, 0, 0))
+            + _png_chunk(b"IDAT", zlib.compress(bytes(100)))
+            + _png_chunk(b"IEND", b""),
+            r"png IDAT inflates to 100 bytes, expected 200 for 8x8",
+        ),
+        (
+            "png",
+            lambda rgb: _PNG_SIG
+            + _png_chunk(b"IHDR", struct.pack(">IIBBBBB", 8, 8, 8, 2, 0, 0, 0))
+            + _png_chunk(b"IDAT", b"not a zlib stream")
+            + _png_chunk(b"IEND", b""),
+            r"png IDAT does not inflate",
+        ),
+        ("raw", lambda rgb: bytes(5), r"raw payload has 5 bytes, expected 192 for 8x8"),
+    ],
+    ids=["png_truncated", "png_idat_size", "png_idat_corrupt", "raw_size"],
+)
+def test_undecodable_payloads_raise_clear_errors(fmt, payload, match):
+    """A payload that cannot be decoded raises a ValueError naming the
+    format and the expected and actual sizes, not a struct or reshape
+    error from deep inside the decoder."""
+    from spatial4n_spark.sources.images import decode_image_batch
+
+    buf = payload(_rand_rgb(np.random.default_rng(5), 8, 8))
+    with pytest.raises(ValueError, match=match):
+        decode_image_batch([buf], np.array([8]), np.array([8]), [fmt])

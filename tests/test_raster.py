@@ -7,6 +7,7 @@ from __future__ import annotations
 import math
 
 import numpy as np
+import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
@@ -14,8 +15,9 @@ from spatial4n_spark.operators.raster import (
     decode_check,
     raster_pipeline,
     tile_images,
+    tile_images_multi,
 )
-from spatial4n_spark.sources.images import images_df
+from spatial4n_spark.sources.images import decode_image_batch, images_df
 
 N = 600
 
@@ -172,3 +174,76 @@ def test_raster_pyramid_rejects_h3(spark, images):
 
     with pytest.raises(ValueError, match="nest"):
         raster_pipeline_pyramid(images, index="h3")
+
+
+BACKENDS = [("geohash", 4), ("s2", 8), ("h3", 7)]
+_KEY = ["image_id", "chip_row", "chip_col"]
+
+
+@pytest.fixture(scope="module")
+def decoded(images):
+    """(image_id, cell per backend, decoded pixels) of every image."""
+    from spatial4n_spark.cellindex import cell_backend
+
+    meta = images.select("image_id", "bytes", "w", "h", "fmt", "lon", "lat").toPandas()
+    pixels = decode_image_batch(
+        list(meta["bytes"]), meta["w"].to_numpy(), meta["h"].to_numpy(), list(meta["fmt"])
+    )
+    cells = {
+        name: list(cell_backend(name).kernel(meta["lat"].to_numpy(), meta["lon"].to_numpy(), lvl))
+        for name, lvl in BACKENDS
+    }
+    return list(meta["image_id"]), cells, pixels
+
+
+def _chip_model(decoded, index: str, chip_px: int) -> pd.DataFrame:
+    """Per-image, per-chip loop over the decoded pixels: the reference
+    for the vectorized chip kernel (edge chips are cut, not padded)."""
+    ids, cells, pixels = decoded
+    rows = []
+    for iid, cell, img in zip(ids, cells[index], pixels):
+        for r0 in range(0, img.shape[0], chip_px):
+            for c0 in range(0, img.shape[1], chip_px):
+                chip = img[r0 : r0 + chip_px, c0 : c0 + chip_px]
+                rows.append((
+                    iid, cell, r0 // chip_px, c0 // chip_px, chip.shape[1],
+                    chip.shape[0], int(chip.astype(np.int64).sum()), float(chip.mean()),
+                ))
+    cols = ["image_id", "cell", "chip_row", "chip_col", "chip_w", "chip_h",
+            "chip_sum", "chip_mean"]
+    return pd.DataFrame(rows, columns=cols)
+
+
+def _sorted(df: pd.DataFrame) -> pd.DataFrame:
+    return df.sort_values(_KEY).reset_index(drop=True)
+
+
+@pytest.mark.parametrize("chip_px", [5, 12])
+@pytest.mark.parametrize("index,level", BACKENDS)
+def test_edge_chips_match_numpy_model(spark, images, decoded, index, level, chip_px):
+    """At chip sizes that do not divide the 8-32 px images, every chip —
+    edge chips included — equals a per-chip numpy loop over the decoded
+    pixels: integer columns and cells exactly, ``chip_mean`` bit-equal
+    to both ``chip_sum / (w * h * 3)`` and the chip's float mean."""
+    got = _sorted(tile_images(images, level, chip_px, index=index).toPandas())
+    want = _sorted(_chip_model(decoded, index, chip_px))
+    assert len(got) == len(want)
+    assert (got["chip_w"] < chip_px).any() and (got["chip_h"] < chip_px).any()
+    for c in ["image_id", "cell", "chip_row", "chip_col", "chip_w", "chip_h", "chip_sum"]:
+        assert (got[c].to_numpy() == want[c].to_numpy()).all(), c
+    ratio = got["chip_sum"] / (got["chip_w"] * got["chip_h"] * 3)
+    assert (got["chip_mean"].to_numpy() == ratio.to_numpy()).all()
+    assert (got["chip_mean"].to_numpy() == want["chip_mean"].to_numpy()).all()
+
+
+@pytest.mark.parametrize("chip_px", [5, 12])
+def test_tile_images_multi_equals_each_backend(spark, images, chip_px):
+    """tile_images_multi's rows for each backend are tile_images' rows
+    for that backend with the cell cast to string."""
+    multi = tile_images_multi(images, BACKENDS, chip_px=chip_px, min_psnr_db=40.0).toPandas()
+    assert sorted(multi["backend"].unique()) == sorted(b for b, _ in BACKENDS)
+    for name, lvl in BACKENDS:
+        one = tile_images(images, lvl, chip_px, min_psnr_db=40.0, index=name).toPandas()
+        one["cell"] = one["cell"].astype(str)
+        part = multi[multi["backend"] == name].drop(columns="backend")
+        assert _sorted(part).equals(_sorted(one)), name

@@ -256,6 +256,33 @@ def test_streaming_chips_duplicate_ids_keep_own_ts(spark):
     assert (chips[chips.image_id != dup_id].ts == pd.Timestamp(t1)).all()
 
 
+def test_streaming_chips_keep_own_row_ts_at_odd_chip_size(spark):
+    """At a chip size that cuts edge chips (12 px over 8-32 px images)
+    every chip carries its own input row's ts, a replayed row included,
+    and each row yields its full chip grid."""
+    import datetime
+    import math
+
+    from spatial4n_spark.sources.images import images_df
+    from spatial4n_spark.streaming.image_stream import (
+        IMAGES_TS_SCHEMA,
+        streaming_image_chips,
+    )
+
+    base = images_df(spark, 6, with_bytes=True, partitions=1).collect()
+    t0 = datetime.datetime(2026, 1, 1)
+    data = [tuple(r) + (t0 + datetime.timedelta(hours=i),) for i, r in enumerate(base)]
+    data.insert(3, tuple(base[2]) + (t0 + datetime.timedelta(hours=50),))
+    df = spark.createDataFrame(data, IMAGES_TS_SCHEMA).coalesce(1)
+    chips = streaming_image_chips(df, level=4, chip_px=12).toPandas()
+    got = chips.groupby(["image_id", "ts"]).size().to_dict()
+    want = {
+        (r[0], r[-1]): math.ceil(r[2] / 12) * math.ceil(r[3] / 12) for r in data
+    }
+    assert {(i, t.to_pydatetime()): n for (i, t), n in got.items()} == want
+    assert (chips["chip_w"] < 12).any()
+
+
 def test_streaming_image_mosaics_equals_batch(spark, images_dir, tmp_path):
     """Streamed decode->gate->chip->windowed mosaic == batch over the same
     frames (exact integer sums; bit-equality by construction)."""
