@@ -2436,17 +2436,28 @@ def clustered_radius_query(
 
     When the kept files and their pending delete files hold at most
     ``_LOCAL_READ_ROWS`` rows, the driver reads them
-    (``_read_files_local``: the same read spec), keeps the rows in the
-    cover's cell ranges within a slack of the radius (numpy haversine)
-    and hands them to Spark as a local relation with the centre and
-    radius appended as columns. The Catalyst predicate, one Column
-    reading those columns (``_probe_col``), then runs on the driver
-    with no job, and the schema's columns are kept without the cell
-    and parameter columns, so rows and schema equal the Spark scan's.
-    Every local probe sends the same plan: its generated predicate is
-    compiled once, not once per centre. Above the budget the kept
-    files are one Spark scan with the range disjunction pushed to the
-    row groups and the centre as literals."""
+    (``_read_files_local``: the same read spec) and keeps the rows in
+    the cover's cell ranges whose numpy haversine distance ``d`` is at
+    most the radius plus the kNN slack (``operators.knn._SLACK_REL``,
+    ``_SLACK_KM``, which bound numpy's distance against the JVM's).
+    Then one of two branches runs:
+
+    - settled: no kept row lies in the slack band ``r(1 - _SLACK_REL) -
+      _SLACK_KM < d``. Every kept row is then within the radius by the
+      predicate too, and every dropped row beyond it, so the kept rows
+      without the cell column are the answer: a local relation with no
+      predicate.
+    - band: some row may fall either side of the radius. The kept rows
+      go to Spark with the centre and radius appended as columns and
+      the Catalyst predicate, one Column reading those columns
+      (``_probe_col``), decides them on the driver with no job; the
+      cell and parameter columns are dropped after it. Every band
+      probe sends the same plan: its generated predicate is compiled
+      once, not once per centre.
+
+    Both give the Spark scan's rows and schema (every field nullable).
+    Above the budget the kept files are one Spark scan with the range
+    disjunction pushed to the row groups and the centre as literals."""
     import numpy as np
     import pyarrow as pa
     from pyspark.sql.types import DoubleType, StructField, StructType
@@ -2464,8 +2475,18 @@ def clustered_radius_query(
             tbl[lon].to_numpy(zero_copy_only=False), tbl[lat].to_numpy(zero_copy_only=False),
             qlon, qlat,
         ))
-        tbl = tbl.filter(d <= float(radius_km) * (1 + _SLACK_REL) + _SLACK_KM)
+        r = float(radius_km)
+        near = d <= r * (1 + _SLACK_REL) + _SLACK_KM
+        tbl = tbl.filter(near)
         schema = _read_schema(man)
+        if not (d[near] > r * (1 - _SLACK_REL) - _SLACK_KM).any():
+            # no kept row in the slack band around the radius: numpy's
+            # answer is the predicate's, so the rows go to Spark as is
+            fields = [f for f in schema if f.name != CELL_COL]
+            out = spark.createDataFrame(
+                tbl.select([f.name for f in fields]), StructType(fields)
+            )
+            return (out, stats) if with_stats else out
         params = ((_QLON, qlon), (_QLAT, qlat), (_QR, radius_km))
         for name, v in params:
             tbl = tbl.append_column(name, pa.array(np.full(tbl.num_rows, float(v))))

@@ -1,9 +1,14 @@
-"""Circle kernels: bbox generation (vectorized) and circle-rect relate.
+"""Circle kernels: bbox generation and circle x rects relate, both vectorized.
 
 The circle bbox kernel is the candidate-cell generator for distance joins
-and kNN, so it is fully numpy-vectorized. The circle x rect relate is a
-query-side operation (query circle vs. a bounded number of tiles/rects),
-implemented as exact scalar logic matching the reference:
+and kNN. The circle x rect relate classifies one query circle against
+many rects: the cover planners (``plans.cover._classify_cells``) pass a
+whole BFS level of cells in one call. It derives the circle's state
+once (bbox, horizontal axis, inverse circle, pole wrap) and evaluates
+the reference's per-rect branches as numpy masks, exactly as the
+reference does (the scalar entry points are calls with one rect; the
+former scalar port is kept in tests/test_circle_relate.py as the
+differential oracle):
 
 - bbox of a circle: ``DistanceUtils.CalcBoxByDistFromPtDEG``
   (src/Spatial4n/Distance/DistanceUtils.cs:328-443) — pole touch widens the
@@ -91,194 +96,201 @@ def circle_bbox(lon, lat, dist_deg):
 
 
 # ---------------------------------------------------------------------------
-# scalar circle x rect relate (query-side: query circle vs tiles/rects)
+# circle x rect relate, vectorized over rects (query circle vs tiles/rects)
 # ---------------------------------------------------------------------------
+
+
+def _rects(rminx, rmaxx, rminy, rmaxy):
+    shape = np.broadcast(rminx, rmaxx, rminy, rmaxy).shape
+    return tuple(
+        np.array(np.broadcast_to(np.asarray(a, np.float64), shape)).reshape(-1)
+        for a in (rminx, rmaxx, rminy, rmaxy)
+    )
 
 
 def _rect_width(min_x, max_x):
     w = max_x - min_x
-    return w + 360.0 if w < 0 else w
+    return np.where(w < 0, w + 360.0, w)
 
 
-def _crosses_dateline(min_x, max_x):
-    return min_x > max_x
+def _bbox_phase(bminx, bmaxx, bminy, bmaxy, rminx, rmaxx, rminy, rmaxy, geo):
+    """CircleImpl.cs:144-161: the circle's bbox against every rect.
+    Returns (relation, undecided): DISJOINT and WITHIN are final, as is
+    WITHIN for a rect equal to a bbox it CONTAINS; the undecided rects
+    (CONTAINS or INTERSECTS) go on to phase 2."""
+    sect = rect_relate_rect(bminx, bmaxx, bminy, bmaxy, rminx, rmaxx, rminy, rmaxy, geo=geo)
+    same = (
+        (sect == CONTAINS) & (rminx == bminx) & (rmaxx == bmaxx)
+        & (rminy == bminy) & (rmaxy == bmaxy)
+    )
+    out = np.where(same, WITHIN, sect).astype(np.int8)
+    return out, ((sect == CONTAINS) | (sect == INTERSECTS)) & ~same
 
 
-def _scalar_rel(arr):
-    return np.int8(np.asarray(arr).reshape(-1)[0])
+def _corners_in(contains, rminx, rmaxx, rminy, rmaxy):
+    """Corners inside the circle: 0 = none, 1 = some, 4 = all.
+    GeoCircle.cs:247-283."""
+    c = [contains(x, y) for x, y in
+         ((rminx, rminy), (rminx, rmaxy), (rmaxx, rminy), (rmaxx, rmaxy))]
+    every = c[0] & c[1] & c[2] & c[3]
+    some = c[0] | c[1] | c[2] | c[3]
+    return np.where(every, 4, np.where(some, 1, 0))
 
 
-def _phase2_euclidean(cx, cy, r, x_axis, y_axis, rminx, rmaxx, rminy, rmaxy, bbox_sect, contains):
+def _phase2_euclidean(cy, x_axis, y_axis, rminx, rmaxx, rminy, rmaxy, sect, contains):
     """Closest/farthest-corner phase. CircleImpl.cs:164-247.
 
     ``contains(x, y)`` is the circle membership test (geo or cartesian);
     ``x_axis``/``y_axis`` are the circle's axis coordinates (GeoCircle
     overrides y_axis with the horizontal-axis latitude).
     """
-    if x_axis < rminx:
-        closest_x, farthest_x = rminx, rmaxx
-    elif x_axis > rmaxx:
-        closest_x, farthest_x = rmaxx, rminx
-    else:
-        closest_x = x_axis
-        farthest_x = rmaxx if (rmaxx - x_axis > x_axis - rminx) else rminx
+    below_x, above_x = x_axis < rminx, x_axis > rmaxx
+    closest_x = np.where(below_x, rminx, np.where(above_x, rmaxx, x_axis))
+    farthest_x = np.where(
+        below_x, rmaxx,
+        np.where(above_x, rminx, np.where(rmaxx - x_axis > x_axis - rminx, rmaxx, rminx)),
+    )
+    below_y, above_y = y_axis < rminy, y_axis > rmaxy
+    closest_y = np.where(below_y, rminy, np.where(above_y, rmaxy, y_axis))
+    farthest_y = np.where(
+        below_y, rmaxy,
+        np.where(above_y, rminy, np.where(rmaxy - y_axis > y_axis - rminy, rmaxy, rminy)),
+    )
 
-    if y_axis < rminy:
-        closest_y, farthest_y = rminy, rmaxy
-    elif y_axis > rmaxy:
-        closest_y, farthest_y = rmaxy, rminy
-    else:
-        closest_y = y_axis
-        farthest_y = rmaxy if (rmaxy - y_axis > y_axis - rminy) else rminy
-
-    if x_axis != closest_x and y_axis != closest_y:
-        if not contains(closest_x, closest_y):
-            return DISJOINT
-
-    if bbox_sect != CONTAINS:
-        return INTERSECTS
-    if not contains(farthest_x, farthest_y):
-        return INTERSECTS
+    disjoint = (x_axis != closest_x) & (y_axis != closest_y) & ~contains(closest_x, closest_y)
+    full = (sect == CONTAINS) & contains(farthest_x, farthest_y)
     if cy != y_axis:  # geodetic: check the other corner too (CircleImpl.cs:234-244)
-        if y_axis == closest_y:
-            other_y = rminy if farthest_y == rmaxy else rmaxy
-            if not contains(farthest_x, other_y):
-                return INTERSECTS
-    return CONTAINS
+        other_y = np.where(farthest_y == rmaxy, rminy, rmaxy)
+        full &= (y_axis != closest_y) | contains(farthest_x, other_y)
+    return np.where(disjoint, DISJOINT, np.where(full, CONTAINS, INTERSECTS)).astype(np.int8)
+
+
+def circle_relate_rects(cx, cy, r, rminx, rmaxx, rminy, rmaxy):
+    """Euclidean circle x rects relate, one int8 relation per rect.
+    CircleImpl.cs:144-247."""
+    cx, cy, r = float(cx), float(cy), float(r)
+    rminx, rmaxx, rminy, rmaxy = _rects(rminx, rmaxx, rminy, rmaxy)
+    out, todo = _bbox_phase(cx - r, cx + r, cy - r, cy + r, rminx, rmaxx, rminy, rmaxy, geo=False)
+    if todo.any():
+        def contains(x, y):
+            # math.hypot, not np.hypot: libm's hypot is an ulp off on
+            # about 0.6 % of inputs, and the boundary test is exact
+            return np.fromiter(map(math.hypot, x - cx, y - cy), np.float64, len(x)) <= r
+
+        sub = tuple(a[todo] for a in (rminx, rmaxx, rminy, rmaxy))
+        out[todo] = _phase2_euclidean(cy, cx, cy, *sub, out[todo], contains)
+    return out
 
 
 def circle_relate_rect(cx, cy, r, rminx, rmaxx, rminy, rmaxy):
-    """Euclidean circle x rect relate. CircleImpl.cs:144-247."""
-    bminx, bmaxx, bminy, bmaxy = cx - r, cx + r, cy - r, cy + r
-    bbox_sect = _scalar_rel(
-        rect_relate_rect(bminx, bmaxx, bminy, bmaxy, rminx, rmaxx, rminy, rmaxy, geo=False)
-    )
-    if bbox_sect in (DISJOINT, WITHIN):
-        return bbox_sect
-    if bbox_sect == CONTAINS and (bminx, bmaxx, bminy, bmaxy) == (rminx, rmaxx, rminy, rmaxy):
-        return WITHIN
-
-    def contains(x, y):
-        return math.hypot(x - cx, y - cy) <= r
-
-    return _phase2_euclidean(cx, cy, r, cx, cy, rminx, rmaxx, rminy, rmaxy, bbox_sect, contains)
+    """Euclidean circle x rect relate: ``circle_relate_rects`` of one rect."""
+    return np.int8(circle_relate_rects(cx, cy, r, rminx, rmaxx, rminy, rmaxy)[0])
 
 
-def _geo_contains_fn(cx, cy, r, calculator):
-    def contains(x, y):
-        return float(distance_deg(cx, cy, x, y, calculator)) <= r
-
-    return contains
-
-
-def _num_corners_intersect(contains, rminx, rmaxx, rminy, rmaxy):
-    """0 = none, 1 = some, 4 = all. GeoCircle.cs:247-283."""
-    b = contains(rminx, rminy)
-    for x, y in ((rminx, rmaxy), (rmaxx, rminy), (rmaxx, rmaxy)):
-        if contains(x, y) != b:
-            return 1
-    return 4 if b else 0
-
-
-def _relate_rect_circle_wraps_pole(cx, cy, r, rminx, rmaxx, rminy, rmaxy, contains):
+def _relate_rects_circle_wraps_pole(cx, cy, r, rminx, rmaxx, rminy, rmaxy, contains):
     """Circle wraps one pole (not both). GeoCircle.cs:181-242."""
     if r == 180.0:
-        return CONTAINS
+        return np.full(len(rminx), CONTAINS, dtype=np.int8)
 
     y_top = cy + r
     if y_top > 90.0:
-        y_top_overlap = y_top - 90.0
-        if rminy >= 90.0 - y_top_overlap:
-            return CONTAINS
+        cap = rminy >= 90.0 - (y_top - 90.0)
     else:
         y_bot = cy - r
-        if y_bot < -90.0:
-            y_bot_overlap = -90.0 - y_bot
-            if rmaxy <= -90.0 + y_bot_overlap:
-                return CONTAINS
+        cap = rmaxy <= -90.0 + (-90.0 - y_bot) if y_bot < -90.0 else np.zeros(len(rminx), bool)
 
-    if _rect_width(rminx, rmaxx) == 360.0:
-        return INTERSECTS
-
-    n = _num_corners_intersect(contains, rminx, rmaxx, rminy, rmaxy)
-    front_x = cx
-    if n == 4:
-        back_x = front_x + 180.0 if front_x <= 0 else front_x - 180.0
-        if intersects(_scalar_rel(relate_x_range(rminx, rmaxx, back_x, back_x))):
-            return INTERSECTS
-        return CONTAINS
-    if n == 0:
-        if intersects(_scalar_rel(relate_x_range(rminx, rmaxx, front_x, front_x))):
-            return INTERSECTS
-        return DISJOINT
-    return INTERSECTS
+    n = _corners_in(contains, rminx, rmaxx, rminy, rmaxy)
+    back_x = cx + 180.0 if cx <= 0 else cx - 180.0
+    back_hit = intersects(relate_x_range(rminx, rmaxx, back_x, back_x))
+    front_hit = intersects(relate_x_range(rminx, rmaxx, cx, cx))
+    return np.select(
+        [cap, _rect_width(rminx, rmaxx) == 360.0, n == 4, n == 0],
+        [CONTAINS, INTERSECTS, np.where(back_hit, INTERSECTS, CONTAINS),
+         np.where(front_hit, INTERSECTS, DISJOINT)],
+        INTERSECTS,
+    ).astype(np.int8)
 
 
-def geo_circle_relate_rect(cx, cy, r, rminx, rmaxx, rminy, rmaxy, calculator: str = "haversine"):
-    """Geo circle x rect relate — the reference's hardest kernel.
+def _relate_rects_across_dateline(cx, cy, r, y_axis, bminx, bmaxx, rminx, rmaxx, rminy, rmaxy, contains):
+    """The circle's bbox or the rect crosses the dateline.
+    GeoCircle.cs:129-179."""
+    n = _corners_in(contains, rminx, rmaxx, rminy, rmaxy)
+    x_in_bbox = relate_x_range(rminx, rmaxx, bminx, bmaxx)
+    # no corners inside: does one of the circle's axes cross the rect?
+    axis_hit = (
+        intersects(relate_y_range(rminy, rmaxy, y_axis, y_axis)) & intersects(x_in_bbox)
+    ) | (
+        intersects(relate_x_range(rminx, rmaxx, cx, cx))
+        & intersects(relate_y_range(rminy, rmaxy, cy - r, cy + r))
+    )
+    return np.select(
+        [_rect_width(rminx, rmaxx) == 360.0, n == 4, n > 0],
+        [INTERSECTS, np.where(x_in_bbox == WITHIN, CONTAINS, INTERSECTS), INTERSECTS],
+        np.where(axis_hit, INTERSECTS, DISJOINT),
+    ).astype(np.int8)
+
+
+def geo_circle_relate_rects(cx, cy, r, rminx, rmaxx, rminy, rmaxy, calculator: str = "haversine"):
+    """Geo circle x rects relate — the reference's hardest kernel, one
+    int8 relation per rect.
 
     GeoCircle.Relate via CircleImpl.Relate(IRectangle) bbox phase
     (CircleImpl.cs:144-161) then GeoCircle.RelateRectanglePhase2
     (GeoCircle.cs:116-179) with the inverse-circle trick (:54-84,:121-124).
+    The circle's state (bbox, horizontal axis, inverse circle, pole
+    wrap) is derived once; the per-rect branches are masks.
     All coordinates in degrees; r in degrees [0, 180].
     """
+    cx, cy, r = float(cx), float(cy), float(r)
+    rminx, rmaxx, rminy, rmaxy = _rects(rminx, rmaxx, rminy, rmaxy)
     bminx, bmaxx, bminy, bmaxy = (float(v) for v in circle_bbox(cx, cy, r))
-    bbox_sect = _scalar_rel(
-        rect_relate_rect(bminx, bmaxx, bminy, bmaxy, rminx, rmaxx, rminy, rmaxy, geo=True)
-    )
-    if bbox_sect in (DISJOINT, WITHIN):
-        return bbox_sect
-    if bbox_sect == CONTAINS and (bminx, bmaxx, bminy, bmaxy) == (rminx, rmaxx, rminy, rmaxy):
-        return WITHIN
+    out, todo = _bbox_phase(bminx, bmaxx, bminy, bmaxy, rminx, rmaxx, rminy, rmaxy, geo=True)
+    if not todo.any():
+        return out
+    sub = tuple(a[todo] for a in (rminx, rmaxx, rminy, rmaxy))
 
-    contains = _geo_contains_fn(cx, cy, r, calculator)
+    def contains(x, y):
+        return distance_deg(cx, cy, x, y, calculator) <= r
 
     # --- GeoCircle.Init (GeoCircle.cs:54-104) derived state ---
     if r > 90.0:
         back_dist = 180.0 - r
         if back_dist > 0:
             back_radius = 180.0 - r
-            back_x = norm_lon_deg(cx + 180.0)
-            back_y = norm_lat_deg(cy + 180.0)
+            back_x = float(norm_lon_deg(cx + 180.0))
+            back_y = float(norm_lat_deg(cy + 180.0))
             # ulp shrink to avoid accidental overlap (GeoCircle.cs:66-69)
             back_radius -= max(
                 float(np.spacing(abs(back_y) + back_radius)),
                 float(np.spacing(abs(back_x) + back_radius)),
             )
-            return np.int8(
-                inverse(geo_circle_relate_rect(back_x, back_y, back_radius, rminx, rmaxx, rminy, rmaxy, calculator))
-            )
+            out[todo] = inverse(geo_circle_relate_rects(back_x, back_y, back_radius, *sub, calculator))
+            return out
         # whole globe (r >= 180): falls through to the pole-wrap path below
         y_axis = cy
     else:
         y_axis = float(circle_lat_horiz_axis_deg(cy, r))
         y_axis = min(max(y_axis, bminy), bmaxy)  # clamp into bbox (GeoCircle.cs:88-101)
 
-    if _rect_width(bminx, bmaxx) == 360.0:
-        return _relate_rect_circle_wraps_pole(cx, cy, r, rminx, rmaxx, rminy, rmaxy, contains)
+    if float(_rect_width(bminx, bmaxx)) == 360.0:
+        out[todo] = _relate_rects_circle_wraps_pole(cx, cy, r, *sub, contains)
+        return out
 
-    if not _crosses_dateline(bminx, bmaxx) and not _crosses_dateline(rminx, rmaxx):
-        return _phase2_euclidean(cx, cy, r, cx, y_axis, rminx, rmaxx, rminy, rmaxy, bbox_sect, contains)
+    rel = np.empty(len(sub[0]), dtype=np.int8)
+    # neither the bbox nor the rect crosses the dateline
+    plain = ~(sub[0] > sub[1]) if not bminx > bmaxx else np.zeros(len(sub[0]), bool)
+    if plain.any():
+        rel[plain] = _phase2_euclidean(
+            cy, cx, y_axis, *(a[plain] for a in sub), out[todo][plain], contains
+        )
+    if not plain.all():
+        rel[~plain] = _relate_rects_across_dateline(
+            cx, cy, r, y_axis, bminx, bmaxx, *(a[~plain] for a in sub), contains
+        )
+    out[todo] = rel
+    return out
 
-    if _rect_width(rminx, rmaxx) == 360.0:
-        return INTERSECTS
 
-    n = _num_corners_intersect(contains, rminx, rmaxx, rminy, rmaxy)
-    if n == 4:
-        x_int = _scalar_rel(relate_x_range(rminx, rmaxx, bminx, bmaxx))
-        if x_int == WITHIN:
-            return CONTAINS
-        return INTERSECTS
-    if n > 0:
-        return INTERSECTS
-
-    # no corners inside: check whether one of the circle's axes crosses r
-    if intersects(_scalar_rel(relate_y_range(rminy, rmaxy, y_axis, y_axis))) and intersects(
-        _scalar_rel(relate_x_range(rminx, rmaxx, bminx, bmaxx))
-    ):
-        return INTERSECTS
-    if intersects(_scalar_rel(relate_x_range(rminx, rmaxx, cx, cx))):
-        y_top, y_bot = cy + r, cy - r
-        if intersects(_scalar_rel(relate_y_range(rminy, rmaxy, y_bot, y_top))):
-            return INTERSECTS
-    return DISJOINT
+def geo_circle_relate_rect(cx, cy, r, rminx, rmaxx, rminy, rmaxy, calculator: str = "haversine"):
+    """Geo circle x rect relate: ``geo_circle_relate_rects`` of one rect."""
+    return np.int8(geo_circle_relate_rects(cx, cy, r, rminx, rmaxx, rminy, rmaxy, calculator)[0])

@@ -35,6 +35,8 @@ from __future__ import annotations
 
 import numpy as np
 
+from spatial4n_spark.kernels.bbox import rect_relate_rect
+from spatial4n_spark.kernels.circle import circle_relate_rects, geo_circle_relate_rects
 from spatial4n_spark.kernels.geohash import BASE32, geohash_decode_bbox
 from spatial4n_spark.kernels.polygon import (
     Circle,
@@ -128,8 +130,17 @@ def _classify_cells(shape, bboxes, geo: bool) -> np.ndarray:
     min_x, max_x, min_y, max_y = bboxes
     if isinstance(shape, (Polygon, MultiPolygon)):
         return _classify_poly_cells(shape, min_x, max_x, min_y, max_y, geo)
-    # Rect / Circle / buffered-line query shapes: exact scalar relate per
-    # cell (cheap kernels)
+    # Circle / Rect query shapes: the exact relate kernel over the whole
+    # level in one call (what relate() runs per cell)
+    if isinstance(shape, Circle):
+        rel = geo_circle_relate_rects if shape.geo else circle_relate_rects
+        return rel(shape.x, shape.y, shape.radius, min_x, max_x, min_y, max_y)
+    if isinstance(shape, Rect):
+        return rect_relate_rect(
+            shape.min_x, shape.max_x, shape.min_y, shape.max_y, min_x, max_x, min_y, max_y, geo
+        )
+    # buffered-line / buffered-polygon query shapes: their exact scalar
+    # relate per cell
     rel_fn = shape.relate_rect if hasattr(shape, "relate_rect") else (
         lambda r: relate(shape, r, geo)
     )

@@ -165,7 +165,7 @@ def test_local_probes_send_one_plan_shape(spark, clustered):
     centre: after one warm radius probe, radius probes at four centres
     not seen before compile no new generated code, and a kNN request
     from a driver list starts no Spark job before the caller collects."""
-    path, _ = clustered
+    path, pts = clustered
     sc = spark.sparkContext
     compiled = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME()
 
@@ -177,6 +177,15 @@ def test_local_probes_send_one_plan_shape(spark, clustered):
         return out.collect()
 
     radius(2.3125, 48.875, 150.0)
+    # a radius at a row's exact distance runs the predicate: both
+    # branches are warm before the count is read
+    lon, lat = pts.select("lon", "lat").where(F.col("lon").isNotNull() & F.col("lat").isNotNull()).first()
+    edge = float(
+        spark.range(1)
+        .select(haversine_km(F.lit(lon), F.lit(lat), F.lit(2.3125), F.lit(48.875)))
+        .first()[0]
+    )
+    radius(2.3125, 48.875, edge)
     n0 = compiled.getCount()
     got = [
         radius(*c)
@@ -201,7 +210,9 @@ import sys
 import numpy as np
 import pandas as pd
 from pyspark.sql import SparkSession
+from pyspark.sql import functions as F
 
+from spatial4n_spark.functions.native import haversine_km
 from spatial4n_spark.io import clustered as C
 
 
@@ -213,8 +224,11 @@ def session():
 
 def probes(spark):
     radius = C.clustered_radius_query(spark, path, 2.0, 48.0, 300.0)
+    # a radius at a row's exact distance: the probe runs the predicate
+    band = C.clustered_radius_query(spark, path, 2.0, 48.0, edge)
     knn = C.clustered_knn(spark, path, [("a", 2.0, 48.0)], 5, id_col="id")
-    return sorted(r.id for r in radius.collect()), sorted(map(tuple, knn.collect()))
+    return (sorted(r.id for r in radius.collect()), sorted(map(tuple, knn.collect())),
+            sorted(r.id for r in band.collect()))
 
 
 path = sys.argv[1]
@@ -223,10 +237,12 @@ rng = np.random.default_rng(3)
 pdf = pd.DataFrame({"id": np.arange(3000), "lon": rng.uniform(-10.0, 10.0, 3000),
                     "lat": rng.uniform(40.0, 55.0, 3000)})
 C.write_clustered(spark.createDataFrame(pdf), path, level=14, files=2)
+edge = spark.range(1).select(haversine_km(
+    F.lit(float(pdf.lon[0])), F.lit(float(pdf.lat[0])), F.lit(2.0), F.lit(48.0))).first()[0]
 before = probes(spark)
 spark.stop()
 spark = session()
-assert probes(spark) == before and before[0] and len(before[1]) == 5
+assert probes(spark) == before and before[0] and len(before[1]) == 5 and 0 in before[2]
 assert len(C._PROBE_COLS) == 2
 assert all(jsc is spark.sparkContext._jsc for jsc, _ in C._PROBE_COLS.values())
 spark.stop()
@@ -612,6 +628,101 @@ def test_local_reads_equal_spark_reads(spark, sf_dir, tmp_path, monkeypatch):
         assert knn_rows(a) == knn_rows(b) and bool(knn_rows(a)) == expect_rows
         if expect_rows:
             C.delete_clustered(spark, small, F.lit(True), strategy="mor")
+
+
+def _ring(qlon, qlat, km, n):
+    """``n`` points at great-circle distance ``km`` from the centre."""
+    from spatial4n_spark.kernels.distance import EARTH_MEAN_RADIUS_KM
+
+    lat1, lon1 = np.radians(qlat), np.radians(qlon)
+    d = km / EARTH_MEAN_RADIUS_KM
+    b = np.linspace(0.0, 2.0 * np.pi, n, endpoint=False) + 0.1
+    lat2 = np.arcsin(np.sin(lat1) * np.cos(d) + np.cos(lat1) * np.sin(d) * np.cos(b))
+    lon2 = lon1 + np.arctan2(
+        np.sin(b) * np.sin(d) * np.cos(lat1), np.cos(d) - np.sin(lat1) * np.sin(lat2)
+    )
+    return (np.degrees(lon2) + 180.0) % 360.0 - 180.0, np.degrees(lat2)
+
+
+def test_settled_radius_probe_equals_band_and_spark(spark, tmp_path, monkeypatch):
+    """The driver-local radius probe settles in numpy when no kept row
+    lies within the kNN slack of the radius, and runs the Catalyst
+    predicate otherwise. Both branches, and the Spark path (budget 0),
+    return the brute-force rows and one schema, over rows at exactly
+    the Catalyst distance, at r +- 0.5 m (in the band) and r +- 2 m
+    (outside it), NaN coordinates and duplicate points, around a hot,
+    a polar and a dateline centre, with r = 0 and r >= 20,016 km. The
+    analyzed plan shows the branch: a Filter only on the band path."""
+    import pandas as pd
+
+    from spatial4n_spark.operators import knn
+
+    centres = [(2.3125, 48.875), (45.0, 90.0), (180.0, -16.5)]
+    rng = np.random.default_rng(11)
+    lon, lat, edges = [], [], []
+
+    def add(x, y):
+        lon.extend(x), lat.extend(y)
+
+    for qlon, qlat in centres:
+        for km in (3.0 - 0.002, 3.0 + 0.002, 5.0 + 0.0005, 5.0 - 0.0005, 8.0):
+            add(*_ring(qlon, qlat, km, 6))
+        edge_row = len(lon) - 7  # the last point at 5 km - 0.5 m
+        x, y = _ring(qlon, qlat, 1.0, 40)
+        add(x + rng.normal(0.0, 0.001, 40), np.clip(y + rng.normal(0.0, 0.001, 40), -90, 90))
+        add([qlon] * 3, [qlat] * 3)  # duplicates at the centre
+        edges.append((qlon, qlat, edge_row))
+    add([np.nan, 2.3125, np.nan], [48.875, np.nan, np.nan])
+    pdf = pd.DataFrame({"id": np.arange(len(lon)), "lon": lon, "lat": lat})
+    path = str(tmp_path / "settle")
+    C.write_clustered(spark.createDataFrame(pdf), path, level=14, files=3)
+    src = spark.createDataFrame(pdf)
+
+    def within(qlon, qlat, r):
+        return src.where(
+            haversine_km(F.col("lon"), F.col("lat"), F.lit(qlon), F.lit(qlat)) <= F.lit(r)
+        )
+
+    def run(qlon, qlat, r):
+        out, st = C.clustered_radius_query(spark, path, qlon, qlat, r, with_stats=True)
+        band = "Filter" in out._jdf.queryExecution().analyzed().toString()
+        assert out._jdf.queryExecution().executedPlan().toString().startswith("LocalTableScan")
+        return sorted(x.id for x in out.collect()), out.schema, st, band
+
+    def exact_km(qlon, qlat, i):  # the row's Catalyst distance
+        return float(
+            src.where(F.col("id") == i)
+            .select(haversine_km(F.col("lon"), F.col("lat"), F.lit(qlon), F.lit(qlat)))
+            .first()[0]
+        )
+
+    cases = [
+        case
+        for qlon, qlat, edge_row in edges
+        for case in [
+            (qlon, qlat, 3.0, False),  # rows at r +- 2 m: settled
+            (qlon, qlat, 5.0, True),  # rows at r +- 0.5 m: band
+            (qlon, qlat, exact_km(qlon, qlat, edge_row), True),  # a row at exactly r
+            (qlon, qlat, 0.0, True),  # the duplicates at distance 0
+            (qlon, qlat, 20_016.0, False),  # the whole sphere
+        ]
+    ]
+    for qlon, qlat, r, want_band in cases:
+        want = sorted(x.id for x in within(qlon, qlat, r).collect())
+        got, schema, st, band = run(qlon, qlat, r)
+        assert band == want_band and got == want and want, (qlon, qlat, r)
+        with monkeypatch.context() as m:  # a slack past every distance: always the band
+            m.setattr(knn, "_SLACK_KM", 1e6)
+            forced = run(qlon, qlat, r)
+        with monkeypatch.context() as m:
+            m.setattr(C, "_LOCAL_READ_ROWS", 0)
+            spark_out, spark_st = C.clustered_radius_query(
+                spark, path, qlon, qlat, r, with_stats=True
+            )
+        assert forced[3] and forced[:3] == (got, schema, st), (qlon, qlat, r)
+        assert sorted(x.id for x in spark_out.collect()) == got, (qlon, qlat, r)
+        assert spark_out.schema == schema and spark_st == st
+        assert all(f.nullable for f in schema) and schema.names == ["id", "lon", "lat"]
 
 
 def test_st_clustered_time_and_space_pruning(spark, sf_dir, tmp_path):

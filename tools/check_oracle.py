@@ -12,6 +12,7 @@ from __future__ import annotations
 
 import contextlib
 import os
+import shutil
 import sys
 import time
 
@@ -34,20 +35,27 @@ TABLES = [
 def duck_con(sf_dir: str) -> duckdb.DuckDBPyConnection:
     con = duckdb.connect()
     # big-sf oracle hardening: the heavy oracles (image DCT chains at
-    # sf1) spill tens of GB — keep the spill off the repo directory and
-    # give the in-memory phase room (less spill to begin with).
-    # Overridable: ORACLE_DUCK_MEM / ORACLE_DUCK_TMP.
+    # sf1) spill tens of GB — keep the spill off the repo directory,
+    # and bound both phases by this host: memory to 40 % of its RAM
+    # (the gate's Spark driver shares it), the spill to 80 % of the
+    # temp directory's free space. An oracle past both stops with
+    # DuckDB's out-of-memory error instead of an OOM kill or a full
+    # disk. Overridable: ORACLE_DUCK_MEM / ORACLE_DUCK_TMP.
     tmp = os.environ.get("ORACLE_DUCK_TMP", "/tmp/duckdb_oracle_tmp")
     with contextlib.suppress(OSError):
         os.makedirs(tmp, exist_ok=True)
+    ram_mb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") // 2**20
     settings = {
         "temp_directory": f"'{tmp}'",
-        "memory_limit": f"'{os.environ.get('ORACLE_DUCK_MEM', '24GB')}'",
+        "memory_limit": f"'{os.environ.get('ORACLE_DUCK_MEM', f'{ram_mb * 2 // 5}MB')}'",
         # our compares are order-insensitive (canon() sorts), so DuckDB
         # need not buffer pipelines to preserve row order — a large
         # memory/spill reduction on the wide-intermediate oracles
         "preserve_insertion_order": "false",
     }
+    with contextlib.suppress(OSError):
+        free_mb = shutil.disk_usage(tmp).free // 2**20
+        settings["max_temp_directory_size"] = f"'{free_mb * 4 // 5}MB'"
     if os.environ.get("ORACLE_DUCK_THREADS"):
         settings["threads"] = str(int(os.environ["ORACLE_DUCK_THREADS"]))
     # one statement per setting: a failed SET must not skip the others
