@@ -13,7 +13,10 @@ docstrings):
   1. **compact** when the manifest lists more than --compact-above
      files: restores the one-sorted-run layout appends degrade
      (``compact_clustered``), materializing pending MOR deletes and
-     evolved columns along the way;
+     evolved columns along the way. On a day-partitioned table (the
+     manifest records its day spec) the count is per day and each day
+     over it compacts on its own — only recently appended days
+     fragment;
   2. **expire** history: keep the newest --keep-last snapshots AND
      everything younger than --older-than-days (the age window wins —
      a table with heavy commit traffic still keeps its full time-travel
@@ -38,10 +41,9 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
-def main() -> int:
+def main(argv: list[str] | None = None) -> int:
     ap = argparse.ArgumentParser()
     ap.add_argument("--table", type=str, required=True)
-    ap.add_argument("--layout", choices=["flat", "st"], default="flat")
     ap.add_argument(
         "--compact-above", type=int, default=8,
         help="compact when the manifest lists more files than this "
@@ -55,39 +57,39 @@ def main() -> int:
         "regardless of --keep-last",
     )
     ap.add_argument("--master", type=str, default=None)
-    args = ap.parse_args()
+    args = ap.parse_args(argv)
 
     from pyspark.sql import SparkSession
 
-    b = SparkSession.builder.appName("table-maintenance")
-    if args.master:
-        b = b.master(args.master)
-    spark = (
-        b.config("spark.sql.shuffle.partitions", "16")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .getOrCreate()
-    )
-    spark.sparkContext.setLogLevel("ERROR")
+    # a caller's live session (a notebook, a test) is used as it is
+    # and left running
+    spark = SparkSession.getActiveSession()
+    owned = spark is None
+    if owned:
+        b = SparkSession.builder.appName("table-maintenance")
+        if args.master:
+            b = b.master(args.master)
+        spark = (
+            b.config("spark.sql.shuffle.partitions", "16")
+            .config("spark.sql.execution.arrow.pyspark.enabled", "true")
+            .getOrCreate()
+        )
+        spark.sparkContext.setLogLevel("ERROR")
 
     from spatial4n_spark.io import clustered as C
-    from spatial4n_spark.io import st_clustered as ST
 
-    flat = args.layout == "flat"
-    load = C.load_manifest if flat else ST.load_st_manifest
-    man0 = load(args.table)
+    man0 = C.load_manifest(args.table)
     n_files0 = len(man0["files"])
 
     compacted = []
     if args.compact_above >= 0:
-        if flat:
+        if not man0.get("day_of"):
             if n_files0 > args.compact_above:
                 C.compact_clustered(
                     spark, args.table, files=args.compact_files
                 )
                 compacted = ["*"]
         else:
-            # ST compaction is per-day (only recently appended days
-            # fragment): compact each day over the threshold
             days: dict[str, int] = {}
             for e in man0["files"]:
                 days[e["day"]] = days.get(e["day"], 0) + 1
@@ -95,9 +97,9 @@ def main() -> int:
                 if n > args.compact_above:
                     # a day never compacts into MORE files than it has —
                     # the rewrite's point is one sorted run, fewer files
-                    ST.compact_st_clustered(
-                        spark, args.table, day,
-                        files=min(args.compact_files, n),
+                    C.compact_clustered(
+                        spark, args.table,
+                        files=min(args.compact_files, n), day=day,
                     )
                     compacted.append(day)
 
@@ -106,23 +108,15 @@ def main() -> int:
         if args.older_than_days is not None
         else None
     )
-    if flat:
-        exp = C.expire_snapshots(
-            args.table, keep_last=args.keep_last, older_than=older_than
-        )
-        orphans = C.remove_orphan_files(args.table)
-        hist = C._history_rows(args.table, C.MANIFEST, C.SNAP_DIR)[-3:]
-    else:
-        exp = ST.expire_st_snapshots(
-            args.table, keep_last=args.keep_last, older_than=older_than
-        )
-        orphans = ST.remove_orphan_st_files(args.table)
-        hist = C._history_rows(args.table, ST.MANIFEST, ST.SNAP_DIR)[-3:]
+    exp = C.expire_snapshots(
+        args.table, keep_last=args.keep_last, older_than=older_than
+    )
+    orphans = C.remove_orphan_files(args.table)
+    hist = C._history_rows(args.table)[-3:]
 
-    man1 = load(args.table)
+    man1 = C.load_manifest(args.table)
     print(json.dumps({
         "table": args.table,
-        "layout": args.layout,
         "files_before": n_files0,
         "files_after": len(man1["files"]),
         "rows": int(sum(e["rows"] for e in man1["files"])),
@@ -132,7 +126,8 @@ def main() -> int:
         "current_snapshot": int(man1["snapshot_id"]),
         "history_tail": hist,
     }))
-    spark.stop()
+    if owned:
+        spark.stop()
     return 0
 
 

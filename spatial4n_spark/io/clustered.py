@@ -1,7 +1,9 @@
 """Hilbert-range-clustered table layout — file-level spatial pruning
 via an Iceberg-style stats manifest.
 
-The third storage layout, completing the scan-pruning ladder:
+The third storage layout, completing the scan-pruning ladder (day
+partitioning, below, is a property a table of this layout records, not
+a fourth layout):
 
 - ``io.tables.write_tiled``  — directory partitions (PartitionFilters).
   Coarse: at 10^12 rows a useful cell level explodes into millions of
@@ -31,6 +33,19 @@ Range widening (``max_ranges`` coalescing) only ever ADDS candidate
 ids; every consumer applies the exact geometric predicate afterwards,
 so pruning can be arbitrarily coarse without affecting results.
 
+**Day partitioning** is a property of a table, recorded once in its
+manifest (``write_clustered(..., day_of=ts)`` stores ``"day_of": ts``),
+not a second table format — the Iceberg partition-spec analog of a
+``day(ts)`` transform. A day table's rows land under
+``_day=YYYY-MM-DD/`` directories, Hilbert-clustered within each day;
+each manifest entry keeps its ``day`` and its manifest-relative
+``file`` (``_day=YYYY-MM-DD/part-....parquet``), the one name every
+reader, delete file and rewrite refers to. Both read executors return
+the ``_day`` column from the entry's directory, a ``[t0, t1]`` window
+prunes whole days before the cell ranges prune files (``_prune``), and
+every lifecycle operation, reader and metadata table below serves flat
+and day tables alike. A flat table's manifest carries no day key.
+
 Reference parity note: the reference has no storage layer — this is
 engine-side design the north rule asks for (Iceberg tables, partition/
 shuffle/skew handled explicitly); the geometry refined against is the
@@ -55,6 +70,7 @@ from spatial4n_spark.kernels.distance import km_to_deg
 from spatial4n_spark.kernels.polygon import Circle
 
 CELL_COL = "cell_r"
+DAY_COL = "_day"
 MANIFEST = "_cluster_manifest.json"
 LOCKFILE = "_cluster.lock"
 SNAP_DIR = "_snapshots"
@@ -82,15 +98,15 @@ _LOCAL_READ_ROWS = 250_000
 _BROADCAST_CELLS = 200_000
 
 
-def lock_path(path: str, lockfile: str = LOCKFILE) -> str:
+def lock_path(path: str) -> str:
     """Where ``table_lock`` puts its lockfile for a table directory —
-    a SIBLING of the directory (``<path>.<lockfile>``), see
+    a SIBLING of the directory (``<path>.<LOCKFILE>``), see
     ``table_lock`` for why."""
-    return os.path.abspath(path).rstrip(os.sep) + "." + lockfile
+    return os.path.abspath(path).rstrip(os.sep) + "." + LOCKFILE
 
 
 @contextlib.contextmanager
-def table_lock(path: str, lockfile: str = LOCKFILE):
+def table_lock(path: str):
     """Single-writer mutual exclusion for manifest read-modify-write.
 
     Appends and compactions update the manifest as read + extend +
@@ -109,15 +125,15 @@ def table_lock(path: str, lockfile: str = LOCKFILE):
     alive and remove it.
 
     The lockfile is a SIBLING of the table directory
-    (``<path>.<lockfile>``), not inside it: the overwrite writers
-    (``write_clustered`` / ``write_st_clustered``) also hold this lock,
-    and Spark's overwrite mode wipes the table directory — an in-dir
+    (``<path>.<LOCKFILE>``), not inside it: the overwrite writer
+    (``write_clustered``) also holds this lock, and Spark's overwrite
+    mode wipes the table directory — an in-dir
     lockfile would be deleted out from under its own holder, silently
     re-admitting concurrent writers mid-overwrite.
     """
     parent = os.path.dirname(os.path.abspath(path))
     os.makedirs(parent, exist_ok=True)
-    lock = lock_path(path, lockfile)
+    lock = lock_path(path)
     try:
         fd = os.open(lock, os.O_CREAT | os.O_EXCL | os.O_WRONLY)
     except FileExistsError:
@@ -149,6 +165,7 @@ def write_clustered(
     lat: str = "lat",
     files: int = 16,
     mode: str = "overwrite",
+    day_of: str | None = None,
 ) -> None:
     """Write ``df`` range-clustered by its level-``level`` S2 cell id.
 
@@ -169,23 +186,93 @@ def write_clustered(
     every other writer: an unlocked overwrite racing a concurrent
     append would delete the appender's files mid-commit and leave a
     manifest referencing dead paths.
+
+    ``day_of`` names a timestamp column and makes this a DAY table:
+    rows are partitioned into ``_day=YYYY-MM-DD`` directories by the
+    column's wall-clock day and range-clustered within each day, and
+    the manifest records the column once. Every later append, upsert,
+    delete, compaction and streaming write reads it from there.
     """
     if mode != "overwrite":
         raise ValueError("write_clustered is overwrite-only; use append_clustered")
+    if day_of is not None:
+        _require_wallclock_ts(df, day_of)
+        df = df.withColumn(DAY_COL, F.date_format(F.col(day_of), "yyyy-MM-dd"))
     be = cell_backend("s2")  # int64 Hilbert ids with the prefix property
     out = df.withColumn(CELL_COL, be.udf(level)(F.col(lat), F.col(lon)))
     with table_lock(path):
-        (
-            out.repartitionByRange(files, F.col(CELL_COL))
-            .sortWithinPartitions(CELL_COL)
-            .write.mode(mode)
-            .parquet(path)
+        new = _write_run(out, path, files, day_of is not None, mode=mode)
+        _write_manifest(
+            path, level, _file_stats(path, new),
+            schema_json=_file_schema(out.schema).json(), inherit=False, day_of=day_of,
         )
-        _write_manifest(path, level, schema_json=out.schema.json())
+
+
+def _require_wallclock_ts(df: DataFrame, ts: str) -> None:
+    """Day partitions are derived with date_format and pruned with
+    str(t0)[:10] — both WALL-CLOCK operations. For a tz-aware TIMESTAMP
+    column date_format renders in the session timezone, so a reader in
+    a different session timezone than the writer would silently drop
+    boundary-day rows. Rather than let that happen, require a
+    session-timezone-independent type: TIMESTAMP_NTZ, DATE, or string.
+    Callers with instant timestamps pick the zone explicitly first,
+    e.g. ``F.convert_timezone(F.lit('UTC'), ts).cast('timestamp_ntz')``.
+    """
+    from pyspark.sql.types import TimestampType
+
+    if isinstance(df.schema[ts].dataType, TimestampType):
+        raise ValueError(
+            "a day-partitioned table requires a session-timezone-independent "
+            f"{ts!r} column (TIMESTAMP_NTZ, DATE, or string); got tz-aware "
+            "TIMESTAMP, whose day boundary depends on the session "
+            "timezone — convert explicitly, e.g. "
+            "to_utc_timestamp(ts, <zone>).cast('timestamp_ntz')"
+        )
 
 
 def _data_files(path: str) -> list[str]:
-    return sorted(n for n in os.listdir(path) if n.endswith(".parquet"))
+    """Manifest-relative names of every data file on disk: the table
+    directory's parquet files and those of its ``_day=`` directories."""
+    out = []
+    for n in os.listdir(path):
+        if n.endswith(".parquet"):
+            out.append(n)
+        elif n.startswith(DAY_COL + "="):
+            out.extend(
+                os.path.join(n, f) for f in os.listdir(os.path.join(path, n))
+                if f.endswith(".parquet")
+            )
+    return sorted(out)
+
+
+def _day_of(name: str) -> str:
+    """The day of a day table's manifest-relative file name
+    (``_day=<day>/<file>``)."""
+    return name.split("=", 1)[1].split(os.sep, 1)[0]
+
+
+def _file_schema(schema):
+    """A written frame's schema as its data files hold it: without the
+    day column, which lives in the directory name."""
+    from pyspark.sql.types import StructType
+
+    return StructType([f for f in schema.fields if f.name != DAY_COL])
+
+
+def _write_run(df: DataFrame, path: str, files: int, day: bool, mode: str = "append") -> list[str]:
+    """The Spark write of every clustered-table writer: ``df`` (with its
+    cell column, and on a day table its day column) as at most
+    ``files`` disjoint ranges of the sort key, sorted within, each a new
+    data file. A day table sorts by (day, cell) and writes under
+    ``_day=`` directories. Returns the new files' names, found by
+    diffing the listing."""
+    keys = [DAY_COL, CELL_COL] if day else [CELL_COL]
+    pre = set(_data_files(path)) if mode == "append" else set()
+    w = df.repartitionByRange(files, *[F.col(k) for k in keys]).sortWithinPartitions(*keys).write
+    if day:
+        w = w.partitionBy(DAY_COL)
+    w.mode(mode).parquet(path)
+    return [n for n in _data_files(path) if n not in pre]
 
 
 def _write_batch(
@@ -214,28 +301,26 @@ def _write_batch(
     already live on the driver, so collecting them runs no Spark job,
     and its schema is derived (``_cell_schema``) without building the
     cell UDF column. Any other batch runs the Spark path:
-    ``repartitionByRange`` + ``sortWithinPartitions`` + a parquet
-    append job, with the new files found by diffing the listing."""
-    tbl = _local_batch(df, level, lon, lat)
+    ``_write_run``. A day table's batch always runs the Spark path,
+    which derives its ``_day`` from the manifest's ``day_of`` column
+    with the expression ``write_clustered`` uses."""
+    day_of = man.get("day_of")
+    tbl = None if day_of else _local_batch(df, level, lon, lat)
     out = None
     if tbl is None:
+        if day_of:
+            _require_wallclock_ts(df, day_of)
+            df = df.withColumn(DAY_COL, F.date_format(F.col(day_of), "yyyy-MM-dd"))
         out = df.withColumn(CELL_COL, cell_backend("s2").udf(level)(F.col(lat), F.col(lon)))
     old_schema = _manifest_schema(man)
     schema_json = None
     if old_schema is not None:
-        out_schema = _cell_schema(df.schema) if out is None else out.schema
+        out_schema = _cell_schema(df.schema) if out is None else _file_schema(out.schema)
         merged, _ = _merge_schemas(old_schema, out_schema)
         schema_json = merged.json()
     if out is None:
         return _file_stats(path, _write_local(tbl, path, files)), schema_json, tbl
-    pre = set(_data_files(path))
-    (
-        out.repartitionByRange(files, F.col(CELL_COL))
-        .sortWithinPartitions(CELL_COL)
-        .write.mode("append")
-        .parquet(path)
-    )
-    return _file_stats(path, [n for n in _data_files(path) if n not in pre]), schema_json, None
+    return _file_stats(path, _write_run(out, path, files, bool(day_of))), schema_json, None
 
 
 def _cell_schema(schema):
@@ -430,6 +515,8 @@ def _file_stats(path: str, names: list[str]) -> list[dict]:
                 "cols": cols,
             }
         )
+        if name.startswith(DAY_COL + "="):  # a day table's file
+            entries[-1]["day"] = _day_of(name)
     return entries
 
 
@@ -445,36 +532,29 @@ def _col_range_keep(e: dict, col: str, lo, hi) -> bool:
     return not (hi < rng[0] or lo > rng[1])
 
 
-def _snap_file_in(path: str, snap_dir: str, snapshot_id: int) -> str:
-    return os.path.join(path, snap_dir, f"snap-{int(snapshot_id):05d}.json")
-
-
 def _snap_file(path: str, snapshot_id: int) -> str:
-    return _snap_file_in(path, SNAP_DIR, snapshot_id)
+    return os.path.join(path, SNAP_DIR, f"snap-{int(snapshot_id):05d}.json")
 
 
-def _versioned_commit(
+def _write_manifest(
     path: str,
     level: int,
     entries: list[dict],
-    operation: str,
-    manifest: str,
-    snap_dir: str,
+    operation: str = "overwrite",
     extra_summary: dict | None = None,
     schema_json: str | None = None,
-    inherit_schema: bool = True,
     deletes: list[dict] | None = None,
     branch: str | None = None,
+    inherit: bool = True,
+    day_of: str | None = None,
 ) -> dict:
-    """Snapshot-versioned manifest commit — the Iceberg snapshot analog,
-    shared by the flat and spatio-temporal layouts (parameterized on
-    their manifest/snapshot-dir names).
+    """Snapshot-versioned manifest commit — the Iceberg snapshot analog.
 
     The manifest is the table's source of truth: readers (and
     compaction's sweep) touch ONLY files it lists, so a data file not
     yet (or no longer) in the current manifest is invisible, never a
     correctness hazard.  Every commit additionally lands an IMMUTABLE
-    copy of the new manifest under ``<snap_dir>/snap-<id>.json``, so the
+    copy of the new manifest under ``_snapshots/snap-<id>.json``, so the
     table carries its own lineage: ``load_manifest(path, snapshot_id=N)``
     time-travels any reader to state N, ``rollback_clustered`` restores
     it, and ``snapshots``/``snapshot_log_df`` expose the per-commit
@@ -501,14 +581,18 @@ def _versioned_commit(
     reader that doesn't name the branch until ``fast_forward_clustered``
     publishes it.  Snapshot ids are allocated globally (1 + the max over
     the main head and every branch head), so lineages interleaving in
-    one ``<snap_dir>`` never collide; the dangling-reuse contract is
+    one ``_snapshots`` never collide; the dangling-reuse contract is
     preserved because a crashed commit's id is exactly the next global
     allocation until some commit lands.
+
+    The table metadata — the schema and the day partition spec
+    (``day_of``) — is inherited from the parent unless ``inherit`` is
+    False: the initial write and a rollback pass their own.
     """
     main = None
     with contextlib.suppress(FileNotFoundError):
-        main = _load_versioned(path, None, manifest, snap_dir)
-    refs = _load_refs(path, snap_dir)
+        main = _load(path)
+    refs = _load_refs(path)
     if branch is not None:
         r = refs.get(branch)
         if r is None or r["type"] != "branch":
@@ -517,15 +601,15 @@ def _versioned_commit(
                 f"cannot commit to {branch!r} on {path}: not a branch "
                 f"(known refs: {kinds})"
             )
-        cur = _load_versioned(path, int(r["snapshot_id"]), manifest, snap_dir)
+        cur = _load(path, int(r["snapshot_id"]))
     else:
         cur = main
     parent = int(cur.get("snapshot_id", 0)) if cur is not None else None
-    os.makedirs(os.path.join(path, snap_dir), exist_ok=True)
+    os.makedirs(os.path.join(path, SNAP_DIR), exist_ok=True)
     if main is not None:
         mid = int(main.get("snapshot_id", 0))
-        if not os.path.exists(_snap_file_in(path, snap_dir, mid)):
-            _atomic_json_write(_snap_file_in(path, snap_dir, mid), main)
+        if not os.path.exists(_snap_file(path, mid)):
+            _atomic_json_write(_snap_file(path, mid), main)
     heads = [int(main.get("snapshot_id", 0))] if main is not None else [0]
     # every ref counts toward the allocation max, tags included: a tag
     # may legally pin a branch-lineage snapshot ABOVE all heads (it was
@@ -540,10 +624,13 @@ def _versioned_commit(
     # empty-result reads and all-zero-row tables need no data file on
     # disk to answer with the right columns. Commits that don't supply
     # one (append/compact) inherit the parent's; rollback restores the
-    # TARGET snapshot's schema verbatim (inherit_schema=False), since
-    # the current one may describe a later overwrite's shape.
-    if schema_json is None and inherit_schema and cur is not None:
-        schema_json = cur.get("schema")
+    # TARGET snapshot's schema verbatim (inherit=False), since the
+    # current one may describe a later overwrite's shape. The day spec
+    # follows the same rule.
+    if inherit and cur is not None:
+        if schema_json is None:
+            schema_json = cur.get("schema")
+        day_of = cur.get("day_of")
     # pending merge-on-read delete files ride the manifest like data
     # files do.  Commits that don't pass a list inherit the parent's;
     # either way each entry's targets are PRUNED to files this commit
@@ -561,6 +648,7 @@ def _versioned_commit(
         "cell_col": CELL_COL,
         "index": "s2",
         "level": level,
+        **({"day_of": day_of} if day_of else {}),
         "schema": schema_json,
         "files": entries,
         "deletes": pruned_dels,
@@ -580,27 +668,24 @@ def _versioned_commit(
             **(extra_summary or {}),
         },
     }
-    _atomic_json_write(_snap_file_in(path, snap_dir, sid), man)
+    _atomic_json_write(_snap_file(path, sid), man)
     if branch is not None:
         # the branch's cut-over: advance the ref, never the manifest —
         # a crash before this line leaves a dangling snapshot exactly
         # like a crashed main commit (id reused next time)
-        refs = _load_refs(path, snap_dir)
+        refs = _load_refs(path)
         refs[branch] = {"type": "branch", "snapshot_id": sid}
-        _write_refs(path, snap_dir, refs)
+        _write_refs(path, refs)
     else:
-        _atomic_json_write(os.path.join(path, manifest), man)
-        _append_history(path, snap_dir, sid, operation, manifest=manifest)
+        _atomic_json_write(os.path.join(path, MANIFEST), man)
+        _append_history(path, sid, operation)
     return man
 
 
 HISTORY_FILE = "history.jsonl"
 
 
-def _append_history(
-    path: str, snap_dir: str, sid: int, event: str,
-    manifest: str = MANIFEST,
-) -> None:
+def _append_history(path: str, sid: int, event: str) -> None:
     """One line per MADE-CURRENT event (the Iceberg ``.history`` table's
     unit): ordinary commits, rollbacks, and fast-forward publishes all
     change which snapshot the main table reads as, and this log records
@@ -615,10 +700,10 @@ def _append_history(
     commit would create a one-line log and the backfill path would
     never fire again, permanently hiding pre-upgrade history from the
     ``.history`` metadata table."""
-    hist = os.path.join(path, snap_dir, HISTORY_FILE)
+    hist = os.path.join(path, SNAP_DIR, HISTORY_FILE)
     seed: list[str] = []
     if not os.path.exists(hist):
-        for m in _history_chain(path, manifest, snap_dir, None):
+        for m in _history_chain(path):
             msid = int(m.get("snapshot_id", 0))
             if msid == int(sid):
                 continue  # the event being appended below
@@ -637,11 +722,11 @@ def _append_history(
         f.write(line + "\n")
 
 
-def _history_rows(path: str, manifest: str, snap_dir: str) -> list[dict]:
+def _history_rows(path: str) -> list[dict]:
     rows = []
     logged = True
     try:
-        with open(os.path.join(path, snap_dir, HISTORY_FILE)) as f:
+        with open(os.path.join(path, SNAP_DIR, HISTORY_FILE)) as f:
             for ln in f:
                 ln = ln.strip()
                 if ln:
@@ -654,7 +739,7 @@ def _history_rows(path: str, manifest: str, snap_dir: str) -> list[dict]:
         # became current when it was committed.  A table WITH a log is
         # never backfilled: a published branch's intermediate commits
         # are main history but were never individually current.
-        for s_ in _snapshot_list(path, manifest, snap_dir):
+        for s_ in snapshots(path):
             rows.append(
                 {
                     "made_current_at": s_["committed_at"],
@@ -663,29 +748,10 @@ def _history_rows(path: str, manifest: str, snap_dir: str) -> list[dict]:
                 }
             )
     rows.sort(key=lambda r: (r["made_current_at"] or 0, r["snapshot_id"]))
-    chain = {
-        int(m.get("snapshot_id", 0))
-        for m in _history_chain(path, manifest, snap_dir, None)
-    }
+    chain = {int(m.get("snapshot_id", 0)) for m in _history_chain(path)}
     for r in rows:
         r["is_current_ancestor"] = int(r["snapshot_id"]) in chain
     return rows
-
-
-def _history_df(spark: SparkSession, rows: list[dict]) -> DataFrame:
-    return spark.createDataFrame(
-        [
-            (
-                float(r["made_current_at"]) if r["made_current_at"] else None,
-                int(r["snapshot_id"]),
-                str(r["event"]),
-                bool(r["is_current_ancestor"]),
-            )
-            for r in rows
-        ],
-        "made_current_at double, snapshot_id int, event string, "
-        "is_current_ancestor boolean",
-    )
 
 
 def history_df(spark: SparkSession, path: str) -> DataFrame:
@@ -696,25 +762,18 @@ def history_df(spark: SparkSession, path: str) -> DataFrame:
     chain; note rollback here commits the target as NEW lineage, so a
     rolled-past commit remains an ancestor until expired — unlike
     Iceberg's pointer reset)."""
-    return _history_df(spark, _history_rows(path, MANIFEST, SNAP_DIR))
-
-
-def _write_manifest(
-    path: str,
-    level: int,
-    entries: list[dict] | None = None,
-    operation: str = "overwrite",
-    extra_summary: dict | None = None,
-    schema_json: str | None = None,
-    deletes: list[dict] | None = None,
-    branch: str | None = None,
-) -> dict:
-    """Flat-layout commit: see ``_versioned_commit``."""
-    if entries is None:
-        entries = _file_stats(path, _data_files(path))
-    return _versioned_commit(
-        path, level, entries, operation, MANIFEST, SNAP_DIR, extra_summary,
-        schema_json=schema_json, deletes=deletes, branch=branch,
+    return spark.createDataFrame(
+        [
+            (
+                float(r["made_current_at"]) if r["made_current_at"] else None,
+                int(r["snapshot_id"]),
+                str(r["event"]),
+                bool(r["is_current_ancestor"]),
+            )
+            for r in _history_rows(path)
+        ],
+        "made_current_at double, snapshot_id int, event string, "
+        "is_current_ancestor boolean",
     )
 
 
@@ -741,10 +800,13 @@ _MANIFEST_CACHE: dict = {}
 _MANIFEST_CACHE_CAP = 64
 
 
-def _load_versioned(
-    path: str, snapshot_id: int | str | None, manifest: str, snap_dir: str
-) -> dict:
-    mpath = os.path.join(path, manifest)
+def _load(path: str, snapshot_id: int | str | None = None) -> dict:
+    """``load_manifest`` without ``as_of``: the lookup the table's own
+    commit, ref and history machinery makes. Readers and writers call
+    ``load_manifest`` itself, once per call, so a wrap of that module
+    attribute (``perfbench``'s ``io.clustered.manifest`` span) counts
+    their manifest reads and not the bookkeeping's."""
+    mpath = os.path.join(path, MANIFEST)
     st = os.stat(mpath)  # FileNotFoundError propagates, as before
     ck = (os.path.abspath(mpath), st.st_mtime_ns, st.st_size)
     cur = _MANIFEST_CACHE.get(ck)
@@ -758,7 +820,7 @@ def _load_versioned(
         return cur
     if isinstance(snapshot_id, str) and not snapshot_id.lstrip("-").isdigit():
         # a named ref (tag or branch): resolve to its pinned/head id
-        refs = _load_refs(path, snap_dir)
+        refs = _load_refs(path)
         if snapshot_id not in refs:
             raise ValueError(
                 f"unknown ref {snapshot_id!r} on {path}; "
@@ -769,12 +831,10 @@ def _load_versioned(
     if int(cur.get("snapshot_id", 0)) == sid:
         return cur
     try:
-        with open(_snap_file_in(path, snap_dir, sid)) as f:
+        with open(_snap_file(path, sid)) as f:
             return json.load(f)
     except FileNotFoundError:
-        known = [
-            s["snapshot_id"] for s in _snapshot_list(path, manifest, snap_dir)
-        ]
+        known = [s["snapshot_id"] for s in snapshots(path)]
         raise ValueError(
             f"snapshot {sid} of {path} does not exist or was expired; "
             f"available snapshots: {known}"
@@ -799,27 +859,31 @@ def load_manifest(
     if as_of is not None:
         if snapshot_id is not None:
             raise ValueError("pass snapshot_id or as_of, not both")
-        snapshot_id = _as_of_versioned(path, as_of, MANIFEST, SNAP_DIR)
-    return _load_versioned(path, snapshot_id, MANIFEST, SNAP_DIR)
+        snapshot_id = snapshot_as_of(path, as_of)
+    return _load(path, snapshot_id)
 
 
-def _as_of_versioned(
-    path: str, ts: float, manifest: str, snap_dir: str
-) -> int:
-    """The snapshot id that was the table's state at unix time ``ts``:
-    the newest MAIN-history MADE-CURRENT event with ``made_current_at``
-    ≤ ts (the Iceberg snapshot-log semantics).  Made-current time, not
-    ``committed_at``: a branch commit staged at t1 and published by
-    ``fast_forward_clustered`` at t2 was NOT the table's state in
-    (t1, t2) — readers at that time saw the pre-publish main head —
-    so resolving by commit time would rewrite observable history.
-    ``_history_rows`` backfills made-current events from commit times
-    for legacy tables that predate the history log (linear lineage:
-    each commit became current when committed), so those keep the old
-    behavior.  Raises if ts precedes the earliest retained state, or
-    if the state current at ts has since been expired."""
+def snapshot_as_of(path: str, ts: float) -> int:
+    """Resolve a unix timestamp to the snapshot id current at that time
+    (the Iceberg timestamp-travel analog).  Pass the result as
+    ``snapshot_id=`` to any reader: ``clustered_radius_query(spark, t,
+    ..., snapshot_id=snapshot_as_of(t, ts))`` — or use
+    ``load_manifest(path, as_of=ts)`` directly.
+
+    The answer is the newest MAIN-history MADE-CURRENT event with
+    ``made_current_at`` ≤ ts (the Iceberg snapshot-log semantics).
+    Made-current time, not ``committed_at``: a branch commit staged at
+    t1 and published by ``fast_forward_clustered`` at t2 was NOT the
+    table's state in (t1, t2) — readers at that time saw the
+    pre-publish main head — so resolving by commit time would rewrite
+    observable history.  ``_history_rows`` backfills made-current
+    events from commit times for legacy tables that predate the
+    history log (linear lineage: each commit became current when
+    committed), so those keep the old behavior.  Raises if ts precedes
+    the earliest retained state, or if the state current at ts has
+    since been expired."""
     ts = float(ts)
-    rows = _history_rows(path, manifest, snap_dir)
+    rows = _history_rows(path)
     best = None
     for r in rows:
         at = r.get("made_current_at")
@@ -835,9 +899,9 @@ def _as_of_versioned(
             "table is younger than ts)"
         )
     sid = int(best["snapshot_id"])
-    cur = _load_versioned(path, None, manifest, snap_dir)
+    cur = _load(path)
     if sid != int(cur.get("snapshot_id", 0)) and not os.path.exists(
-        _snap_file_in(path, snap_dir, sid)
+        _snap_file(path, sid)
     ):
         raise ValueError(
             f"the state of {path} at {ts} (snapshot {sid}) has been "
@@ -847,39 +911,25 @@ def _as_of_versioned(
     return sid
 
 
-def snapshot_as_of(path: str, ts: float) -> int:
-    """Resolve a unix timestamp to the snapshot id current at that time
-    (the Iceberg timestamp-travel analog).  Pass the result as
-    ``snapshot_id=`` to any reader: ``clustered_radius_query(spark, t,
-    ..., snapshot_id=snapshot_as_of(t, ts))`` — or use
-    ``load_manifest(path, as_of=ts)`` directly."""
-    return _as_of_versioned(path, ts, MANIFEST, SNAP_DIR)
-
-
-def _history_chain(
-    path: str,
-    manifest: str,
-    snap_dir: str,
-    head: int | str | None = None,
-) -> list[dict]:
+def _history_chain(path: str, head: int | str | None = None) -> list[dict]:
     """The snapshot MANIFESTS reachable from ``head`` (default: the
     current manifest) by following parent pointers, oldest first.
 
     This walk — not an id scan — is what defines a lineage's history:
     with branches, snapshot ids from different lineages interleave in
-    one ``<snap_dir>``, so "id ≤ head" would claim another branch's
+    one ``_snapshots``, so "id ≤ head" would claim another branch's
     commits.  The walk stops where a parent's snapshot file is missing
     (expired history, or a legacy pre-snapshot manifest): lineage
     truncates where history does.  Dangling snapshots (a crashed
     commit's file, unreachable from any head) are excluded naturally.
     """
-    cur = _load_versioned(path, head, manifest, snap_dir)
+    cur = _load(path, head)
     out = [cur]
     seen = {int(cur.get("snapshot_id", 0))}
     parent = cur.get("parent_id")
     while parent is not None and int(parent) not in seen:
         try:
-            with open(_snap_file_in(path, snap_dir, int(parent))) as f:
+            with open(_snap_file(path, int(parent))) as f:
                 m = json.load(f)
         except FileNotFoundError:
             break
@@ -890,22 +940,24 @@ def _history_chain(
     return out
 
 
-def _snapshot_list(
-    path: str, manifest: str, snap_dir: str, head: int | str | None = None
-) -> list[dict]:
-    mans = _history_chain(path, manifest, snap_dir, head)
-    if head is None:
-        # tag-anchored snapshots survive expire even when the chain
-        # between them and the head was reclaimed (a gap the walk can't
-        # cross) — they are still readable history, so list them.
-        have = {int(m.get("snapshot_id", 0)) for m in mans}
-        for r in _load_refs(path, snap_dir).values():
-            sid = int(r["snapshot_id"])
-            if r["type"] == "tag" and sid not in have:
-                with contextlib.suppress(FileNotFoundError):
-                    with open(_snap_file_in(path, snap_dir, sid)) as f:
-                        mans.append(json.load(f))
-                    have.add(sid)
+def snapshots(path: str) -> list[dict]:
+    """The table's snapshot log (lineage), oldest first: one dict per
+    committed snapshot with id, parent, operation, commit time, and the
+    file/row summary.  Dangling snapshots (a crash between the snapshot
+    write and the manifest cut-over — ids above the current manifest's)
+    are not part of table history and are excluded."""
+    mans = _history_chain(path)
+    # tag-anchored snapshots survive expire even when the chain between
+    # them and the head was reclaimed (a gap the walk can't cross) —
+    # they are still readable history, so list them.
+    have = {int(m.get("snapshot_id", 0)) for m in mans}
+    for r in _load_refs(path).values():
+        sid = int(r["snapshot_id"])
+        if r["type"] == "tag" and sid not in have:
+            with contextlib.suppress(FileNotFoundError):
+                with open(_snap_file(path, sid)) as f:
+                    mans.append(json.load(f))
+                have.add(sid)
     return sorted(
         (
             {
@@ -921,16 +973,9 @@ def _snapshot_list(
     )
 
 
-def snapshots(path: str) -> list[dict]:
-    """The table's snapshot log (lineage), oldest first: one dict per
-    committed snapshot with id, parent, operation, commit time, and the
-    file/row summary.  Dangling snapshots (a crash between the snapshot
-    write and the manifest cut-over — ids above the current manifest's)
-    are not part of table history and are excluded."""
-    return _snapshot_list(path, MANIFEST, SNAP_DIR)
-
-
-def _log_df(spark: SparkSession, snaps: list[dict]) -> DataFrame:
+def snapshot_log_df(spark: SparkSession, path: str) -> DataFrame:
+    """The snapshot log as a DataFrame — the queryable metrics/lineage
+    table the north rule asks checkpointed pipelines to carry."""
     rows = [
         (
             s["snapshot_id"],
@@ -942,7 +987,7 @@ def _log_df(spark: SparkSession, snaps: list[dict]) -> DataFrame:
             int(s["summary"].get("added_files", 0)),
             int(s["summary"].get("removed_files", 0)),
         )
-        for s in snaps
+        for s in snapshots(path)
     ]
     return spark.createDataFrame(
         rows,
@@ -951,20 +996,14 @@ def _log_df(spark: SparkSession, snaps: list[dict]) -> DataFrame:
     )
 
 
-def snapshot_log_df(spark: SparkSession, path: str) -> DataFrame:
-    """The snapshot log as a DataFrame — the queryable metrics/lineage
-    table the north rule asks checkpointed pipelines to carry."""
-    return _log_df(spark, snapshots(path))
-
-
 # --- named refs (tags + branches) -------------------------------------
 #
 # The Iceberg refs analog, stored beside the snapshot files
-# (``<snap_dir>/refs.json``, atomic commits under the table lock):
+# (``_snapshots/refs.json``, atomic commits under the table lock):
 #
 # - a TAG is a named, immutable pointer to a snapshot id.  Every reader
 #   that takes ``snapshot_id`` also accepts a ref NAME (resolved in
-#   ``_load_versioned``), and ``expire_snapshots`` retains tagged
+#   ``load_manifest``), and ``expire_snapshots`` retains tagged
 #   snapshots — and the data files they reference — regardless of
 #   ``keep_last``, so a tag is a retention anchor ("audit-2026Q3") as
 #   well as a readable name.
@@ -975,7 +1014,7 @@ def snapshot_log_df(spark: SparkSession, path: str) -> DataFrame:
 #   by name (``snapshot_id="staging"``), and
 #   ``fast_forward_clustered`` publishes it — the Iceberg
 #   write-audit-publish (WAP) flow.  Lineages share one id sequence
-#   (globally allocated in ``_versioned_commit``) and one directory;
+#   (globally allocated in ``_write_manifest``) and one directory;
 #   expire retains every snapshot a branch can reach, so drop stale
 #   branches to release history.  Merging diverged lineages is out of
 #   scope (fast-forward requires main to be an ancestor of the branch
@@ -984,16 +1023,12 @@ def snapshot_log_df(spark: SparkSession, path: str) -> DataFrame:
 REFS_FILE = "refs.json"
 
 
-def _refs_path(path: str, snap_dir: str) -> str:
-    return os.path.join(path, snap_dir, REFS_FILE)
-
-
-def _load_refs(path: str, snap_dir: str) -> dict[str, dict]:
+def _load_refs(path: str) -> dict[str, dict]:
     """Normalized refs: ``{name: {"type": "tag"|"branch", "snapshot_id": N}}``.
     Legacy files (round-4 tags were stored as plain ints) read as tags,
     so every existing table keeps working unmodified."""
     try:
-        with open(_refs_path(path, snap_dir)) as f:
+        with open(os.path.join(path, SNAP_DIR, REFS_FILE)) as f:
             raw = json.load(f)
     except FileNotFoundError:
         return {}
@@ -1009,55 +1044,45 @@ def _load_refs(path: str, snap_dir: str) -> dict[str, dict]:
     return out
 
 
-def _write_refs(path: str, snap_dir: str, refs: dict[str, dict]) -> None:
+def _write_refs(path: str, refs: dict[str, dict]) -> None:
     """Atomic refs commit.  Tags serialize as plain ints (the legacy
     on-disk shape, so a round-4 reader of this table still resolves
     them); branches need the typed form."""
-    os.makedirs(os.path.join(path, snap_dir), exist_ok=True)
+    os.makedirs(os.path.join(path, SNAP_DIR), exist_ok=True)
     raw = {
         k: (v["snapshot_id"] if v["type"] == "tag" else v)
         for k, v in refs.items()
     }
-    _atomic_json_write(_refs_path(path, snap_dir), raw)
+    _atomic_json_write(os.path.join(path, SNAP_DIR, REFS_FILE), raw)
 
 
-def _live_ids(path: str, manifest: str, snap_dir: str) -> set[int]:
+def _live_ids(path: str) -> set[int]:
     """Every snapshot id that is readable history: the main chain, each
     branch's chain, and tag-pinned snapshots.  A dangling snapshot file
     (crashed commit, unreachable from any head) is NOT here — its id
     will be reused by the next commit, so nothing may pin it."""
-    refs = _load_refs(path, snap_dir)
-    ids = {
-        s["snapshot_id"] for s in _snapshot_list(path, manifest, snap_dir)
-    }
-    for r in refs.values():
+    ids = {s["snapshot_id"] for s in snapshots(path)}
+    for r in _load_refs(path).values():
         if r["type"] == "branch":
             ids.update(
                 int(m.get("snapshot_id", 0))
-                for m in _history_chain(
-                    path, manifest, snap_dir, int(r["snapshot_id"])
-                )
+                for m in _history_chain(path, int(r["snapshot_id"]))
             )
     return ids
 
 
-def _set_ref_versioned(
-    path: str,
-    name: str,
-    snapshot_id: int | None,
-    manifest: str,
-    snap_dir: str,
-    lockfile: str,
-    ref_type: str = "tag",
-) -> int:
+def _set_ref(path: str, name: str, snapshot_id: int | None, ref_type: str) -> int:
+    """Pin ref ``name`` of kind ``ref_type`` at ``snapshot_id`` (default:
+    the current one): the one body of ``create_tag`` and
+    ``create_branch``."""
     name = str(name)
     if not name or name.lstrip("-").isdigit():
         raise ValueError(
             f"invalid ref name {name!r}: must be non-empty and not "
             "purely numeric (numeric strings read as snapshot ids)"
         )
-    with table_lock(path, lockfile):
-        cur = _load_versioned(path, None, manifest, snap_dir)
+    with table_lock(path):
+        cur = _load(path)
         cid = int(cur.get("snapshot_id", 0))
         if snapshot_id is None:
             snapshot_id = cid
@@ -1065,44 +1090,28 @@ def _set_ref_versioned(
             # must name an existing (retained, reachable) snapshot — a
             # dangling snapshot file from a crashed commit is not
             # history and its id will be reused by the next commit
-            live = _live_ids(path, manifest, snap_dir)
+            live = _live_ids(path)
             if int(snapshot_id) not in live:
                 raise ValueError(
                     f"snapshot {int(snapshot_id)} of {path} does not exist "
                     f"(current is {cid}); available snapshots: "
                     f"{sorted(live)}"
                 )
-        refs = _load_refs(path, snap_dir)
+        refs = _load_refs(path)
         old = refs.get(name)
         if old is not None and old["type"] != ref_type:
             raise ValueError(
                 f"ref {name!r} on {path} is a {old['type']}, not a "
                 f"{ref_type}; drop it first to reuse the name"
             )
-        if int(snapshot_id) == cid and not os.path.exists(
-            _snap_file_in(path, snap_dir, cid)
-        ):
+        if int(snapshot_id) == cid and not os.path.exists(_snap_file(path, cid)):
             # pinning the head of a legacy (pre-snapshot) table: land
             # its snapshot file now so the ref survives the next commit
-            os.makedirs(os.path.join(path, snap_dir), exist_ok=True)
-            _atomic_json_write(_snap_file_in(path, snap_dir, cid), cur)
+            os.makedirs(os.path.join(path, SNAP_DIR), exist_ok=True)
+            _atomic_json_write(_snap_file(path, cid), cur)
         refs[name] = {"type": ref_type, "snapshot_id": int(snapshot_id)}
-        _write_refs(path, snap_dir, refs)
+        _write_refs(path, refs)
         return int(snapshot_id)
-
-
-def _drop_ref_versioned(
-    path: str, name: str, snap_dir: str, lockfile: str
-) -> int:
-    with table_lock(path, lockfile):
-        refs = _load_refs(path, snap_dir)
-        if name not in refs:
-            raise ValueError(
-                f"unknown ref {name!r} on {path}; known refs: {sorted(refs)}"
-            )
-        sid = int(refs.pop(name)["snapshot_id"])
-        _write_refs(path, snap_dir, refs)
-        return sid
 
 
 def create_tag(path: str, name: str, snapshot_id: int | None = None) -> int:
@@ -1111,21 +1120,27 @@ def create_tag(path: str, name: str, snapshot_id: int | None = None) -> int:
     "name")``, every query surface) and anchors the snapshot — and the
     files it references — against ``expire_snapshots`` until dropped.
     Returns the pinned snapshot id."""
-    return _set_ref_versioned(path, name, snapshot_id, MANIFEST, SNAP_DIR, LOCKFILE)
+    return _set_ref(path, name, snapshot_id, "tag")
 
 
 def drop_tag(path: str, name: str) -> int:
     """Remove a tag; its snapshot becomes expirable again.  Returns the
     snapshot id the tag pointed at."""
-    return _drop_ref_versioned(path, name, SNAP_DIR, LOCKFILE)
+    with table_lock(path):
+        refs = _load_refs(path)
+        if name not in refs:
+            raise ValueError(
+                f"unknown ref {name!r} on {path}; known refs: {sorted(refs)}"
+            )
+        sid = int(refs.pop(name)["snapshot_id"])
+        _write_refs(path, refs)
+        return sid
 
 
 def table_refs(path: str) -> dict[str, int]:
     """All named refs on the table: ``{name: snapshot_id}`` (a branch
     reports its current head; see ``refs_df`` for types)."""
-    return {
-        k: int(v["snapshot_id"]) for k, v in _load_refs(path, SNAP_DIR).items()
-    }
+    return {k: int(v["snapshot_id"]) for k, v in _load_refs(path).items()}
 
 
 def refs_df(spark: SparkSession, path: str) -> DataFrame:
@@ -1133,7 +1148,7 @@ def refs_df(spark: SparkSession, path: str) -> DataFrame:
     analog: tags (immutable pins) and branches (writable heads)."""
     rows = [
         (k, int(v["snapshot_id"]), v["type"])
-        for k, v in sorted(_load_refs(path, SNAP_DIR).items())
+        for k, v in sorted(_load_refs(path).items())
     ]
     return spark.createDataFrame(
         rows, "name string, snapshot_id int, type string"
@@ -1149,26 +1164,15 @@ def create_branch(path: str, name: str, snapshot_id: int | None = None) -> int:
     table.  While the branch exists, every snapshot it can reach — and
     the data files they list — survives ``expire_snapshots``.  Returns
     the snapshot id the branch starts at."""
-    return _set_ref_versioned(
-        path, name, snapshot_id, MANIFEST, SNAP_DIR, LOCKFILE,
-        ref_type="branch",
-    )
+    return _set_ref(path, name, snapshot_id, "branch")
 
 
 def drop_branch(path: str, name: str) -> int:
     """Remove a branch; its unpublished commits become dangling history
     (reclaimed by ``expire_snapshots``).  Returns the head it was at."""
-    return _drop_branch_versioned(path, name, SNAP_DIR, LOCKFILE)
-
-
-def _drop_branch_versioned(
-    path: str, name: str, snap_dir: str, lockfile: str
-) -> int:
-    with table_lock(path, lockfile):
-        refs = _load_refs(path, snap_dir)
-        if refs.get(name, {}).get("type") == "tag":
-            raise ValueError(f"ref {name!r} on {path} is a tag; use drop_tag")
-    return _drop_ref_versioned(path, name, snap_dir, lockfile)
+    if _load_refs(path).get(name, {}).get("type") == "tag":
+        raise ValueError(f"ref {name!r} on {path} is a tag; use drop_tag")
+    return drop_tag(path, name)
 
 
 def fast_forward_clustered(path: str, name: str) -> dict:
@@ -1185,14 +1189,8 @@ def fast_forward_clustered(path: str, name: str) -> dict:
     The branch ref is left pointing at the (now published) head; drop it
     when done.  Returns ``{"published": head, "from": old_main_head}``.
     A no-op (branch head == main head) returns the same shape."""
-    return _fast_forward_versioned(path, name, MANIFEST, SNAP_DIR, LOCKFILE)
-
-
-def _fast_forward_versioned(
-    path: str, name: str, manifest: str, snap_dir: str, lockfile: str
-) -> dict:
-    with table_lock(path, lockfile):
-        refs = _load_refs(path, snap_dir)
+    with table_lock(path):
+        refs = _load_refs(path)
         r = refs.get(name)
         if r is None or r["type"] != "branch":
             kinds = {k: v["type"] for k, v in refs.items()}
@@ -1201,14 +1199,13 @@ def _fast_forward_versioned(
                 f"branch (known refs: {kinds})"
             )
         head = int(r["snapshot_id"])
-        target = _load_versioned(path, head, manifest, snap_dir)
-        main = _load_versioned(path, None, manifest, snap_dir)
+        target = _load(path, head)
+        main = _load(path)
         mid = int(main.get("snapshot_id", 0))
         if head == mid:
             return {"published": head, "from": mid}
         chain_ids = {
-            int(m.get("snapshot_id", 0))
-            for m in _history_chain(path, manifest, snap_dir, head)
+            int(m.get("snapshot_id", 0)) for m in _history_chain(path, head)
         }
         if mid not in chain_ids:
             raise ValueError(
@@ -1217,12 +1214,10 @@ def _fast_forward_versioned(
                 "is not an ancestor of the branch head — the lineages "
                 "diverged (re-stage on a fresh branch to publish)"
             )
-        if not os.path.exists(_snap_file_in(path, snap_dir, mid)):
-            _atomic_json_write(_snap_file_in(path, snap_dir, mid), main)
-        _atomic_json_write(os.path.join(path, manifest), target)
-        _append_history(
-            path, snap_dir, head, f"fast-forward:{name}", manifest=manifest
-        )
+        if not os.path.exists(_snap_file(path, mid)):
+            _atomic_json_write(_snap_file(path, mid), main)
+        _atomic_json_write(os.path.join(path, MANIFEST), target)
+        _append_history(path, head, f"fast-forward:{name}")
         return {"published": head, "from": mid}
 
 
@@ -1247,7 +1242,7 @@ def cherry_pick_clustered(path: str, snapshot_id: int | str) -> dict:
     ``snapshot_id`` may be an id or a ref name (e.g. a diverged
     branch's head).  Returns the new main manifest."""
     with table_lock(path):
-        target = _load_versioned(path, snapshot_id, MANIFEST, SNAP_DIR)
+        target = _load(path, snapshot_id)
         sid = int(target.get("snapshot_id", 0))
         if target.get("parent_id") is None:
             raise ValueError(
@@ -1255,9 +1250,7 @@ def cherry_pick_clustered(path: str, snapshot_id: int | str) -> dict:
                 "parent (an initial overwrite is not an append)"
             )
         try:
-            parent = _load_versioned(
-                path, int(target["parent_id"]), MANIFEST, SNAP_DIR
-            )
+            parent = _load(path, int(target["parent_id"]))
         except ValueError:
             raise ValueError(
                 f"cannot cherry-pick snapshot {sid} of {path}: its parent "
@@ -1294,7 +1287,7 @@ def cherry_pick_clustered(path: str, snapshot_id: int | str) -> dict:
                 f"cannot cherry-pick snapshot {sid} of {path}: it added "
                 "no files (nothing to re-apply)"
             )
-        main = _load_versioned(path, None, MANIFEST, SNAP_DIR)
+        main = _load(path)
         dup = {e["file"] for e in main["files"]} & {e["file"] for e in added}
         if dup:
             raise ValueError(
@@ -1318,9 +1311,7 @@ def cherry_pick_clustered(path: str, snapshot_id: int | str) -> dict:
         )
 
 
-def _added_map(
-    path: str, manifest: str, snap_dir: str, upto: int | None = None
-) -> dict[str, int]:
+def _added_map(path: str, upto: int | str | None = None) -> dict[str, int]:
     """``file -> snapshot id that FIRST listed it`` — per-file lineage,
     walked oldest-first over the retained snapshot files (the Iceberg
     ``added_snapshot_id`` analog).  After ``expire_snapshots`` the walk
@@ -1332,24 +1323,41 @@ def _added_map(
     name) — the chain walk, not an id filter, keeps another branch's
     interleaved commits out of this lineage's answer."""
     added: dict[str, int] = {}
-    for m in _history_chain(path, manifest, snap_dir, upto):
+    for m in _history_chain(path, upto):
         sid = int(m.get("snapshot_id", 0))
         for e in m["files"]:
             added.setdefault(e["file"], sid)
     return added
 
 
-def _remove_orphans_versioned(
-    path: str, manifest: str, snap_dir: str, data_files: list[str]
-) -> dict:
-    ref = _referenced_in(path, manifest, snap_dir)
-    removed = [n for n in data_files if n not in ref]
+def _sweep(path: str) -> tuple[list[str], list[str]]:
+    """Delete every data file and every MOR delete file (``_deletes/``)
+    that neither the current manifest nor ANY snapshot file on disk
+    references (dangling ones included — retaining is always safe):
+    crash orphans and expired history. Returns the removed names (data
+    files, delete files). Runs under the caller's table lock."""
+    import shutil
+
+    mans = [_load(path)]
+    sd = os.path.join(path, SNAP_DIR)
+    if os.path.isdir(sd):
+        for n in os.listdir(sd):
+            if n.startswith("snap-") and n.endswith(".json"):
+                with open(os.path.join(sd, n)) as f:
+                    mans.append(json.load(f))
+    ref = {e["file"] for m in mans for e in m["files"]}
+    ref_dels = {d["file"] for m in mans for d in m.get("deletes") or []}
+    removed = [n for n in _data_files(path) if n not in ref]
     for n in removed:
         os.remove(os.path.join(path, n))
-    return {
-        "removed_files": removed,
-        "removed_delete_files": _sweep_delete_dir(path, manifest, snap_dir),
-    }
+    dd = os.path.join(path, DELETE_DIR)
+    removed_dels = []
+    for n in os.listdir(dd) if os.path.isdir(dd) else []:
+        rel = os.path.join(DELETE_DIR, n)
+        if rel not in ref_dels:
+            shutil.rmtree(os.path.join(dd, n), ignore_errors=True)
+            removed_dels.append(rel)
+    return removed, removed_dels
 
 
 def remove_orphan_files(path: str) -> dict:
@@ -1363,94 +1371,8 @@ def remove_orphan_files(path: str) -> dict:
     because every writer holds ``table_lock`` across its data write AND
     its commit, and this sweep takes the same lock."""
     with table_lock(path):
-        return _remove_orphans_versioned(path, MANIFEST, SNAP_DIR, _data_files(path))
-
-
-def _referenced_in(path: str, manifest: str, snap_dir: str) -> set[str]:
-    """Every data file referenced by the current manifest or ANY
-    snapshot file on disk (dangling ones included — retaining is always
-    safe).  The sweep complement of this set is garbage: crash orphans
-    and expired history."""
-    ref = {e["file"] for e in _load_versioned(path, None, manifest, snap_dir)["files"]}
-    sd = os.path.join(path, snap_dir)
-    if os.path.isdir(sd):
-        for n in os.listdir(sd):
-            if n.startswith("snap-") and n.endswith(".json"):
-                with open(os.path.join(sd, n)) as f:
-                    ref.update(e["file"] for e in json.load(f)["files"])
-    return ref
-
-
-def _referenced_files(path: str) -> set[str]:
-    return _referenced_in(path, MANIFEST, SNAP_DIR)
-
-
-def _referenced_delete_files(path: str, manifest: str, snap_dir: str) -> set[str]:
-    """Every MOR delete file referenced by the current manifest or any
-    snapshot file on disk — the sweep-retention set for ``_deletes/``
-    (mirrors ``_referenced_in`` for data files)."""
-    cur = _load_versioned(path, None, manifest, snap_dir)
-    ref = {d["file"] for d in (cur.get("deletes") or [])}
-    sd = os.path.join(path, snap_dir)
-    if os.path.isdir(sd):
-        for n in os.listdir(sd):
-            if n.startswith("snap-") and n.endswith(".json"):
-                with open(os.path.join(sd, n)) as f:
-                    ref.update(
-                        d["file"] for d in (json.load(f).get("deletes") or [])
-                    )
-    return ref
-
-
-def _sweep_delete_dir(path: str, manifest: str, snap_dir: str) -> list[str]:
-    """Remove every MOR delete file under ``_deletes/`` that NO retained
-    snapshot references (applied-and-expired history, or crash orphans
-    from a delete that died before its commit)."""
-    import shutil
-
-    dd = os.path.join(path, DELETE_DIR)
-    if not os.path.isdir(dd):
-        return []
-    ref = _referenced_delete_files(path, manifest, snap_dir)
-    removed = []
-    for n in os.listdir(dd):
-        rel = os.path.join(DELETE_DIR, n)
-        if rel not in ref:
-            shutil.rmtree(os.path.join(dd, n), ignore_errors=True)
-            removed.append(rel)
-    return removed
-
-
-def _rollback_versioned(
-    path: str, snapshot_id: int, manifest: str, snap_dir: str
-) -> dict:
-    target = _load_versioned(path, snapshot_id, manifest, snap_dir)
-    missing = [
-        e["file"]
-        for e in target["files"]
-        if not os.path.exists(os.path.join(path, e["file"]))
-    ] + [
-        d["file"]
-        for d in (target.get("deletes") or [])
-        if not os.path.exists(os.path.join(path, d["file"]))
-    ]
-    if missing:
-        raise ValueError(
-            f"cannot roll back {path} to snapshot {snapshot_id}: "
-            f"{len(missing)} data files were expired (first: {missing[0]})"
-        )
-    return _versioned_commit(
-        path,
-        int(target["level"]),
-        target["files"],
-        "rollback",
-        manifest,
-        snap_dir,
-        extra_summary={"rolled_back_to": int(snapshot_id)},
-        schema_json=target.get("schema"),
-        inherit_schema=False,
-        deletes=target.get("deletes") or [],
-    )
+        removed, removed_dels = _sweep(path)
+        return {"removed_files": removed, "removed_delete_files": removed_dels}
 
 
 def rollback_clustered(path: str, snapshot_id: int) -> dict:
@@ -1460,74 +1382,32 @@ def rollback_clustered(path: str, snapshot_id: int) -> dict:
     data files to still exist (i.e. not reclaimed by
     ``expire_snapshots``)."""
     with table_lock(path):
-        return _rollback_versioned(path, snapshot_id, MANIFEST, SNAP_DIR)
-
-
-def _expire_versioned(
-    path: str,
-    keep_last: int,
-    manifest: str,
-    snap_dir: str,
-    data_files: list[str],
-    older_than: float | None = None,
-) -> dict:
-    cur = _load_versioned(path, None, manifest, snap_dir)
-    cid = int(cur.get("snapshot_id", 0))
-    ids = [s["snapshot_id"] for s in _snapshot_list(path, manifest, snap_dir)]
-    refs = _load_refs(path, snap_dir)
-    # tagged snapshots are retention anchors: never expired (nor their
-    # files swept) while the tag exists, regardless of keep_last; a
-    # branch anchors its ENTIRE reachable chain (fast-forward must be
-    # able to publish it) — drop stale branches to release history
-    anchored = {
-        int(r["snapshot_id"]) for r in refs.values() if r["type"] == "tag"
-    }
-    for r in refs.values():
-        if r["type"] == "branch":
-            anchored.update(
-                int(m.get("snapshot_id", 0))
-                for m in _history_chain(
-                    path, manifest, snap_dir, int(r["snapshot_id"])
-                )
-            )
-    retain = set(sorted(ids)[-max(int(keep_last), 1):]) | {cid} | anchored
-    expired = []
-    sd = os.path.join(path, snap_dir)
-    on_disk = (
-        [
-            int(n[5:-5])
-            for n in os.listdir(sd)
-            if n.startswith("snap-") and n.endswith(".json")
+        target = _load(path, snapshot_id)
+        missing = [
+            e["file"]
+            for e in target["files"]
+            if not os.path.exists(os.path.join(path, e["file"]))
+        ] + [
+            d["file"]
+            for d in (target.get("deletes") or [])
+            if not os.path.exists(os.path.join(path, d["file"]))
         ]
-        if os.path.isdir(sd)
-        else []
-    )
-    # sweep over every snapshot FILE, not just main history: abandoned
-    # branch commits (ref dropped) and dangling crashed commits are
-    # unreachable history — this is the operation that reclaims them
-    for sid in on_disk:
-        if sid in retain:
-            continue
-        if older_than is not None:
-            # age-based retention (the Iceberg older_than analog): a
-            # snapshot committed at/after the horizon survives this
-            # sweep even when keep_last would have dropped it
-            try:
-                with open(_snap_file_in(path, snap_dir, sid)) as f:
-                    at = json.load(f).get("committed_at")
-            except FileNotFoundError:
-                continue
-            if at is not None and float(at) >= float(older_than):
-                continue
-        with contextlib.suppress(FileNotFoundError):
-            os.remove(_snap_file_in(path, snap_dir, sid))
-        expired.append(sid)
-    ref = _referenced_in(path, manifest, snap_dir)
-    removed = [n for n in data_files if n not in ref]
-    for n in removed:
-        os.remove(os.path.join(path, n))
-    removed += _sweep_delete_dir(path, manifest, snap_dir)
-    return {"expired_snapshots": expired, "removed_files": removed}
+        if missing:
+            raise ValueError(
+                f"cannot roll back {path} to snapshot {snapshot_id}: "
+                f"{len(missing)} data files were expired (first: {missing[0]})"
+            )
+        return _write_manifest(
+            path,
+            int(target["level"]),
+            target["files"],
+            "rollback",
+            extra_summary={"rolled_back_to": int(snapshot_id)},
+            schema_json=target.get("schema"),
+            deletes=target.get("deletes") or [],
+            inherit=False,
+            day_of=target.get("day_of"),
+        )
 
 
 def expire_snapshots(
@@ -1543,10 +1423,56 @@ def expire_snapshots(
     now - 7*86400)` keeps a week of time travel regardless of commit
     volume); tags/branches anchor as always."""
     with table_lock(path):
-        return _expire_versioned(
-            path, keep_last, MANIFEST, SNAP_DIR, _data_files(path),
-            older_than=older_than,
+        cid = int(_load(path).get("snapshot_id", 0))
+        ids = [s["snapshot_id"] for s in snapshots(path)]
+        refs = _load_refs(path)
+        # tagged snapshots are retention anchors: never expired (nor their
+        # files swept) while the tag exists, regardless of keep_last; a
+        # branch anchors its ENTIRE reachable chain (fast-forward must be
+        # able to publish it) — drop stale branches to release history
+        anchored = {
+            int(r["snapshot_id"]) for r in refs.values() if r["type"] == "tag"
+        }
+        for r in refs.values():
+            if r["type"] == "branch":
+                anchored.update(
+                    int(m.get("snapshot_id", 0))
+                    for m in _history_chain(path, int(r["snapshot_id"]))
+                )
+        retain = set(sorted(ids)[-max(int(keep_last), 1):]) | {cid} | anchored
+        expired = []
+        sd = os.path.join(path, SNAP_DIR)
+        on_disk = (
+            [
+                int(n[5:-5])
+                for n in os.listdir(sd)
+                if n.startswith("snap-") and n.endswith(".json")
+            ]
+            if os.path.isdir(sd)
+            else []
         )
+        # sweep over every snapshot FILE, not just main history: abandoned
+        # branch commits (ref dropped) and dangling crashed commits are
+        # unreachable history — this is the operation that reclaims them
+        for sid in on_disk:
+            if sid in retain:
+                continue
+            if older_than is not None:
+                # age-based retention (the Iceberg older_than analog): a
+                # snapshot committed at/after the horizon survives this
+                # sweep even when keep_last would have dropped it
+                try:
+                    with open(_snap_file(path, sid)) as f:
+                        at = json.load(f).get("committed_at")
+                except FileNotFoundError:
+                    continue
+                if at is not None and float(at) >= float(older_than):
+                    continue
+            with contextlib.suppress(FileNotFoundError):
+                os.remove(_snap_file(path, sid))
+            expired.append(sid)
+        removed, removed_dels = _sweep(path)
+        return {"expired_snapshots": expired, "removed_files": removed + removed_dels}
 
 
 def append_clustered(
@@ -1612,6 +1538,7 @@ def compact_clustered(
     level: int | None = None,
     lon: str = "lon",
     lat: str = "lat",
+    day: str | None = None,
 ) -> None:
     """Rewrite the table as one globally range-clustered run (the
     Iceberg rewrite-data-files / sort-compaction analog), in place and
@@ -1641,12 +1568,23 @@ def compact_clustered(
     manifest's level changes with the same cut-over, so every reader
     plans covers against the level of the snapshot it reads (a
     time-traveled query still prunes with the OLD level over the OLD
-    files)."""
+    files).
+
+    On a day table, ``day`` ('YYYY-MM-DD') rewrites that day's files
+    only — the realistic loop, since only recently appended days
+    fragment — and every other day's entries stay verbatim."""
     with table_lock(path):
         man = load_manifest(path)
         cur_level = int(man["level"])
         new_level = cur_level if level is None else int(level)
-        listed = [e["file"] for e in man["files"]]
+        entries = man["files"]
+        if day is not None:
+            if not man.get("day_of"):
+                raise ValueError(f"compact_clustered(day=...): {path} is not day-partitioned")
+            if new_level != cur_level:
+                raise ValueError("re-clustering (level=) rewrites every day; pass no day")
+            entries = [e for e in entries if e["day"] == day]
+        listed = [e["file"] for e in entries]
         if listed:
             # manifest-schema read: compaction MATERIALIZES evolved
             # columns (pre-evolution files rewrite with explicit NULLs)
@@ -1660,24 +1598,14 @@ def compact_clustered(
                 cur = cur.drop(CELL_COL).withColumn(
                     CELL_COL, be.udf(new_level)(F.col(lat), F.col(lon))
                 )
-            pre = set(_data_files(path))
-            (
-                cur.repartitionByRange(files, F.col(CELL_COL))
-                .sortWithinPartitions(CELL_COL)
-                .write.mode("append")
-                .parquet(path)
-            )
-            new = [n for n in _data_files(path) if n not in pre]
+            new = _write_run(cur, path, files, bool(man.get("day_of")))
+            others = [e for e in man["files"] if e["day"] != day] if day else []
             _write_manifest(
-                path, new_level, _file_stats(path, new), operation="replace"
+                path, new_level, others + _file_stats(path, new), operation="replace"
             )
         elif new_level != cur_level:  # empty table: metadata-only change
             _write_manifest(path, new_level, [], operation="replace")
-        keep = _referenced_files(path)
-        for n in _data_files(path):
-            if n not in keep:
-                os.remove(os.path.join(path, n))
-        _sweep_delete_dir(path, MANIFEST, SNAP_DIR)
+        _sweep(path)
 
 
 def compaction_advice(
@@ -1801,33 +1729,39 @@ def _per_file_hits(spark: SparkSession, path: str, names, cond, man) -> dict:
     return {r["_src"]: int(r["count"]) for r in rows}
 
 
-def _delete_scope(man: dict, predicate, shape):
+def _delete_scope(man: dict, predicate, shape, t0, t1):
     """The shared delete-planning step: the candidate manifest entries
-    (manifest-pruned by the shape's cell cover when given) and the
-    NULL-safe match condition (restricted to the cover's cell ranges,
-    which loses nothing — the cover is a superset of the shape)."""
-    entries = man["files"]
-    cond = predicate
-    cand = entries
-    if shape is not None:
-        level = int(man["level"])
-        ranges = cover_ranges(shape, level)
-        cand, _ = _prune(man, ranges)
+    (manifest-pruned by the ``[t0, t1]`` window's days and the shape's
+    cell cover when given) and the NULL-safe match condition, the
+    conjunction of the predicate, the exact window and the cover's cell
+    ranges (which loses nothing — the cover is a superset of the
+    shape)."""
+    conds = [c for c in (predicate, _window(man, t0, t1)) if c is not None]
+    ranges = None if shape is None else cover_ranges(shape, int(man["level"]))
+    cand = man["files"]
+    if ranges is not None or t0 is not None:
+        cand, _ = _prune(man, ranges, t0, t1)
+    if ranges is not None:
         rcond = None
         for lo, hi in ranges:
             c = F.col(CELL_COL).between(F.lit(lo), F.lit(hi))
             rcond = c if rcond is None else (rcond | c)
-        cond = (cond & rcond) if rcond is not None else F.lit(False)
+        conds.append(rcond if rcond is not None else F.lit(False))
+    cond = conds[0]
+    for c in conds[1:]:
+        cond = cond & c
     return cand, F.coalesce(cond.cast("boolean"), F.lit(False))
 
 
 def delete_clustered(
     spark: SparkSession,
     path: str,
-    predicate,
+    predicate=None,
     shape=None,
     strategy: str = "cow",
     branch: str | None = None,
+    t0=None,
+    t1=None,
 ) -> dict:
     """Row-level DELETE on a clustered table — both Iceberg delete
     strategies:
@@ -1850,7 +1784,12 @@ def delete_clustered(
     shape's cell cover and prunes the candidate files through the
     manifest, so a spatially-local delete never reads the rest of the
     table; because the cover is a superset of the shape, passing the
-    shape's own exact predicate + the shape loses nothing.
+    shape's own exact predicate + the shape loses nothing. On a day
+    table ``[t0, t1]`` (both given) restricts the delete to that
+    timestamp window and prunes candidates to its days first, so
+    deleting 'this region, these days' from a year of history touches
+    only those days' overlapping files. The deleted set is the
+    conjunction of whatever is given; at least one must be.
 
     COW execution, all under ``table_lock``:
 
@@ -1875,11 +1814,17 @@ def delete_clustered(
     the committed manifest (or the no-op summary)."""
     if strategy not in ("cow", "mor"):
         raise ValueError(f"delete strategy must be 'cow' or 'mor', got {strategy!r}")
+    if predicate is None and shape is None and t0 is None and t1 is None:
+        raise ValueError(
+            "delete_clustered needs a predicate, a [t0, t1] window, or a "
+            "shape — an unconditioned delete of the whole table should be "
+            "an explicit overwrite instead"
+        )
     with table_lock(path):
         man = load_manifest(path, snapshot_id=branch)
         level = int(man["level"])
         entries = man["files"]
-        cand, cond = _delete_scope(man, predicate, shape)
+        cand, cond = _delete_scope(man, predicate, shape, t0, t1)
         if strategy == "mor":
             return _delete_mor(spark, path, man, cand, cond, branch=branch)
         hits = _per_file_hits(spark, path, [e["file"] for e in cand], cond, man)
@@ -1890,15 +1835,8 @@ def delete_clustered(
                 "deleted_rows": 0,
                 "snapshot_id": int(man["snapshot_id"]),
             }
-        pre = set(_data_files(path))
         keepdf = _read_files(spark, path, man, sorted(hits)).where(~cond)
-        (
-            keepdf.repartitionByRange(max(1, len(hits)), F.col(CELL_COL))
-            .sortWithinPartitions(CELL_COL)
-            .write.mode("append")
-            .parquet(path)
-        )
-        new = [n for n in _data_files(path) if n not in pre]
+        new = _write_run(keepdf, path, max(1, len(hits)), bool(man.get("day_of")))
         untouched = [e for e in entries if e["file"] not in hits]
         return _write_manifest(
             path,
@@ -2053,17 +1991,11 @@ def upsert_clustered(
             touched = {r["_src"]: int(r["count"]) for r in rows}
         rewritten = []
         if touched:
-            pre = set(_data_files(path))
             kdf = _read_files(spark, path, man, sorted(touched)).join(
                 keys, on=key, how="left_anti"
             )
-            (
-                kdf.repartitionByRange(max(1, len(touched)), F.col(CELL_COL))
-                .sortWithinPartitions(CELL_COL)
-                .write.mode("append")
-                .parquet(path)
-            )
-            rewritten = _file_stats(path, [n for n in _data_files(path) if n not in pre])
+            new = _write_run(kdf, path, max(1, len(touched)), bool(man.get("day_of")))
+            rewritten = _file_stats(path, new)
         untouched = [e for e in entries if e["file"] not in touched]
         return _write_manifest(
             path,
@@ -2331,22 +2263,53 @@ class PruneStats:
     rows_total: int
     rows_kept_files: int
     n_ranges: int
+    days_total: int = 0  # a day table's distinct days, and those kept
+    days_kept: int = 0
 
 
-def _prune(man: dict, ranges) -> tuple[list[dict], PruneStats]:
-    """The manifest entries whose cell [min,max] meets a query range,
-    and the pruning figures — the file planning of every range read."""
-    files = man["files"]
-    keep = [
-        e for e in files if any(_col_range_keep(e, CELL_COL, lo, hi) for lo, hi in ranges)
-    ]
+def _prune(man: dict, ranges, t0=None, t1=None) -> tuple[list[dict], PruneStats]:
+    """The manifest entries whose cell [min,max] meets a query range
+    (every entry when ``ranges`` is None) and, on a day table with a
+    ``[t0, t1]`` window, whose day lies in the window's days — days by
+    name, before any footer is read — and the pruning figures: the file
+    planning of every range read."""
+    files = keep = man["files"]
+    day = man.get("day_of")
+    if day and t0 is not None:
+        lo, hi = str(t0)[:10], str(t1)[:10]
+        keep = [e for e in keep if lo <= e["day"] <= hi]
+    if ranges is not None:
+        keep = [
+            e for e in keep if any(_col_range_keep(e, CELL_COL, lo, hi) for lo, hi in ranges)
+        ]
     return keep, PruneStats(
         files_total=len(files),
         files_kept=len(keep),
         rows_total=sum(e["rows"] for e in files),
         rows_kept_files=sum(e["rows"] for e in keep),
-        n_ranges=len(ranges),
+        n_ranges=len(ranges or ()),
+        days_total=len({e["day"] for e in files}) if day else 0,
+        days_kept=len({e["day"] for e in keep}) if day else 0,
     )
+
+
+def _window(man: dict, t0, t1):
+    """The exact ``[t0, t1]`` predicate on a day table's ``day_of``
+    column — the Catalyst comparison with each bound cast to the
+    column's type — or None without a window. A window on a flat table,
+    or with one bound only, raises."""
+    if t0 is None and t1 is None:
+        return None
+    ts = man.get("day_of")
+    if not ts:
+        raise ValueError(
+            "a [t0, t1] window needs a day-partitioned table "
+            "(write_clustered(..., day_of=<ts column>)); this one is flat"
+        )
+    if t0 is None or t1 is None:
+        raise ValueError("a time window needs both t0 and t1")
+    ts_type = _manifest_schema(man)[ts].dataType
+    return (F.col(ts) >= F.lit(t0).cast(ts_type)) & (F.col(ts) <= F.lit(t1).cast(ts_type))
 
 
 def read_pruned(
@@ -2427,12 +2390,21 @@ def clustered_radius_query(
     lat: str = "lat",
     with_stats: bool = False,
     snapshot_id: int | None = None,
+    t0=None,
+    t1=None,
 ):
     """Radius query over a clustered table: manifest file pruning (the
     ``read_pruned`` planning), then the SAME exact Catalyst haversine
     predicate as the unclustered radius join — the layout changes what
     is read, never what is returned.  ``snapshot_id`` runs the query as
     of that snapshot, tag or branch (time travel).
+
+    On a day table, ``[t0, t1]`` asks for 'this circle, this time
+    window': days outside the window are pruned by name before the
+    cell ranges prune files, and the exact timestamp predicate
+    (``_window``) keeps the rows of the boundary days. The answer
+    drops the ``_day`` column as it drops the cell column. A window on
+    a flat table raises.
 
     When the kept files and their pending delete files hold at most
     ``_LOCAL_READ_ROWS`` rows, the driver reads them
@@ -2466,9 +2438,11 @@ def clustered_radius_query(
     from spatial4n_spark.operators.knn import _SLACK_KM, _SLACK_REL
 
     man = load_manifest(path, snapshot_id)
+    window = _window(man, t0, t1)
+    drop = [CELL_COL, DAY_COL] if man.get("day_of") else [CELL_COL]
     circle = Circle(float(qlon), float(qlat), float(km_to_deg(radius_km)), geo=True)
     ranges = cover_ranges(circle, man["level"])
-    keep, stats = _prune(man, ranges)
+    keep, stats = _prune(man, ranges, t0, t1)
     if keep and _reads_locally(man, keep):
         tbl = _read_files_local(path, man, [e["file"] for e in keep], ranges)
         d = deg_to_km(distance_deg(
@@ -2482,10 +2456,12 @@ def clustered_radius_query(
         if not (d[near] > r * (1 - _SLACK_REL) - _SLACK_KM).any():
             # no kept row in the slack band around the radius: numpy's
             # answer is the predicate's, so the rows go to Spark as is
-            fields = [f for f in schema if f.name != CELL_COL]
+            fields = [f for f in schema if f.name not in drop]
             out = spark.createDataFrame(
                 tbl.select([f.name for f in fields]), StructType(fields)
             )
+            if window is not None:
+                out = out.where(window)
             return (out, stats) if with_stats else out
         params = ((_QLON, qlon), (_QLAT, qlat), (_QR, radius_km))
         for name, v in params:
@@ -2493,12 +2469,17 @@ def clustered_radius_query(
         out = spark.createDataFrame(
             tbl, StructType([*schema, *(StructField(n, DoubleType()) for n, _ in params)])
         ).where(_probe_col(spark, lon, lat, _QLON, _QLAT, _QR))
-        out = out.drop(CELL_COL, *(n for n, _ in params))
+        if window is not None:
+            out = out.where(window)
+        out = out.drop(*drop, *(n for n, _ in params))
         return (out, stats) if with_stats else out
-    out = _scan_kept(spark, path, man, keep, ranges).where(
+    out = _scan_kept(spark, path, man, keep, ranges)
+    if window is not None:
+        out = out.where(window)
+    out = out.where(
         haversine_km(F.col(lon), F.col(lat), F.lit(float(qlon)), F.lit(float(qlat)))
         <= F.lit(float(radius_km))
-    ).drop(CELL_COL)
+    ).drop(*drop)
     return (out, stats) if with_stats else out
 
 
@@ -2528,7 +2509,8 @@ def _probe_col(spark: SparkSession, lon: str, lat: str, qlon: str, qlat: str, r=
 
 
 def _manifest_schema(man: dict):
-    """The committed table schema, or None on a legacy manifest."""
+    """The committed schema of the table's data files, or None on a
+    legacy manifest."""
     sj = man.get("schema")
     if not sj:
         return None
@@ -2537,24 +2519,40 @@ def _manifest_schema(man: dict):
     return StructType.fromJson(json.loads(sj))
 
 
+def _with_day(schema, man: dict):
+    """``schema`` as the table's reads return it: on a day table, with
+    the ``_day`` string column that the files' directories hold."""
+    if not man.get("day_of"):
+        return schema
+    from pyspark.sql.types import StringType, StructField, StructType
+
+    return StructType([*schema.fields, StructField(DAY_COL, StringType(), True)])
+
+
 def _table_schema(spark: SparkSession, path: str, man: dict):
     """The table schema for empty-result reads: the manifest carries it
     (Iceberg metadata analog) so a zero-file table — or a query whose
     cover prunes every file — answers with the right columns without
     touching a single parquet footer. Legacy (pre-schema) manifests
     fall back to the directory read."""
-    return _manifest_schema(man) or spark.read.parquet(path).schema
+    schema = _manifest_schema(man)
+    return _with_day(schema, man) if schema is not None else spark.read.parquet(path).schema
 
 
-def _schema_reader(spark: SparkSession, man: dict):
+def _schema_reader(spark: SparkSession, path: str, man: dict):
     """A parquet reader pinned to the MANIFEST's schema (the Iceberg
     semantic: the table schema lives in metadata, not in whichever file
     happens to be read first). After an add-column append, files
     written before the column existed are read with NULLs in it — and a
     time-traveled read uses THAT snapshot's schema, so history keeps
-    its original shape. Legacy manifests fall back to file inference."""
+    its original shape. On a day table ``_day`` is Spark's partition
+    column of the ``_day=`` directories under the table. Legacy
+    manifests fall back to file inference."""
     schema = _manifest_schema(man)
-    return spark.read.schema(schema) if schema is not None else spark.read
+    if schema is None:
+        return spark.read
+    reader = spark.read.schema(_with_day(schema, man))
+    return reader.option("basePath", path) if man.get("day_of") else reader
 
 
 def _read_schema(man: dict):
@@ -2570,7 +2568,7 @@ def _read_schema(man: dict):
             }
         return [relax(v) for v in j] if isinstance(j, list) else j
 
-    return StructType.fromJson(relax(json.loads(man["schema"])))
+    return _with_day(StructType.fromJson(relax(json.loads(man["schema"]))), man)
 
 
 def _applicable_deletes(man: dict, names) -> list[dict]:
@@ -2598,10 +2596,13 @@ def _read_files(
     predicate pushdown), so a delete file written against a data file
     matches it at any later read regardless of filters.
 
-    ``keep_src``/``keep_pos`` retain the source file name / in-file row
-    position as named output columns — the inputs a MOR delete writer
-    or a per-file hit counter needs (``input_file_name()`` is unreliable
-    above a join, so callers take the columns from here instead).
+    ``keep_src``/``keep_pos`` retain the source file's label / in-file
+    row position as named output columns — the inputs a MOR delete
+    writer or a per-file hit counter needs (``input_file_name()`` is
+    unreliable above a join, so callers take the columns from here
+    instead). A file's label is its manifest-relative name, the name
+    manifest entries, delete files and rewrites use: the file name on a
+    flat table, ``_day=<day>/<file name>`` on a day table.
 
     ``_read_files_local`` is the driver-side executor of the same read
     spec: ``clustered_radius_query`` and ``clustered_knn_df`` use it
@@ -2615,7 +2616,7 @@ def _read_files(
         if keep_pos is not None:
             df = df.withColumn(keep_pos, F.lit(None).cast("long"))
         return df
-    df = _schema_reader(spark, man).parquet(
+    df = _schema_reader(spark, path, man).parquet(
         *[os.path.join(path, n) for n in names]
     )
     dels = _applicable_deletes(man, names)
@@ -2623,9 +2624,12 @@ def _read_files(
     eq_dels = [d for d in dels if d.get("kind") == "eq"]
     want_meta = dels or keep_src is not None or keep_pos is not None
     if want_meta:
+        label = F.col("_metadata.file_name")
+        if man.get("day_of"):
+            label = F.concat(F.lit(DAY_COL + "="), F.col(DAY_COL), F.lit(os.sep), label)
         df = df.select(
             "*",
-            F.col("_metadata.file_name").alias(_DFILE),
+            label.alias(_DFILE),
             F.col("_metadata.row_index").alias(_DPOS),
         )
     if pos_dels:
@@ -2679,8 +2683,11 @@ def _read_files_local(
 ):
     """The driver-local twin of ``_read_files``: the same read spec as
     one Arrow table, with no Spark job. The listed files are read under
-    the manifest's pinned schema (columns a file lacks read as null);
-    pending position deletes drop (file, row position) pairs — the
+    the manifest's pinned schema (columns a file lacks read as null; a
+    day table's ``_day`` reads as the day of the file's directory);
+    each file's label is its manifest-relative name, as in
+    ``_read_files``; pending position deletes drop (file, row position)
+    pairs — the
     position counts across row groups, as ``_metadata.row_index`` does;
     equality deletes drop rows by key only in their target files, and a
     null key never matches. ``ranges`` keeps only the rows whose cell id
@@ -2714,17 +2721,17 @@ def _read_files_local(
     need = None
     if columns is not None:
         need = {*columns, *(key for key, _, _ in eqs), *([CELL_COL] if ranges else [])}
+    day = man.get("day_of") and DAY_COL in schema.names
     parts = []
     for name in names:
         with pq.ParquetFile(os.path.join(path, name)) as f:
             t = f.read(None if need is None else [c for c in f.schema_arrow.names if c in need])
-        label = os.path.basename(name)  # what _metadata.file_name reports
         live = np.ones(t.num_rows, dtype=bool)
-        if label in pos:
-            p = np.concatenate(pos[label])
+        if name in pos:
+            p = np.concatenate(pos[name])
             live[p[p < t.num_rows]] = False
         for key, keys, targets in eqs:
-            if label in targets and key in t.column_names:
+            if name in targets and key in t.column_names:
                 col = t[key]
                 hit = pc.is_in(col, value_set=keys.cast(col.type), skip_nulls=True)
                 live &= ~hit.to_numpy(zero_copy_only=False)
@@ -2738,6 +2745,8 @@ def _read_files_local(
                 & cell.is_valid().to_numpy(zero_copy_only=False)
             )
         t = t.filter(live)
+        if day:  # the day table's _day column: the file's directory
+            t = t.append_column(DAY_COL, pa.repeat(pa.scalar(_day_of(name)), t.num_rows))
         parts.append(
             pa.Table.from_arrays(
                 [
@@ -2979,14 +2988,10 @@ def clustered_candidates(
 
 
 def _incremental_added(
-    path: str,
-    from_snapshot: int,
-    to_snapshot: int,
-    manifest: str,
-    snap_dir: str,
+    path: str, from_snapshot: int, to_snapshot: int
 ) -> list[tuple[dict, list[str]]]:
     """Per-snapshot ADDED data files over ``(from, to]`` — the shared
-    core of both layouts' incremental scans.  Walks the snapshot chain
+    core of ``incremental_scan`` and the streaming source.  Walks the snapshot chain
     and diffs consecutive file lists; raises if the range crosses a
     commit whose row-level effect is not pure insertion, or if any
     snapshot in the range was expired (same failure mode as Iceberg:
@@ -3001,7 +3006,7 @@ def _incremental_added(
     # walk the lineage CHAIN ending at `to` (not an id range: with
     # branches, ids from different lineages interleave, and expired
     # history breaks the chain — both must fail loudly, not mis-diff)
-    chain = _history_chain(path, manifest, snap_dir, to)
+    chain = _history_chain(path, to)
     ids = [int(m.get("snapshot_id", 0)) for m in chain]
     if frm > 0:
         if frm not in ids:
@@ -3078,17 +3083,13 @@ def incremental_scan(
     Each contributing batch is read with ITS OWN commit's schema and
     batches are aligned by name (add-column evolution mid-range yields
     NULLs for rows that predate the column); ``snapshot_col`` adds the
-    committing snapshot id to every row (per-batch lineage)."""
+    committing snapshot id to every row (per-batch lineage). A day
+    table's rows keep their ``_day`` column."""
     cur = load_manifest(path)
     to = int(cur["snapshot_id"]) if to_snapshot is None else int(to_snapshot)
-    batches = _incremental_added(
-        path, int(from_snapshot), to, MANIFEST, SNAP_DIR
-    )
     parts = []
-    for man, added in batches:
-        df = _schema_reader(spark, man).parquet(
-            *[os.path.join(path, n) for n in added]
-        )
+    for man, added in _incremental_added(path, int(from_snapshot), to):
+        df = _read_files(spark, path, man, added)
         if snapshot_col is not None:
             df = df.withColumn(
                 snapshot_col, F.lit(int(man["snapshot_id"])).cast("long")
@@ -3172,9 +3173,24 @@ def next_increment(
     )
 
 
-def _files_df_from(
-    spark: SparkSession, man: dict, added: dict[str, int] | None = None
+def files_df(
+    spark: SparkSession, path: str, snapshot_id: int | None = None
 ) -> DataFrame:
+    """The table's file-level metadata as a DataFrame — the Iceberg
+    ``.files`` metadata-table analog: one row per manifest entry with
+    its row count, primary cell bounds, per-column [min,max] stats
+    (JSON), and its day partition (NULL on a flat table).  Answered
+    entirely from the manifest — no data file is opened — and
+    time-travels with ``snapshot_id`` like every other reader.
+    Together with ``snapshot_log_df`` (the ``.snapshots`` /
+    ``.history`` analog) this completes the metadata-table surface the
+    north rule's "per-partition lineage and metrics tables" names.
+
+    ``added_snapshot_id`` is the per-file lineage column — the snapshot
+    that first listed the file (see ``_added_map``).  On a flat table
+    the range-clustered FILE is the partition unit, so this table
+    doubles as the ``.partitions`` analog; ``partitions_df`` rolls it up
+    per day."""
     from pyspark.sql.types import (
         IntegerType,
         LongType,
@@ -3183,6 +3199,8 @@ def _files_df_from(
         StructType,
     )
 
+    man = load_manifest(path, snapshot_id)
+    added = _added_map(path, int(man.get("snapshot_id", 0)))
     schema = StructType(
         [
             StructField("file", StringType(), False),
@@ -3194,7 +3212,6 @@ def _files_df_from(
             StructField("column_stats", StringType(), True),
         ]
     )
-    added = added or {}
     rows = [
         (
             e["file"],
@@ -3212,27 +3229,51 @@ def _files_df_from(
     return spark.createDataFrame(rows, schema)
 
 
-def files_df(
-    spark: SparkSession, path: str, snapshot_id: int | None = None
+def partitions_df(
+    spark: SparkSession, path: str, snapshot_id: int | str | None = None
 ) -> DataFrame:
-    """The table's file-level metadata as a DataFrame — the Iceberg
-    ``.files`` metadata-table analog: one row per manifest entry with
-    its row count, primary cell bounds, per-column [min,max] stats
-    (JSON), and the day partition where the layout has one (NULL on the
-    flat layout).  Answered entirely from the manifest — no data file
-    is opened — and time-travels with ``snapshot_id`` like every other
-    reader.  Together with ``snapshot_log_df`` (the ``.snapshots`` /
-    ``.history`` analog) this completes the metadata-table surface the
-    north rule's "per-partition lineage and metrics tables" names.
-
-    ``added_snapshot_id`` is the per-file lineage column — the snapshot
-    that first listed the file (see ``_added_map``).  On this flat
-    layout the range-clustered FILE is the partition unit, so this
-    table doubles as the ``.partitions`` analog; the day-partitioned ST
-    layout additionally rolls it up per day in ``st_partitions_df``."""
+    """Per-DAY lineage + metrics — the Iceberg ``.partitions``
+    metadata-table analog, rolled up over a day table's partition axis:
+    file count, row count, the cell span the day's files cover, the
+    snapshot that last changed the day (``last_updated_snapshot`` = max
+    of its files' lineage ids), and the count of pending MOR delete
+    files targeting the day.  Answered from the manifest alone;
+    time-travels (id or tag name) like every other reader. A flat
+    table rolls up into one row whose ``day`` is NULL."""
     man = load_manifest(path, snapshot_id)
-    added = _added_map(path, MANIFEST, SNAP_DIR, int(man.get("snapshot_id", 0)))
-    return _files_df_from(spark, man, added)
+    added = _added_map(path, int(man.get("snapshot_id", 0)))
+    del_targets: dict[str, int] = {}
+    for d in man.get("deletes") or []:
+        for t in d["targets"]:
+            del_targets[t] = del_targets.get(t, 0) + 1
+    days: dict = {}
+    for e in man["files"]:
+        p = days.setdefault(
+            e.get("day"),
+            {"n_files": 0, "n_rows": 0, "cell_min": None, "cell_max": None,
+             "last_updated_snapshot": None, "n_pending_delete_files": 0},
+        )
+        p["n_files"] += 1
+        p["n_rows"] += int(e["rows"])
+        lo, hi = int(e["min"]), int(e["max"])
+        p["cell_min"] = lo if p["cell_min"] is None else min(p["cell_min"], lo)
+        p["cell_max"] = hi if p["cell_max"] is None else max(p["cell_max"], hi)
+        sid = added.get(e["file"])
+        if sid is not None:
+            last = p["last_updated_snapshot"]
+            p["last_updated_snapshot"] = sid if last is None else max(last, sid)
+        p["n_pending_delete_files"] += del_targets.get(e["file"], 0)
+    rows = [
+        (day, p["n_files"], p["n_rows"], p["cell_min"], p["cell_max"],
+         p["last_updated_snapshot"], p["n_pending_delete_files"])
+        for day, p in sorted(days.items(), key=lambda kv: kv[0] or "")
+    ]
+    return spark.createDataFrame(
+        rows,
+        "day string, n_files int, n_rows bigint, cell_min bigint, "
+        "cell_max bigint, last_updated_snapshot int, "
+        "n_pending_delete_files int",
+    )
 
 
 def delete_files_df(

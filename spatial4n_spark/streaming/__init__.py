@@ -19,7 +19,6 @@ from spatial4n_spark.streaming.dedup_stream import (  # noqa: F401
 )
 from spatial4n_spark.streaming.clustered_sink import (  # noqa: F401
     stream_to_clustered,
-    stream_to_st_clustered,
     stream_upsert_to_clustered,
 )
 from spatial4n_spark.streaming.clustered_source import (  # noqa: F401

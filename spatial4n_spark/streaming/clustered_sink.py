@@ -50,7 +50,9 @@ def stream_to_clustered(
     """Start an availableNow ingest of ``stream`` into the clustered
     table at ``path`` (which must already exist — create it with
     ``write_clustered``, possibly on an empty frame, so the manifest
-    carries the cluster level). Returns the StreamingQuery.
+    carries the cluster level and, on a day table, the day spec: each
+    micro-batch's rows then land in their day directories). Returns
+    the StreamingQuery.
 
     With ``branch=`` (create it first), every micro-batch STAGES onto
     that branch — audited streaming ingest: the main table is untouched
@@ -69,42 +71,6 @@ def stream_to_clustered(
             return
         append_clustered(batch_df, path, lon=lon, lat=lat,
                          files=files_per_batch, branch=branch)
-        with open(os.path.join(path, BATCH_LEDGER), "a") as f:
-            f.write(f"{key}\n")
-
-    return (
-        stream.writeStream.foreachBatch(_sink)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-
-
-def stream_to_st_clustered(
-    stream: DataFrame,
-    path: str,
-    checkpoint: str,
-    lon: str = "lon",
-    lat: str = "lat",
-    ts: str = "ts",
-    files_per_batch: int = 2,
-):
-    """The same ingest loop into the spatio-temporal layout: each
-    micro-batch's rows land in their day directories (io.st_clustered's
-    append), with the identical (checkpoint, batch_id) ledger semantics.
-    The table must exist (write_st_clustered, possibly on an empty
-    frame). Returns the StreamingQuery."""
-    import hashlib
-
-    from spatial4n_spark.io.st_clustered import append_st_clustered
-
-    ck = hashlib.md5(os.path.abspath(checkpoint).encode()).hexdigest()[:12]
-
-    def _sink(batch_df: DataFrame, batch_id: int) -> None:
-        key = f"{ck}:{batch_id}"
-        if key in _seen_batches(path):
-            return
-        append_st_clustered(batch_df, path, lon=lon, lat=lat, ts=ts, files=files_per_batch)
         with open(os.path.join(path, BATCH_LEDGER), "a") as f:
             f.write(f"{key}\n")
 

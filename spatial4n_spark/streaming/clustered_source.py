@@ -27,9 +27,12 @@ Semantics (shared with ``io.clustered.incremental_scan`` — both ride
   MOR deletes never apply to the streamed files: delete/upsert commits
   (the only producers of delete files) are rejected above, so every
   streamed file is read as committed.
-- **schema is the manifest's** (per-snapshot, add-column evolution):
-  files written before an evolution stream with the CURRENT schema,
-  missing columns as nulls — the same contract the batch readers pin.
+- **every file is read through the table's one read spec**
+  (``io.clustered._read_files_local`` on the executor): the schema is
+  the manifest's (add-column evolution: files written before an
+  evolution stream with the CURRENT schema, missing columns as nulls),
+  and a day-partitioned table's rows carry ``_day``, read from the
+  file's directory — the same contract the batch readers pin.
 
 At design scale this is the change-data feed of a 100 TB table: the
 driver touches only manifest metadata per trigger, executors read only
@@ -44,8 +47,6 @@ everything since the last one, like the batch consumer loop.
 
 from __future__ import annotations
 
-import json
-import os
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
@@ -57,41 +58,33 @@ from pyspark.sql.datasource import (
 from pyspark.sql.types import StructType
 
 from spatial4n_spark.io import clustered as C
-from spatial4n_spark.io import st_clustered as ST
-
-
-def _layout_names(layout: str) -> tuple[str, str]:
-    if layout == "flat":
-        return C.MANIFEST, C.SNAP_DIR
-    if layout == "st":
-        return ST.MANIFEST, ST.SNAP_DIR
-    raise ValueError(f"unknown layout {layout!r}: expected 'flat' or 'st'")
 
 
 @dataclass
 class _AppendedFile(InputPartition):
     """One appended data file of one commit — the unit of read
     parallelism.  Carries everything ``read`` needs (it runs stateless
-    on an executor): the absolute file path and the stream's arrow
-    schema as JSON-able Spark DDL."""
+    on an executor): the table path, the file's manifest-relative name,
+    and the stream's read spec as a manifest stub (the file schema and
+    the day spec; appended files have no pending deletes)."""
 
-    file_path: str
-    schema_json: str
+    table_path: str
+    file: str
+    spec: dict
 
 
 class _ClusteredStreamReader(DataSourceStreamReader):
     def __init__(self, schema: StructType, options: dict):
         self._path = options["path"]
-        self._layout = options.get("layout", "flat")
-        self._manifest, self._snap_dir = _layout_names(self._layout)
         self._from = int(options.get("fromsnapshot", 0))
-        self._schema_json = schema.json()
+        # the stream's schema is the read schema of its start: the
+        # files' columns, then _day on a day table
+        day_of = C.load_manifest(self._path).get("day_of")
+        files = StructType([f for f in schema.fields if not (day_of and f.name == C.DAY_COL)])
+        self._spec = {"schema": files.json(), "day_of": day_of}
 
     def _current(self) -> int:
-        man = C._load_versioned(
-            self._path, None, self._manifest, self._snap_dir
-        )
-        return int(man.get("snapshot_id", 0))
+        return int(C.load_manifest(self._path).get("snapshot_id", 0))
 
     def initialOffset(self) -> dict:
         return {"snapshot_id": self._from}
@@ -103,37 +96,16 @@ class _ClusteredStreamReader(DataSourceStreamReader):
         frm, to = int(start["snapshot_id"]), int(end["snapshot_id"])
         if to <= frm:
             return []
-        out: list[InputPartition] = []
-        for _man, files in C._incremental_added(
-            self._path, frm, to, self._manifest, self._snap_dir
-        ):
-            out.extend(
-                _AppendedFile(
-                    os.path.join(self._path, rel), self._schema_json
-                )
-                for rel in files
-            )
-        return out
+        return [
+            _AppendedFile(self._path, rel, self._spec)
+            for _man, files in C._incremental_added(self._path, frm, to)
+            for rel in files
+        ]
 
     def read(self, partition: _AppendedFile):
-        import pyarrow as pa
-        import pyarrow.parquet as pq
-
-        from pyspark.sql.pandas.types import to_arrow_schema
-
-        want = to_arrow_schema(
-            StructType.fromJson(json.loads(partition.schema_json))
-        )
-        tbl = pq.read_table(partition.file_path)
-        cols = []
-        for field in want:
-            if field.name in tbl.column_names:
-                cols.append(tbl.column(field.name).cast(field.type))
-            else:
-                # pre-evolution file: the column reads NULL, as in the
-                # batch readers' per-snapshot schema contract
-                cols.append(pa.nulls(len(tbl), type=field.type))
-        yield from pa.table(cols, schema=want).to_batches()
+        yield from C._read_files_local(
+            partition.table_path, partition.spec, [partition.file]
+        ).to_batches()
 
     def commit(self, end: dict) -> None:
         pass  # Spark's offset log is the source of truth
@@ -141,10 +113,10 @@ class _ClusteredStreamReader(DataSourceStreamReader):
 
 class ClusteredAppendsSource(DataSource):
     """``spark.readStream.format("clustered-appends")`` — see module
-    docstring.  Options: ``path`` (table dir, required), ``layout``
-    ('flat' default | 'st'), ``fromSnapshot`` (exclusive start offset
-    for a FRESH checkpoint; default 0 = the whole table, its initial
-    write counting as the seed batch)."""
+    docstring.  Options: ``path`` (table dir, required),
+    ``fromSnapshot`` (exclusive start offset for a FRESH checkpoint;
+    default 0 = the whole table, its initial write counting as the seed
+    batch)."""
 
     @classmethod
     def name(cls) -> str:
@@ -152,16 +124,14 @@ class ClusteredAppendsSource(DataSource):
 
     def schema(self) -> StructType:
         path = self.options["path"]
-        manifest, snap_dir = _layout_names(self.options.get("layout", "flat"))
-        man = C._load_versioned(path, None, manifest, snap_dir)
-        sj = man.get("schema")
-        if not sj:
+        man = C.load_manifest(path)
+        if not man.get("schema"):
             raise ValueError(
                 f"clustered-appends source on {path}: the manifest carries "
                 "no schema (pre-schema-evolution table) — run any commit "
                 "(e.g. an empty append) to upgrade it"
             )
-        return StructType.fromJson(json.loads(sj))
+        return C._read_schema(man)
 
     def streamReader(self, schema: StructType) -> DataSourceStreamReader:
         return _ClusteredStreamReader(schema, dict(self.options))
@@ -170,17 +140,12 @@ class ClusteredAppendsSource(DataSource):
 def read_clustered_stream(
     spark: SparkSession,
     path: str,
-    layout: str = "flat",
     from_snapshot: int | None = None,
 ) -> DataFrame:
     """Convenience wrapper: register the source (idempotent) and open
     the stream."""
     spark.dataSource.register(ClusteredAppendsSource)
-    r = (
-        spark.readStream.format("clustered-appends")
-        .option("path", path)
-        .option("layout", layout)
-    )
+    r = spark.readStream.format("clustered-appends").option("path", path)
     if from_snapshot is not None:
         r = r.option("fromSnapshot", int(from_snapshot))
     return r.load()

@@ -636,7 +636,7 @@ def q_pip_join_clustered(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out.select("o_orderkey", "poly_id")
 
 
-# spatio-temporal layout gate: deterministic NTZ event time (8 days of
+# day-partitioned table gate: deterministic NTZ event time (8 days of
 # 2024-01, sub-day offset < 977 s so day membership is integer-clean in
 # both engines), 2-day query window
 ST_EPOCH = "2024-01-01 00:00:00"
@@ -667,7 +667,7 @@ def _st_path(spark: SparkSession, sf_dir: str) -> str:
     key = f"{src}:{os.path.getmtime(src)}:st:{CLUSTER_LEVEL}:32"
     if key not in _ST_CACHE:
         from spatial4n_spark.io.buildonce import ensure_built
-        from spatial4n_spark.io.st_clustered import MANIFEST, write_st_clustered
+        from spatial4n_spark.io.clustered import MANIFEST, write_clustered
 
         path = os.path.join(
             tempfile.gettempdir(),
@@ -677,8 +677,9 @@ def _st_path(spark: SparkSession, sf_dir: str) -> str:
         _ST_CACHE[key] = ensure_built(
             path,
             key,
-            lambda p: write_st_clustered(
-                _pts_orders_ts(spark, sf_dir), p, level=CLUSTER_LEVEL, files=32
+            lambda p: write_clustered(
+                _pts_orders_ts(spark, sf_dir), p, level=CLUSTER_LEVEL, files=32,
+                day_of="ts",
             ),
             ready_file=MANIFEST,
         )
@@ -686,18 +687,21 @@ def _st_path(spark: SparkSession, sf_dir: str) -> str:
 
 
 def q_st_radius_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """'This circle, this 2-day window' over the spatio-temporal layout:
-    day directories prune the time axis by NAME, the manifest prunes
-    files by cell bounds, pushed ranges prune row groups — then exact
+    """'This circle, this 2-day window' over a day-partitioned clustered
+    table: day directories prune the time axis by NAME, the manifest
+    prunes files by cell bounds, pushed ranges prune row groups (or the
+    driver reads the kept files under the same read spec) — then exact
     timestamp + haversine predicates. Oracle recomputes the same rows
     with the time window as integer second arithmetic (the NTZ derive
     is a monotone bijection of it)."""
-    from spatial4n_spark.io.st_clustered import st_radius_query
+    from spatial4n_spark.io.clustered import clustered_radius_query
 
     path = _st_path(spark, sf_dir)
     out = None
     for qid, qlon, qlat, r_km in RADIUS_CENTERS:
-        part = st_radius_query(spark, path, qlon, qlat, r_km, ST_T0, ST_T1).select(
+        part = clustered_radius_query(
+            spark, path, qlon, qlat, r_km, t0=ST_T0, t1=ST_T1
+        ).select(
             F.lit(qid).alias("query_id"), "o_orderkey"
         )
         out = part if out is None else out.unionAll(part)

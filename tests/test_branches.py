@@ -16,7 +16,6 @@ from pyspark.sql import functions as F
 
 from spatial4n_spark.functions.native import haversine_km
 from spatial4n_spark.io import clustered as C
-from spatial4n_spark.io import st_clustered as ST
 from spatial4n_spark.suite import pts_orders
 
 QLON, QLAT, R_KM = 2.3125, 48.875, 150.0
@@ -221,14 +220,14 @@ def test_st_as_of(spark, sf_dir, tmp_path):
     pts = pts_orders(spark, sf_dir).withColumn(
         "ts", F.lit("2026-01-01 00:00:00").cast("timestamp_ntz")
     )
-    ST.write_st_clustered(pts, path, level=14, files=2)
+    C.write_clustered(pts, path, level=14, files=2, day_of="ts")
     time.sleep(0.01)
     t1 = time.time()
     time.sleep(0.01)
-    ST.append_st_clustered(pts.limit(5), path)
-    assert ST.st_snapshot_as_of(path, t1) == 1
-    assert ST.st_snapshot_as_of(path, time.time()) == 2
-    assert int(ST.load_st_manifest(path, as_of=t1)["snapshot_id"]) == 1
+    C.append_clustered(pts.limit(5), path)
+    assert C.snapshot_as_of(path, t1) == 1
+    assert C.snapshot_as_of(path, time.time()) == 2
+    assert int(C.load_manifest(path, as_of=t1)["snapshot_id"]) == 1
 
 
 def test_expire_older_than_age_retention(spark, halves):
@@ -296,9 +295,9 @@ def test_st_history_df(spark, sf_dir, tmp_path):
     pts = pts_orders(spark, sf_dir).withColumn(
         "ts", F.lit("2026-01-01 00:00:00").cast("timestamp_ntz")
     )
-    ST.write_st_clustered(pts, path, level=14, files=2)
-    ST.append_st_clustered(pts.limit(5), path)
-    h = [r.asDict() for r in ST.st_history_df(spark, path).collect()]
+    C.write_clustered(pts, path, level=14, files=2, day_of="ts")
+    C.append_clustered(pts.limit(5), path)
+    h = [r.asDict() for r in C.history_df(spark, path).collect()]
     assert [r["snapshot_id"] for r in h] == [1, 2]
     assert [r["event"] for r in h] == ["overwrite", "append"]
     assert all(r["is_current_ancestor"] for r in h)
@@ -370,10 +369,10 @@ def test_st_wap_flow(spark, sf_dir, tmp_path):
     base = pts.where(F.col("o_orderkey") % 2 == 0)   # day 1
     extra = pts.where(F.col("o_orderkey") % 2 == 1)  # day 2
     path = str(tmp_path / "stwap")
-    ST.write_st_clustered(base, path, level=14, files=2)
+    C.write_clustered(base, path, level=14, files=2, day_of="ts")
 
     def keys(snap=None):
-        man = ST.load_st_manifest(path, snapshot_id=snap)
+        man = C.load_manifest(path, snapshot_id=snap)
         files = [e["file"] for e in man["files"]]
         if not files:
             return set()
@@ -387,12 +386,12 @@ def test_st_wap_flow(spark, sf_dir, tmp_path):
     want_base = {int(r[0]) for r in base.select("o_orderkey").collect()}
     want_extra = {int(r[0]) for r in extra.select("o_orderkey").collect()}
 
-    ST.create_st_branch(path, "stage")
-    ST.append_st_clustered(extra, path, files=2, branch="stage")
+    C.create_branch(path, "stage")
+    C.append_clustered(extra, path, files=2, branch="stage")
     assert keys() == want_base                       # main untouched
     assert keys("stage") == want_base | want_extra   # audit by name
     # stage a two-axis delete of day 2 on the branch
-    ST.delete_st_clustered(
+    C.delete_clustered(
         spark, path, t0="2026-01-02 00:00:00", t1="2026-01-02 23:59:59",
         branch="stage",
     )
@@ -403,17 +402,17 @@ def test_st_wap_flow(spark, sf_dir, tmp_path):
     moved = base.where(F.col("o_orderkey") == mk).withColumn(
         "ts", F.expr("timestamp_ntz '2026-01-02 00:00:00'")
     )
-    ST.upsert_st_clustered(
+    C.upsert_clustered(
         spark, moved, path, key="o_orderkey", branch="stage"
     )
     assert keys("stage") == want_base
-    refs = {r["name"]: r["type"] for r in ST.st_refs_df(spark, path).collect()}
+    refs = {r["name"]: r["type"] for r in C.refs_df(spark, path).collect()}
     assert refs == {"stage": "branch"}
-    out = ST.fast_forward_st_clustered(path, "stage")
+    out = C.fast_forward_clustered(path, "stage")
     assert out["published"] > out["from"]
     assert keys() == want_base
     # the moved row landed in its new day directory
-    man = ST.load_st_manifest(path)
+    man = C.load_manifest(path)
     days_of_mk = {
         e["day"]
         for e in man["files"]
@@ -426,7 +425,7 @@ def test_st_wap_flow(spark, sf_dir, tmp_path):
         }
     }
     assert days_of_mk == {"2026-01-02"}
-    assert ST.drop_st_branch(path, "stage") == out["published"]
+    assert C.drop_branch(path, "stage") == out["published"]
 
 
 # --- round-5 hardening: ref-safe id allocation, made-current as_of,

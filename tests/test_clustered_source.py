@@ -9,6 +9,8 @@ cumulative file sink); replace (compaction) commits are skipped;
 row-replacing commits fail the stream.
 """
 
+import os
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -98,10 +100,10 @@ def test_stream_skips_compaction_and_fails_on_row_replacing(
 
 
 def test_stream_st_layout(spark, sf_dir, tmp_path):
-    """The ST (day-partitioned) layout streams through the same source
-    with layout='st': day-directory files, same snapshot-id offsets."""
-    from spatial4n_spark.io import st_clustered as ST
-
+    """A day-partitioned table streams through the same source (the
+    manifest carries the day spec): day-directory files, same
+    snapshot-id offsets, and every row's ``_day`` is the day of the
+    directory its file lives in."""
     pts = pts_orders(spark, sf_dir).withColumn(
         "ts",
         F.timestamp_seconds(
@@ -114,13 +116,24 @@ def test_stream_st_layout(spark, sf_dir, tmp_path):
     path, out, ckpt = (
         str(tmp_path / "st"), str(tmp_path / "out"), str(tmp_path / "ckpt")
     )
-    ST.write_st_clustered(half[0], path, level=14, files=4)
-    _drain(read_clustered_stream(spark, path, layout="st"), out, ckpt)
+    C.write_clustered(half[0], path, level=14, files=4, day_of="ts")
+    _drain(read_clustered_stream(spark, path), out, ckpt)
     assert _ids(spark, out) == _want(half[0])
     # restart picks up only the new commit, across day directories
-    ST.append_st_clustered(half[1], path, files=2)
-    _drain(read_clustered_stream(spark, path, layout="st"), out, ckpt)
+    C.append_clustered(half[1], path, files=2)
+    _drain(read_clustered_stream(spark, path), out, ckpt)
     assert _ids(spark, out) == _want(pts)
+    import pyarrow.parquet as pq
+
+    file_day = {
+        k: e["day"]
+        for e in C.load_manifest(path)["files"]
+        for k in pq.read_table(
+            os.path.join(path, e["file"]), columns=["o_orderkey"]
+        )["o_orderkey"].to_pylist()
+    }
+    streamed = spark.read.parquet(out).select("o_orderkey", C.DAY_COL).collect()
+    assert {r[0]: r[1] for r in streamed} == file_day and len(file_day) == len(streamed)
 
 
 def test_stream_from_snapshot_and_schema_evolution(spark, sf_dir, tmp_path):

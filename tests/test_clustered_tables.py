@@ -725,13 +725,14 @@ def test_settled_radius_probe_equals_band_and_spark(spark, tmp_path, monkeypatch
         assert all(f.nullable for f in schema) and schema.names == ["id", "lon", "lat"]
 
 
-def test_st_clustered_time_and_space_pruning(spark, sf_dir, tmp_path):
-    """Spatio-temporal layout (io/st_clustered.py): day-partition +
+def test_st_clustered_time_and_space_pruning(spark, sf_dir, tmp_path, monkeypatch):
+    """Day-partitioned clustered table: day-partition +
     manifest pruning must compose — a 2-of-8-day Paris query keeps only
     matching days AND only spatially-relevant files, and returns exactly
     the brute-force rows."""
-    from spatial4n_spark.io import st_clustered as ST
-
+    # the Spark scan path (the table fits the driver-local budget, so
+    # the budget is pinned to 0 to plan the scan)
+    monkeypatch.setattr(C, "_LOCAL_READ_ROWS", 0)
     pts = pts_orders(spark, sf_dir).withColumn(
         "ts",
         F.timestamp_seconds(
@@ -741,8 +742,8 @@ def test_st_clustered_time_and_space_pruning(spark, sf_dir, tmp_path):
         ).cast("timestamp_ntz"),
     )
     path = str(tmp_path / "st")
-    ST.write_st_clustered(pts, path, level=14, files=32)
-    man = ST.load_st_manifest(path)
+    C.write_clustered(pts, path, level=14, files=32, day_of="ts")
+    man = C.load_manifest(path)
     assert {e["day"] for e in man["files"]} == {
         f"2024-01-0{d}" for d in range(1, 9)
     }
@@ -750,7 +751,7 @@ def test_st_clustered_time_and_space_pruning(spark, sf_dir, tmp_path):
 
     t0, t1 = "2024-01-02 00:00:00", "2024-01-03 23:59:59"
     qlon, qlat, r = 10.0, 88.0, 600.0  # the polar gate circle: dense enough at sf0.001
-    out, st = ST.st_radius_query(spark, path, qlon, qlat, r, t0, t1, with_stats=True)
+    out, st = C.clustered_radius_query(spark, path, qlon, qlat, r, t0=t0, t1=t1, with_stats=True)
     got = sorted(row[0] for row in out.select("o_orderkey").collect())
     want = sorted(
         row[0]
@@ -775,19 +776,18 @@ def test_st_clustered_time_and_space_pruning(spark, sf_dir, tmp_path):
     assert "PushedFilters" in plan and C.CELL_COL in plan.split("PushedFilters")[1][:2000]
 
     # an out-of-range window prunes everything and returns empty
-    empty, st0 = ST.st_radius_query(
-        spark, path, qlon, qlat, r, "2030-01-01 00:00:00", "2030-01-02 00:00:00",
+    empty, st0 = C.clustered_radius_query(
+        spark, path, qlon, qlat, r, t0="2030-01-01 00:00:00", t1="2030-01-02 00:00:00",
         with_stats=True,
     )
     assert st0.files_kept == 0 and empty.count() == 0
 
 
 def test_stream_ingest_into_st_clustered(spark, sf_dir, tmp_path):
-    """foreachBatch ingest into the spatio-temporal layout: after the
+    """foreachBatch ingest into a day-partitioned table: after the
     availableNow run the table answers (window, circle) queries exactly;
     a replay of the same checkpoint is ledger-deduped."""
-    from spatial4n_spark.io import st_clustered as ST
-    from spatial4n_spark.streaming.clustered_sink import stream_to_st_clustered
+    from spatial4n_spark.streaming.clustered_sink import stream_to_clustered
 
     pts = pts_orders(spark, sf_dir).withColumn(
         "ts",
@@ -800,14 +800,14 @@ def test_stream_ingest_into_st_clustered(spark, sf_dir, tmp_path):
     src = str(tmp_path / "src")
     pts.repartition(3).write.parquet(src)
     table = str(tmp_path / "table")
-    ST.write_st_clustered(pts.limit(0), table, level=14, files=1)
+    C.write_clustered(pts.limit(0), table, level=14, files=1, day_of="ts")
 
     stream = (
         spark.readStream.schema(pts.schema).option("maxFilesPerTrigger", 1).parquet(src)
     )
-    q = stream_to_st_clustered(stream, table, str(tmp_path / "ck"), files_per_batch=2)
+    q = stream_to_clustered(stream, table, str(tmp_path / "ck"), files_per_batch=2)
     q.awaitTermination(300)
-    man = ST.load_st_manifest(table)
+    man = C.load_manifest(table)
     assert sum(e["rows"] for e in man["files"]) == pts.count()
     assert {e["day"] for e in man["files"]} == {"2024-01-01", "2024-01-02"}
 
@@ -815,7 +815,7 @@ def test_stream_ingest_into_st_clustered(spark, sf_dir, tmp_path):
     qlon, qlat, r = 10.0, 88.0, 600.0
     got = sorted(
         row[0]
-        for row in ST.st_radius_query(spark, table, qlon, qlat, r, t0, t1)
+        for row in C.clustered_radius_query(spark, table, qlon, qlat, r, t0=t0, t1=t1)
         .select("o_orderkey")
         .collect()
     )
@@ -841,18 +841,16 @@ def test_stream_ingest_into_st_clustered(spark, sf_dir, tmp_path):
     stream2 = (
         spark.readStream.schema(pts.schema).option("maxFilesPerTrigger", 1).parquet(src)
     )
-    q2 = stream_to_st_clustered(stream2, table, str(tmp_path / "ck"), files_per_batch=2)
+    q2 = stream_to_clustered(stream2, table, str(tmp_path / "ck"), files_per_batch=2)
     q2.awaitTermination(300)
-    man2 = ST.load_st_manifest(table)
+    man2 = C.load_manifest(table)
     assert sum(e["rows"] for e in man2["files"]) == pts.count()
 
 
 def test_st_append_and_per_day_compaction(spark, sf_dir, tmp_path):
-    """ST lifecycle: appends keep every (window, circle) query exactly
+    """Day-table lifecycle: appends keep every (window, circle) query exactly
     correct; compacting ONE day restores that day's locality and leaves
     the other days' files untouched."""
-    from spatial4n_spark.io import st_clustered as ST
-
     pts = pts_orders(spark, sf_dir).withColumn(
         "ts",
         F.timestamp_seconds(
@@ -863,15 +861,15 @@ def test_st_append_and_per_day_compaction(spark, sf_dir, tmp_path):
     )
     path = str(tmp_path / "st")
     base = pts.where(F.col("o_orderkey") % 3 == 0)
-    ST.write_st_clustered(base, path, level=14, files=8)
+    C.write_clustered(base, path, level=14, files=8, day_of="ts")
     for m in (1, 2):
-        ST.append_st_clustered(pts.where(F.col("o_orderkey") % 3 == m), path, files=2)
+        C.append_clustered(pts.where(F.col("o_orderkey") % 3 == m), path, files=2)
 
     t0, t1 = "2024-01-02 00:00:00", "2024-01-02 23:59:59"
     qlon, qlat, r = 10.0, 88.0, 600.0
 
     def rows():
-        out = ST.st_radius_query(spark, path, qlon, qlat, r, t0, t1)
+        out = C.clustered_radius_query(spark, path, qlon, qlat, r, t0=t0, t1=t1)
         return sorted(row[0] for row in out.select("o_orderkey").collect())
 
     want = sorted(
@@ -888,14 +886,14 @@ def test_st_append_and_per_day_compaction(spark, sf_dir, tmp_path):
         .collect()
     )
     assert rows() == want and len(want) > 0  # correct right after appends
-    man_a = ST.load_st_manifest(path)
+    man_a = C.load_manifest(path)
     day2_before = [e for e in man_a["files"] if e["day"] == "2024-01-02"]
     day1_before = [e for e in man_a["files"] if e["day"] == "2024-01-01"]
     assert sum(e["rows"] for e in man_a["files"]) == pts.count()
 
-    ST.compact_st_clustered(spark, path, "2024-01-02", files=4)
+    C.compact_clustered(spark, path, files=4, day="2024-01-02")
     assert rows() == want  # compaction never changes results
-    man_c = ST.load_st_manifest(path)
+    man_c = C.load_manifest(path)
     day2_after = [e for e in man_c["files"] if e["day"] == "2024-01-02"]
     day1_after = [e for e in man_c["files"] if e["day"] == "2024-01-01"]
     assert sum(e["rows"] for e in man_c["files"]) == pts.count()
@@ -987,13 +985,11 @@ def test_st_requires_wallclock_ts(spark, sf_dir, tmp_path):
     TIMESTAMP ts would make the day boundary depend on the session
     timezone (writer vs reader skew drops boundary-day rows), so the
     writer rejects it up front."""
-    from spatial4n_spark.io import st_clustered as ST
-
     pts = pts_orders(spark, sf_dir).limit(50).withColumn(
         "ts", F.timestamp_seconds(F.lit(1704067200))  # tz-aware TIMESTAMP
     )
     with pytest.raises(ValueError, match="timezone-independent"):
-        ST.write_st_clustered(pts, str(tmp_path / "st_bad"), level=14, files=1)
+        C.write_clustered(pts, str(tmp_path / "st_bad"), level=14, files=1, day_of="ts")
 
 
 def test_compaction_advice_lifecycle(spark, sf_dir, tmp_path):
@@ -1037,3 +1033,133 @@ def test_compaction_advice_lifecycle(spark, sf_dir, tmp_path):
     a = C.compaction_advice(path)
     assert a["should_compact"] is False
     assert a["pending_delete_rows"] == 0
+
+
+@pytest.mark.parametrize("day", [True, False], ids=["day", "flat"])
+def test_executors_agree_after_mor_on_day_and_flat_tables(
+    spark, sf_dir, tmp_path, monkeypatch, day
+):
+    """Every clustered reader at the default row budget (the driver
+    reads) against budget 0 (Spark reads), after a MOR delete and a MOR
+    upsert that moves keys across days: a file is named by its
+    manifest-relative path on both executors, so the pending deletes
+    match their rows on a day table (``_day=<day>/<file>``) as on a flat
+    one (the bare file name). Radius with and without a window, on the
+    settled and the band branch; ``clustered_scan``; ``clustered_knn``;
+    ``incremental_scan`` over append-only ranges; time travel by tag.
+    The deleted and the replaced row versions are gone on both."""
+    import pyarrow.parquet as pq
+    from pandas.testing import assert_frame_equal
+
+    from spatial4n_spark.operators import knn
+
+    pts = pts_orders(spark, sf_dir).withColumn(
+        "ts",
+        F.expr(
+            "timestampadd(SECOND, CAST((o_orderkey % 4) * 86400 + o_orderkey % 977 "
+            "AS BIGINT), TIMESTAMP_NTZ'2024-01-01 00:00:00')"
+        ),
+    )
+    path = str(tmp_path / "tbl")
+    spec = {"day_of": "ts"} if day else {}
+    C.write_clustered(pts.where(F.col("o_orderkey") % 3 != 0), path, level=14, files=8, **spec)
+    C.append_clustered(pts.where(F.col("o_orderkey") % 3 == 0), path, files=2)  # 2
+    C.create_tag(path, "t2")
+    C.delete_clustered(spark, path, F.col("o_orderkey") % 5 == 0, strategy="mor")  # 3
+    moved = (
+        pts.where(F.col("o_orderkey") % 5 == 1)
+        .withColumn("ts", F.col("ts") + F.expr("INTERVAL 1 DAY"))
+        .withColumn("lon", F.col("lon") + 0.5)
+    )
+    C.upsert_clustered(spark, moved, path, key="o_orderkey", strategy="mor")  # 4
+    late = pts.limit(30).withColumn("o_orderkey", F.col("o_orderkey") + 10**9)
+    C.append_clustered(late, path, files=1)  # 5
+    man = C.load_manifest(path)
+    kinds = {d.get("kind", "pos") for d in man["deletes"]}
+    assert kinds == {"pos", "eq"} and all(
+        ("/" in t) == day for d in man["deletes"] for t in d["targets"]
+    )
+
+    def pdf(df):
+        return df.toPandas().sort_values("o_orderkey").reset_index(drop=True)
+
+    def both(read):
+        local = read()
+        with monkeypatch.context() as m:
+            m.setattr(C, "_LOCAL_READ_ROWS", 0)
+            return local, read()
+
+    def agree(read):
+        a, b = both(read)
+        assert_frame_equal(pdf(a), pdf(b))
+        return a
+
+    # the whole table, read by each executor: deleted keys gone, moved
+    # keys once each at their new place and day
+    names = [e["file"] for e in man["files"]]
+    spark_rows = pdf(C._read_files(spark, path, man, names))
+    local_rows = pdf(
+        spark.createDataFrame(C._read_files_local(path, man, names), C._read_schema(man))
+    )
+    assert_frame_equal(spark_rows, local_rows)
+    keys = spark_rows["o_orderkey"]
+    assert keys.is_unique and len(keys) > 100
+    assert not ((keys % 5 == 0) & (keys < 10**9)).any()
+    want_moved = pdf(moved)
+    got_moved = spark_rows[(keys % 5 == 1) & (keys < 10**9)].reset_index(drop=True)
+    assert list(got_moved["lon"]) == list(want_moved["lon"])
+    if day:
+        assert list(got_moved[C.DAY_COL]) == [
+            str(t)[:10] for t in want_moved["ts"]
+        ]
+        # every row's _day is its file's directory
+        file_day = {
+            k: e["day"]
+            for e in man["files"]
+            for k in pq.read_table(
+                os.path.join(path, e["file"]), columns=["o_orderkey"]
+            )["o_orderkey"].to_pylist()
+        }
+        assert all(file_day[k] == d for k, d in zip(keys, spark_rows[C.DAY_COL]))
+
+    window = ("2024-01-02 00:00:00", "2024-01-03 23:59:59") if day else (None, None)
+    seen, branches = 0, set()
+    for qlon, qlat, r in [(2.3125, 48.875, 800.0), (10.0, 88.0, 600.0), (0.0, 0.0, 20_016.0)]:
+        for t0, t1 in {(None, None), window}:
+            for band in (False, True):
+                with monkeypatch.context() as m:
+                    if band:  # a slack past every distance: always the band
+                        m.setattr(knn, "_SLACK_KM", 1e6)
+                    out = agree(
+                        lambda: C.clustered_radius_query(
+                            spark, path, qlon, qlat, r, t0=t0, t1=t1
+                        )
+                    )
+                on_band = "__s4n_r" in out._jdf.queryExecution().analyzed().toString()
+                assert on_band or not band
+                branches.add(on_band)
+                assert C.DAY_COL not in out.columns and C.CELL_COL not in out.columns
+                got = pdf(out)["o_orderkey"]
+                assert not ((got % 5 == 0) & (got < 10**9)).any()
+                seen += len(got)
+    assert seen > 100 and branches == {False, True}
+    agree(lambda: C.clustered_scan(spark, path, {"o_orderkey": (1, 4000)}))
+    agree(
+        lambda: C.clustered_knn(
+            spark, path, [("a", 2.3125, 48.875), ("b", 10.0, 88.0)], k=5, id_col="o_orderkey"
+        ).select("query_id", "o_orderkey", "rank")
+    )
+    for frm, to in ((0, 2), (4, 5)):
+        inc = agree(lambda: C.incremental_scan(spark, path, frm, to))
+        assert (C.DAY_COL in inc.columns) == day
+    # time travel by tag: the pre-delete rows are all there
+    trav = agree(
+        lambda: C.clustered_radius_query(spark, path, 0.0, 0.0, 20_016.0, snapshot_id="t2")
+    )
+    assert len(pdf(trav)) == pts.count()
+    if not day:  # a time window needs a day table
+        bounds = {"t0": "2024-01-01 00:00:00", "t1": "2024-01-02 00:00:00"}
+        with pytest.raises(ValueError, match="day-partitioned"):
+            C.clustered_radius_query(spark, path, 0.0, 0.0, 1.0, **bounds)
+        with pytest.raises(ValueError, match="day-partitioned"):
+            C.delete_clustered(spark, path, **bounds)

@@ -220,12 +220,10 @@ def test_upsert_null_keys_insert_only(spark, table):
 
 
 def test_st_delete_two_axis_pruned(spark, sf_dir, tmp_path):
-    """delete_st_clustered prunes candidates on BOTH axes (day range +
+    """delete_clustered on a day table prunes candidates on BOTH axes (day range +
     cell cover) and rewrites only touched files; result equals the
     plain-DataFrame baseline, days outside the window stay verbatim,
     and time travel still sees the deleted rows."""
-    from spatial4n_spark.io import st_clustered as ST
-
     path = str(tmp_path / "st_cow")
     pts = pts_orders(spark, sf_dir).withColumn(
         "ts",
@@ -235,9 +233,9 @@ def test_st_delete_two_axis_pruned(spark, sf_dir, tmp_path):
             "TIMESTAMP_NTZ'2024-01-01 00:00:00')"
         ),
     )
-    ST.write_st_clustered(pts, path, level=14, files=8)
+    C.write_clustered(pts, path, level=14, files=8, day_of="ts")
     before = {e["file"]: (e["min"], e["max"], e["rows"]) for e in
-              ST.load_st_manifest(path)["files"]}
+              C.load_manifest(path)["files"]}
 
     # --- two-axis delete: this circle, these days (800 km — the test
     # lattice has only 4096 distinct sites, city radii can be empty) ---
@@ -248,7 +246,7 @@ def test_st_delete_two_axis_pruned(spark, sf_dir, tmp_path):
         haversine_km(F.col("lon"), F.col("lat"), F.lit(QLON), F.lit(QLAT))
         <= F.lit(r_km)
     )
-    man = ST.delete_st_clustered(
+    man = C.delete_clustered(
         spark, path, predicate=pred, t0=t0, t1=t1, shape=circle
     )
 
@@ -265,7 +263,7 @@ def test_st_delete_two_axis_pruned(spark, sf_dir, tmp_path):
     # two-axis minimal rewrite: every file of a day OUTSIDE the window
     # is untouched verbatim
     after = {e["file"]: (e["min"], e["max"], e["rows"]) for e in man["files"]}
-    window_days = {f"{ST.DAY_COL}=2024-01-0{d}" for d in (2, 3, 4, 5)}
+    window_days = {f"{C.DAY_COL}=2024-01-0{d}" for d in (2, 3, 4, 5)}
     out_of_window = [
         f for f in before if f.split("/")[0] not in window_days
     ]
@@ -275,16 +273,16 @@ def test_st_delete_two_axis_pruned(spark, sf_dir, tmp_path):
     assert man["summary"]["untouched_files"] >= len(out_of_window)
 
     # one snapshot: travel back, and the query surface agrees
-    trav = ST.st_radius_query(spark, path, QLON, QLAT, r_km, t0, t1,
+    trav = C.clustered_radius_query(spark, path, QLON, QLAT, r_km, t0=t0, t1=t1,
                               snapshot_id=man["parent_id"])
     assert trav.count() == man["summary"]["deleted_rows"]
-    cur = ST.st_radius_query(spark, path, QLON, QLAT, r_km, t0, t1)
+    cur = C.clustered_radius_query(spark, path, QLON, QLAT, r_km, t0=t0, t1=t1)
     assert cur.count() == 0
 
     # --- window-only delete: drop two whole days (retention) ---
     w0, w1 = "2024-01-07 00:00:00", "2024-01-08 23:59:59"
-    man2 = ST.delete_st_clustered(spark, path, t0=w0, t1=w1)
-    drop_days = {f"{ST.DAY_COL}=2024-01-0{d}" for d in (7, 8)}
+    man2 = C.delete_clustered(spark, path, t0=w0, t1=w1)
+    drop_days = {f"{C.DAY_COL}=2024-01-0{d}" for d in (7, 8)}
     assert all(e["file"].split("/")[0] not in drop_days for e in man2["files"])
     in_w = (F.col("ts") >= F.lit(w0).cast("timestamp_ntz")) & (
         F.col("ts") <= F.lit(w1).cast("timestamp_ntz")
@@ -296,20 +294,18 @@ def test_st_delete_two_axis_pruned(spark, sf_dir, tmp_path):
     assert _ids(got2) == want2
 
     # no-op forms commit nothing
-    sid = ST.load_st_manifest(path)["snapshot_id"]
-    res = ST.delete_st_clustered(spark, path, t0="2030-01-01", t1="2030-01-02")
-    assert res.get("noop") and ST.load_st_manifest(path)["snapshot_id"] == sid
+    sid = C.load_manifest(path)["snapshot_id"]
+    res = C.delete_clustered(spark, path, t0="2030-01-01", t1="2030-01-02")
+    assert res.get("noop") and C.load_manifest(path)["snapshot_id"] == sid
     with pytest.raises(ValueError, match="unconditioned"):
-        ST.delete_st_clustered(spark, path)
+        C.delete_clustered(spark, path)
 
 
 def test_st_upsert_moves_across_days_and_space(spark, sf_dir, tmp_path):
-    """upsert_st_clustered replaces keys across day partitions: a moved
+    """upsert_clustered on a day table replaces keys across day partitions: a moved
     row leaves its old day's file and lands in its new day directory
     and cell, exactly-one-version holds, and untouched days' manifest
     entries survive verbatim."""
-    from spatial4n_spark.io import st_clustered as ST
-
     path = str(tmp_path / "st_up")
     pts = pts_orders(spark, sf_dir).withColumn(
         "ts",
@@ -319,10 +315,10 @@ def test_st_upsert_moves_across_days_and_space(spark, sf_dir, tmp_path):
             "TIMESTAMP_NTZ'2024-01-01 00:00:00')"
         ),
     )
-    ST.write_st_clustered(pts, path, level=14, files=8)
+    C.write_clustered(pts, path, level=14, files=8, day_of="ts")
     n0 = pts.count()
     before = {e["file"]: (e["min"], e["max"], e["rows"]) for e in
-              ST.load_st_manifest(path)["files"]}
+              C.load_manifest(path)["files"]}
 
     # move 30 keys to Paris on a NEW day (outside the table's 8 days)
     moved = (
@@ -332,7 +328,7 @@ def test_st_upsert_moves_across_days_and_space(spark, sf_dir, tmp_path):
         .withColumn("lat", F.lit(QLAT))
         .withColumn("ts", F.lit("2024-02-01 12:00:00").cast("timestamp_ntz"))
     )
-    man = ST.upsert_st_clustered(spark, moved, path, key="o_orderkey")
+    man = C.upsert_clustered(spark, moved, path, key="o_orderkey")
 
     assert man["operation"] == "upsert"
     assert man["summary"]["replaced_rows"] == 30
@@ -343,17 +339,17 @@ def test_st_upsert_moves_across_days_and_space(spark, sf_dir, tmp_path):
     assert cur.count() == n0
     assert cur.groupBy("o_orderkey").count().where("count > 1").count() == 0
     # found at the new location in the new day window by the pruned query
-    got = ST.st_radius_query(
-        spark, path, QLON, QLAT, 5.0, "2024-02-01 00:00:00",
-        "2024-02-01 23:59:59",
+    got = C.clustered_radius_query(
+        spark, path, QLON, QLAT, 5.0, t0="2024-02-01 00:00:00",
+        t1="2024-02-01 23:59:59",
     )
     assert got.count() == 30
     # minimal rewrite: some original entries untouched verbatim
     after = {e["file"]: (e["min"], e["max"], e["rows"]) for e in man["files"]}
     assert any(f in after and after[f] == before[f] for f in before)
     # time travel: pre-upsert state intact (no February day)
-    old = ST.load_st_manifest(path, snapshot_id=man["parent_id"])
-    assert all(not e["file"].startswith(f"{ST.DAY_COL}=2024-02") for e in
+    old = C.load_manifest(path, snapshot_id=man["parent_id"])
+    assert all(not e["file"].startswith(f"{C.DAY_COL}=2024-02") for e in
                old["files"])
 
 

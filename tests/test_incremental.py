@@ -1,6 +1,6 @@
 """Incremental (CDC-style) scans, the resumable consumer, and the
 ``.files`` metadata table over the snapshot-versioned layouts
-(io/clustered.py, io/st_clustered.py) — the Iceberg
+(io/clustered.py, flat and day-partitioned tables) — the Iceberg
 incremental-append-scan / metadata-table analogs.
 
 Contract under test:
@@ -21,7 +21,6 @@ import pytest
 from pyspark.sql import functions as F
 
 from spatial4n_spark.io import clustered as C
-from spatial4n_spark.io import st_clustered as ST
 from spatial4n_spark.suite import pts_orders
 
 
@@ -164,37 +163,37 @@ def test_st_incremental_and_files(spark, sf_dir, tmp_path):
     )
     base = pts.where(F.col("o_orderkey") % 2 == 0)
     extra = pts.where(F.col("o_orderkey") % 2 == 1)
-    ST.write_st_clustered(base, path, level=14, files=4)
-    ST.append_st_clustered(extra, path, files=2)
-    inc = ST.st_incremental_scan(spark, path, 1, 2)
+    C.write_clustered(base, path, level=14, files=4, day_of="ts")
+    C.append_clustered(extra, path, files=2)
+    inc = C.incremental_scan(spark, path, 1, 2)
     assert _ids(inc) == _ids(extra)
     # the day partition column materializes on incremental reads
-    assert ST.DAY_COL in inc.columns
+    assert C.DAY_COL in inc.columns
     # odd keys land on days 2 and 4 of the (key%4)-derived calendar
     days = {
         r[0]
         for r in inc.select(
-            F.col(ST.DAY_COL).cast("string")
+            F.col(C.DAY_COL).cast("string")
         ).distinct().collect()
     }
     assert days == {"2024-01-02", "2024-01-04"}
-    # consumer over the ST layout
-    i1 = ST.st_next_increment(spark, path, state)
+    # consumer over the day table
+    i1 = C.next_increment(spark, path, state)
     assert (i1.from_snapshot, i1.to_snapshot) == (0, 2)
     i1.commit()
-    assert ST.st_next_increment(spark, path, state) is None
+    assert C.next_increment(spark, path, state) is None
     # files metadata carries the day partition
-    fdf = ST.st_files_df(spark, path)
-    man = ST.load_st_manifest(path)
+    fdf = C.files_df(spark, path)
+    man = C.load_manifest(path)
     rows = {r["file"]: r for r in fdf.collect()}
     assert set(rows) == {e["file"] for e in man["files"]}
     assert all(rows[e["file"]]["day"] == e["day"] for e in man["files"])
     # a compaction then a delete: replace skipped, delete raises
-    ST.compact_st_clustered(spark, path, "2024-01-02")
-    assert ST.st_incremental_scan(spark, path, 2, 3).count() == 0
-    ST.delete_st_clustered(spark, path, F.col("o_orderkey") % 10 == 0)
+    C.compact_clustered(spark, path, files=4, day="2024-01-02")
+    assert C.incremental_scan(spark, path, 2, 3).count() == 0
+    C.delete_clustered(spark, path, F.col("o_orderkey") % 10 == 0)
     with pytest.raises(ValueError, match="delete"):
-        ST.st_incremental_scan(spark, path, 2)
+        C.incremental_scan(spark, path, 2)
 
 
 def test_incremental_pip_job_resumes_and_is_exactly_once(

@@ -1,5 +1,5 @@
 """Named refs (tags), per-file/per-partition lineage metadata tables,
-and the standalone orphan-file sweep (io/clustered.py, io/st_clustered.py)
+and the standalone orphan-file sweep (io/clustered.py, flat and day tables)
 — the Iceberg tag / ``.refs`` / ``added_snapshot_id`` / ``.partitions``
 / remove-orphan-files analogs.
 
@@ -18,7 +18,6 @@ from pyspark.sql import functions as F
 
 from spatial4n_spark.functions.native import haversine_km
 from spatial4n_spark.io import clustered as C
-from spatial4n_spark.io import st_clustered as ST
 from spatial4n_spark.suite import pts_orders
 
 QLON, QLAT, R_KM = 2.3125, 48.875, 150.0
@@ -157,7 +156,7 @@ def test_remove_orphan_files_reclaims_only_unreferenced(spark, table3):
 
 
 def test_st_partitions_refs_and_orphans(spark, sf_dir, tmp_path):
-    """The ST layout's .partitions rollup, tags, and orphan sweep."""
+    """A day table's .partitions rollup, tags, and orphan sweep."""
     pts = pts_orders(spark, sf_dir).withColumn(
         "ts",
         F.timestamp_seconds(
@@ -169,10 +168,10 @@ def test_st_partitions_refs_and_orphans(spark, sf_dir, tmp_path):
     base = pts.where(F.col("o_orderkey") % 4 != 1)  # days 01, 03, 04
     extra = pts.where(F.col("o_orderkey") % 4 == 1)  # only day 2024-01-02
     path = str(tmp_path / "stp")
-    ST.write_st_clustered(base, path, level=14, files=4)
-    ST.append_st_clustered(extra, path, files=2)
+    C.write_clustered(base, path, level=14, files=4, day_of="ts")
+    C.append_clustered(extra, path, files=2)
 
-    parts = {r["day"]: r for r in ST.st_partitions_df(spark, path).collect()}
+    parts = {r["day"]: r for r in C.partitions_df(spark, path).collect()}
     assert sorted(parts) == [
         "2024-01-01", "2024-01-02", "2024-01-03", "2024-01-04",
     ]
@@ -195,19 +194,19 @@ def test_st_partitions_refs_and_orphans(spark, sf_dir, tmp_path):
     # in snapshot 2) does not exist yet
     old = {
         r["day"]: r
-        for r in ST.st_partitions_df(spark, path, snapshot_id=1).collect()
+        for r in C.partitions_df(spark, path, snapshot_id=1).collect()
     }
     assert sorted(old) == ["2024-01-01", "2024-01-03", "2024-01-04"]
     assert all(r["last_updated_snapshot"] == 1 for r in old.values())
 
     # tags anchor ST snapshots exactly like the flat layout
-    ST.create_st_tag(path, "pre-append", 1)
-    ST.append_st_clustered(extra.limit(0), path, files=1)  # snapshot 3 (no-op rows)
-    res = ST.expire_st_snapshots(path, keep_last=1)
+    C.create_tag(path, "pre-append", 1)
+    C.append_clustered(extra.limit(0), path, files=1)  # snapshot 3 (no-op rows)
+    res = C.expire_snapshots(path, keep_last=1)
     assert 1 not in res["expired_snapshots"]
-    assert ST.load_st_manifest(path, "pre-append")["snapshot_id"] == 1
-    assert ST.st_table_refs(path) == {"pre-append": 1}
-    ST.drop_st_tag(path, "pre-append")
+    assert C.load_manifest(path, "pre-append")["snapshot_id"] == 1
+    assert C.table_refs(path) == {"pre-append": 1}
+    C.drop_tag(path, "pre-append")
 
     # orphan sweep: plant a fake day-partition file nothing references
     daydir = os.path.join(path, "_day=2024-01-01")
@@ -216,6 +215,6 @@ def test_st_partitions_refs_and_orphans(spark, sf_dir, tmp_path):
     )
     with open(os.path.join(path, orphan_rel), "wb") as f:
         f.write(b"PAR1 nope")
-    res = ST.remove_orphan_st_files(path)
+    res = C.remove_orphan_files(path)
     assert res["removed_files"] == [orphan_rel]
     assert not os.path.exists(os.path.join(path, orphan_rel))

@@ -168,11 +168,9 @@ def test_legacy_manifest_upgrades_in_place(spark, sf_dir, tmp_path):
 
 
 def test_st_layout_shares_snapshot_semantics(spark, sf_dir, tmp_path):
-    """The spatio-temporal layout runs the same snapshot machinery:
+    """A day-partitioned table runs the same snapshot machinery:
     time-travel reads, rollback-as-lineage, snapshot-isolated day
     compaction, expire as the only history reclaim."""
-    from spatial4n_spark.io import st_clustered as ST
-
     pts = pts_orders(spark, sf_dir).withColumn(
         "ts",
         F.timestamp_seconds(
@@ -184,15 +182,15 @@ def test_st_layout_shares_snapshot_semantics(spark, sf_dir, tmp_path):
     base = pts.where(F.col("o_orderkey") % 2 == 0)
     extra = pts.where(F.col("o_orderkey") % 2 == 1)
     path = str(tmp_path / "stsnap")
-    ST.write_st_clustered(base, path, level=14, files=8)
-    ST.append_st_clustered(extra, path, files=4)
+    C.write_clustered(base, path, level=14, files=8, day_of="ts")
+    C.append_clustered(extra, path, files=4)
 
     t0, t1 = "2024-01-02 00:00:00", "2024-01-03 23:59:59"
     qlon, qlat, r = 10.0, 88.0, 600.0
 
     def got(snapshot_id=None):
-        out = ST.st_radius_query(
-            spark, path, qlon, qlat, r, t0, t1, snapshot_id=snapshot_id
+        out = C.clustered_radius_query(
+            spark, path, qlon, qlat, r, t0=t0, t1=t1, snapshot_id=snapshot_id
         )
         return sorted(row[0] for row in out.select("o_orderkey").collect())
 
@@ -212,28 +210,28 @@ def test_st_layout_shares_snapshot_semantics(spark, sf_dir, tmp_path):
         )
 
     # lineage + time travel
-    log = ST.st_snapshots(path)
+    log = C.snapshots(path)
     assert [s["operation"] for s in log] == ["overwrite", "append"]
     assert got() == want(pts) and got(snapshot_id=1) == want(base)
     assert len(want(base)) > 0
-    dfl = ST.st_snapshot_log_df(spark, path).orderBy("snapshot_id").collect()
+    dfl = C.snapshot_log_df(spark, path).orderBy("snapshot_id").collect()
     assert [r["operation"] for r in dfl] == ["overwrite", "append"]
 
     # rollback is new lineage and revertible
-    ST.rollback_st_clustered(path, 1)
+    C.rollback_clustered(path, 1)
     assert got() == want(base)
-    ST.rollback_st_clustered(path, 2)
+    C.rollback_clustered(path, 2)
     assert got() == want(pts)
 
     # day compaction keeps old snapshots readable until expire
     pre_s2 = got(snapshot_id=2)
-    ST.compact_st_clustered(spark, path, "2024-01-02", files=4)
+    C.compact_clustered(spark, path, files=4, day="2024-01-02")
     assert got() == want(pts)
     assert got(snapshot_id=2) == pre_s2  # isolation
-    res = ST.expire_st_snapshots(path, keep_last=1)
+    res = C.expire_snapshots(path, keep_last=1)
     assert res["expired_snapshots"] and got() == want(pts)
     with pytest.raises(ValueError, match="expired"):
-        ST.load_st_manifest(path, 1)
+        C.load_manifest(path, 1)
 
 
 def test_dangling_snapshot_is_overwritten_not_history(spark, sf_dir, tmp_path):

@@ -116,11 +116,14 @@ COMMENTS = {
         "unchanged."
     ),
     "st_radius_join": (
-        "Spatio-temporal query: the scan lists ONLY files inside the query's day "
-        "directories AND the manifest's surviving cell bounds (both axes pruned "
-        "at plan time, driver-side); the pushed cell-range disjunction skips row "
-        "groups inside kept files, and the exact timestamp + haversine filters "
-        "run as native codegen. No joins, no shuffles."
+        "Radius query with a [t0, t1] window over a day-partitioned clustered table "
+        "(io/clustered.py, day spec in the manifest): only files inside the "
+        "window's day directories AND the manifest's surviving cell bounds are "
+        "read (both axes pruned at plan time, driver-side). Within the driver-local "
+        "budget the kept files are read on the driver under the one read spec and "
+        "the exact timestamp (+ haversine, on the slack band) predicates fold into "
+        "a LocalTableScan; above it the pushed cell-range disjunction skips row "
+        "groups and both filters run as native codegen. No joins, no shuffles."
     ),
     "doc_neardup_pairs": (
         "Exact n-gram Jaccard near-dup pairs. Wanted shape: tokenize ONCE per doc "
