@@ -291,9 +291,8 @@ def _write_batch(
     the batch as at most ``files`` new data files, each a disjoint
     range of cell ids sorted within, and read the new files' footer
     stats. Nothing is committed. Returns ``(entries, schema_json,
-    tbl)``: the new manifest entries, the merged schema JSON (None on a
-    legacy manifest) and, when the driver wrote the batch, the batch as
-    Arrow (else None).
+    tbl)``: the new manifest entries, the merged schema JSON and, when
+    the driver wrote the batch, the batch as Arrow (else None).
 
     The driver writes the batch (``_local_batch``, ``_write_local``)
     when its optimized plan is a ``LocalRelation`` of at most
@@ -312,12 +311,8 @@ def _write_batch(
             _require_wallclock_ts(df, day_of)
             df = df.withColumn(DAY_COL, F.date_format(F.col(day_of), "yyyy-MM-dd"))
         out = df.withColumn(CELL_COL, cell_backend("s2").udf(level)(F.col(lat), F.col(lon)))
-    old_schema = _manifest_schema(man)
-    schema_json = None
-    if old_schema is not None:
-        out_schema = _cell_schema(df.schema) if out is None else _file_schema(out.schema)
-        merged, _ = _merge_schemas(old_schema, out_schema)
-        schema_json = merged.json()
+    out_schema = _cell_schema(df.schema) if out is None else _file_schema(out.schema)
+    schema_json = _merge_schemas(_manifest_schema(man), out_schema)[0].json()
     if out is None:
         return _file_stats(path, _write_local(tbl, path, files)), schema_json, tbl
     return _file_stats(path, _write_run(out, path, files, bool(day_of))), schema_json, None
@@ -524,9 +519,9 @@ def _col_range_keep(e: dict, col: str, lo, hi) -> bool:
     """May this manifest entry hold rows with ``col`` in [lo, hi]? The
     one file-overlap test of every manifest pruner (the cell column's
     bounds are the entry's ``min``/``max``). Sound by construction:
-    entries without stats for the column (legacy manifests, unsupported
-    types) are always kept."""
-    rng = [e["min"], e["max"]] if col == CELL_COL else e.get("cols", {}).get(col)
+    entries without stats for the column (a type the manifest cannot
+    carry) are always kept."""
+    rng = [e["min"], e["max"]] if col == CELL_COL else e["cols"].get(col)
     if rng is None:
         return True
     return not (hi < rng[0] or lo > rng[1])
@@ -563,19 +558,17 @@ def _write_manifest(
 
     Commit ordering (each step an atomic write):
 
-    1. heal — if the CURRENT manifest has no snapshot file yet (legacy
-       table, or a crash between steps 2 and 3 of ITS commit), write it,
-       so history never loses the state being superseded;
-    2. write the new snapshot file;
-    3. ``os.replace`` the current-manifest pointer (the cut-over).
+    1. write the new snapshot file;
+    2. ``os.replace`` the current-manifest pointer (the cut-over,
+       ``_cut_over``).
 
-    A crash between 2 and 3 leaves a dangling snapshot at id N: the
+    A crash between 1 and 2 leaves a dangling snapshot at id N: the
     table still reads as its parent, and the NEXT commit reuses id N,
     overwriting the dangling file.  Until then sweeps retain the files
     it references — bounded waste, never damage.
 
     With ``branch`` set (the Iceberg branch-write / WAP-staging analog,
-    see ``create_branch``), the commit's base is the BRANCH HEAD, step 3
+    see ``create_branch``), the commit's base is the BRANCH HEAD, step 2
     updates the branch ref instead of the current-manifest pointer, and
     the main table is untouched — staged state is invisible to every
     reader that doesn't name the branch until ``fast_forward_clustered``
@@ -604,13 +597,9 @@ def _write_manifest(
         cur = _load(path, int(r["snapshot_id"]))
     else:
         cur = main
-    parent = int(cur.get("snapshot_id", 0)) if cur is not None else None
+    parent = cur["snapshot_id"] if cur is not None else None
     os.makedirs(os.path.join(path, SNAP_DIR), exist_ok=True)
-    if main is not None:
-        mid = int(main.get("snapshot_id", 0))
-        if not os.path.exists(_snap_file(path, mid)):
-            _atomic_json_write(_snap_file(path, mid), main)
-    heads = [int(main.get("snapshot_id", 0))] if main is not None else [0]
+    heads = [main["snapshot_id"]] if main is not None else [0]
     # every ref counts toward the allocation max, tags included: a tag
     # may legally pin a branch-lineage snapshot ABOVE all heads (it was
     # live when pinned), and after drop_branch that id must never be
@@ -629,7 +618,7 @@ def _write_manifest(
     # follows the same rule.
     if inherit and cur is not None:
         if schema_json is None:
-            schema_json = cur.get("schema")
+            schema_json = cur["schema"]
         day_of = cur.get("day_of")
     # pending merge-on-read delete files ride the manifest like data
     # files do.  Commits that don't pass a list inherit the parent's;
@@ -638,7 +627,7 @@ def _write_manifest(
     # pending deletes (already applied by the rewrite's delete-aware
     # scan) fall away here, and a full replace empties the list.
     if deletes is None and cur is not None:
-        deletes = cur.get("deletes") or []
+        deletes = cur["deletes"]
     pruned_dels = []
     for d in deletes or []:
         targets = [t for t in d["targets"] if t in new_files]
@@ -677,80 +666,58 @@ def _write_manifest(
         refs[branch] = {"type": "branch", "snapshot_id": sid}
         _write_refs(path, refs)
     else:
-        _atomic_json_write(os.path.join(path, MANIFEST), man)
-        _append_history(path, sid, operation)
+        _cut_over(path, main, man, operation)
     return man
 
 
 HISTORY_FILE = "history.jsonl"
 
 
-def _append_history(path: str, sid: int, event: str) -> None:
-    """One line per MADE-CURRENT event (the Iceberg ``.history`` table's
-    unit): ordinary commits, rollbacks, and fast-forward publishes all
-    change which snapshot the main table reads as, and this log records
-    WHEN — distinct from each snapshot's own committed_at (a published
-    branch head became current long after it was committed).  Appended
-    under the caller's table lock, AFTER the manifest cut-over: a crash
-    in between loses one history line, never table state (history_df
-    backfills missing commits from the snapshot log).
+def _cut_over(path: str, main: dict | None, man: dict, event: str) -> None:
+    """Make ``man`` the main table's state (under the caller's table
+    lock): ``os.replace`` the current-manifest pointer, then append the
+    ``event`` line to the history log — one line per MADE-CURRENT event
+    (the Iceberg ``.history`` table's unit): ordinary commits,
+    rollbacks and fast-forward publishes all change which snapshot the
+    main table reads as, and the log records WHEN, distinct from each
+    snapshot's own committed_at (a published branch head became current
+    long after it was committed).
 
-    The FIRST append on a legacy table (predating the log) seeds the
-    file from the existing snapshot chain — otherwise one post-upgrade
-    commit would create a one-line log and the backfill path would
-    never fire again, permanently hiding pre-upgrade history from the
-    ``.history`` metadata table."""
-    hist = os.path.join(path, SNAP_DIR, HISTORY_FILE)
-    seed: list[str] = []
-    if not os.path.exists(hist):
-        for m in _history_chain(path):
-            msid = int(m.get("snapshot_id", 0))
-            if msid == int(sid):
-                continue  # the event being appended below
-            seed.append(json.dumps({
-                "made_current_at": m.get("committed_at"),
-                "snapshot_id": msid,
-                "event": m.get("operation", "overwrite"),
-            }))
-    line = json.dumps(
-        {"made_current_at": time.time(), "snapshot_id": int(sid),
-         "event": str(event)}
-    )
-    with open(hist, "a") as f:
-        for s_ in seed:
-            f.write(s_ + "\n")
+    A crash between the cut-over and the history line loses that line,
+    never table state; the next cut-over repairs it first: when the
+    log's last line does not name ``main``, the superseded head, the
+    head's line is appended with the manifest file's mtime (its
+    cut-over time) as ``made_current_at`` and the head's own operation
+    as its event."""
+    mpath = os.path.join(path, MANIFEST)
+    if main is not None:
+        logged = _history_lines(path)
+        if not logged or logged[-1]["snapshot_id"] != main["snapshot_id"]:
+            _append_history(path, main["snapshot_id"], main["operation"], os.path.getmtime(mpath))
+    _atomic_json_write(mpath, man)
+    _append_history(path, man["snapshot_id"], event, time.time())
+
+
+def _append_history(path: str, sid: int, event: str, at: float) -> None:
+    line = json.dumps({"made_current_at": at, "snapshot_id": int(sid), "event": str(event)})
+    with open(os.path.join(path, SNAP_DIR, HISTORY_FILE), "a") as f:
         f.write(line + "\n")
 
 
-def _history_rows(path: str) -> list[dict]:
-    rows = []
-    logged = True
-    try:
+def _history_lines(path: str) -> list[dict]:
+    """The history log's lines in file order (none before the first
+    logged event)."""
+    with contextlib.suppress(FileNotFoundError):
         with open(os.path.join(path, SNAP_DIR, HISTORY_FILE)) as f:
-            for ln in f:
-                ln = ln.strip()
-                if ln:
-                    rows.append(json.loads(ln))
-    except FileNotFoundError:
-        logged = False
-    if not logged:
-        # legacy table (predates the log): synthesize made-current
-        # events from the snapshot log — on a linear lineage each commit
-        # became current when it was committed.  A table WITH a log is
-        # never backfilled: a published branch's intermediate commits
-        # are main history but were never individually current.
-        for s_ in snapshots(path):
-            rows.append(
-                {
-                    "made_current_at": s_["committed_at"],
-                    "snapshot_id": int(s_["snapshot_id"]),
-                    "event": s_["operation"],
-                }
-            )
-    rows.sort(key=lambda r: (r["made_current_at"] or 0, r["snapshot_id"]))
-    chain = {int(m.get("snapshot_id", 0)) for m in _history_chain(path)}
+            return [json.loads(ln) for ln in f if ln.strip()]
+    return []
+
+
+def _history_rows(path: str) -> list[dict]:
+    rows = sorted(_history_lines(path), key=lambda r: (r["made_current_at"], r["snapshot_id"]))
+    chain = {m["snapshot_id"] for m in _history_chain(path)}
     for r in rows:
-        r["is_current_ancestor"] = int(r["snapshot_id"]) in chain
+        r["is_current_ancestor"] = r["snapshot_id"] in chain
     return rows
 
 
@@ -765,7 +732,7 @@ def history_df(spark: SparkSession, path: str) -> DataFrame:
     return spark.createDataFrame(
         [
             (
-                float(r["made_current_at"]) if r["made_current_at"] else None,
+                float(r["made_current_at"]),
                 int(r["snapshot_id"]),
                 str(r["event"]),
                 bool(r["is_current_ancestor"]),
@@ -799,20 +766,51 @@ def _atomic_json_write(target: str, obj: dict) -> None:
 _MANIFEST_CACHE: dict = {}
 _MANIFEST_CACHE_CAP = 64
 
+# the keys every manifest and snapshot file carries; only ``parent_id``
+# may be null (a table's first snapshot)
+MANIFEST_KEYS = (
+    "level", "files", "deletes", "schema", "snapshot_id", "parent_id",
+    "operation", "committed_at", "summary",
+)
+
+
+def _format_error(what: str, key: str) -> ValueError:
+    return ValueError(
+        f"{what} has no {key!r}: not the clustered-table format this "
+        "engine reads; rewrite the table with write_clustered"
+    )
+
+
+def _read_manifest_file(fpath: str) -> dict:
+    """Parse one manifest or snapshot file and check its format: every
+    ``MANIFEST_KEYS`` key present (``schema`` set) and every pending
+    delete file's ``kind`` named. Raises ``_format_error`` for the
+    first key missing."""
+    with open(fpath) as f:
+        man = json.load(f)
+    for k in MANIFEST_KEYS:
+        if k not in man or (man[k] is None and k != "parent_id"):
+            raise _format_error(fpath, k)
+    for d in man["deletes"]:
+        if "kind" not in d:
+            raise _format_error(f"delete file {d['file']} of {fpath}", "kind")
+    return man
+
 
 def _load(path: str, snapshot_id: int | str | None = None) -> dict:
     """``load_manifest`` without ``as_of``: the lookup the table's own
     commit, ref and history machinery makes. Readers and writers call
     ``load_manifest`` itself, once per call, so a wrap of that module
     attribute (``perfbench``'s ``io.clustered.manifest`` span) counts
-    their manifest reads and not the bookkeeping's."""
+    their manifest reads and not the bookkeeping's. Every file it
+    parses passes ``_read_manifest_file``'s format check; a cached
+    manifest is not checked again."""
     mpath = os.path.join(path, MANIFEST)
     st = os.stat(mpath)  # FileNotFoundError propagates, as before
     ck = (os.path.abspath(mpath), st.st_mtime_ns, st.st_size)
     cur = _MANIFEST_CACHE.get(ck)
     if cur is None:
-        with open(mpath) as f:
-            cur = json.load(f)
+        cur = _read_manifest_file(mpath)
         if len(_MANIFEST_CACHE) >= _MANIFEST_CACHE_CAP:
             _MANIFEST_CACHE.pop(next(iter(_MANIFEST_CACHE)))
         _MANIFEST_CACHE[ck] = cur
@@ -828,11 +826,10 @@ def _load(path: str, snapshot_id: int | str | None = None) -> dict:
             )
         snapshot_id = refs[snapshot_id]["snapshot_id"]
     sid = int(snapshot_id)
-    if int(cur.get("snapshot_id", 0)) == sid:
+    if cur["snapshot_id"] == sid:
         return cur
     try:
-        with open(_snap_file(path, sid)) as f:
-            return json.load(f)
+        return _read_manifest_file(_snap_file(path, sid))
     except FileNotFoundError:
         known = [s["snapshot_id"] for s in snapshots(path)]
         raise ValueError(
@@ -876,31 +873,25 @@ def snapshot_as_of(path: str, ts: float) -> int:
     t1 and published by ``fast_forward_clustered`` at t2 was NOT the
     table's state in (t1, t2) — readers at that time saw the
     pre-publish main head — so resolving by commit time would rewrite
-    observable history.  ``_history_rows`` backfills made-current
-    events from commit times for legacy tables that predate the
-    history log (linear lineage: each commit became current when
-    committed), so those keep the old behavior.  Raises if ts precedes
+    observable history.  Raises if ts precedes
     the earliest retained state, or if the state current at ts has
     since been expired."""
     ts = float(ts)
     rows = _history_rows(path)
     best = None
     for r in rows:
-        at = r.get("made_current_at")
-        if at is not None and float(at) <= ts:
+        if r["made_current_at"] <= ts:
             best = r
     if best is None:
-        lo = rows[0].get("made_current_at") if rows else None
+        first = rows[0] if rows else {"snapshot_id": "?", "made_current_at": None}
         raise ValueError(
             f"no snapshot of {path} existed at {ts}: the earliest "
-            f"recorded state "
-            f"{rows[0].get('snapshot_id') if rows else '?'} became "
-            f"current at {lo} (earlier history was expired or the "
-            "table is younger than ts)"
+            f"recorded state {first['snapshot_id']} became current at "
+            f"{first['made_current_at']} (earlier history was expired "
+            "or the table is younger than ts)"
         )
-    sid = int(best["snapshot_id"])
-    cur = _load(path)
-    if sid != int(cur.get("snapshot_id", 0)) and not os.path.exists(
+    sid = best["snapshot_id"]
+    if sid != _load(path)["snapshot_id"] and not os.path.exists(
         _snap_file(path, sid)
     ):
         raise ValueError(
@@ -919,23 +910,22 @@ def _history_chain(path: str, head: int | str | None = None) -> list[dict]:
     with branches, snapshot ids from different lineages interleave in
     one ``_snapshots``, so "id ≤ head" would claim another branch's
     commits.  The walk stops where a parent's snapshot file is missing
-    (expired history, or a legacy pre-snapshot manifest): lineage
-    truncates where history does.  Dangling snapshots (a crashed
-    commit's file, unreachable from any head) are excluded naturally.
+    (expired history): lineage truncates where history does.  Dangling
+    snapshots (a crashed commit's file, unreachable from any head) are
+    excluded naturally.
     """
     cur = _load(path, head)
     out = [cur]
-    seen = {int(cur.get("snapshot_id", 0))}
-    parent = cur.get("parent_id")
-    while parent is not None and int(parent) not in seen:
+    seen = {cur["snapshot_id"]}
+    parent = cur["parent_id"]
+    while parent is not None and parent not in seen:
         try:
-            with open(_snap_file(path, int(parent))) as f:
-                m = json.load(f)
+            m = _read_manifest_file(_snap_file(path, parent))
         except FileNotFoundError:
             break
         out.append(m)
-        seen.add(int(parent))
-        parent = m.get("parent_id")
+        seen.add(parent)
+        parent = m["parent_id"]
     out.reverse()
     return out
 
@@ -950,23 +940,16 @@ def snapshots(path: str) -> list[dict]:
     # tag-anchored snapshots survive expire even when the chain between
     # them and the head was reclaimed (a gap the walk can't cross) —
     # they are still readable history, so list them.
-    have = {int(m.get("snapshot_id", 0)) for m in mans}
+    have = {m["snapshot_id"] for m in mans}
     for r in _load_refs(path).values():
-        sid = int(r["snapshot_id"])
+        sid = r["snapshot_id"]
         if r["type"] == "tag" and sid not in have:
             with contextlib.suppress(FileNotFoundError):
-                with open(_snap_file(path, sid)) as f:
-                    mans.append(json.load(f))
+                mans.append(_read_manifest_file(_snap_file(path, sid)))
                 have.add(sid)
     return sorted(
         (
-            {
-                "snapshot_id": int(m.get("snapshot_id", 0)),
-                "parent_id": m.get("parent_id"),
-                "operation": m.get("operation", "overwrite"),
-                "committed_at": m.get("committed_at"),
-                "summary": m.get("summary", {}),
-            }
+            {k: m[k] for k in ("snapshot_id", "parent_id", "operation", "committed_at", "summary")}
             for m in mans
         ),
         key=lambda s: s["snapshot_id"],
@@ -981,11 +964,8 @@ def snapshot_log_df(spark: SparkSession, path: str) -> DataFrame:
             s["snapshot_id"],
             s["parent_id"],
             s["operation"],
-            float(s["committed_at"]) if s["committed_at"] is not None else None,
-            int(s["summary"].get("n_files", 0)),
-            int(s["summary"].get("n_rows", 0)),
-            int(s["summary"].get("added_files", 0)),
-            int(s["summary"].get("removed_files", 0)),
+            float(s["committed_at"]),
+            *(int(s["summary"][k]) for k in ("n_files", "n_rows", "added_files", "removed_files")),
         )
         for s in snapshots(path)
     ]
@@ -1024,36 +1004,26 @@ REFS_FILE = "refs.json"
 
 
 def _load_refs(path: str) -> dict[str, dict]:
-    """Normalized refs: ``{name: {"type": "tag"|"branch", "snapshot_id": N}}``.
-    Legacy files (round-4 tags were stored as plain ints) read as tags,
-    so every existing table keeps working unmodified."""
+    """The refs: ``{name: {"type": "tag"|"branch", "snapshot_id": N}}``,
+    each checked for both keys (a missing one raises
+    ``_format_error``)."""
+    fpath = os.path.join(path, SNAP_DIR, REFS_FILE)
     try:
-        with open(os.path.join(path, SNAP_DIR, REFS_FILE)) as f:
-            raw = json.load(f)
+        with open(fpath) as f:
+            refs = json.load(f)
     except FileNotFoundError:
         return {}
-    out: dict[str, dict] = {}
-    for k, v in raw.items():
-        if isinstance(v, dict):
-            out[k] = {
-                "type": str(v.get("type", "tag")),
-                "snapshot_id": int(v["snapshot_id"]),
-            }
-        else:
-            out[k] = {"type": "tag", "snapshot_id": int(v)}
-    return out
+    for name, r in refs.items():
+        for k in ("type", "snapshot_id"):
+            if not isinstance(r, dict) or k not in r:
+                raise _format_error(f"ref {name!r} of {fpath}", k)
+    return refs
 
 
 def _write_refs(path: str, refs: dict[str, dict]) -> None:
-    """Atomic refs commit.  Tags serialize as plain ints (the legacy
-    on-disk shape, so a round-4 reader of this table still resolves
-    them); branches need the typed form."""
+    """Atomic refs commit."""
     os.makedirs(os.path.join(path, SNAP_DIR), exist_ok=True)
-    raw = {
-        k: (v["snapshot_id"] if v["type"] == "tag" else v)
-        for k, v in refs.items()
-    }
-    _atomic_json_write(os.path.join(path, SNAP_DIR, REFS_FILE), raw)
+    _atomic_json_write(os.path.join(path, SNAP_DIR, REFS_FILE), refs)
 
 
 def _live_ids(path: str) -> set[int]:
@@ -1064,10 +1034,7 @@ def _live_ids(path: str) -> set[int]:
     ids = {s["snapshot_id"] for s in snapshots(path)}
     for r in _load_refs(path).values():
         if r["type"] == "branch":
-            ids.update(
-                int(m.get("snapshot_id", 0))
-                for m in _history_chain(path, int(r["snapshot_id"]))
-            )
+            ids.update(m["snapshot_id"] for m in _history_chain(path, r["snapshot_id"]))
     return ids
 
 
@@ -1082,8 +1049,7 @@ def _set_ref(path: str, name: str, snapshot_id: int | None, ref_type: str) -> in
             "purely numeric (numeric strings read as snapshot ids)"
         )
     with table_lock(path):
-        cur = _load(path)
-        cid = int(cur.get("snapshot_id", 0))
+        cid = _load(path)["snapshot_id"]
         if snapshot_id is None:
             snapshot_id = cid
         else:
@@ -1104,11 +1070,6 @@ def _set_ref(path: str, name: str, snapshot_id: int | None, ref_type: str) -> in
                 f"ref {name!r} on {path} is a {old['type']}, not a "
                 f"{ref_type}; drop it first to reuse the name"
             )
-        if int(snapshot_id) == cid and not os.path.exists(_snap_file(path, cid)):
-            # pinning the head of a legacy (pre-snapshot) table: land
-            # its snapshot file now so the ref survives the next commit
-            os.makedirs(os.path.join(path, SNAP_DIR), exist_ok=True)
-            _atomic_json_write(_snap_file(path, cid), cur)
         refs[name] = {"type": ref_type, "snapshot_id": int(snapshot_id)}
         _write_refs(path, refs)
         return int(snapshot_id)
@@ -1198,26 +1159,20 @@ def fast_forward_clustered(path: str, name: str) -> dict:
                 f"cannot fast-forward to {name!r} on {path}: not a "
                 f"branch (known refs: {kinds})"
             )
-        head = int(r["snapshot_id"])
+        head = r["snapshot_id"]
         target = _load(path, head)
         main = _load(path)
-        mid = int(main.get("snapshot_id", 0))
+        mid = main["snapshot_id"]
         if head == mid:
             return {"published": head, "from": mid}
-        chain_ids = {
-            int(m.get("snapshot_id", 0)) for m in _history_chain(path, head)
-        }
-        if mid not in chain_ids:
+        if mid not in {m["snapshot_id"] for m in _history_chain(path, head)}:
             raise ValueError(
                 f"cannot fast-forward {path} to branch {name!r} "
                 f"(head {head}): main advanced to snapshot {mid}, which "
                 "is not an ancestor of the branch head — the lineages "
                 "diverged (re-stage on a fresh branch to publish)"
             )
-        if not os.path.exists(_snap_file(path, mid)):
-            _atomic_json_write(_snap_file(path, mid), main)
-        _atomic_json_write(os.path.join(path, MANIFEST), target)
-        _append_history(path, head, f"fast-forward:{name}")
+        _cut_over(path, main, target, f"fast-forward:{name}")
         return {"published": head, "from": mid}
 
 
@@ -1243,8 +1198,8 @@ def cherry_pick_clustered(path: str, snapshot_id: int | str) -> dict:
     branch's head).  Returns the new main manifest."""
     with table_lock(path):
         target = _load(path, snapshot_id)
-        sid = int(target.get("snapshot_id", 0))
-        if target.get("parent_id") is None:
+        sid = target["snapshot_id"]
+        if target["parent_id"] is None:
             raise ValueError(
                 f"cannot cherry-pick snapshot {sid} of {path}: it has no "
                 "parent (an initial overwrite is not an append)"
@@ -1267,14 +1222,8 @@ def cherry_pick_clustered(path: str, snapshot_id: int | str) -> dict:
                 "append-only commits can be re-applied onto a diverged "
                 "main (row-replacing ops depend on the replaced file set)"
             )
-        pdel = {
-            (d["file"], tuple(d["targets"])) for d in parent.get("deletes") or []
-        }
-        newdel = [
-            d
-            for d in target.get("deletes") or []
-            if (d["file"], tuple(d["targets"])) not in pdel
-        ]
+        pdel = {(d["file"], tuple(d["targets"])) for d in parent["deletes"]}
+        newdel = [d for d in target["deletes"] if (d["file"], tuple(d["targets"])) not in pdel]
         if newdel:
             raise ValueError(
                 f"cannot cherry-pick snapshot {sid} of {path}: it "
@@ -1295,18 +1244,13 @@ def cherry_pick_clustered(path: str, snapshot_id: int | str) -> dict:
                 f"already references {sorted(dup)[:3]} (was this commit "
                 "already published or picked?)"
             )
-        schema_json = None
-        old_schema = _manifest_schema(main)
-        t_schema = _manifest_schema(target)
-        if old_schema is not None and t_schema is not None:
-            merged, _ = _merge_schemas(old_schema, t_schema)
-            schema_json = merged.json()
+        merged, _ = _merge_schemas(_manifest_schema(main), _manifest_schema(target))
         return _write_manifest(
             path,
             int(main["level"]),
             main["files"] + added,
             operation=f"cherry-pick:{sid}",
-            schema_json=schema_json,
+            schema_json=merged.json(),
             extra_summary={"cherry_picked_from": sid},
         )
 
@@ -1324,9 +1268,8 @@ def _added_map(path: str, upto: int | str | None = None) -> dict[str, int]:
     interleaved commits out of this lineage's answer."""
     added: dict[str, int] = {}
     for m in _history_chain(path, upto):
-        sid = int(m.get("snapshot_id", 0))
         for e in m["files"]:
-            added.setdefault(e["file"], sid)
+            added.setdefault(e["file"], m["snapshot_id"])
     return added
 
 
@@ -1343,10 +1286,9 @@ def _sweep(path: str) -> tuple[list[str], list[str]]:
     if os.path.isdir(sd):
         for n in os.listdir(sd):
             if n.startswith("snap-") and n.endswith(".json"):
-                with open(os.path.join(sd, n)) as f:
-                    mans.append(json.load(f))
+                mans.append(_read_manifest_file(os.path.join(sd, n)))
     ref = {e["file"] for m in mans for e in m["files"]}
-    ref_dels = {d["file"] for m in mans for d in m.get("deletes") or []}
+    ref_dels = {d["file"] for m in mans for d in m["deletes"]}
     removed = [n for n in _data_files(path) if n not in ref]
     for n in removed:
         os.remove(os.path.join(path, n))
@@ -1389,7 +1331,7 @@ def rollback_clustered(path: str, snapshot_id: int) -> dict:
             if not os.path.exists(os.path.join(path, e["file"]))
         ] + [
             d["file"]
-            for d in (target.get("deletes") or [])
+            for d in target["deletes"]
             if not os.path.exists(os.path.join(path, d["file"]))
         ]
         if missing:
@@ -1403,8 +1345,8 @@ def rollback_clustered(path: str, snapshot_id: int) -> dict:
             target["files"],
             "rollback",
             extra_summary={"rolled_back_to": int(snapshot_id)},
-            schema_json=target.get("schema"),
-            deletes=target.get("deletes") or [],
+            schema_json=target["schema"],
+            deletes=target["deletes"],
             inherit=False,
             day_of=target.get("day_of"),
         )
@@ -1423,21 +1365,18 @@ def expire_snapshots(
     now - 7*86400)` keeps a week of time travel regardless of commit
     volume); tags/branches anchor as always."""
     with table_lock(path):
-        cid = int(_load(path).get("snapshot_id", 0))
+        cid = _load(path)["snapshot_id"]
         ids = [s["snapshot_id"] for s in snapshots(path)]
         refs = _load_refs(path)
         # tagged snapshots are retention anchors: never expired (nor their
         # files swept) while the tag exists, regardless of keep_last; a
         # branch anchors its ENTIRE reachable chain (fast-forward must be
         # able to publish it) — drop stale branches to release history
-        anchored = {
-            int(r["snapshot_id"]) for r in refs.values() if r["type"] == "tag"
-        }
+        anchored = {r["snapshot_id"] for r in refs.values() if r["type"] == "tag"}
         for r in refs.values():
             if r["type"] == "branch":
                 anchored.update(
-                    int(m.get("snapshot_id", 0))
-                    for m in _history_chain(path, int(r["snapshot_id"]))
+                    m["snapshot_id"] for m in _history_chain(path, r["snapshot_id"])
                 )
         retain = set(sorted(ids)[-max(int(keep_last), 1):]) | {cid} | anchored
         expired = []
@@ -1462,11 +1401,10 @@ def expire_snapshots(
                 # snapshot committed at/after the horizon survives this
                 # sweep even when keep_last would have dropped it
                 try:
-                    with open(_snap_file(path, sid)) as f:
-                        at = json.load(f).get("committed_at")
+                    at = _read_manifest_file(_snap_file(path, sid))["committed_at"]
                 except FileNotFoundError:
                     continue
-                if at is not None and float(at) >= float(older_than):
+                if at >= float(older_than):
                     continue
             with contextlib.suppress(FileNotFoundError):
                 os.remove(_snap_file(path, sid))
@@ -1624,7 +1562,8 @@ def compaction_advice(
     Three taxes, each measured from the manifest:
 
     - **overlap factor** — sum of per-file cell-range spans over the
-      union span.  A freshly compacted table's ranges are disjoint
+      union span, within each day of a day table (its days are
+      separate runs).  A freshly compacted table's ranges are disjoint
       (~1.0); each append layers another full-width run on top, so a
       range query must read ~overlap_factor files instead of the one
       the clustering promises.  Advise past ``overlap_threshold``.
@@ -1659,22 +1598,28 @@ def compaction_advice(
         return out
 
     # overlap factor: per-file span mass over the union of the ranges
-    # (the +1s make single-cell files count; ranges are int cell ids)
-    ivals = sorted((int(e["min"]), int(e["max"])) for e in entries)
-    mass = sum(hi - lo + 1 for lo, hi in ivals)
-    union = 0
-    cur_lo, cur_hi = ivals[0]
-    for lo, hi in ivals[1:]:
-        if lo > cur_hi:
-            union += cur_hi - cur_lo + 1
-            cur_lo, cur_hi = lo, hi
-        else:
-            cur_hi = max(cur_hi, hi)
-    union += cur_hi - cur_lo + 1
+    # (the +1s make single-cell files count; ranges are int cell ids),
+    # both summed over a day table's days: each day is its own run, so
+    # files of different days never overlap
+    by_day: dict = {}
+    for e in entries:
+        by_day.setdefault(e.get("day"), []).append((int(e["min"]), int(e["max"])))
+    mass = union = 0
+    for ivals in by_day.values():
+        ivals.sort()
+        mass += sum(hi - lo + 1 for lo, hi in ivals)
+        cur_lo, cur_hi = ivals[0]
+        for lo, hi in ivals[1:]:
+            if lo > cur_hi:
+                union += cur_hi - cur_lo + 1
+                cur_lo, cur_hi = lo, hi
+            else:
+                cur_hi = max(cur_hi, hi)
+        union += cur_hi - cur_lo + 1
     overlap = mass / max(union, 1)
     out["overlap_factor"] = round(overlap, 2)
 
-    dels = man.get("deletes") or []
+    dels = man["deletes"]
     del_rows = int(sum(int(d["rows"]) for d in dels))
     out["pending_delete_rows"] = del_rows
     out["delete_tax"] = round(del_rows / max(total_rows, 1), 4)
@@ -1888,13 +1833,13 @@ def _delete_mor(
         .write.mode("error")
         .parquet(os.path.join(path, rel))
     )
-    new_entry = {"file": rel, "rows": n_rows, "targets": targets}
+    new_entry = {"file": rel, "rows": n_rows, "targets": targets, "kind": "pos"}
     return _write_manifest(
         path,
         int(man["level"]),
         man["files"],
         operation="delete",
-        deletes=(man.get("deletes") or []) + [new_entry],
+        deletes=man["deletes"] + [new_entry],
         extra_summary={
             "strategy": "mor",
             "deleted_rows": n_rows,
@@ -2091,7 +2036,7 @@ def _upsert_mor(
                 e["file"] for e in entries if _col_range_keep(e, key, klo, khi)
             )
         )
-        deletes = man.get("deletes") or []
+        deletes = man["deletes"]
         n_keys = 0
         if targets:
             rel, n_keys = _write_eq_delete(df, tbl, path, key)
@@ -2331,7 +2276,7 @@ def read_pruned(
 def _scan_kept(spark: SparkSession, path: str, man: dict, keep, ranges) -> DataFrame:
     """Spark scan of the kept entries restricted to the cell ranges."""
     if not keep or not ranges:
-        return spark.createDataFrame([], _table_schema(spark, path, man))
+        return spark.createDataFrame([], _read_schema(man))
     df = _read_files(spark, path, man, [e["file"] for e in keep])
     cond = None
     for lo, hi in ranges:
@@ -2353,9 +2298,8 @@ def clustered_scan(
     BETWEEN conjunction is pushed to the parquet reader so kept files
     skip row groups too. The cell column prunes through the same stats
     (its bounds are a manifest column like any other here). Files
-    without stats for a column are always kept — sound on legacy
-    manifests and unsupported types; the pushed predicate still makes
-    the RESULT exact."""
+    without stats for a column (a type the manifest cannot carry) are
+    always kept; the pushed predicate still makes the RESULT exact."""
     man = load_manifest(path, snapshot_id)
     col_ranges = dict(col_ranges or {})
     entries = man["files"]
@@ -2372,7 +2316,7 @@ def clustered_scan(
         n_ranges=len(col_ranges),
     )
     if not keep:
-        out = spark.createDataFrame([], _table_schema(spark, path, man))
+        out = spark.createDataFrame([], _read_schema(man))
         return (out, stats) if with_stats else out
     df = _read_files(spark, path, man, [e["file"] for e in keep])
     for col, (lo, hi) in col_ranges.items():
@@ -2509,14 +2453,10 @@ def _probe_col(spark: SparkSession, lon: str, lat: str, qlon: str, qlat: str, r=
 
 
 def _manifest_schema(man: dict):
-    """The committed schema of the table's data files, or None on a
-    legacy manifest."""
-    sj = man.get("schema")
-    if not sj:
-        return None
+    """The committed schema of the table's data files."""
     from pyspark.sql.types import StructType
 
-    return StructType.fromJson(json.loads(sj))
+    return StructType.fromJson(json.loads(man["schema"]))
 
 
 def _with_day(schema, man: dict):
@@ -2529,16 +2469,6 @@ def _with_day(schema, man: dict):
     return StructType([*schema.fields, StructField(DAY_COL, StringType(), True)])
 
 
-def _table_schema(spark: SparkSession, path: str, man: dict):
-    """The table schema for empty-result reads: the manifest carries it
-    (Iceberg metadata analog) so a zero-file table — or a query whose
-    cover prunes every file — answers with the right columns without
-    touching a single parquet footer. Legacy (pre-schema) manifests
-    fall back to the directory read."""
-    schema = _manifest_schema(man)
-    return _with_day(schema, man) if schema is not None else spark.read.parquet(path).schema
-
-
 def _schema_reader(spark: SparkSession, path: str, man: dict):
     """A parquet reader pinned to the MANIFEST's schema (the Iceberg
     semantic: the table schema lives in metadata, not in whichever file
@@ -2546,18 +2476,18 @@ def _schema_reader(spark: SparkSession, path: str, man: dict):
     written before the column existed are read with NULLs in it — and a
     time-traveled read uses THAT snapshot's schema, so history keeps
     its original shape. On a day table ``_day`` is Spark's partition
-    column of the ``_day=`` directories under the table. Legacy
-    manifests fall back to file inference."""
-    schema = _manifest_schema(man)
-    if schema is None:
-        return spark.read
-    reader = spark.read.schema(_with_day(schema, man))
+    column of the ``_day=`` directories under the table."""
+    reader = spark.read.schema(_with_day(_manifest_schema(man), man))
     return reader.option("basePath", path) if man.get("day_of") else reader
 
 
 def _read_schema(man: dict):
     """The manifest schema as the parquet reader returns it: every
-    field nullable (Spark relaxes a file source's schema on read)."""
+    field nullable (Spark relaxes a file source's schema on read). The
+    schema of every read, those that keep no file included (the
+    manifest carries it — the Iceberg metadata analog — so a zero-file
+    table, or a query whose cover prunes every file, answers with the
+    right columns without touching a parquet footer)."""
     from pyspark.sql.types import StructType
 
     def relax(j):
@@ -2576,7 +2506,7 @@ def _applicable_deletes(man: dict, names) -> list[dict]:
     intersects the files being read — a scan that prunes to untouched
     files never pays the anti-join."""
     nm = set(names)
-    return [d for d in man.get("deletes", []) if nm & set(d["targets"])]
+    return [d for d in man["deletes"] if nm & set(d["targets"])]
 
 
 def _read_files(
@@ -2610,7 +2540,7 @@ def _read_files(
     ``_LOCAL_READ_ROWS``, with identical results, and this Spark read
     above it (the only path for a table larger than the driver)."""
     if not names:
-        df = spark.createDataFrame([], _table_schema(spark, path, man))
+        df = spark.createDataFrame([], _read_schema(man))
         if keep_src is not None:
             df = df.withColumn(keep_src, F.lit(None).cast("string"))
         if keep_pos is not None:
@@ -2620,8 +2550,8 @@ def _read_files(
         *[os.path.join(path, n) for n in names]
     )
     dels = _applicable_deletes(man, names)
-    pos_dels = [d for d in dels if d.get("kind", "pos") == "pos"]
-    eq_dels = [d for d in dels if d.get("kind") == "eq"]
+    pos_dels = [d for d in dels if d["kind"] == "pos"]
+    eq_dels = [d for d in dels if d["kind"] == "eq"]
     want_meta = dels or keep_src is not None or keep_pos is not None
     if want_meta:
         label = F.col("_metadata.file_name")
@@ -2668,11 +2598,9 @@ def _read_files(
 
 def _reads_locally(man: dict, entries: list[dict]) -> bool:
     """May the driver read these manifest entries itself? Yes when the
-    manifest pins a schema and the data files plus their applicable
-    delete files hold at most ``_LOCAL_READ_ROWS`` rows (the manifest's
-    counts; no file is opened)."""
-    if not man.get("schema"):
-        return False
+    data files plus their applicable delete files hold at most
+    ``_LOCAL_READ_ROWS`` rows (the manifest's counts; no file is
+    opened)."""
     dels = _applicable_deletes(man, [e["file"] for e in entries])
     rows = sum(e["rows"] for e in entries) + sum(int(d["rows"]) for d in dels)
     return rows <= _LOCAL_READ_ROWS
@@ -2707,7 +2635,7 @@ def _read_files_local(
     pos: dict[str, list] = {}
     eqs = []
     for d in _applicable_deletes(man, names):
-        if d.get("kind", "pos") == "pos":
+        if d["kind"] == "pos":
             t = pq.read_table(os.path.join(path, d["file"]), columns=["_file", "_pos"])
             files = t["_file"].to_numpy(zero_copy_only=False)
             p = t["_pos"].to_numpy()
@@ -3007,7 +2935,7 @@ def _incremental_added(
     # branches, ids from different lineages interleave, and expired
     # history breaks the chain — both must fail loudly, not mis-diff)
     chain = _history_chain(path, to)
-    ids = [int(m.get("snapshot_id", 0)) for m in chain]
+    ids = [m["snapshot_id"] for m in chain]
     if frm > 0:
         if frm not in ids:
             raise ValueError(
@@ -3020,7 +2948,7 @@ def _incremental_added(
         prev_files = {e["file"] for e in chain[start]["files"]}
         walk = chain[start + 1:]
     else:
-        if chain and chain[0].get("parent_id") is not None:
+        if chain[0]["parent_id"] is not None:
             raise ValueError(
                 f"incremental scan of {path}: history before snapshot "
                 f"{ids[0]} was expired; reachable snapshots: {ids} "
@@ -3030,8 +2958,7 @@ def _incremental_added(
         walk = chain
     out: list[tuple[dict, list[str]]] = []
     for man in walk:
-        sid = int(man.get("snapshot_id", 0))
-        op = man.get("operation", "overwrite")
+        sid, op = man["snapshot_id"], man["operation"]
         files = {e["file"] for e in man["files"]}
         if op == "append" or (op == "overwrite" and not prev_files):
             # an overwrite of an EMPTY table (the initial write) is
@@ -3097,13 +3024,12 @@ def incremental_scan(
         parts.append(df)
     if not parts:
         to_man = cur if to == int(cur["snapshot_id"]) else load_manifest(path, to)
-        schema = _table_schema(spark, path, to_man)
+        schema = _read_schema(to_man)
         if snapshot_col is not None:
             from pyspark.sql.types import LongType, StructField, StructType
 
-            schema = StructType(
-                list(schema.fields) + [StructField(snapshot_col, LongType(), True)]
-            )
+            # non-nullable, as the non-empty arm's literal column is
+            schema = StructType([*schema.fields, StructField(snapshot_col, LongType(), False)])
         return spark.createDataFrame([], schema)
     out = parts[0]
     for p in parts[1:]:
@@ -3200,7 +3126,7 @@ def files_df(
     )
 
     man = load_manifest(path, snapshot_id)
-    added = _added_map(path, int(man.get("snapshot_id", 0)))
+    added = _added_map(path, man["snapshot_id"])
     schema = StructType(
         [
             StructField("file", StringType(), False),
@@ -3221,7 +3147,7 @@ def files_df(
             int(e["max"]),
             added.get(e["file"]),
             json.dumps(e["cols"], sort_keys=True, default=str)
-            if e.get("cols")
+            if e["cols"]
             else None,
         )
         for e in man["files"]
@@ -3241,9 +3167,9 @@ def partitions_df(
     time-travels (id or tag name) like every other reader. A flat
     table rolls up into one row whose ``day`` is NULL."""
     man = load_manifest(path, snapshot_id)
-    added = _added_map(path, int(man.get("snapshot_id", 0)))
+    added = _added_map(path, man["snapshot_id"])
     del_targets: dict[str, int] = {}
-    for d in man.get("deletes") or []:
+    for d in man["deletes"]:
         for t in d["targets"]:
             del_targets[t] = del_targets.get(t, 0) + 1
     days: dict = {}
@@ -3306,11 +3232,11 @@ def delete_files_df(
     rows = [
         (
             d["file"],
-            d.get("kind", "pos"),
+            d["kind"],
             d.get("key"),
             int(d["rows"]),
             len(d["targets"]),
         )
-        for d in man.get("deletes") or []
+        for d in man["deletes"]
     ]
     return spark.createDataFrame(rows, schema)

@@ -81,10 +81,10 @@ class _ClusteredStreamReader(DataSourceStreamReader):
         # files' columns, then _day on a day table
         day_of = C.load_manifest(self._path).get("day_of")
         files = StructType([f for f in schema.fields if not (day_of and f.name == C.DAY_COL)])
-        self._spec = {"schema": files.json(), "day_of": day_of}
+        self._spec = {"schema": files.json(), "day_of": day_of, "deletes": []}
 
     def _current(self) -> int:
-        return int(C.load_manifest(self._path).get("snapshot_id", 0))
+        return C.load_manifest(self._path)["snapshot_id"]
 
     def initialOffset(self) -> dict:
         return {"snapshot_id": self._from}
@@ -123,15 +123,7 @@ class ClusteredAppendsSource(DataSource):
         return "clustered-appends"
 
     def schema(self) -> StructType:
-        path = self.options["path"]
-        man = C.load_manifest(path)
-        if not man.get("schema"):
-            raise ValueError(
-                f"clustered-appends source on {path}: the manifest carries "
-                "no schema (pre-schema-evolution table) — run any commit "
-                "(e.g. an empty append) to upgrade it"
-            )
-        return C._read_schema(man)
+        return C._read_schema(C.load_manifest(self.options["path"]))
 
     def streamReader(self, schema: StructType) -> DataSourceStreamReader:
         return _ClusteredStreamReader(schema, dict(self.options))

@@ -482,7 +482,7 @@ def _snapshot_table_path(spark: SparkSession, sf_dir: str) -> str:
     import tempfile
 
     src = f"{sf_dir.rstrip('/')}/orders.parquet"
-    key = f"{src}:{os.path.getmtime(src)}:snapwap4:{CLUSTER_LEVEL}"
+    key = f"{src}:{os.path.getmtime(src)}:snapwap5:{CLUSTER_LEVEL}"
     if key not in _SNAPSHOT_CACHE:
         from spatial4n_spark.io.buildonce import ensure_built
         from spatial4n_spark.io.clustered import (
@@ -530,7 +530,7 @@ def _snapshot_table_path(spark: SparkSession, sf_dir: str) -> str:
         path = os.path.join(
             tempfile.gettempdir(),
             "spatial4n_clustered",
-            hashlib.md5(f"{src}:snapwap4:{CLUSTER_LEVEL}".encode()).hexdigest()[:16],
+            hashlib.md5(f"{src}:snapwap5:{CLUSTER_LEVEL}".encode()).hexdigest()[:16],
         )
         _SNAPSHOT_CACHE[key] = ensure_built(path, key, _build, ready_file=MANIFEST)
     return _SNAPSHOT_CACHE[key]

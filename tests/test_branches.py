@@ -428,8 +428,7 @@ def test_st_wap_flow(spark, sf_dir, tmp_path):
     assert C.drop_branch(path, "stage") == out["published"]
 
 
-# --- round-5 hardening: ref-safe id allocation, made-current as_of,
-# --- legacy history seeding -------------------------------------------
+# --- ref-safe id allocation, made-current as_of, history repair -------
 
 
 def test_tag_pinned_id_never_reallocated(spark, halves):
@@ -488,30 +487,59 @@ def test_as_of_of_expired_state_raises(spark, halves):
         C.snapshot_as_of(path, t1)
 
 
-def test_history_seeded_on_legacy_table_upgrade(spark, halves):
-    """The FIRST history append on a table that predates history.jsonl
-    seeds the log from the snapshot chain — without it, one
-    post-upgrade commit would create a one-line log and the legacy
-    backfill would never fire again, permanently hiding pre-upgrade
-    commits from the .history metadata table."""
+def test_history_repaired_after_crash_before_log_line(spark, halves):
+    """A crash between a cut-over and its history line loses the line,
+    never the state: the next cut-over logs the superseded head first,
+    made current at its manifest's mtime. Covers the first commit, a
+    later commit and a fast-forward publish; history_df and
+    snapshot_as_of then read as if no line had been lost."""
     import os
 
     path, pts, base, extra = halves            # 1
-    C.append_clustered(extra, path, files=1)   # 2
-    # simulate a legacy (pre-history-log) table
-    os.remove(os.path.join(path, C.SNAP_DIR, C.HISTORY_FILE))
-    C.append_clustered(extra, path, files=1)   # 3: the upgrading commit
+    hist = os.path.join(path, C.SNAP_DIR, C.HISTORY_FILE)
+
+    def crash():
+        # the on-disk state of a crash right after the cut-over
+        with open(hist) as f:
+            lines = f.readlines()
+        with open(hist, "w") as f:
+            f.writelines(lines[:-1])
+        time.sleep(0.05)
+        return os.path.getmtime(os.path.join(path, C.MANIFEST))
+
+    def commit(branch=None):
+        C.append_clustered(extra.limit(20), path, files=1, branch=branch)
+        time.sleep(0.05)
+
+    at1 = crash()                              # the first commit's line
+    assert C.history_df(spark, path).count() == 0
+    commit()                                   # 2: repairs 1
+    commit()                                   # 3
+    at3 = crash()
+    commit()                                   # 4: repairs 3
+    C.create_branch(path, "b")
+    commit(branch="b")                         # 5: staged
+    t_staged = time.time()
+    time.sleep(0.05)
+    C.fast_forward_clustered(path, "b")
+    at5 = crash()                              # the publish's line
+    commit()                                   # 6: repairs 5
+
     h = [r.asDict() for r in C.history_df(spark, path).collect()]
-    assert [r["snapshot_id"] for r in h] == [1, 2, 3]
-    # seeded rows carry the snapshots' commit times as made-current
-    for r in h[:2]:
-        assert r["made_current_at"] == pytest.approx(
-            float(C.load_manifest(path, r["snapshot_id"])["committed_at"])
-        )
-    # and a FURTHER commit appends (no re-seed, no duplicates)
-    C.append_clustered(extra, path, files=1)   # 4
-    h2 = [r["snapshot_id"] for r in C.history_df(spark, path).collect()]
-    assert h2 == [1, 2, 3, 4]
+    assert [r["snapshot_id"] for r in h] == [1, 2, 3, 4, 5, 6]
+    # a repaired line carries its head's operation as the event
+    assert [r["event"] for r in h] == ["overwrite"] + ["append"] * 5
+    made = {r["snapshot_id"]: r["made_current_at"] for r in h}
+    assert (made[1], made[3], made[5]) == (at1, at3, at5)
+    assert all(r["is_current_ancestor"] for r in h)
+    assert C.snapshot_as_of(path, at1) == 1
+    assert C.snapshot_as_of(path, at3) == 3
+    assert C.snapshot_as_of(path, t_staged) == 4
+    assert C.snapshot_as_of(path, at5) == 5
+    assert C.snapshot_as_of(path, time.time()) == 6
+    # the log is whole again: one line per event, none repeated
+    with open(hist) as f:
+        assert len(f.readlines()) == 6
 
 
 def test_cherry_pick_append_from_diverged_branch(spark, halves):

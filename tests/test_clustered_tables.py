@@ -464,7 +464,7 @@ def test_clustered_knn_kernel_equals_plan_under_mor_and_evolution(
         files=1,
     )
     man = C.load_manifest(path)
-    assert {d.get("kind", "pos") for d in man["deletes"]} == {"pos", "eq"}
+    assert {d["kind"] for d in man["deletes"]} == {"pos", "eq"}
     queries = [(qid, qlon, qlat) for qid, qlon, qlat, _ in RADIUS_CENTERS]
 
     def rows(out):
@@ -536,9 +536,9 @@ def test_local_reads_equal_spark_reads(spark, sf_dir, tmp_path, monkeypatch):
         files=1,
     )
     man = C.load_manifest(path)
-    assert {d.get("kind", "pos") for d in man["deletes"]} == {"pos", "eq"}
+    assert {d["kind"] for d in man["deletes"]} == {"pos", "eq"}
     # the upserted keys live in files their equality delete does not target
-    eq = next(d for d in man["deletes"] if d.get("kind") == "eq")
+    eq = next(d for d in man["deletes"] if d["kind"] == "eq")
     assert {e["file"] for e in man["files"]} - set(eq["targets"])
 
     def both(read):
@@ -920,26 +920,12 @@ def test_manifest_carries_schema_no_footer_read(spark, sf_dir, tmp_path):
     """The table schema rides in the manifest (Iceberg metadata
     analog): an empty-result read answers with the right columns from
     METADATA ALONE — proven by deleting every data file and still
-    getting the schema — and a legacy (pre-schema) manifest falls back
-    to the directory read."""
-    import json as _json
-
+    getting the schema."""
     path = str(tmp_path / "schema_tbl")
     pts = pts_orders(spark, sf_dir).limit(100)
     C.write_clustered(pts, path, level=14, files=2)
     want = set(pts.columns) | {C.CELL_COL}
-    assert C.load_manifest(path).get("schema")  # committed with the write
-
-    # legacy manifests (no schema key) still answer via the fallback
-    man_file = os.path.join(path, C.MANIFEST)
-    with open(man_file) as f:
-        man = _json.load(f)
-    orig_schema = man.pop("schema")
-    C._atomic_json_write(man_file, man)
-    df, _ = C.read_pruned(spark, path, [])
-    assert df.count() == 0 and set(df.columns) == want
-    man["schema"] = orig_schema
-    C._atomic_json_write(man_file, man)
+    assert C.load_manifest(path)["schema"]  # committed with the write
 
     # metadata-only: no data file on disk, schema still correct
     for e in C.load_manifest(path)["files"]:
@@ -947,6 +933,53 @@ def test_manifest_carries_schema_no_footer_read(spark, sf_dir, tmp_path):
     df, st = C.read_pruned(spark, path, [])
     assert df.count() == 0 and st.n_ranges == 0
     assert set(df.columns) == want
+
+
+@pytest.mark.parametrize("day", [False, True], ids=["flat", "day"])
+def test_empty_and_nonempty_reads_share_one_schema(spark, tmp_path, day):
+    """A read that keeps no file answers with the schema a read of the
+    files returns (``_read_schema``: every field nullable, a day
+    table's ``_day`` last), on every reader: ``read_pruned``,
+    ``clustered_scan``, ``_read_files``, ``incremental_scan`` and
+    ``clustered_radius_query``. The table comes from ``spark.range``,
+    whose ``id`` is non-nullable in the manifest."""
+    path = str(tmp_path / "t")
+    df = spark.range(300).select(
+        "id",
+        (F.col("id") * 37 % 360 - 180).cast("double").alias("lon"),
+        (F.col("id") * 13 % 170 - 85).cast("double").alias("lat"),
+        F.date_add(F.lit("2024-01-01").cast("date"), (F.col("id") % 3).cast("int")).alias("d"),
+    )
+    C.write_clustered(df, path, level=10, files=2, day_of="d" if day else None)
+    man = C.load_manifest(path)
+    names = [e["file"] for e in man["files"]]
+    pairs = {
+        "read_pruned": (
+            C.read_pruned(spark, path, [])[0],
+            C.read_pruned(spark, path, [(0, 2**63 - 1)])[0],
+        ),
+        "clustered_scan": (
+            C.clustered_scan(spark, path, {"id": (10**6, 10**6 + 1)}),
+            C.clustered_scan(spark, path),
+        ),
+        "_read_files": (
+            C._read_files(spark, path, man, []),
+            C._read_files(spark, path, man, names),
+        ),
+        "incremental_scan": (
+            C.incremental_scan(spark, path, 1, 1, snapshot_col="sid"),
+            C.incremental_scan(spark, path, 0, 1, snapshot_col="sid"),
+        ),
+        "clustered_radius_query": (
+            C.clustered_radius_query(spark, path, 0.0, 0.0, 1.0),
+            C.clustered_radius_query(spark, path, 0.0, 0.0, 20000.0),
+        ),
+    }
+    for reader, (empty, full) in pairs.items():
+        assert empty.count() == 0 and full.count() > 0, reader
+        assert empty.schema == full.schema, reader
+    assert pairs["_read_files"][0].schema == C._read_schema(man)
+    assert all(f.nullable for f in C._read_schema(man).fields)
 
 
 def test_writer_lock_and_overwrite_only(spark, sf_dir, tmp_path):
@@ -1035,6 +1068,61 @@ def test_compaction_advice_lifecycle(spark, sf_dir, tmp_path):
     assert a["pending_delete_rows"] == 0
 
 
+def test_compaction_advice_counts_overlap_within_days(spark, sf_dir, tmp_path):
+    """On a day table each day is its own run, so files of different
+    days never overlap: a fresh 4-day table (plus a MOR delete, which
+    adds no data file) reads overlap 1.0 and needs no compaction, while
+    appends that layer runs within each day are caught. A flat table
+    is one group, so its overlap stays the span mass over the union of
+    all its files."""
+    from spatial4n_spark.suite import pts_orders
+
+    def overlap(groups):
+        mass = union = 0
+        for ivals in groups:
+            ivals = sorted(ivals)
+            mass += sum(hi - lo + 1 for lo, hi in ivals)
+            lo0, hi0 = ivals[0]
+            for lo, hi in ivals[1:]:
+                if lo > hi0:
+                    union += hi0 - lo0 + 1
+                    lo0, hi0 = lo, hi
+                else:
+                    hi0 = max(hi0, hi)
+            union += hi0 - lo0 + 1
+        return round(mass / union, 2)
+
+    pts = pts_orders(spark, sf_dir).withColumn(
+        "ts",
+        F.timestamp_seconds(F.lit(1704067200) + (F.col("o_orderkey") % 4) * 86400).cast(
+            "timestamp_ntz"
+        ),
+    )
+    for day in (True, False):
+        path = str(tmp_path / ("day" if day else "flat"))
+        C.write_clustered(pts, path, level=14, files=8, day_of="ts" if day else None)
+        C.delete_clustered(spark, path, F.col("o_orderkey") % 50 == 0, strategy="mor")
+        a = C.compaction_advice(path)
+        files = C.load_manifest(path)["files"]
+        spans = [(e["min"], e["max"]) for e in files]
+        if day:
+            assert len({e["day"] for e in files}) == 4
+            assert a["overlap_factor"] == 1.0 and a["should_compact"] is False
+        else:
+            assert a["overlap_factor"] == overlap([spans])
+        for _ in range(2):
+            C.append_clustered(pts, path, files=2)
+        a = C.compaction_advice(path)
+        files = C.load_manifest(path)["files"]
+        groups: dict = {}
+        for e in files:
+            groups.setdefault(e.get("day"), []).append((e["min"], e["max"]))
+        assert a["overlap_factor"] == overlap(groups.values()) >= 2.0
+        assert a["should_compact"] is True
+        if not day:
+            assert a["overlap_factor"] == overlap([[(e["min"], e["max"]) for e in files]])
+
+
 @pytest.mark.parametrize("day", [True, False], ids=["day", "flat"])
 def test_executors_agree_after_mor_on_day_and_flat_tables(
     spark, sf_dir, tmp_path, monkeypatch, day
@@ -1075,7 +1163,7 @@ def test_executors_agree_after_mor_on_day_and_flat_tables(
     late = pts.limit(30).withColumn("o_orderkey", F.col("o_orderkey") + 10**9)
     C.append_clustered(late, path, files=1)  # 5
     man = C.load_manifest(path)
-    kinds = {d.get("kind", "pos") for d in man["deletes"]}
+    kinds = {d["kind"] for d in man["deletes"]}
     assert kinds == {"pos", "eq"} and all(
         ("/" in t) == day for d in man["deletes"] for t in d["targets"]
     )

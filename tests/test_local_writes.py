@@ -152,7 +152,7 @@ def _shape(man):
             for e in man["files"]
         ),
         "deletes": sorted(
-            (d["rows"], sorted(sig[t] for t in d["targets"]), d.get("kind", "pos"),
+            (d["rows"], sorted(sig[t] for t in d["targets"]), d["kind"],
              d.get("key"))
             for d in man["deletes"]
         ),
@@ -219,7 +219,7 @@ def _check_local_writes_equal_spark_writes(spark, tmp_path):
         (got, local_tbl), (want, _) = _reads(spark, lp, ref), _reads(spark, sp, ref)
         assert got == want, ref
     man = C.load_manifest(lp)
-    assert {d.get("kind") for d in man["deletes"]} == {"eq"}
+    assert {d["kind"] for d in man["deletes"]} == {"eq"}
     # files=4 kept the 300 rows of the hot cell in one file
     first = {e["file"] for e in C.load_manifest(lp, 1)["files"]}
     added = [e for e in C.load_manifest(lp, "after-a")["files"] if e["file"] not in first]

@@ -262,7 +262,7 @@ def test_eq_delete_respects_targets_reinsert_survives(spark, eq_table):
     # killed by the first delete file — count proves they survive
     path, pts, _ = eq_table
     man = C.load_manifest(path)
-    eqs = [d for d in man["deletes"] if d.get("kind") == "eq"]
+    eqs = [d for d in man["deletes"] if d["kind"] == "eq"]
     assert len(eqs) == 2
     names = {e["file"] for e in man["files"]}
     for d in eqs:

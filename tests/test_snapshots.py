@@ -7,7 +7,6 @@ sweep respects snapshot references (isolation); expire_snapshots is the
 only operation that reclaims readable history.
 """
 
-import json
 import os
 
 import pytest
@@ -141,29 +140,6 @@ def test_crash_orphans_still_swept_snapshots_retained(spark, sf_dir, tmp_path):
     names = set(C._data_files(path))
     assert "part-junk-orphan.parquet" not in names  # orphan swept
     assert listed in names  # snapshot-1 history retained
-    assert _radius_ids(spark, path) == _want_ids(pts)
-
-
-def test_legacy_manifest_upgrades_in_place(spark, sf_dir, tmp_path):
-    """A pre-snapshot table (manifest without snapshot keys) reads as
-    snapshot 0 and its first new commit heals the missing history file."""
-    path = str(tmp_path / "legacy")
-    pts = pts_orders(spark, sf_dir)
-    base = pts.where(F.col("o_orderkey") % 2 == 0)
-    C.write_clustered(base, path, level=14, files=4)
-    # strip the snapshot metadata to simulate a round-3 table
-    man = C.load_manifest(path)
-    legacy = {k: man[k] for k in ("cell_col", "index", "level", "files")}
-    with open(os.path.join(path, C.MANIFEST), "w") as f:
-        json.dump(legacy, f)
-    for n in os.listdir(os.path.join(path, C.SNAP_DIR)):
-        os.remove(os.path.join(path, C.SNAP_DIR, n))
-
-    assert C.snapshots(path)[0]["snapshot_id"] == 0  # readable as-is
-    C.append_clustered(pts.where(F.col("o_orderkey") % 2 == 1), path, files=2)
-    log = C.snapshots(path)
-    assert [s["snapshot_id"] for s in log] == [0, 1]
-    assert _radius_ids(spark, path, snapshot_id=0) == _want_ids(base)
     assert _radius_ids(spark, path) == _want_ids(pts)
 
 
