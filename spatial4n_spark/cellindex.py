@@ -116,6 +116,45 @@ class CellIndexBackend:
 
         return cover_cells(shape, level, geo, max_cells)
 
+    def cover_rows(self, key, shape, level: int, geo: bool = True, payload: tuple = ()):
+        """``(cell, key, full, *payload)`` for every cell of ``shape``'s
+        cover: the cell side of every cover join, which appends only its
+        own payload (a bbox, a WKT, a circle)."""
+        fulls, bounds = self.cover(shape, level, geo)
+        return [(c, key, True, *payload) for c in fulls] + [
+            (c, key, False, *payload) for c in bounds
+        ]
+
+    def cover_schema(self, key: str, payload: str = ""):
+        """The ``cover_rows`` schema: ``_cell, <key> string, _full boolean``
+        then the payload's DDL fields."""
+        from pyspark.sql.types import StructType
+
+        ddl = f"_cell {self.sql_type}, {key} string, _full boolean"
+        return StructType.fromDDL(ddl + (f", {payload}" if payload else ""))
+
+    def cover_stage(self, frame, shapes_of, key: str, payload: str, level: int, geo: bool = True):
+        """The distributed cover: one ``mapInPandas`` stage over ``frame``
+        whose tasks run ``cover_rows`` for each ``(key, shape, payload)``
+        that ``shapes_of(pdf)`` yields from a batch, so no feature of
+        ``frame`` crosses the driver."""
+        schema = self.cover_schema(key, payload)
+        names = schema.fieldNames()
+
+        def gen(batches):
+            import pandas as pd
+
+            for pdf in batches:
+                rows = [
+                    row
+                    for k, shape, extra in shapes_of(pdf)
+                    for row in self.cover_rows(k, shape, level, geo, extra)
+                ]
+                if rows:
+                    yield pd.DataFrame(rows, columns=names)
+
+        return frame.mapInPandas(gen, schema)
+
 
 _BACKENDS = {
     "geohash": CellIndexBackend("geohash", "string"),

@@ -61,6 +61,12 @@ def rect_contains_point(min_x, max_x, min_y, max_y, lon, lat) -> Column:
     return lat.between(min_y, max_y) & x_ok
 
 
+def is_finite(x) -> Column:
+    """False for NaN and +/-inf, null for null. Spark orders NaN above
+    +inf, so one comparison rejects both."""
+    return F.abs(_c(x)) < F.lit(float("inf"))
+
+
 def within_radius_km(lon1, lat1, lon2, lat2, radius_km) -> Column:
     """The distance-join predicate: haversine <= r. CircleImpl.Contains (:94-97)."""
     return haversine_km(lon1, lat1, lon2, lat2) <= _c(radius_km)

@@ -71,23 +71,20 @@ def pip_udf(polys_by_id: dict, geo: bool = True):
     captured in the closure; Spark broadcasts it with the serialized task —
     the polygon layer is the small/broadcast side of the join by design).
     Within each Arrow batch, points are grouped by poly_id so each polygon
-    runs one vectorized covers test (SURVEY.md §2.2 polygon x point).
+    runs one vectorized covers test (SURVEY.md §2.2 polygon x point;
+    ``kernels.polygon.points_covered_by_key``). Any shape
+    ``points_covered`` takes works, buffered routes included.
     """
-    from spatial4n_spark.kernels.polygon import points_covered
+    from spatial4n_spark.kernels.polygon import points_covered_by_key
 
     @F.pandas_udf(BooleanType())
     def _pip(lon: pd.Series, lat: pd.Series, poly_id: pd.Series) -> pd.Series:
-        x = lon.to_numpy(np.float64)
-        y = lat.to_numpy(np.float64)
-        pid = poly_id.to_numpy()
-        out = np.zeros(len(x), dtype=bool)
-        for p in pd.unique(pid):
-            mask = pid == p
-            shape = polys_by_id.get(p)
-            if shape is None:
-                continue
-            out[mask] = points_covered(x[mask], y[mask], shape, geo)
-        return pd.Series(out)
+        return pd.Series(
+            points_covered_by_key(
+                lon.to_numpy(np.float64), lat.to_numpy(np.float64),
+                poly_id.to_numpy(), polys_by_id.get, geo,
+            )
+        )
 
     return _pip
 

@@ -332,6 +332,8 @@ def points_covered(px, py, poly, geo: bool = True):
         return out
     if type(poly).__name__ == "BufferedPolygon":  # avoid circular import
         return poly.covers(px, py)
+    if type(poly).__name__ == "BufLineString":
+        return poly.contains(px, py)
     if not isinstance(poly, Polygon):
         raise TypeError(type(poly))
     if geo:
@@ -344,6 +346,22 @@ def points_covered(px, py, poly, geo: bool = True):
             out |= _poly_covered_one_page(px - 360.0, py, u)
         return out
     return _poly_covered_one_page(px, py, poly)
+
+
+def points_covered_by_key(x, y, keys, shape_of, geo: bool = True):
+    """The keyed refine of every cover join: point ``i`` against the
+    shape ``shape_of(keys[i])``, one vectorized ``points_covered`` call
+    per distinct key. A key whose ``shape_of`` is None covers nothing."""
+    import pandas as pd
+
+    out = np.zeros(len(x), dtype=bool)
+    for k in pd.unique(keys):
+        shape = shape_of(k)
+        if shape is None:
+            continue
+        mask = keys == k
+        out[mask] = points_covered(x[mask], y[mask], shape, geo)
+    return out
 
 
 # ---------------------------------------------------------------------------

@@ -1,23 +1,25 @@
 """Corridor (trajectory) join: points within a buffered polyline.
 
-The buffered-line analog of the PIP spatial join (SURVEY.md §2.2
-buffered line x point): per route, build the BufferedLineString with the
-reference's longitude-skew buffer expansion, cover it with geohash cells
-(quadtree planner), broadcast the cover, then refine candidates with the
-vectorized two-line containment kernel. The points side never shuffles.
+A cover join (the core ``operators.spatial_join`` describes) with the
+routes as its shapes: per route, build the BufLineString with the
+reference's longitude-skew buffer expansion, cover it with geohash
+cells (``CellIndexBackend.cover_rows``), broadcast the cover, and refine
+boundary-cell candidates through ``pip_udf`` (``points_covered`` runs the
+vectorized two-line containment kernel for a route). The points side
+never shuffles; a point with a null or non-finite coordinate is never a
+candidate.
 """
 
 from __future__ import annotations
 
-import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame, functions as F
-from pyspark.sql.types import BooleanType
 
-from spatial4n_spark.functions.udfs import geohash_udf
+from spatial4n_spark.cellindex import cell_backend
+from spatial4n_spark.functions.native import is_finite
+from spatial4n_spark.functions.udfs import pip_udf
 from spatial4n_spark.kernels.bufline import BufLineString
 from spatial4n_spark.kernels.distance import km_to_deg
-from spatial4n_spark.plans.cover import cover_cells
+from spatial4n_spark.operators.knn import _local_frame
 
 
 def _route_shapes(routes) -> dict[str, BufLineString]:
@@ -26,26 +28,6 @@ def _route_shapes(routes) -> dict[str, BufLineString]:
         buf_deg = float(km_to_deg(buf_km))
         out[route_id] = BufLineString(coords, buf_deg, expand_geo_skew=True)
     return out
-
-
-def corridor_contains_udf(shapes: dict[str, BufLineString]):
-    """(lon, lat, route_id) -> inside-corridor boolean, batched per route."""
-
-    @F.pandas_udf(BooleanType())
-    def _contains(lon: pd.Series, lat: pd.Series, route_id: pd.Series) -> pd.Series:
-        x = lon.to_numpy(np.float64)
-        y = lat.to_numpy(np.float64)
-        rid = route_id.to_numpy()
-        out = np.zeros(len(x), dtype=bool)
-        for r in pd.unique(rid):
-            shape = shapes.get(r)
-            if shape is None:
-                continue
-            mask = rid == r
-            out[mask] = shape.contains(x[mask], y[mask])
-        return pd.Series(out)
-
-    return _contains
 
 
 def corridor_join(
@@ -60,19 +42,17 @@ def corridor_join(
     Returns the points' columns + ``route_id`` for points inside the
     buffered corridor.
     """
-    spark = points.sparkSession
+    backend = cell_backend("geohash")
     shapes = _route_shapes(routes)
-    rows = []
-    for rid, shape in shapes.items():
-        fulls, bounds = cover_cells(shape, level)
-        for c in fulls:
-            rows.append((c, rid, True))
-        for c in bounds:
-            rows.append((c, rid, False))
-    cover_df = spark.createDataFrame(rows, "_cell string, route_id string, _full boolean")
-
-    pts = points.withColumn("_cell", geohash_udf(level)(F.col(lat), F.col(lon)))
+    cover_df = _local_frame(
+        points.sparkSession,
+        [row for rid, shape in shapes.items() for row in backend.cover_rows(rid, shape, level)],
+        backend.cover_schema("route_id"),
+    )
+    pts = points.where(is_finite(lon) & is_finite(lat)).withColumn(
+        "_cell", backend.udf(level)(F.col(lat), F.col(lon))
+    )
     cand = pts.join(F.broadcast(cover_df), "_cell")
-    inside = corridor_contains_udf(shapes)
+    inside = pip_udf(shapes)
     out = cand.where(F.col("_full") | inside(F.col(lon), F.col(lat), F.col("route_id")))
     return out.drop("_cell", "_full")

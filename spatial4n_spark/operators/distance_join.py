@@ -1,20 +1,25 @@
 """Radius (distance) join: points within R km of query centers.
 
-Plan: per query circle, compute its bbox with the reference's circle-bbox
-kernel (DistanceUtils.cs:328-394 — pole/dateline aware), cover the bbox
-with geohash cells, broadcast-join points on the cell, then apply the
-native haversine predicate (CircleImpl.Contains :94-97 as Catalyst
-expressions). No shuffle on the big side; the exact predicate is pure JVM.
+A cover join (the core ``operators.spatial_join`` describes): each
+query circle is covered by the backend's pole/dateline-aware planner
+(``CellIndexBackend.cover_stage``: one ``mapInPandas`` stage over the
+queries, rows ``(cell, query_id, full)`` + the circle), the points
+equi-join the cover on their cell, and the exact phase is the native
+haversine predicate (CircleImpl.Contains :94-97 as Catalyst
+expressions), which no null or non-finite point passes. ``radius_join``
+takes a driver list and wraps ``radius_join_df``.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
+from pyspark.sql.types import StructType
 
+from spatial4n_spark.cellindex import cell_backend
 from spatial4n_spark.functions.native import haversine_km, within_radius_km
-from spatial4n_spark.kernels.circle import circle_bbox
 from spatial4n_spark.kernels.distance import km_to_deg
-from spatial4n_spark.kernels.polygon import Circle, Rect
+from spatial4n_spark.kernels.polygon import Circle
+from spatial4n_spark.operators.knn import _local_frame
 
 
 def radius_join(
@@ -26,35 +31,18 @@ def radius_join(
     with_distance: bool = True,
     index: str = "geohash",
 ) -> DataFrame:
-    """``queries``: [(query_id, qlon, qlat, radius_km)] (the small side).
-
-    ``index`` picks the candidate cell scheme ("geohash" / "s2"); the
-    exact haversine predicate is unchanged, so results are
-    index-invariant. Returns point columns + query_id (+ dist_km).
-    """
-    spark = points.sparkSession
-    from spatial4n_spark.cellindex import cell_backend
-
-    backend = cell_backend(index)
-    encode = backend.udf(level)
-    rows = []
-    for qid, qlon, qlat, r_km in queries:
-        r_deg = float(km_to_deg(r_km))
-        circle = Circle(qlon, qlat, r_deg, geo=True)
-        fulls, bounds = backend.cover(circle, level)
-        for c in fulls + bounds:
-            rows.append((c, qid, float(qlon), float(qlat), float(r_km)))
-    cover_df = spark.createDataFrame(
-        rows,
-        f"_cell {backend.sql_type}, query_id string, _qlon double, _qlat double, _rkm double",
+    """``radius_join_df`` for a driver list
+    ``[(query_id, qlon, qlat, radius_km)]``, held as a LocalRelation
+    (building it runs no Spark job). Returns point columns + query_id
+    (+ dist_km)."""
+    qdf = _local_frame(
+        points.sparkSession,
+        list(queries),
+        StructType.fromDDL("query_id string, qlon double, qlat double, radius_km double"),
     )
-
-    pts = points.withColumn("_cell", encode(F.col(lat), F.col(lon)))
-    cand = pts.join(F.broadcast(cover_df), "_cell")
-    out = cand.where(within_radius_km(F.col(lon), F.col(lat), "_qlon", "_qlat", "_rkm"))
-    if with_distance:
-        out = out.withColumn("dist_km", haversine_km(F.col(lon), F.col(lat), "_qlon", "_qlat"))
-    return out.drop("_cell", "_qlon", "_qlat", "_rkm")
+    return radius_join_df(
+        points, qdf, lon, lat, level=level, with_distance=with_distance, index=index
+    )
 
 
 def radius_join_df(
@@ -71,63 +59,36 @@ def radius_join_df(
     index: str = "geohash",
     broadcast_cover: bool = True,
 ) -> DataFrame:
-    """``radius_join`` with the query circles as a DataFrame — nothing
-    per-query on the driver, so a 10^6-circle batch (geofence sets,
-    per-entity alert radii) plans exactly like the 4-circle gate.
+    """Points within ``radius_km`` of each query circle, the circles a
+    DataFrame — nothing per-query on the driver, so a 10^6-circle batch
+    (geofence sets, per-entity alert radii) plans exactly like the
+    4-circle gate.
 
-    The cover enumeration runs DISTRIBUTED in a ``mapInPandas`` stage:
-    each task covers its queries' circles with the same pole/dateline-
-    aware planner the list path uses and emits (cell, query) rows; the
-    fact side then joins on the cell key — broadcast while the cover is
-    small (``broadcast_cover``), the standard shuffle-by-cell plan with
-    AQE skew handling when a big query set makes the cover big. The
-    exact haversine predicate is unchanged, so results match the list
-    path bit-for-bit (pytest-pinned across backends).
+    The cover runs DISTRIBUTED; the fact side joins on the cell key —
+    broadcast while the cover is small (``broadcast_cover``), the
+    standard shuffle-by-cell plan with AQE skew handling when a big
+    query set makes the cover big. ``index`` picks the candidate cell
+    scheme ("geohash" / "s2" / "h3"); the exact haversine predicate is
+    the same, so results are index-invariant (pytest-pinned across
+    backends). Returns point columns + query_id (+ dist_km).
     """
-    from spatial4n_spark.cellindex import cell_backend
-
     backend = cell_backend(index)
-    encode = backend.udf(level)
-    cover_schema = (
-        f"_cell {backend.sql_type}, query_id string, "
-        "_qlon double, _qlat double, _rkm double"
-    )
 
-    def cover_gen(it):
-        import pandas as pd
+    def circles_of(pdf):
+        for q, x, y, r in zip(
+            pdf[query_id].astype(str),
+            pdf[qlon].astype(float),
+            pdf[qlat].astype(float),
+            pdf[radius_km].astype(float),
+        ):
+            yield q, Circle(x, y, float(km_to_deg(r)), geo=True), (x, y, r)
 
-        for pdf in it:
-            if not len(pdf):
-                continue
-            cells, qids, lons, lats, rkms = [], [], [], [], []
-            for q, x, y, r in zip(
-                pdf[query_id].astype(str),
-                pdf[qlon].astype(float),
-                pdf[qlat].astype(float),
-                pdf[radius_km].astype(float),
-            ):
-                circle = Circle(x, y, float(km_to_deg(r)), geo=True)
-                fulls, bounds = backend.cover(circle, level)
-                for c in list(fulls) + list(bounds):
-                    cells.append(c)
-                    qids.append(q)
-                    lons.append(x)
-                    lats.append(y)
-                    rkms.append(r)
-            yield pd.DataFrame(
-                {
-                    "_cell": cells,
-                    "query_id": qids,
-                    "_qlon": lons,
-                    "_qlat": lats,
-                    "_rkm": rkms,
-                }
-            )
-
-    cover_df = queries.mapInPandas(cover_gen, cover_schema)
+    cover_df = backend.cover_stage(
+        queries, circles_of, "query_id", "_qlon double, _qlat double, _rkm double", level
+    ).drop("_full")
     if broadcast_cover:
         cover_df = F.broadcast(cover_df)
-    pts = points.withColumn("_cell", encode(F.col(lat), F.col(lon)))
+    pts = points.withColumn("_cell", backend.udf(level)(F.col(lat), F.col(lon)))
     cand = pts.join(cover_df, "_cell")
     out = cand.where(within_radius_km(F.col(lon), F.col(lat), "_qlon", "_qlat", "_rkm"))
     if with_distance:

@@ -1,54 +1,58 @@
-"""The point-in-polygon spatial join (SURVEY.md §2.9 — north-rule operator).
+"""The cover joins of polygon layers: point-in-polygon (the north-rule
+operator, SURVEY.md §2.9) and polygon x polygon.
 
-Plan shape (all stages chosen for the 10^12-row design scale):
+Every cell-cover join in the engine (these, ``operators.corridor`` and
+``operators.distance_join``) has the same two halves:
 
-1. driver: quadtree cell cover per polygon (plans.cover) — 'full' cells
-   need no refinement, 'boundary' cells do.
-2. points: one vectorized geohash-encode UDF pass -> `_cell` column.
-3. equi-join points to the **broadcast** cover table on `_cell` — the
-   points side never shuffles (no repartition of the 10^12-row side).
-4. native bbox prefilter (Catalyst, codegen) on the polygon's bbox.
-5. exact PIP refinement (Arrow-vectorized covers kernel) ONLY for rows in
-   boundary cells: `_full OR pip(...)`.
+1. the cell side: ``CellIndexBackend.cover_rows`` turns each
+   ``(key, shape)`` into ``(cell, key, full)`` rows (full cells lie
+   inside the shape) plus the caller's payload. A driver-side layer is
+   covered on the driver into a LocalRelation; a DataFrame layer is
+   covered in one ``mapInPandas`` stage (``CellIndexBackend.cover_stage``)
+   so nothing about it crosses the driver;
+2. the point side encodes one cell column with the same backend and
+   equi-joins the cover. For PIP the native bbox test rides in the join
+   condition for every candidate (a point with a null or non-finite
+   coordinate is in no bbox), and the exact refine
+   (``kernels.polygon.points_covered_by_key``: one vectorized covers test
+   per key) decides boundary-cell candidates: ``_full OR pip(...)``.
 
-Skew note: the hot-cell problem (dense cities) does not skew this join —
-a broadcast hash join has no shuffle, and Spark schedules the fat scan
-partitions independently. Skew handling for shuffling aggregations lives
-in operators.tiles (salted two-phase aggregation).
+The broadcast PIP join never shuffles the points; the hot-cell problem
+does not skew it (a broadcast hash join has no shuffle). The R-tree PIP
+plan replaces the cell side by a broadcast STR tree and shares the
+refine; ``plans.pip_planner`` chooses among the three PIP plans.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
+from pyspark.sql.types import StructType
 
+from spatial4n_spark.cellindex import cell_backend
 from spatial4n_spark.functions.native import rect_contains_point
-from spatial4n_spark.functions.udfs import geohash_udf, pip_udf
-from spatial4n_spark.kernels.polygon import Rect, shape_bbox
-from spatial4n_spark.plans.cover import cover_cells
+from spatial4n_spark.functions.udfs import pip_udf
+from spatial4n_spark.kernels.polygon import points_covered_by_key, shape_bbox
+from spatial4n_spark.operators.knn import _local_frame
+from spatial4n_spark.plans.pip_planner import choose_join_level
+
+# distinct polygons whose parsed shape one refine task of the DataFrame
+# PIP join keeps (oldest evicted first)
+_REFINE_CACHE_MAX = 4096
+
+_BBOX = "_bminx double, _bmaxx double, _bminy double, _bmaxy double"
 
 
-def choose_join_level(polygons: list[tuple[str, object]], max_cells: int = 20000) -> int:
-    """Auto-pick the uniform join level for a layer: the finest level whose
-    total cover stays under ``max_cells`` broadcast rows (finer cells mean
-    fewer candidate rows through the refinement UDF, coarser cells mean a
-    smaller broadcast — this balances the two driver-side)."""
-    from spatial4n_spark.plans.cover import cover_cells
+def _bbox(shape, geo: bool) -> tuple:
+    bb = shape_bbox(shape, geo)
+    return (bb.min_x, bb.max_x, bb.min_y, bb.max_y)
 
-    level = 2
-    for cand in (3, 4):
-        total = 0
-        try:
-            for _, shape in polygons:
-                fulls, bounds = cover_cells(shape, cand, max_cells=max_cells)
-                total += len(fulls) + len(bounds)
-                if total > max_cells:
-                    break
-        except ValueError:  # a single shape blew the per-shape cap
-            break
-        if total > max_cells:
-            break
-        level = cand
-    return level
+
+def _in_bbox(cover: DataFrame, pts: DataFrame, lon: str, lat: str):
+    """The native bbox test of the PIP join condition."""
+    return rect_contains_point(
+        cover["_bminx"], cover["_bmaxx"], cover["_bminy"], cover["_bmaxy"],
+        pts[lon], pts[lat],
+    )
 
 
 def spatial_join_points_polygons(
@@ -58,7 +62,6 @@ def spatial_join_points_polygons(
     lat: str = "lat",
     level: int | None = 4,
     geo: bool = True,
-    keep_cell: bool = False,
     cell_col: str | None = None,
     index: str = "geohash",
 ) -> DataFrame:
@@ -67,41 +70,32 @@ def spatial_join_points_polygons(
     ``polygons``: [(poly_id, shape)] — the small/broadcast side (a polygon
     layer of up to ~10^5 features; for larger layers, partition the layer
     and union the joins). ``level=None`` auto-plans the join level from
-    the layer's cover sizes.
+    the layer's cover sizes (``choose_join_level``).
     ``cell_col``: name of a pre-assigned geohash column to use as the join
     key (compute-at-ingest path) — must be encoded at ``level``; an
     explicit opt-in, and the level contract is asserted against the
     column values at runtime (mismatched levels would silently join
     nothing otherwise).
-    ``index`` picks the cell scheme for candidate generation: "geohash"
-    (quadtree cover, plans.cover) or "s2" (cube-face Hilbert cover,
-    plans.s2cover) — bbox prefilter and exact refinement are identical,
-    so join RESULTS are index-invariant; only the candidate sets differ.
-    Returns the points' columns + ``poly_id`` (+ ``_cell`` if keep_cell).
+    ``index`` picks the cell scheme for candidate generation ("geohash",
+    "s2" or "h3") — bbox test and exact refine are identical, so join
+    RESULTS are index-invariant; only the candidate sets differ.
+    Returns the points' columns + ``poly_id``.
     """
-    spark = points.sparkSession
-    from spatial4n_spark.cellindex import cell_backend
-
     backend = cell_backend(index)
     if index != "geohash" and cell_col is not None:
         raise ValueError("cell_col pre-assignment is geohash-only")
     if level is None:
-        level = choose_join_level(polygons)
-    # cover rows carry the polygon bbox inline (composed driver-side — a
-    # Spark join between two tiny local tables would plan a sort-merge
-    # join with two shuffles for data that never leaves the driver)
-    cover_rows = []
-    for pid, shape in polygons:
-        fulls, bounds = backend.cover(shape, level, geo)
-        bb = shape_bbox(shape, geo)
-        for c in fulls:
-            cover_rows.append((c, pid, True, bb.min_x, bb.max_x, bb.min_y, bb.max_y))
-        for c in bounds:
-            cover_rows.append((c, pid, False, bb.min_x, bb.max_x, bb.min_y, bb.max_y))
-    cover_df = spark.createDataFrame(
-        cover_rows,
-        f"_cell {backend.sql_type}, poly_id string, _full boolean, "
-        "_bminx double, _bmaxx double, _bminy double, _bmaxy double",
+        level = choose_join_level(polygons, geo)
+    # the cover rows carry the polygon bbox inline, composed on the driver
+    # into a LocalRelation: broadcasting it runs no Spark job
+    cover_df = _local_frame(
+        points.sparkSession,
+        [
+            row
+            for pid, shape in polygons
+            for row in backend.cover_rows(pid, shape, level, geo, _bbox(shape, geo))
+        ],
+        backend.cover_schema("poly_id", _BBOX),
     )
 
     if cell_col is not None:
@@ -122,25 +116,17 @@ def spatial_join_points_polygons(
     else:
         pts = points.withColumn("_cell", backend.udf(level)(F.col(lat), F.col(lon)))
 
-    # the native bbox prefilter lives in the JOIN CONDITION, not a
-    # post-join .where(): Catalyst collapses adjacent filters, which would
-    # merge the cheap native predicate with the expensive PIP-UDF filter
-    # and evaluate the UDF on rows the bbox already rejects. As a join
+    # the native bbox test lives in the JOIN CONDITION, not a post-join
+    # .where(): Catalyst collapses adjacent filters, which would merge the
+    # cheap native predicate with the expensive PIP-UDF filter and
+    # evaluate the UDF on rows the bbox already rejects. As a join
     # condition it is applied inside the broadcast hash join (codegen),
     # so only bbox survivors reach the Arrow UDF.
-    bbox_ok = rect_contains_point(
-        cover_df["_bminx"], cover_df["_bmaxx"], cover_df["_bminy"], cover_df["_bmaxy"],
-        pts[lon], pts[lat],
-    )
-    cond = (pts["_cell"] == cover_df["_cell"]) & (cover_df["_full"] | bbox_ok)
+    cond = (pts["_cell"] == cover_df["_cell"]) & _in_bbox(cover_df, pts, lon, lat)
     cand = pts.join(F.broadcast(cover_df), cond).drop(cover_df["_cell"])
-
-    shapes = {pid: s for pid, s in polygons}
-    pip = pip_udf(shapes, geo)
+    pip = pip_udf(dict(polygons), geo)
     out = cand.where(F.col("_full") | pip(F.col(lon), F.col(lat), F.col("poly_id")))
-
-    drop = ["_full", "_bminx", "_bmaxx", "_bminy", "_bmaxy"] + ([] if keep_cell else ["_cell"])
-    return out.drop(*drop)
+    return out.drop("_cell", "_full", "_bminx", "_bmaxx", "_bminy", "_bmaxy")
 
 
 def spatial_join_points_polygons_df(
@@ -152,26 +138,23 @@ def spatial_join_points_polygons_df(
     geo: bool = True,
     poly_id: str = "poly_id",
     wkt_col: str = "wkt",
-    refine_cache_max: int = 4096,
     index: str = "geohash",
     salt_buckets: int = 1,
 ) -> DataFrame:
     """PIP join against a LARGE polygon layer held as a DataFrame of
     (poly_id, wkt) — the beyond-broadcast path (reference motivation:
     ShapeCollection.cs:42-44 flags the missing R-tree for big layers).
-    ``index`` picks the cell backend ("geohash" / "s2" / "h3"): the
-    distributed cover stage runs that backend's planner per polygon and
-    the point side encodes with its UDF — results are index-invariant.
+    ``index`` picks the cell backend ("geohash" / "s2" / "h3"); results
+    are index-invariant.
 
     Nothing about the layer ever crosses the driver:
 
-    1. the cell cover is computed DISTRIBUTED — a ``mapInPandas`` stage
-       over the layer runs the same quadtree planner (plans.cover) per
-       polygon and emits (cell, poly_id, full?, bbox, wkt-for-boundary)
-       rows; a 10^6-feature layer plans across the cluster;
+    1. the cell cover is computed DISTRIBUTED (``cover_stage``: one
+       ``mapInPandas`` stage runs the backend's planner per polygon) and
+       emits (cell, poly_id, full?, bbox, wkt-for-boundary) rows;
     2. points equi-join the cover table on the cell key — both sides
        shuffle on ``_cell`` (the standard big-big spatial-join plan; AQE
-       handles hot-cell skew). The bbox prefilter rides in the join
+       handles hot-cell skew). The bbox test rides in the join
        condition exactly as in the broadcast path. ``salt_buckets > 1``
        adds EXPLICIT salted repartitioning (the north rule's hot-cell
        defusal, opt-in): the cover side replicates each row into every
@@ -181,62 +164,30 @@ def spatial_join_points_polygons_df(
        are identical — each point still meets each of its cell's cover
        rows exactly once (pytest-pinned; prefer AQE unless a known
        mega-hot cell dominates the key histogram);
-    3. exact refinement runs per task with state built from the MATCHED
+    3. the keyed refine runs per task with state built from the MATCHED
        shapes only: boundary candidates carry their polygon's WKT, and a
-       per-task LRU parses each distinct polygon once, then evaluates the
-       vectorized covers kernel per (batch, polygon) group. Full-cell
-       candidates skip refinement entirely.
+       per-task cache parses each distinct polygon once. Full-cell
+       candidates skip refinement.
 
     Returns the points' columns + ``poly_id``. Results are identical to
     ``spatial_join_points_polygons`` on the same layer (pytest-asserted).
     """
     import numpy as np
-    import pandas as pd
 
-    from spatial4n_spark.cellindex import cell_backend
     from spatial4n_spark.io.wkt import parse_wkt
-    from spatial4n_spark.kernels.polygon import points_covered
 
     backend = cell_backend(index)
-    cover_schema = (
-        f"_cell {backend.sql_type}, {poly_id} string, _full boolean, _bminx double, "
-        "_bmaxx double, _bminy double, _bmaxy double, _wkt string"
-    )
 
-    def cover_gen(it):
-        from spatial4n_spark.cellindex import cell_backend as _cb
+    def shapes_of(pdf):
+        for pid, w in zip(pdf[poly_id], pdf[wkt_col]):
+            shape = parse_wkt(w, geo)
+            yield pid, shape, (*_bbox(shape, geo), w)
 
-        be_w = _cb(index)
-        for pdf in it:
-            rows = []
-            for pid, w in zip(pdf[poly_id], pdf[wkt_col]):
-                shape = parse_wkt(w, geo)
-                fulls, bounds = be_w.cover(shape, level, geo)
-                bb = shape_bbox(shape, geo)
-                for c in fulls:
-                    rows.append(
-                        (c, pid, True, bb.min_x, bb.max_x, bb.min_y, bb.max_y, None)
-                    )
-                for c in bounds:
-                    rows.append(
-                        (c, pid, False, bb.min_x, bb.max_x, bb.min_y, bb.max_y, w)
-                    )
-            if rows:
-                yield pd.DataFrame(
-                    rows,
-                    columns=[
-                        "_cell", poly_id, "_full",
-                        "_bminx", "_bmaxx", "_bminy", "_bmaxy", "_wkt",
-                    ],
-                )
-
-    cover_df = layer.mapInPandas(cover_gen, cover_schema)
+    cover_df = backend.cover_stage(
+        layer, shapes_of, poly_id, f"{_BBOX}, _wkt string", level, geo
+    ).withColumn("_wkt", F.when(~F.col("_full"), F.col("_wkt")))
     pts = points.withColumn("_cell", backend.udf(level)(F.col(lat), F.col(lon)))
-
-    bbox_ok = rect_contains_point(
-        cover_df["_bminx"], cover_df["_bmaxx"], cover_df["_bminy"], cover_df["_bmaxy"],
-        pts[lon], pts[lat],
-    )
+    keys = ["_cell"]
     if salt_buckets > 1:
         # replicate the (small) cover side into every bucket; hash each
         # point into one — xxhash64 over the coordinate pair is cheap,
@@ -253,44 +204,42 @@ def spatial_join_points_polygons_df(
             "_salt",
             F.pmod(F.xxhash64(F.col(lon), F.col(lat)), F.lit(salt_buckets)).cast("int"),
         )
-        cond = (
-            (pts["_cell"] == cover_df["_cell"])
-            & (pts["_salt"] == cover_df["_salt"])
-            & (cover_df["_full"] | bbox_ok)
-        )
-        cand = pts.join(cover_df, cond).drop(cover_df["_cell"]).drop(
-            cover_df["_salt"]
-        ).drop(pts["_salt"])
-    else:
-        cond = (pts["_cell"] == cover_df["_cell"]) & (cover_df["_full"] | bbox_ok)
-        cand = pts.join(cover_df, cond).drop(cover_df["_cell"])
+        keys.append("_salt")
+    cond = _in_bbox(cover_df, pts, lon, lat)
+    for k in keys:
+        cond = (pts[k] == cover_df[k]) & cond
 
-    out_cols = [c for c in points.columns if c != "_cell"] + [poly_id]
+    fields = [f for f in points.schema.fields if f.name != "_cell"]
+    out_cols = [f.name for f in fields] + [poly_id]
+    cand = pts.join(cover_df, cond).select(
+        *[pts[c] for c in out_cols[:-1]], cover_df[poly_id], "_full", "_wkt"
+    )
     out_schema = ", ".join(
-        f"{f.name} {f.dataType.simpleString()}"
-        for f in points.schema.fields
-        if f.name != "_cell"
+        f"{f.name} {f.dataType.simpleString()}" for f in fields
     ) + f", {poly_id} string"
 
     def refine(it):
         cache: dict = {}  # per-task parse cache: only shapes this task saw
         for pdf in it:
             keep = pdf["_full"].to_numpy().copy()
-            todo = np.nonzero(~keep)[0]
-            if len(todo):
-                sub = pdf.iloc[todo]
-                x = sub[lon].to_numpy(np.float64)
-                y = sub[lat].to_numpy(np.float64)
-                pids = sub[poly_id].to_numpy()
-                wkts = sub["_wkt"].to_numpy()
-                for p in pd.unique(pids):
-                    mask = pids == p
+            todo = ~keep
+            if todo.any():
+                pids = pdf[poly_id].to_numpy()[todo]
+                wkts = pdf["_wkt"].to_numpy()[todo]
+
+                def shape_of(p):
                     shape = cache.get(p)
                     if shape is None:
-                        if len(cache) >= refine_cache_max:
+                        if len(cache) >= _REFINE_CACHE_MAX:
                             cache.pop(next(iter(cache)))
-                        cache[p] = shape = parse_wkt(wkts[mask][0], geo)
-                    keep[todo[mask]] = points_covered(x[mask], y[mask], shape, geo)
+                        cache[p] = shape = parse_wkt(wkts[pids == p][0], geo)
+                    return shape
+
+                keep[todo] = points_covered_by_key(
+                    pdf[lon].to_numpy(np.float64)[todo],
+                    pdf[lat].to_numpy(np.float64)[todo],
+                    pids, shape_of, geo,
+                )
             yield pdf.loc[keep, out_cols]
 
     return cand.mapInPandas(refine, out_schema)
@@ -316,9 +265,9 @@ def spatial_join_points_polygons_rtree(
        expansions — candidate quality adapts PER FEATURE (each polygon
        indexed by its own bbox), where the cover join's is fixed by the
        global cell level;
-    2. exact refinement groups the pairs by polygon and runs the same
-       vectorized covers kernel (kernels.polygon.points_covered) as
-       every other PIP path — results are plan-invariant
+    2. the keyed refine every PIP plan shares
+       (kernels.polygon.points_covered_by_key) tests each pair against
+       its polygon — results are plan-invariant
        (pytest-pinned against spatial_join_points_polygons).
 
     Right for broadcastable layers with wildly mixed feature sizes;
@@ -327,10 +276,9 @@ def spatial_join_points_polygons_rtree(
     """
     import pandas as pd
 
-    from spatial4n_spark.kernels.polygon import points_covered
-    from spatial4n_spark.plans.rtree import layer_rtree
+    from pyspark.sql.types import StringType, StructField
 
-    from pyspark.sql.types import StringType, StructField, StructType
+    from spatial4n_spark.plans.rtree import layer_rtree
 
     tree, pids = layer_rtree(polygons, geo)
     shapes = [s for _, s in polygons]
@@ -350,10 +298,7 @@ def spatial_join_points_polygons_rtree(
             pi, owner = tree.query_batch(x, y)
             if not len(pi):
                 continue
-            keep = np.zeros(len(pi), dtype=bool)
-            for o in np.unique(owner):
-                m = owner == o
-                keep[m] = points_covered(x[pi[m]], y[pi[m]], shapes[o], geo)
+            keep = points_covered_by_key(x[pi], y[pi], owner, shapes.__getitem__, geo)
             pi, owner = pi[keep], owner[keep]
             if not len(pi):
                 continue
@@ -373,54 +318,12 @@ def spatial_join_polygons(
     index: str = "geohash",
     keep_disjoint: bool = False,
 ) -> DataFrame:
-    """Polygon-layer x polygon-layer spatial join: every (a, b) pair whose
-    shapes are NOT disjoint, with the exact 4-valued relation.
-
-    ``layer_a`` / ``layer_b``: [(id, wkt)]. The all-pairs relate matrix
-    (q_layer_relate_matrix) crossJoins — fine for conformance on 11
-    shapes, quadratic at layer scale. This operator generates candidate
-    pairs from SHARED COVER CELLS instead: each shape's cover contains
-    every cell any of its points encodes to, so two intersecting shapes
-    necessarily share a cover cell (the same soundness argument as the
-    point-side join); an equi-join of the two cover tables on the cell
-    key + a distinct therefore yields a candidate superset, and the
-    exact relate UDF runs once per candidate pair, not per pair of the
-    full cross product. DISJOINT candidates (bbox-touching but not
-    intersecting) are filtered after refinement unless ``keep_disjoint``.
-
-    Returns (id_a, id_b, rel). Relation names follow kernels.relate
-    (CONTAINS/WITHIN/INTERSECTS; equal shapes -> CONTAINS, the
-    reference's covers-first mapping, NtsGeometry.cs:366-369).
-    """
-    from spatial4n_spark.cellindex import cell_backend
-    from spatial4n_spark.functions.udfs import relate_wkt_udf
-    from spatial4n_spark.io.wkt import parse_wkt
-
-    backend = cell_backend(index)
-
-    def cover_table(layer, id_name):
-        rows = []
-        for pid, w in layer:
-            fulls, bounds = backend.cover(parse_wkt(w, geo), level, geo)
-            rows.extend((c, pid, w) for c in fulls + bounds)
-        return spark.createDataFrame(
-            rows, f"_cell {backend.sql_type}, {id_name} string, _wkt_{id_name} string"
-        )
-
-    ca = cover_table(layer_a, "id_a")
-    cb = cover_table(layer_b, "id_b")
-    pairs = (
-        ca.join(cb, "_cell")
-        .select("id_a", "id_b", "_wkt_id_a", "_wkt_id_b")
-        .distinct()
-    )
-    rel = relate_wkt_udf(geo=geo)
-    out = pairs.withColumn("rel", rel(F.col("_wkt_id_a"), F.col("_wkt_id_b"))).select(
-        "id_a", "id_b", "rel"
-    )
-    if not keep_disjoint:
-        out = out.where(F.col("rel") != "DISJOINT")
-    return out
+    """``spatial_join_polygons_df`` over driver lists ``[(id, wkt)]``,
+    each held as a LocalRelation (building it runs no Spark job).
+    Returns (id_a, id_b, rel)."""
+    schema = StructType.fromDDL("id string, wkt string")
+    a, b = (_local_frame(spark, list(layer), schema) for layer in (layer_a, layer_b))
+    return spatial_join_polygons_df(a, b, level, geo, index, keep_disjoint)
 
 
 def spatial_join_polygons_df(
@@ -434,44 +337,45 @@ def spatial_join_polygons_df(
     id_b: str = "id_b",
     wkt_col: str = "wkt",
 ) -> DataFrame:
-    """``spatial_join_polygons`` with BOTH layers as DataFrames of
-    (id, wkt) — the beyond-driver form: covers are planned DISTRIBUTED
-    (one ``mapInPandas`` stage per layer runs the cover planner per
-    polygon), candidate pairs come from the cell equi-join, and the
-    exact relate refines each distinct pair. Nothing about either layer
-    crosses the driver, so two 10^5-feature layers join through a
-    shuffle-by-cell instead of a 10^10-pair cross product."""
-    from spatial4n_spark.cellindex import cell_backend
+    """Polygon-layer x polygon-layer spatial join of two DataFrames of
+    (id, wkt) (the id is the first column): every (a, b) pair whose
+    shapes are NOT disjoint, with the exact 4-valued relation.
+
+    The all-pairs relate matrix (q_layer_relate_matrix) crossJoins —
+    fine for conformance on 11 shapes, quadratic at layer scale. This
+    join generates candidate pairs from SHARED COVER CELLS instead: each
+    shape's cover contains every cell any of its points encodes to, so
+    two intersecting shapes necessarily share a cover cell (the same
+    soundness argument as the point-side join). Both covers are planned
+    DISTRIBUTED (``cover_stage``), an equi-join on the cell key + a
+    distinct yields a candidate superset, and the exact relate UDF runs
+    once per candidate pair. Nothing about either layer crosses the
+    driver. DISJOINT candidates (sharing a cell but not intersecting)
+    are filtered after refinement unless ``keep_disjoint``.
+
+    Returns (id_a, id_b, rel). Relation names follow kernels.relate
+    (CONTAINS/WITHIN/INTERSECTS; equal shapes -> CONTAINS, the
+    reference's covers-first mapping, NtsGeometry.cs:366-369).
+    """
     from spatial4n_spark.functions.udfs import relate_wkt_udf
+    from spatial4n_spark.io.wkt import parse_wkt
 
     backend = cell_backend(index)
 
-    def cover_stage(layer: DataFrame, out_id: str) -> DataFrame:
-        schema = f"_cell {backend.sql_type}, {out_id} string, _wkt_{out_id} string"
-        id_src = layer.columns[0]  # contract: first column is the id
+    def cover(layer: DataFrame, out_id: str) -> DataFrame:
+        id_src = layer.columns[0]
 
-        def gen(it):
-            import pandas as pd
+        def shapes_of(pdf):
+            for pid, w in zip(pdf[id_src], pdf[wkt_col]):
+                yield pid, parse_wkt(w, geo), (w,)
 
-            from spatial4n_spark.cellindex import cell_backend as _cb
-            from spatial4n_spark.io.wkt import parse_wkt
-
-            be_w = _cb(index)
-            for pdf in it:
-                rows = []
-                for pid, w in zip(pdf[id_src], pdf[wkt_col]):
-                    fulls, bounds = be_w.cover(parse_wkt(w, geo), level, geo)
-                    rows.extend((c, pid, w) for c in fulls + bounds)
-                if rows:
-                    yield pd.DataFrame(
-                        rows, columns=["_cell", out_id, f"_wkt_{out_id}"]
-                    )
-
-        return layer.mapInPandas(gen, schema)
+        return backend.cover_stage(
+            layer, shapes_of, out_id, f"_wkt_{out_id} string", level, geo
+        ).drop("_full")
 
     pairs = (
-        cover_stage(layer_a, id_a)
-        .join(cover_stage(layer_b, id_b), "_cell")
+        cover(layer_a, id_a)
+        .join(cover(layer_b, id_b), "_cell")
         .select(id_a, id_b, f"_wkt_{id_a}", f"_wkt_{id_b}")
         .distinct()
     )

@@ -43,7 +43,7 @@ from spatial4n_spark.kernels.polygon import shape_bbox
 BROADCAST_FEATURES_MAX = 2_000
 
 # past this many total cover cells the broadcast table stops being
-# "small" (matches choose_join_level's budget)
+# "small": the budget of choose_join_level and of the cover -> rtree switch
 COVER_CELLS_MAX = 20_000
 
 # bbox-area ratio (p90 / median) above which the layer counts as
@@ -81,22 +81,35 @@ def _bbox_spread(polygons: list[tuple[str, object]], geo: bool) -> float:
     return p90 / max(med, 1e-12)
 
 
-def _cover_total(
-    polygons: list[tuple[str, object]], level: int, geo: bool, cap: int
-) -> int:
-    """Total cover cells at ``level``, early-exited at ``cap``."""
+def _cover_total(polygons: list[tuple[str, object]], level: int, geo: bool) -> int:
+    """Total geohash cover cells of the layer at ``level``, counted only
+    until it passes ``COVER_CELLS_MAX`` (``COVER_CELLS_MAX + 1`` when one
+    feature's cover alone exceeds it)."""
     from spatial4n_spark.plans.cover import cover_cells
 
     total = 0
     for _, shape in polygons:
         try:
-            fulls, bounds = cover_cells(shape, level, max_cells=cap)
+            fulls, bounds = cover_cells(shape, level, geo, max_cells=COVER_CELLS_MAX)
         except ValueError:
-            return cap + 1  # one feature alone blew the budget
+            return COVER_CELLS_MAX + 1
         total += len(fulls) + len(bounds)
-        if total > cap:
-            return total
+        if total > COVER_CELLS_MAX:
+            break
     return total
+
+
+def choose_join_level(polygons: list[tuple[str, object]], geo: bool = True) -> int:
+    """The uniform join level for a layer: the finest of 2-4 whose total
+    cover stays within ``COVER_CELLS_MAX`` broadcast rows (finer cells
+    mean fewer candidates through the exact refine, coarser cells a
+    smaller broadcast)."""
+    level = 2
+    for cand in (3, 4):
+        if _cover_total(polygons, cand, geo) > COVER_CELLS_MAX:
+            break
+        level = cand
+    return level
 
 
 def plan_pip_join(
@@ -106,7 +119,6 @@ def plan_pip_join(
     level: int | None = None,
     lon: str = "lon",
     lat: str = "lat",
-    sketch_sample: float | None = None,
 ) -> tuple[PipPlan, list | DataFrame]:
     """Choose the PIP plan for ``points`` x ``layer``.
 
@@ -129,8 +141,6 @@ def plan_pip_join(
        O(features), not O(cells)).
     4. otherwise -> ``cover`` at the auto-chosen level.
     """
-    from spatial4n_spark.operators.spatial_join import choose_join_level
-
     stats: dict = {}
     if isinstance(layer, DataFrame):
         wkt_col = "wkt" if "wkt" in layer.columns else (layer.columns[1:2] or [None])[0]
@@ -145,9 +155,7 @@ def plan_pip_join(
             from spatial4n_spark.plans.salt import choose_salt_buckets
 
             lvl = level if level is not None else 4
-            salt = choose_salt_buckets(
-                points, lvl, lon, lat, sample_fraction=sketch_sample
-            )
+            salt = choose_salt_buckets(points, lvl, lon, lat)
             stats["salt_buckets"] = salt
             return (
                 PipPlan(
@@ -182,8 +190,8 @@ def plan_pip_join(
             ),
             layer,
         )
-    lvl = level if level is not None else choose_join_level(layer)
-    total = _cover_total(layer, lvl, geo, COVER_CELLS_MAX)
+    lvl = level if level is not None else choose_join_level(layer, geo)
+    total = _cover_total(layer, lvl, geo)
     stats["cover_cells_at_level"] = total
     stats["level"] = lvl
     if total > COVER_CELLS_MAX:
@@ -214,7 +222,6 @@ def spatial_join_auto(
     lat: str = "lat",
     geo: bool = True,
     level: int | None = None,
-    sketch_sample: float | None = None,
     poly_id: str = "poly_id",
     wkt_col: str = "wkt",
 ) -> DataFrame:
@@ -232,9 +239,7 @@ def spatial_join_auto(
         spatial_join_points_polygons_rtree,
     )
 
-    decision, use_layer = plan_pip_join(
-        points, layer, geo, level, lon, lat, sketch_sample
-    )
+    decision, use_layer = plan_pip_join(points, layer, geo, level, lon, lat)
     if decision.plan == "df":
         return spatial_join_points_polygons_df(
             points, use_layer, lon, lat, level=decision.level, geo=geo,

@@ -42,8 +42,11 @@ COMMENTS = {
         "survivors) -> PIP filter. The fact side never shuffles."
     ),
     "radius_join": (
-        "Distance join. Cell-cover broadcast join, then the haversine predicate as "
-        "native Catalyst expressions (WholeStageCodegen, no UDF in the exact phase)."
+        "Distance join (the list form wraps radius_join_df): the query circles are "
+        "a LocalTableScan covered in ONE mapInPandas stage, the cover joins the fact "
+        "side in a BroadcastHashJoin on the cell key, then the haversine predicate "
+        "as native Catalyst expressions (WholeStageCodegen, no UDF in the exact "
+        "phase)."
     ),
     "tile_stats": (
         "Salted two-phase aggregation: partial HashAggregate on (cell, salt), "
@@ -51,8 +54,11 @@ COMMENTS = {
         "bound the per-key skew; integer sums make it order-insensitive."
     ),
     "corridor_join": (
-        "Buffered-polyline join: cover broadcast + vectorized two-line containment "
-        "refinement (Arrow UDF only on boundary cells)."
+        "Buffered-polyline join, the pip_join shape: the route cover is a "
+        "LocalTableScan broadcast into ONE BroadcastHashJoin on the cell key (points "
+        "with a non-finite coordinate are dropped by a native Filter below the "
+        "encode), then the pip_udf filter (two-line containment, deciding "
+        "boundary-cell candidates)."
     ),
     "cell_assign": (
         "Tile assignment: single projection pass — geohash Arrow UDF + native "
